@@ -124,13 +124,13 @@ object GraphJob {
     * (cartography/data/jobs/analysis *.json, loaded by
     * intel/analysis.py:12-42): jobs a user gets out of the box, not
     * ones they must author. Resolved relative to the working directory
-    * first (the sbt/driver layout), then the canonical repo path; None
-    * when neither exists (e.g. the library deployed without its data
-    * dir — callers treat that as "no corpus", never an error).
+    * (sbt forks tests and `runMain` from the repo root); None when it
+    * does not exist (e.g. the library deployed without its data dir —
+    * callers treat that as "no corpus", never an error).
     */
   def shippedDir: Option[String] =
-    Seq("data/jobs/analysis", "/root/repo/data/jobs/analysis")
-      .find(d => java.nio.file.Files.isDirectory(java.nio.file.Paths.get(d)))
+    Some("data/jobs/analysis")
+      .filter(d => java.nio.file.Files.isDirectory(java.nio.file.Paths.get(d)))
 
   /** Sorted *.json paths under `dir` (recursive). The walk stream is
     * CLOSED eagerly — `Files.walk` holds a file descriptor until GC

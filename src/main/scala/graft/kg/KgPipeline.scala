@@ -1,5 +1,6 @@
 package graft.kg
 
+import scala.collection.mutable
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.link.{Blocking, ConnectedComponents}
@@ -16,13 +17,22 @@ import graft.snapshot.SnapshotTable
   *   into nodes/edges snapshot tables.
   *
   * Stage protocol (the Sync.run analog, cartography/sync.py:66-124, with
-  * the checkpoint/resume semantics the reference lacks): every stage
-  * commits its output to a SnapshotTable stamped with the run's
-  * update_tag; on re-run with the same tag a committed stage is read
-  * back instead of recomputed — kill/restart resumes at the first
-  * incomplete stage. Each stage also appends per-partition lineage rows
-  * (ModuleSyncMetadata + statsd counters analog, cartography/util.py:
+  * the checkpoint/resume semantics the reference lacks): ONE stage table
+  * holds each of [[KgPipeline.StageNames]] with the stages it reads and
+  * its compute function, and ONE driver walks the selected stages in
+  * order. A full run selects every stage (`run`); a partial sync selects
+  * a validated subset (`runStages`, the build_sync(selected_modules)
+  * analog, cartography/sync.py:210-243). Per stage the driver either
+  * resumes the output already committed for the run's update_tag — so a
+  * kill/restart resumes at the first incomplete stage — or fails fast on
+  * a dependency that is not committed, or computes, commits to a
+  * SnapshotTable stamped with the tag and appends per-partition lineage
+  * rows (ModuleSyncMetadata + statsd counters analog, cartography/util.py:
   * 133-165, graph/statement.py:99-112).
+  *
+  * The stage transforms themselves live on the companion object, where
+  * the streaming micro-batch sync ([[graft.streaming.StreamingSync]])
+  * calls the same code.
   *
   * Scale notes: extract/mentions/links/triples are narrow (zero
   * shuffle); the dictionary is broadcast; entity-space work (CC) is
@@ -49,6 +59,7 @@ final class KgPipeline(spark: SparkSession, workRoot: String,
                        maxBroadcastAliases: Long = KgPipeline.MaxBroadcastAliases,
                        maintainEdgeIndex: Boolean = false) {
   import spark.implicits._
+  import KgPipeline.{DriverDictionary, TableDictionary}
 
   private def stageTable(name: String): SnapshotTable =
     SnapshotTable(spark, s"$workRoot/stage_$name", None)
@@ -116,74 +127,6 @@ final class KgPipeline(spark: SparkSession, workRoot: String,
     .schema("stage STRING, partition_id INT, update_tag LONG, rows_in LONG, rows_out LONG")
     .json(s"$workRoot/lineage")
 
-  /** Run (or resume) one stage: compute, commit, lineage (footer-based
-    * rows for the committed output plus any extras). Wall time per stage
-    * goes to stderr (the statsd-timer analog,
-    * cartography/util.py:176-196).
-    */
-  private def stage(name: String, updateTag: Long,
-                    extraLineage: (DataFrame, SnapshotTable) => Seq[LineageRow] =
-                      (_, _) => Nil)
-                   (compute: => DataFrame): DataFrame = {
-    val t = stageTable(name)
-    if (stageDone(name, updateTag)) t.read()
-    else {
-      val t0 = System.nanoTime()
-      val out = compute
-      t.commit(out, updateTag)
-      val committed = t.read()
-      writeLineage(footerLineage(name, t, updateTag) ++ extraLineage(committed, t))
-      System.err.println(f"[kg-timing] stage=$name sec=${(System.nanoTime() - t0) / 1e9}%.2f")
-      committed
-    }
-  }
-
-  final case class Result(pages: DataFrame, texts: DataFrame,
-                          links: DataFrame, canonical: DataFrame,
-                          triples: DataFrame)
-
-  /** Driver-resident dictionary entrypoint (tests, small syncs). */
-  def run(pagesIn: Dataset[Page], dict: Seq[AliasRow], updateTag: Long,
-          mergeGraph: Boolean = true): Result =
-    runWith(pagesIn, dict, None, updateTag, mergeGraph)
-
-  /** Table-native dictionary entrypoint — the 100 TB shape: the alias
-    * dictionary arrives as a (parquet/Iceberg-backed) Dataset, not a
-    * driver Seq. At or under [[KgPipeline.MaxBroadcastAliases]] rows the
-    * dictionary is driver-materialized and the single-automaton broadcast
-    * path runs; ABOVE the cap the pipeline automatically switches to the
-    * sharded scan ([[Extract.factsSharded]] — hash-sharded automatons,
-    * union + global leftmost-longest resolution, distributed alias→entity
-    * joins) and the distributed blocking/CC path, so no dictionary size
-    * is a hard input limit.
-    */
-  def run(pagesIn: Dataset[Page], dict: Dataset[AliasRow], updateTag: Long,
-          mergeGraph: Boolean): Result =
-    KgPipeline.boundedCollectOpt(dict, maxBroadcastAliases) match {
-      case Some(rows) => runWith(pagesIn, rows, Some(dict), updateTag, mergeGraph)
-      case None => runCore(pagesIn, updateTag, mergeGraph,
-        texts => factsShardedCompute(texts, dict),
-        () => canonicalDistributed(dict))
-    }
-
-  /** Stage-subset run from a table-backed dictionary (the CLI path).
-    * Over-cap dictionaries take the sharded facts + distributed
-    * canonicalization paths, as in [[run]].
-    */
-  def runStages(pagesIn: Dataset[Page], dict: Dataset[AliasRow],
-                updateTag: Long, selectedModules: String): Unit =
-    KgPipeline.boundedCollectOpt(dict, maxBroadcastAliases) match {
-      case Some(rows) => runStages(pagesIn, rows, updateTag, selectedModules)
-      case None => runStagesCore(pagesIn, updateTag, selectedModules,
-        texts => factsShardedCompute(texts, dict),
-        () => canonicalDistributed(dict))
-    }
-
-  /** links view over the committed facts table (kind 0 rows). */
-  private def linksView(facts: DataFrame): DataFrame =
-    facts.filter(col("kind") === 0)
-      .select(col("url"), col("start"), col("end"), col("a").as("entity_id"))
-
   /** Per-partition link counts for lineage — the one lineage that needs
     * a scan (links = the kind-0 SUBSET of the committed facts table, so
     * footers can't answer it). One small groupBy job.
@@ -194,197 +137,134 @@ final class KgPipeline(spark: SparkSession, workRoot: String,
       .collect().toSeq
       .map(r => LineageRow("links", r.getInt(0), updateTag, -1L, r.getLong(1)))
 
-  /** Fused single-pass extraction on English pages only (lang filter is
-    * part of the pipeline contract, FIXTURES.md §1): one AC scan emits
-    * links AND raw triples, committed as one table, consumed as two
-    * filtered views.
+  /** One row of the stage table: the committed stages `name` reads, its
+    * output computed from theirs, and the lineage rows its commit adds
+    * to the footer counts of its own output. Both functions receive the
+    * accessor to committed stage outputs.
     */
-  private def factsCompute(textsDf: DataFrame, dict: Seq[AliasRow]): DataFrame = {
-    val en = textsDf.filter(col("lang") === "en").as[PageText]
-    Extract.facts(spark, en, dict, Corpus.predicates).toDF()
-  }
+  private final case class Stage(name: String, deps: Seq[String],
+                                 compute: (String => DataFrame) => DataFrame,
+                                 extraLineage: (String => DataFrame) => Seq[LineageRow] =
+                                   _ => Nil)
 
-  /** Over-cap facts: k-sharded automaton scan (scratch under the work
-    * dir so re-runs overwrite; the committed stage output is what
-    * downstream reads).
-    */
-  private def factsShardedCompute(textsDf: DataFrame,
-                                  dict: Dataset[AliasRow]): DataFrame = {
-    val en = textsDf.filter(col("lang") === "en").as[PageText]
-    Extract.factsSharded(spark, en, dict, Corpus.predicates,
-      s"$workRoot/facts_scratch", maxBroadcastAliases).toDF()
-  }
+  /** The stage table, in [[KgPipeline.StageNames]] order. */
+  private def stages(pagesIn: Dataset[Page], dict: KgPipeline.Dictionary,
+                     updateTag: Long): Seq[Stage] = Seq(
+    // The pages table is the pipeline's INPUT — in production an
+    // immutable Iceberg table that already exists; it is never committed
+    // as a stage, so `pagesIn` must be deterministic or table-backed.
+    // Its input-cardinality lineage row ("pages") comes from the
+    // committed extract output (one row per page), not a re-scan.
+    Stage("extract", Nil, _ => KgPipeline.extract(pagesIn).toDF(),
+      _ => footerLineage("pages", stageTable("extract"), updateTag)),
+    Stage("facts", Seq("extract"), in => dict match {
+      case DriverDictionary(rows, _) => KgPipeline.facts(spark, in("extract"), rows)
+      // over-cap: k-sharded automaton scan (scratch under the work dir
+      // so re-runs overwrite; downstream reads the committed output)
+      case TableDictionary(table) =>
+        Extract.factsSharded(spark, KgPipeline.english(in("extract")), table,
+          Corpus.predicates, s"$workRoot/facts_scratch", maxBroadcastAliases).toDF()
+    }, in => linksLineage(in("facts"), updateTag)),
+    Stage("canonical", Nil, _ => dict match {
+      case DriverDictionary(rows, table) => KgPipeline.canonical(spark, rows, table)
+      case TableDictionary(table) => KgPipeline.canonicalDistributed(spark, table)
+    }),
+    Stage("triples", Seq("facts", "canonical"),
+      in => KgPipeline.canonicalTriples(in("facts"), in("canonical"))),
+    Stage("merge", Seq("extract", "facts", "canonical", "triples"), in => {
+      mergeStage(in("extract"), KgPipeline.linksView(in("facts")),
+        in("canonical"), in("triples"), updateTag)
+      Seq((updateTag, "done")).toDF("tag", "state")
+    }))
 
-  /** Blocking + CC live in entity space (≪ corpus size). Below the
-    * local bound the candidate generation runs on the driver (same
-    * semantics, pinned by tests); above it the distributed Dataset/LSH
-    * path takes over — on the table-backed Dataset when one was
-    * provided, so the dictionary never round-trips the driver.
+  /** The stage driver: walk `selected` in order. A stage committed for
+    * `updateTag` — by this run or an earlier one — is resumed; any other
+    * stage requires its dependencies committed for the tag, then
+    * computes, commits and appends lineage, and reports its wall time to
+    * stderr (the statsd-timer analog, cartography/util.py:176-196).
+    * Returns the accessor to the committed outputs.
     */
-  private def canonicalCompute(dict: Seq[AliasRow],
-                               dictDs: Option[Dataset[AliasRow]]): DataFrame = {
-    if (dict.sizeIs <= KgPipeline.LocalBlockingBound) {
-      val dupEdges = Blocking.duplicateEntityEdgesLocal(dict)
-        .map(p => (p.a, p.b)).toDF("u", "v")
-      val allEntities = dictDs match {
-        case Some(ds) => ds.select(col("entity_id").as("id")).distinct()
-        case None => dict.map(_.entity_id).distinct.toDF("id")
+  private def runSelected(pagesIn: Dataset[Page], dict: KgPipeline.Dictionary,
+                          updateTag: Long, selected: Seq[String]): String => DataFrame = {
+    val byName = stages(pagesIn, dict, updateTag).map(s => s.name -> s).toMap
+    // committed outputs are read on first use: each read costs a Spark
+    // job (parquet schema inference) and most outputs only feed a later
+    // stage, or nothing in a partial sync
+    val read = mutable.Map.empty[String, DataFrame]
+    val output: String => DataFrame =
+      name => read.getOrElseUpdate(name, stageTable(name).read())
+    selected.map(byName).foreach { s =>
+      if (!stageDone(s.name, updateTag)) {
+        s.deps.foreach(dep => require(stageDone(dep, updateTag),
+          s"stage '${s.name}' requires '$dep' to be committed for tag " +
+            s"$updateTag — include it in selected_modules or run it first"))
+        val t0 = System.nanoTime()
+        val t = stageTable(s.name)
+        t.commit(s.compute(output), updateTag)
+        writeLineage(footerLineage(s.name, t, updateTag) ++ s.extraLineage(output))
+        System.err.println(f"[kg-timing] stage=${s.name} sec=${(System.nanoTime() - t0) / 1e9}%.2f")
       }
-      ConnectedComponents.run(spark, dupEdges, allEntities)
-    } else canonicalDistributed(dictDs.getOrElse(dict.toDS()))
+    }
+    output
   }
 
-  /** Dataset-native blocking + CC — the only canonicalization shape an
-    * over-cap dictionary can take (it never round-trips the driver).
+  final case class Result(pages: DataFrame, texts: DataFrame,
+                          links: DataFrame, canonical: DataFrame,
+                          triples: DataFrame)
+
+  /** Run (or resume) every stage — all but `merge` (the graph upsert)
+    * when `mergeGraph` is false — and return the committed outputs.
     */
-  private def canonicalDistributed(ds: Dataset[AliasRow]): DataFrame = {
-    val dupEdges = Blocking.duplicateEntityEdges(spark, ds).toDF("u", "v")
-    val allEntities = ds.select(col("entity_id").as("id")).distinct()
-    ConnectedComponents.run(spark, dupEdges, allEntities)
+  def run(pagesIn: Dataset[Page], dict: KgPipeline.Dictionary, updateTag: Long,
+          mergeGraph: Boolean): Result = {
+    val out = runSelected(pagesIn, dict, updateTag,
+      KgPipeline.StageNames.filter(s => mergeGraph || s != "merge"))
+    Result(pagesIn.toDF(), out("extract"), KgPipeline.linksView(out("facts")),
+      out("canonical"), out("triples"))
   }
 
-  /** Canonicalize subject and object of raw pattern triples (entity
-    * space is small relative to the corpus -> broadcast both joins; no
-    * corpus-wide shuffle).
+  /** Driver-resident dictionary entrypoint (tests, small syncs). */
+  def run(pagesIn: Dataset[Page], dict: Seq[AliasRow], updateTag: Long,
+          mergeGraph: Boolean = true): Result =
+    run(pagesIn, DriverDictionary(dict), updateTag, mergeGraph)
+
+  /** Table-native dictionary entrypoint — the 100 TB shape; see
+    * [[KgPipeline.dictionary]] for the broadcast-vs-sharded choice.
     */
-  private def triplesCompute(factsDf: DataFrame, canonicalDf: DataFrame): DataFrame = {
-    val raw = factsDf.filter(col("kind") === 1)
-      .select(col("url"), col("a").as("subj"), col("pred"), col("obj"))
-    val canonS = broadcast(canonicalDf
-      .select(col("id").as("subj"), col("canonical_id").as("csubj")))
-    val canonO = broadcast(canonicalDf
-      .select(col("id").as("obj"), col("canonical_id").as("cobj")))
-    raw.join(canonS, Seq("subj")).join(canonO, Seq("obj"))
-      .select(col("url"), col("csubj").as("subj"), col("pred"),
-        col("cobj").as("obj"))
-      .dropDuplicates()
-  }
+  def run(pagesIn: Dataset[Page], dict: Dataset[AliasRow], updateTag: Long,
+          mergeGraph: Boolean): Result =
+    run(pagesIn, KgPipeline.dictionary(dict, maxBroadcastAliases), updateTag, mergeGraph)
 
-  /** Config-selected partial sync — the build_sync(selected_modules)
-    * analog (cartography/sync.py:210-243): run ONLY the named stages, in
-    * the given order, against this work dir. A later stage reads its
-    * inputs from the committed outputs of earlier ones — possibly
-    * produced by a previous partial run with the same tag — and fails
-    * fast when a dependency has not been committed. Stage names are
-    * validated against [[KgPipeline.StageNames]] with the reference's
-    * error shape.
+  /** Config-selected partial sync: run ONLY the named stages, in the
+    * given order, against this work dir. A later stage reads its inputs
+    * from the committed outputs of earlier ones — possibly produced by a
+    * previous partial run with the same tag. Stage names are validated
+    * against [[KgPipeline.StageNames]] with the reference's error shape.
     */
   def runStages(pagesIn: Dataset[Page], dict: Seq[AliasRow], updateTag: Long,
                 selectedModules: String): Unit =
-    runStagesCore(pagesIn, updateTag, selectedModules,
-      texts => factsCompute(texts, dict),
-      () => canonicalCompute(dict, None))
+    runSelected(pagesIn, DriverDictionary(dict), updateTag, selection(selectedModules)): Unit
 
-  private def runStagesCore(pagesIn: Dataset[Page], updateTag: Long,
-                            selectedModules: String,
-                            factsFn: DataFrame => DataFrame,
-                            canonFn: () => DataFrame): Unit = {
-    val selected = graft.jobs.Sync.parseAndValidateSelectedModules(
-      selectedModules, KgPipeline.StageNames)
-    def need(dep: String, forStage: String): DataFrame = {
-      require(stageDone(dep, updateTag),
-        s"stage '$forStage' requires '$dep' to be committed for tag " +
-          s"$updateTag — include it in selected_modules or run it first")
-      stageTable(dep).read()
-    }
-    selected.foreach {
-      case "extract" =>
-        stage("extract", updateTag,
-          (_, t) => footerLineage("pages", t, updateTag)) {
-          Extract.pageText(pagesIn.toDF().as[Page]).toDF()
-        }: Unit
-      case "facts" =>
-        val texts = need("extract", "facts")
-        stage("facts", updateTag,
-          (committed, _) => linksLineage(committed, updateTag)) {
-          factsFn(texts)
-        }: Unit
-      case "canonical" =>
-        stage("canonical", updateTag)(canonFn()): Unit
-      case "triples" =>
-        val facts = need("facts", "triples")
-        val canon = need("canonical", "triples")
-        stage("triples", updateTag)(triplesCompute(facts, canon)): Unit
-      case "merge" =>
-        if (!stageDone("merge", updateTag)) {
-          val texts = need("extract", "merge")
-          val facts = need("facts", "merge")
-          val canon = need("canonical", "merge")
-          val triples = need("triples", "merge")
-          mergeStage(texts, linksView(facts), canon, triples, updateTag)
-          stageTable("merge").commit(
-            Seq((updateTag, "done")).toDF("tag", "state"), updateTag)
-        }
-    }
+  /** Stage-subset run from a table-backed dictionary (the CLI path). */
+  def runStages(pagesIn: Dataset[Page], dict: Dataset[AliasRow],
+                updateTag: Long, selectedModules: String): Unit = {
+    val selected = selection(selectedModules) // before the dictionary's collect job
+    runSelected(pagesIn, KgPipeline.dictionary(dict, maxBroadcastAliases),
+      updateTag, selected): Unit
   }
 
-  private def runWith(pagesIn: Dataset[Page], dict: Seq[AliasRow],
-                      dictDs: Option[Dataset[AliasRow]], updateTag: Long,
-                      mergeGraph: Boolean): Result =
-    runCore(pagesIn, updateTag, mergeGraph,
-      texts => factsCompute(texts, dict),
-      () => canonicalCompute(dict, dictDs))
+  private def selection(selectedModules: String): Seq[String] =
+    graft.jobs.Sync.parseAndValidateSelectedModules(selectedModules, KgPipeline.StageNames)
 
-  private def runCore(pagesIn: Dataset[Page], updateTag: Long,
-                      mergeGraph: Boolean,
-                      factsFn: DataFrame => DataFrame,
-                      canonFn: () => DataFrame): Result = {
-    // The pages table is the pipeline's INPUT — in production an
-    // immutable Iceberg table that already exists; it is never committed
-    // as a stage (a pipeline reads its input, it does not rewrite it).
-    // Resumability starts at the first derived stage: `pagesIn` must be
-    // deterministic or table-backed, and each stage below commits.
-    val pagesDf = pagesIn.toDF()
-
-    // Input-cardinality lineage row ("pages") is derived from the
-    // committed extract output (1 row per page) rather than by
-    // re-scanning the raw input, and flushes with the extract row.
-    val textsDf = stage("extract", updateTag,
-      (_, t) => footerLineage("pages", t, updateTag)) {
-      Extract.pageText(pagesDf.as[Page]).toDF()
-    }
-
-    val factsDf = stage("facts", updateTag,
-      (committed, _) => linksLineage(committed, updateTag)) {
-      factsFn(textsDf)
-    }
-    val linksDf = linksView(factsDf)
-
-    val canonicalDf = stage("canonical", updateTag) {
-      canonFn()
-    }
-
-    val triplesDf = stage("triples", updateTag) {
-      triplesCompute(factsDf, canonicalDf)
-    }
-
-    if (mergeGraph && !stageDone("merge", updateTag)) {
-      val t0 = System.nanoTime()
-      mergeStage(textsDf, linksDf, canonicalDf, triplesDf, updateTag)
-      stageTable("merge").commit(Seq((updateTag, "done")).toDF("tag", "state"), updateTag)
-      System.err.println(f"[kg-timing] stage=merge sec=${(System.nanoTime() - t0) / 1e9}%.2f")
-    }
-
-    Result(pagesDf, textsDf, linksDf, canonicalDf, triplesDf)
-  }
-
-  /** Stage 3: materialize Entity/Page nodes, MENTIONS edges and triple
-    * edges through the upsert engine (firstseen/lastupdated semantics).
-    */
-  private def subTimed[A](name: String)(f: => A): A = {
-    val t0 = System.nanoTime()
-    val a = f
-    System.err.println(f"[kg-timing] substage=$name sec=${(System.nanoTime() - t0) / 1e9}%.2f")
-    a
-  }
-
-  /** `textsDf` (the committed extract output — one row per page with
+  /** The merge stage: Entity/Page nodes, MENTIONS edges and triple edges
+    * through the upsert engine (firstseen/lastupdated semantics).
+    * `textsDf` (the committed extract output — one row per page with
     * url + lang) supplies the Page-node batch: projecting the raw input
     * would re-render/re-read every page's html for two columns.
     */
   private def mergeStage(textsDf: DataFrame, linksDf: DataFrame,
                          canonicalDf: DataFrame, triplesDf: DataFrame,
-                         updateTag: Long): Unit = subTimed("merge.total") {
+                         updateTag: Long): Unit = {
     // Page + Entity nodes in ONE fused upsert + commit (two separate
     // load() rounds would double the join/write jobs for no reason —
     // neither schema declares relationships; those go through the edge
@@ -403,38 +283,15 @@ final class KgPipeline(spark: SparkSession, workRoot: String,
     // both inputs are key-unique (texts is one row per url; canonical ids
     // are distinct()'d) and the two labels can't collide — skip the
     // batch-dedup shuffle of the corpus-sized Page-node side
-    subTimed("merge.nodes")(GraphMerge.upsertNodeBatch(spark,
-      pageRows.unionByName(entityRows), updateTag, nodes, dedupBatch = false))
-
-    // MENTIONS edges with per-pair mention counts: aggregate BEFORE the
-    // edge upsert (partial aggregation defuses the Zipf head entity).
-    // countDistinct(span) inside ONE groupBy replaces the previous
-    // dropDuplicates-then-count pair — same result, one shuffle fewer.
-    val canonB = broadcast(canonicalDf
-      .select(col("id").as("entity_id"), col("canonical_id")))
-    val mentionEdges = linksDf.join(canonB, Seq("entity_id"))
-      .groupBy(col("url"), col("canonical_id"))
-      .agg(countDistinct(struct(col("start"), col("end"))).as("n_mentions"))
-      .select(lit("Page").as("src_label"), col("url").as("src_id"),
-        lit("MENTIONS").as("rel_label"),
-        lit("Entity").as("dst_label"), col("canonical_id").as("dst_id"),
-        map(lit("n_mentions"), col("n_mentions").cast("string")).as("props"),
-        lit(updateTag).as("firstseen"), lit(updateTag).as("lastupdated"))
-
-    val tripleEdges = triplesDf
-      .groupBy(col("subj"), col("pred"), col("obj"))
-      .agg(countDistinct(col("url")).as("n_sources"))
-      .select(lit("Entity").as("src_label"), col("subj").as("src_id"),
-        col("pred").as("rel_label"),
-        lit("Entity").as("dst_label"), col("obj").as("dst_id"),
-        map(lit("n_sources"), col("n_sources").cast("string")).as("props"),
-        lit(updateTag).as("firstseen"), lit(updateTag).as("lastupdated"))
-
-    // both inputs are aggregation outputs, hence already key-unique —
-    // skip the batch-dedup shuffle
-    subTimed("merge.edges")(GraphMerge.upsertEdgeBatch(spark,
-      mentionEdges.unionByName(tripleEdges), updateTag, edges,
-      collectStats = false, dedupBatch = false, edgeIndex = edgeIndex))
+    GraphMerge.upsertNodeBatch(spark,
+      pageRows.unionByName(entityRows), updateTag, nodes, dedupBatch = false): Unit
+    // both edge inputs are aggregation outputs, hence already key-unique
+    // — skip the batch-dedup shuffle
+    GraphMerge.upsertEdgeBatch(spark,
+      KgPipeline.mentionEdges(linksDf, canonicalDf, updateTag)
+        .unionByName(KgPipeline.tripleEdges(triplesDf, updateTag)),
+      updateTag, edges, collectStats = false, dedupBatch = false,
+      edgeIndex = edgeIndex): Unit
   }
 }
 
@@ -462,6 +319,43 @@ object KgPipeline {
     */
   val LocalBlockingBound: Int = 200000
 
+  /** An alias dictionary in the shape the facts and canonical stages
+    * consume. Resolve a table-backed one once per sync
+    * ([[dictionary]]): a multi-tenant loop then reuses it for every
+    * tenant instead of re-collecting it.
+    */
+  sealed trait Dictionary
+
+  /** At or under the broadcast cap: driver rows for the single broadcast
+    * automaton, plus the table they were collected from, if any — the
+    * canonical stage reads that table rather than shipping the rows in
+    * its plan.
+    */
+  final case class DriverDictionary(rows: Seq[AliasRow],
+                                    table: Option[Dataset[AliasRow]] = None)
+    extends Dictionary
+
+  /** Over the cap: the dictionary never round-trips the driver; facts
+    * take the sharded scan, canonical the distributed blocking + CC.
+    */
+  final case class TableDictionary(table: Dataset[AliasRow]) extends Dictionary
+
+  /** The broadcast-vs-sharded choice for a table-backed dictionary — the
+    * 100 TB shape, where aliases arrive as a (parquet/Iceberg-backed)
+    * Dataset, not a driver Seq. At or under `cap` rows the dictionary is
+    * driver-materialized and the single-automaton broadcast path runs;
+    * above it the pipeline takes the sharded scan
+    * ([[Extract.factsSharded]] — hash-sharded automatons, union + global
+    * leftmost-longest resolution, distributed alias→entity joins) and
+    * the distributed blocking/CC path, so no dictionary size is a hard
+    * input limit.
+    */
+  def dictionary(table: Dataset[AliasRow], cap: Long = MaxBroadcastAliases): Dictionary =
+    boundedCollectOpt(table, cap) match {
+      case Some(rows) => DriverDictionary(rows, Some(table))
+      case None => TableDictionary(table)
+    }
+
   /** Materialize a table-backed dictionary on the driver with the
     * broadcast bound enforced IN the scan: `limit(cap+1)` collects at
     * most cap+1 rows (one job, bounded driver memory — a count-then-
@@ -474,4 +368,109 @@ object KgPipeline {
     val rows = dict.limit(cap.toInt + 1).collect()
     if (rows.length <= cap) Some(rows.toSeq) else None
   }
+
+  // ---- stage transforms, shared by the batch and streaming syncs --------
+
+  /** extract: HTML → text, one row per page. */
+  private[graft] def extract(pages: Dataset[Page]): Dataset[PageText] =
+    Extract.pageText(pages)
+
+  /** English pages only — the lang filter is part of the pipeline
+    * contract (FIXTURES.md §1).
+    */
+  private[kg] def english(texts: DataFrame): Dataset[PageText] = {
+    import texts.sparkSession.implicits._
+    texts.filter(col("lang") === "en").as[PageText]
+  }
+
+  /** facts: one fused Aho–Corasick scan over the English pages emits
+    * links (kind 0) AND raw pattern triples (kind 1), consumed as two
+    * filtered views.
+    */
+  private[graft] def facts(spark: SparkSession, texts: DataFrame,
+                           dict: Seq[AliasRow]): DataFrame =
+    Extract.facts(spark, english(texts), dict, Corpus.predicates).toDF()
+
+  /** The links view over facts (kind 0 rows). */
+  private[graft] def linksView(facts: DataFrame): DataFrame =
+    facts.filter(col("kind") === 0)
+      .select(col("url"), col("start"), col("end"), col("a").as("entity_id"))
+
+  /** canonical (id → canonical_id): blocking + CC live in entity space
+    * (≪ corpus size). Below [[LocalBlockingBound]] the candidate
+    * generation runs on the driver (same semantics, pinned by tests);
+    * above it the distributed Dataset/LSH path takes over — on `table`
+    * when one was provided, so the dictionary never round-trips the
+    * driver.
+    */
+  private[graft] def canonical(spark: SparkSession, dict: Seq[AliasRow],
+                               table: Option[Dataset[AliasRow]]): DataFrame = {
+    import spark.implicits._
+    if (dict.sizeIs <= LocalBlockingBound) {
+      val dupEdges = Blocking.duplicateEntityEdgesLocal(dict)
+        .map(p => (p.a, p.b)).toDF("u", "v")
+      val allEntities = table match {
+        case Some(ds) => ds.select(col("entity_id").as("id")).distinct()
+        case None => dict.map(_.entity_id).distinct.toDF("id")
+      }
+      ConnectedComponents.run(spark, dupEdges, allEntities)
+    } else canonicalDistributed(spark, table.getOrElse(dict.toDS()))
+  }
+
+  /** Dataset-native blocking + CC — the only canonicalization shape an
+    * over-cap dictionary can take (it never round-trips the driver).
+    */
+  private[graft] def canonicalDistributed(spark: SparkSession,
+                                          ds: Dataset[AliasRow]): DataFrame = {
+    import spark.implicits._
+    val dupEdges = Blocking.duplicateEntityEdges(spark, ds).toDF("u", "v")
+    val allEntities = ds.select(col("entity_id").as("id")).distinct()
+    ConnectedComponents.run(spark, dupEdges, allEntities)
+  }
+
+  /** triples: canonicalize subject and object of the raw pattern triples
+    * (entity space is small relative to the corpus -> broadcast both
+    * joins; no corpus-wide shuffle).
+    */
+  private[graft] def canonicalTriples(facts: DataFrame, canonical: DataFrame): DataFrame = {
+    val raw = facts.filter(col("kind") === 1)
+      .select(col("url"), col("a").as("subj"), col("pred"), col("obj"))
+    val canonS = broadcast(canonical
+      .select(col("id").as("subj"), col("canonical_id").as("csubj")))
+    val canonO = broadcast(canonical
+      .select(col("id").as("obj"), col("canonical_id").as("cobj")))
+    raw.join(canonS, Seq("subj")).join(canonO, Seq("obj"))
+      .select(col("url"), col("csubj").as("subj"), col("pred"),
+        col("cobj").as("obj"))
+      .dropDuplicates()
+  }
+
+  /** MENTIONS edges with per-pair mention counts, aggregated BEFORE the
+    * edge upsert (partial aggregation defuses the Zipf head entity).
+    * countDistinct(span) inside ONE groupBy replaces a
+    * dropDuplicates-then-count pair — same result, one shuffle fewer.
+    */
+  private[graft] def mentionEdges(links: DataFrame, canonical: DataFrame,
+                                  updateTag: Long): DataFrame = {
+    val canonB = broadcast(canonical
+      .select(col("id").as("entity_id"), col("canonical_id")))
+    links.join(canonB, Seq("entity_id"))
+      .groupBy(col("url"), col("canonical_id"))
+      .agg(countDistinct(struct(col("start"), col("end"))).as("n_mentions"))
+      .select(lit("Page").as("src_label"), col("url").as("src_id"),
+        lit("MENTIONS").as("rel_label"),
+        lit("Entity").as("dst_label"), col("canonical_id").as("dst_id"),
+        map(lit("n_mentions"), col("n_mentions").cast("string")).as("props"),
+        lit(updateTag).as("firstseen"), lit(updateTag).as("lastupdated"))
+  }
+
+  /** Triple edges with per-triple source-page counts. */
+  private[graft] def tripleEdges(triples: DataFrame, updateTag: Long): DataFrame =
+    triples.groupBy(col("subj"), col("pred"), col("obj"))
+      .agg(countDistinct(col("url")).as("n_sources"))
+      .select(lit("Entity").as("src_label"), col("subj").as("src_id"),
+        col("pred").as("rel_label"),
+        lit("Entity").as("dst_label"), col("obj").as("dst_id"),
+        map(lit("n_sources"), col("n_sources").cast("string")).as("props"),
+        lit(updateTag).as("firstseen"), lit(updateTag).as("lastupdated"))
 }

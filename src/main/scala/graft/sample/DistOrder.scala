@@ -3,6 +3,7 @@ package graft.sample
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{ByteType, IntegerType, LongType, ShortType}
 
 /** Two-level distributed global ordering — cumulative sums and ranks
   * over a TOTAL order without ever collapsing the table onto one
@@ -59,10 +60,14 @@ object DistOrder {
     * (`ord`, `tie`) order, `tie` a unique column): adds `outCol` =
     * Σ value over all rows strictly before this one. Exactly the
     * cumulative-offset shape `Window.orderBy(ord)` would give, minus
-    * the single-partition sort.
+    * the single-partition sort. `value` must be integral: the sums are
+    * exact longs, and a fractional value would be truncated.
     */
   def prefixSum(df: DataFrame, ord: Column, tie: Column, value: Column,
                 outCol: String, nShards: Int = 256): DataFrame = {
+    val valueType = df.select(value).schema.head.dataType
+    require(Seq(ByteType, ShortType, IntegerType, LongType).contains(valueType),
+      s"prefixSum needs an integral value column, got ${valueType.simpleString}")
     val sharded = withRangeShard(df.withColumn("__v", value.cast("long")),
       ord, nShards)
     // bounded collect: one row per shard (≤ nShards+1)

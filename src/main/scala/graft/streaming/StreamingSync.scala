@@ -3,8 +3,7 @@ package graft.streaming
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{DataStreamWriter, GroupState, GroupStateTimeout, OutputMode}
-import graft.kg.{AliasRow, Corpus, Extract, Page, PageText}
-import graft.link.{Blocking, ConnectedComponents}
+import graft.kg.{AliasRow, Extract, KgPipeline, Page}
 import graft.merge.{GraphMerge, GraphTables}
 import graft.model.{NodeSchema, RowRef}
 
@@ -34,40 +33,20 @@ import graft.model.{NodeSchema, RowRef}
   */
 object StreamingSync {
 
-  /** Static canonicalization mapping (id → canonical_id) for a bounded
-    * alias dictionary — computed ONCE at stream start and reused by
-    * every micro-batch: the dictionary is a slowly-changing dimension,
-    * not per-batch state. Same Blocking + connected-components path as
-    * the batch pipeline (KgPipeline.canonicalCompute).
-    */
-  def canonicalFor(spark: SparkSession, dict: Seq[AliasRow]): DataFrame = {
-    import spark.implicits._
-    val dupEdges = Blocking.duplicateEntityEdgesLocal(dict)
-      .map(p => (p.a, p.b)).toDF("u", "v")
-    val allEntities = dict.map(_.entity_id).distinct.toDF("id")
-    ConnectedComponents.run(spark, dupEdges, allEntities)
-  }
-
-  /** One micro-batch of pages → graph: extract, fused AC mention+triple
-    * scan, canonicalize against the precomputed mapping, upsert node and
-    * edge batches. Mirrors KgPipeline.mergeStage's batch shapes
-    * (aggregate-before-upsert so the Zipf head entity never explodes an
-    * edge batch) with `updateTag` = the micro-batch id.
+  /** One micro-batch of pages → graph with `updateTag` = the micro-batch
+    * id: the batch pipeline's extract, fused facts scan, links view,
+    * canonicalized triples and edge builders ([[KgPipeline]]'s stage
+    * transforms) against the precomputed canonical mapping, upserted as
+    * one node and one edge batch.
     */
   def incrementalMerge(spark: SparkSession, batch: Dataset[Page],
                        dict: Seq[AliasRow], canonical: DataFrame,
                        graphRoot: String, updateTag: Long): Unit = {
-    import spark.implicits._
-    val texts = Extract.pageText(batch).cache()
+    val texts = KgPipeline.extract(batch).cache()
     try {
-      val facts = Extract.facts(spark, texts.filter(_.lang == "en"), dict,
-        Corpus.predicates).toDF().cache()
+      val facts = KgPipeline.facts(spark, texts.toDF(), dict).cache()
       try {
-        val links = facts.filter(col("kind") === 0)
-          .select(col("url"), col("start"), col("end"), col("a").as("entity_id"))
-        val canonB = broadcast(canonical
-          .select(col("id").as("entity_id"), col("canonical_id")))
-
+        val links = KgPipeline.linksView(facts)
         val pageRows = GraphMerge.toNodeRows(
           texts.toDF().select(col("url").as("id"), col("lang")),
           NodeSchema("Page", RowRef("id"), properties = Map("lang" -> RowRef("lang"))),
@@ -75,37 +54,17 @@ object StreamingSync {
         // only entities actually mentioned in this batch — an incremental
         // batch must not rewrite the whole entity space every trigger
         val entityRows = GraphMerge.toNodeRows(
-          links.join(canonB, Seq("entity_id"))
+          links.join(broadcast(canonical
+            .select(col("id").as("entity_id"), col("canonical_id"))), Seq("entity_id"))
             .select(col("canonical_id").as("id")).distinct(),
           NodeSchema("Entity", RowRef("id")), Map.empty, updateTag)
         GraphMerge.upsertNodeBatch(spark, pageRows.unionByName(entityRows),
           updateTag, GraphTables.nodes(spark, graphRoot)): Unit
 
-        val mentionEdges = links.join(canonB, Seq("entity_id"))
-          .groupBy(col("url"), col("canonical_id"))
-          .agg(countDistinct(struct(col("start"), col("end"))).as("n_mentions"))
-          .select(lit("Page").as("src_label"), col("url").as("src_id"),
-            lit("MENTIONS").as("rel_label"),
-            lit("Entity").as("dst_label"), col("canonical_id").as("dst_id"),
-            map(lit("n_mentions"), col("n_mentions").cast("string")).as("props"),
-            lit(updateTag).as("firstseen"), lit(updateTag).as("lastupdated"))
-        val canonS = broadcast(canonical
-          .select(col("id").as("subj"), col("canonical_id").as("csubj")))
-        val canonO = broadcast(canonical
-          .select(col("id").as("obj"), col("canonical_id").as("cobj")))
-        val tripleEdges = facts.filter(col("kind") === 1)
-          .select(col("url"), col("a").as("subj"), col("pred"), col("obj"))
-          .join(canonS, Seq("subj")).join(canonO, Seq("obj"))
-          .groupBy(col("csubj"), col("pred"), col("cobj"))
-          .agg(countDistinct(col("url")).as("n_sources"))
-          .select(lit("Entity").as("src_label"), col("csubj").as("src_id"),
-            col("pred").as("rel_label"),
-            lit("Entity").as("dst_label"), col("cobj").as("dst_id"),
-            map(lit("n_sources"), col("n_sources").cast("string")).as("props"),
-            lit(updateTag).as("firstseen"), lit(updateTag).as("lastupdated"))
         GraphMerge.upsertEdgeBatch(spark,
-          mentionEdges.unionByName(tripleEdges), updateTag,
-          GraphTables.edges(spark, graphRoot),
+          KgPipeline.mentionEdges(links, canonical, updateTag).unionByName(
+            KgPipeline.tripleEdges(KgPipeline.canonicalTriples(facts, canonical), updateTag)),
+          updateTag, GraphTables.edges(spark, graphRoot),
           collectStats = false, dedupBatch = false): Unit
       } finally facts.unpersist()
     } finally texts.unpersist()
@@ -119,7 +78,9 @@ object StreamingSync {
   def kgSink(pages: Dataset[Page], dict: Seq[AliasRow],
              graphRoot: String, checkpointDir: String): DataStreamWriter[Page] = {
     val spark = pages.sparkSession
-    val canonical = canonicalFor(spark, dict).cache()
+    // the dictionary is a slowly-changing dimension, not per-batch
+    // state: canonicalize it ONCE at stream start for every micro-batch
+    val canonical = KgPipeline.canonical(spark, dict, None).cache()
     pages.writeStream
       .option("checkpointLocation", checkpointDir)
       .outputMode(OutputMode.Update())

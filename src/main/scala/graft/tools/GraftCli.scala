@@ -246,20 +246,16 @@ object GraftCli {
           s"multi-tenant sync needs an --input template containing {tenant}\n$usage")
         require(!flags.contains("selected-modules"),
           s"--selected-modules and --tenants cannot be combined\n$usage")
-        // collect the tenant-INVARIANT dictionary once — per-tenant
+        // resolve the tenant-INVARIANT dictionary once — per-tenant
         // pipe.run(dict: Dataset) would re-collect up to 5M rows to the
-        // driver on every loop iteration; over-cap dictionaries stay
-        // table-native and take the sharded path inside each run
-        val dictLocal = KgPipeline.boundedCollectOpt(dict)
+        // driver on every loop iteration
+        val resolved = KgPipeline.dictionary(dict)
         graft.jobs.MultiTenant.syncAndThen(tenants, bestEffort) { t =>
           val pipe = new KgPipeline(spark, s"$workDir/tenants/$t", buckets,
             graphRoot = Some(s"$workDir/graph"),
             maintainEdgeIndex = edgeIndexOn)
           val pages = spark.read.parquet(tpl.replace("{tenant}", t)).as[Page]
-          dictLocal match {
-            case Some(rows) => pipe.run(pages, rows, tag, mergeGraph = true): Unit
-            case None => pipe.run(pages, dict, tag, mergeGraph = true): Unit
-          }
+          pipe.run(pages, resolved, tag, mergeGraph = true): Unit
         } { runPost() }: Unit
       case None =>
         val pipe = new KgPipeline(spark, workDir, buckets,

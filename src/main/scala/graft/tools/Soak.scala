@@ -44,17 +44,20 @@ object Soak {
     val tmp = s"$out/_tmp_$name"
     df.coalesce(1).write.mode("overwrite").parquet(tmp)
     val tmpDir = java.nio.file.Paths.get(tmp)
-    val part = java.nio.file.Files.list(tmpDir).iterator()
+    val listing = java.nio.file.Files.list(tmpDir)
     var moved = false
-    while (part.hasNext && !moved) {
-      val p = part.next()
-      if (p.getFileName.toString.endsWith(".parquet")) {
-        java.nio.file.Files.move(p,
-          java.nio.file.Paths.get(s"$out/$name.parquet"),
-          java.nio.file.StandardCopyOption.REPLACE_EXISTING)
-        moved = true
+    try {
+      val part = listing.iterator()
+      while (part.hasNext && !moved) {
+        val p = part.next()
+        if (p.getFileName.toString.endsWith(".parquet")) {
+          java.nio.file.Files.move(p,
+            java.nio.file.Paths.get(s"$out/$name.parquet"),
+            java.nio.file.StandardCopyOption.REPLACE_EXISTING)
+          moved = true
+        }
       }
-    }
+    } finally listing.close()
     require(moved, s"no parquet part written for $name")
     graft.snapshot.SnapshotTable.deleteTree(tmpDir)
   }

@@ -67,6 +67,14 @@ class DistOrderSpec extends SparkSpecBase {
       nShards = 4).count() === 0L)
   }
 
+  test("prefixSum rejects a non-integral value column, naming its type") {
+    val df = Seq((1L, 0.5), (2L, 1.5)).toDF("k", "v")
+    val e = intercept[IllegalArgumentException] {
+      DistOrder.prefixSum(df, col("k"), col("k"), col("v"), "off", nShards = 4)
+    }
+    assert(e.getMessage.contains("double"))
+  }
+
   test("prefixSum/rankBy plans carry no unpartitioned window") {
     val df = (1 to 50).map(i => (i.toLong, i.toLong)).toDF("k", "v")
     val p = DistOrder.prefixSum(df, col("k"), col("k"), col("v"), "off",

@@ -5,7 +5,8 @@ import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.Trigger
 import graft.SparkSpecBase
-import graft.kg.{AliasRow, Page}
+import org.apache.spark.sql.DataFrame
+import graft.kg.{AliasRow, Corpus, KgPipeline, Page}
 import graft.merge.GraphTables
 
 /** Structured-Streaming specs: incremental KG sync via foreachBatch
@@ -61,6 +62,33 @@ class StreamingSpec extends SparkSpecBase {
     assert(edges == Seq(("e0001", "located_in", "e0003"),
       ("e0001", "works_for", "e0002")))
     nodes.unpersist(): Unit
+  }
+
+  test("one micro-batch of the corpus builds the batch pipeline's edges and Page nodes") {
+    val pages = Corpus.pages(spark, sf1)
+    val tmp = java.nio.file.Files.createTempDirectory("kgparity").toString
+    StreamingSync.incrementalMerge(spark, pages, Corpus.aliasRows,
+      KgPipeline.canonical(spark, Corpus.aliasRows, None), s"$tmp/stream", 100L)
+    new KgPipeline(spark, s"$tmp/batch").run(pages, Corpus.aliasRows, 100L): Unit
+
+    def edgeSet(root: String) = GraphTables.edges(spark, root).read()
+      .select("src_label", "src_id", "rel_label", "dst_label", "dst_id", "props")
+      .collect().map(r => (r.getString(0), r.getString(1), r.getString(2),
+        r.getString(3), r.getString(4), r.getMap[String, String](5).toMap)).toSet
+    def nodes(root: String, label: String): DataFrame =
+      GraphTables.nodes(spark, root).read().filter(col("label") === label)
+    def pageSet(root: String) = nodes(root, "Page").select("id", "props")
+      .collect().map(r => (r.getString(0), r.getMap[String, String](1).toMap)).toSet
+    def entityIds(root: String) = nodes(root, "Entity").select("id")
+      .collect().map(_.getString(0)).toSet
+
+    val (streamEdges, batchEdges) = (edgeSet(s"$tmp/stream"), edgeSet(s"$tmp/batch/graph"))
+    assert(streamEdges.exists(_._3 == "MENTIONS") && streamEdges.exists(_._3 != "MENTIONS"))
+    assert(streamEdges === batchEdges)
+    assert(pageSet(s"$tmp/stream") === pageSet(s"$tmp/batch/graph"))
+    // the batch run writes the whole canonical entity space, a
+    // micro-batch only the entities its pages mention
+    assert(entityIds(s"$tmp/stream").subsetOf(entityIds(s"$tmp/batch/graph")))
   }
 
   test("windowedPageCounts emits a window once its watermark passes") {

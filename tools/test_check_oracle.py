@@ -1,0 +1,29 @@
+"""Unit tests for check_oracle's row canonicalization.
+
+Run from the repo root: python3 -m unittest tools/test_check_oracle.py
+"""
+import sys
+import unittest
+from pathlib import Path
+
+sys.path.insert(0, str(Path(__file__).resolve().parent))
+from check_oracle import canon  # noqa: E402
+
+
+class CanonTest(unittest.TestCase):
+    def test_column_boundaries_are_kept(self):
+        cols = ["a", "b"]
+        self.assertNotEqual(canon([(1, 23)], cols), canon([(12, 3)], cols))
+
+    def test_columns_compare_by_name_and_rows_as_a_multiset(self):
+        self.assertEqual(canon([(1, "x"), (2, "y")], ["a", "b"]),
+                         canon([("y", 2), ("x", 1)], ["b", "a"]))
+
+    def test_floats_compare_exactly_and_nan_equals_nan(self):
+        self.assertNotEqual(canon([(0.1 + 0.2,)], ["a"]), canon([(0.3,)], ["a"]))
+        self.assertEqual(canon([(float("nan"),)], ["a"]),
+                         canon([(float("nan"),)], ["a"]))
+
+
+if __name__ == "__main__":
+    unittest.main()
