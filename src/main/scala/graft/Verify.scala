@@ -10,10 +10,10 @@ object Verify {
     // checks of a few queries without the full 50-query sweep. The
     // driver passes 2 args, so its runs are always the full set.
     val nameFilter = args.lift(2).map(_.r)
-    // 16, not 32: this VM's 32 vCPUs are overcommitted and saturating
-    // them triggers hypervisor throttling convoys (see BASELINE.md
-    // measurement notes) — 16 is the measured wall-clock sweet spot.
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "16").toInt
+    // SPARK_GRAFT_CPUS is the driver contract's core count; without it
+    // the session uses every core the JVM sees.
+    val cpus = sys.env.get("SPARK_GRAFT_CPUS").map(_.toInt)
+      .getOrElse(Runtime.getRuntime.availableProcessors)
     val spark = core.Graft.session(s"local[$cpus]", cpus, "graft-verify")
     new java.io.File(outDir).mkdirs()
     SparkEntry.queries

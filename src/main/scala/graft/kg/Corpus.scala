@@ -247,11 +247,15 @@ object Corpus {
 
   /** The pages table: one page per document row × `replicas` (replica r
     * shifts the id space by r×10000 to keep urls unique; used only to
-    * scale the benchmark corpus). Narrow map — no shuffle.
-    */
-  /** `repOffset` shifts the replica index (page ids become
+    * scale the benchmark corpus). Narrow map after one small shuffle of
+    * the source rows.
+    *
+    * `repOffset` shifts the replica index (page ids become
     * docId + (rep+repOffset)*10000): a later "day" of NEW urls over the
     * same entity space — the incremental-sync delta batch.
+    *
+    * `minParts` floors the task count of that shuffle (64 by default);
+    * 0 leaves it to twice the session's default parallelism.
     */
   def pages(spark: SparkSession, sfDir: String, replicas: Int = 1,
             noise: Int = 0, repOffset: Int = 0,
@@ -263,14 +267,7 @@ object Corpus {
     // core. One tiny shuffle of the source rows buys full parallelism
     // downstream — and the committed pages stage inherits the file count,
     // so every later stage reads a well-partitioned table.
-    // `minParts` floors the task count: 64 by default (tests and CLI
-    // syncs stay small-file-friendly); the BENCH passes 192 so its
-    // scaling legs get fine, IDENTICAL task granularity (see Bench
-    // scaladoc — bench measurement tuning lives in the bench, not
-    // here). SPARK_GRAFT_INPUT_PARTS overrides both.
-    val parFloor = sys.env.get("SPARK_GRAFT_INPUT_PARTS")
-      .map(_.toInt).getOrElse(minParts)
-    val par = math.max(spark.sparkContext.defaultParallelism * 2, parFloor)
+    val par = math.max(spark.sparkContext.defaultParallelism * 2, minParts)
     val docs = spark.read.parquet(s"$sfDir/documents.parquet")
       .select(col("doc_id").cast("long"), col("text"), col("lang"))
       .repartition(par, col("doc_id"))

@@ -168,13 +168,6 @@ object Blocking {
       .distinct()
   }
 
-  /** Same candidate-union + verify computation in plain Scala for a
-    * driver-resident dictionary — blocking runs in entity space, which
-    * is orders of magnitude smaller than the corpus, so small syncs skip
-    * ~10 tiny Spark jobs. Must stay semantically identical to
-    * [[duplicateEntityEdges]] (pinned by a test); the Dataset version
-    * remains the scale path for dictionaries too big for one heap.
-    */
   /** Code-point string ordering — matches Spark's UTF8String binary
     * comparison (UTF-8 byte order ≡ code-point order). Java's
     * `String.compareTo` compares UTF-16 code UNITS, which sorts
@@ -216,6 +209,13 @@ object Blocking {
         .flatMap { case (x, y) => Seq((x, y), (y, x)) }
     }
 
+  /** Same candidate-union + verify computation in plain Scala for a
+    * driver-resident dictionary — blocking runs in entity space, which
+    * is orders of magnitude smaller than the corpus, so small syncs skip
+    * ~10 tiny Spark jobs. Must stay semantically identical to
+    * [[duplicateEntityEdges]] (pinned by a test); the Dataset version
+    * remains the scale path for dictionaries too big for one heap.
+    */
   def duplicateEntityEdgesLocal(dict: Seq[AliasRow], tau: Double = 0.55,
                                 numHashes: Int = 16, bands: Int = 8,
                                 maxDf: Int = 4): Seq[EntityPair] = {

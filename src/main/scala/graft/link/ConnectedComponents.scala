@@ -18,10 +18,6 @@ import org.apache.spark.sql.functions._
   */
 object ConnectedComponents {
 
-  /** @param edges    undirected edges, columns (u, v), string ids
-    * @param allNodes every node id, column (id) — singletons map to self
-    * @return mapping (id, canonical_id)
-    */
   /** Edge-count bound under which the component computation runs as a
     * driver-side union-find instead of the iterative DataFrame loop. The
     * candidate-match edge set is orders of magnitude smaller than the
@@ -32,6 +28,10 @@ object ConnectedComponents {
     */
   val DriverEdgeBound: Long = 2_000_000L
 
+  /** @param edges    undirected edges, columns (u, v), string ids
+    * @param allNodes every node id, column (id) — singletons map to self
+    * @return mapping (id, canonical_id)
+    */
   def run(spark: SparkSession, edges: DataFrame, allNodes: DataFrame,
           maxIter: Int = 50): DataFrame = {
     val eIn = edges.select(col("u"), col("v")).persist()

@@ -264,6 +264,9 @@ object BinaryOps {
 
   // ---- real PNG pixel decode (dependency-free) ----------------------------
 
+  /** DEFLATE's maximum expansion: 258 bytes per ~2-bit code. */
+  private val MaxDeflateRatio = 1032L
+
   /** FULL PNG pixel decode with zero codec dependencies — chunk walk,
     * `java.util.zip.Inflater` for the zlib stream, and the five
     * standard scanline filters (None/Sub/Up/Average/Paeth) reversed
@@ -289,7 +292,7 @@ object BinaryOps {
     var done = false
     while (!done && supported && i + 8 <= b.length) {
       val len = be32(i)
-      if (len < 0 || i + 12 + len > b.length) supported = false
+      if (len < 0 || i.toLong + 12 + len > b.length) supported = false
       else {
         val typ = new String(b, i + 4, 4, "US-ASCII")
         typ match {
@@ -313,8 +316,14 @@ object BinaryOps {
     }
     if (!supported || w <= 0 || h <= 0 || idat.size() == 0) return None
     val bpp = colorType match { case 0 => 1; case 2 => 3; case _ => 4 }
+    // the header's size claim is checked against the payload before any
+    // allocation: DEFLATE cannot expand past ~1032:1, so a larger raw
+    // size is a lie (or a bomb), and it must fit one JVM array
+    val rawLen = h.toLong * (1L + w.toLong * bpp)
+    if (rawLen > math.min(idat.size.toLong * MaxDeflateRatio, Int.MaxValue - 8L))
+      return None
     val stride = w * bpp
-    val raw = new Array[Byte](h * (1 + stride))
+    val raw = new Array[Byte](rawLen.toInt)
     val inf = new java.util.zip.Inflater()
     inf.setInput(idat.toByteArray)
     var off = 0

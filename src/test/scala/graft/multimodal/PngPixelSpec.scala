@@ -75,6 +75,33 @@ class PngPixelSpec extends SparkSpecBase {
     assert(BinaryOps.pngPixels(deep).isEmpty)
   }
 
+  test("a chunk length whose end offset overflows Int returns None") {
+    val longChunk = DataOps.pngBytes(0L).clone()
+    java.nio.ByteBuffer.wrap(longChunk).putInt(8, 0x7FFFFFF8)
+    assert(BinaryOps.pngPixels(longChunk).isEmpty)
+  }
+
+  test("a 65535x65535 RGBA header over a tiny IDAT returns None") {
+    // the raw size overflows Int and is far beyond what the payload
+    // can inflate to
+    def chunk(typ: String, data: Array[Byte]): Array[Byte] = {
+      val crc = new java.util.zip.CRC32()
+      crc.update(typ.getBytes("US-ASCII")); crc.update(data)
+      java.nio.ByteBuffer.allocate(12 + data.length).putInt(data.length)
+        .put(typ.getBytes("US-ASCII")).put(data).putInt(crc.getValue.toInt)
+        .array()
+    }
+    val ihdr = java.nio.ByteBuffer.allocate(13).putInt(65535).putInt(65535)
+      .put(Array[Byte](8, 6, 0, 0, 0)).array()
+    val zipped = new java.io.ByteArrayOutputStream()
+    val z = new java.util.zip.DeflaterOutputStream(zipped)
+    z.write(new Array[Byte](64)); z.close()
+    val huge = Array[Byte](0x89.toByte, 'P', 'N', 'G', 0x0d, 0x0a, 0x1a, 0x0a) ++
+      chunk("IHDR", ihdr) ++ chunk("IDAT", zipped.toByteArray) ++
+      chunk("IEND", Array.emptyByteArray)
+    assert(BinaryOps.pngPixels(huge).isEmpty)
+  }
+
   test("dHash: planted near-copies land within hamming 6; unrelated images are far") {
     def hashOf(id: Long): Long = {
       val Some((w, h, g)) = BinaryOps.pngPixels(DataOps.pngBytes(id))
