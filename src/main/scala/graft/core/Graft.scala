@@ -1,20 +1,49 @@
 package graft.core
 
+import org.apache.spark.SparkConf
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
-/** Session + table helpers shared by the engine.
+/** Session + table helpers shared by the engine. Every session in the
+  * engine and its tests is built here (`SessionGuardSpec`).
   *
   * Design note (scale): every knob here is chosen for a multi-executor
   * cluster reading ~100 TB — AQE on (runtime re-plan, skew-join split,
   * partition coalescing), shuffle partitions sized to the test rig but
   * overridable, broadcast threshold left at Spark's default so small
   * dims (alias dictionaries, region/nation tables) broadcast.
+  *
+  * Design note (codegen cache): Spark keeps the classes Janino compiles
+  * for generated code in one JVM-wide LRU cache. Its size is the static
+  * conf `spark.sql.codegen.cache.maxEntries` (default 100), read once,
+  * the first time any session generates code. The engine's working set
+  * is larger, so at 100 the cache thrashes and the same plans recompile
+  * on every run. Counted with Spark's `CodegenMetrics` at the default
+  * size: one perfbench `query_mix` pass (8 queries) compiles the same
+  * 152-153 classes every time, one `resync_cleanup` operation compiles
+  * 287-288, and `graft.Verify` at sf0.01 compiles 4,966 sources, 2,598 of
+  * them distinct. At [[CodegenCacheEntries]] a repeated `query_mix` pass
+  * compiles none (`CodegenCacheSpec`) and Verify compiles each source
+  * once.
   */
 object Graft {
 
+  /** Above Verify's 2,598 distinct sources; the larger cache keeps ~17 MB
+    * more metaspace on that run (199 → 216 MB at exit).
+    */
+  val CodegenCacheEntries = 4096
+
+  /** Settings every session gets unless the launching conf (a
+    * spark-submit `--conf`, or a `-Dspark.*` property) already sets them.
+    */
+  private val defaults = Seq(
+    "spark.sql.codegen.cache.maxEntries" -> CodegenCacheEntries.toString,
+    "spark.hadoop.fs.file.impl" -> classOf[PosixLocalFileSystem].getName)
+
   private def configured(b: org.apache.spark.sql.SparkSession.Builder,
                          appName: String): SparkSession = {
-    val spark = b
+    val launch = new SparkConf()
+    val spark = defaults.filterNot { case (k, _) => launch.contains(k) }
+      .foldLeft(b) { case (b, (k, v)) => b.config(k, v) }
       .appName(appName)
       // native catalyst functions (fvec_dot) via the public extensions
       // API — spark-submit deployments set
@@ -33,8 +62,7 @@ object Graft {
     * [[submitSession]], which takes master and sizing from the submit
     * conf instead of code.
     */
-  def session(master: String = "local[32]", shufflePartitions: Int = 32,
-              appName: String = "graft"): SparkSession =
+  def session(master: String, shufflePartitions: Int, appName: String): SparkSession =
     configured(SparkSession.builder()
       .master(master)
       .config("spark.sql.shuffle.partitions", shufflePartitions.toString)

@@ -111,13 +111,15 @@ object GraftCli {
     * configured by spark-submit (`--master yarn/k8s` sets `spark.master`)
     * is respected — hard-coding `.master()` would override it and
     * silently run a cluster job single-node on the driver. With neither,
-    * default to local[16] (this sandbox's sweet spot).
+    * use every core the JVM sees.
     */
   private def session(flags: Map[String, String], app: String): SparkSession =
     flags.get("cores") match {
       case Some(c) => Graft.session(s"local[$c]", c.toInt, app)
       case None if sys.props.contains("spark.master") => Graft.submitSession(app)
-      case None => Graft.session("local[16]", 16, app)
+      case None =>
+        val cpus = Runtime.getRuntime.availableProcessors
+        Graft.session(s"local[$cpus]", cpus, app)
     }
 
   /** Accepted flags per subcommand — the argparse-style schema: a typo'd
