@@ -20,8 +20,8 @@ package graft.jobs
   * table-scale Spark jobs — tenants are sub-resource containers
   * (thousands at most), not data. Per-tenant isolation comes from the
   * kwarg-scoped merge/cleanup underneath (GraphMerge.load +
-  * Cleanup.run), which rewrite only the buckets a tenant's batch
-  * touches.
+  * Cleanup.run), which commit through SnapshotTable.rewrite and so
+  * rewrite only the buckets a tenant's batch touches.
   */
 object MultiTenant {
 

@@ -281,17 +281,15 @@ final class KgPipeline(spark: SparkSession, workRoot: String,
       NodeSchema("Entity", RowRef("id")),
       Map.empty, updateTag, dedup = false)
     // both inputs are key-unique (texts is one row per url; canonical ids
-    // are distinct()'d) and the two labels can't collide — skip the
-    // batch-dedup shuffle of the corpus-sized Page-node side
+    // are distinct()'d) and the two labels can't collide — the batch
+    // upserts' key-unique precondition
     GraphMerge.upsertNodeBatch(spark,
-      pageRows.unionByName(entityRows), updateTag, nodes, dedupBatch = false): Unit
+      pageRows.unionByName(entityRows), updateTag, nodes)
     // both edge inputs are aggregation outputs, hence already key-unique
-    // — skip the batch-dedup shuffle
     GraphMerge.upsertEdgeBatch(spark,
       KgPipeline.mentionEdges(linksDf, canonicalDf, updateTag)
         .unionByName(KgPipeline.tripleEdges(triplesDf, updateTag)),
-      updateTag, edges, collectStats = false, dedupBatch = false,
-      edgeIndex = edgeIndex): Unit
+      updateTag, edges, edgeIndex = edgeIndex)
   }
 }
 

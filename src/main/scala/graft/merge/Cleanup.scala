@@ -25,7 +25,7 @@ final case class CleanupStats(nodesDeleted: Long, edgesDeleted: Long)
   * Scale: the node rewrite touches only the hash buckets of the schema's
   * label that contain stale rows, and the edge rewrite only the
   * (rel_label, bucket) partitions containing doomed edges
-  * (SnapshotTable.commitPhysical) — the sub-resource scoping that keeps
+  * (SnapshotTable.rewrite) — the sub-resource scoping that keeps
   * the reference's cleanup from crossing tenants also keeps ours from
   * rewriting 100 TB. The deleted-id set used for DETACH is the stale
   * subset of one tenant, broadcast into the edge anti-joins.
@@ -56,21 +56,26 @@ object Cleanup {
     val holdsAny = props.map(p => element_at(col("props"), p).isNotNull)
       .reduce(_ || _)
     val affected = part.filter(predicate && holdsAny).cache()
-    val n = affected.count()
-    if (n > 0) {
-      val touched = nodes.physicalValuesOf(affected)
-      val dropKeys = array(props.map(lit): _*)
-      val rewritten = nodes.readPhysical(touched)
-        .getOrElse(sys.error("affected buckets vanished mid-clear"))
-        .withColumn("props",
-          when(predicate && holdsAny,
-            map_filter(col("props"), (k, _) => !array_contains(dropKeys, k)))
-            .otherwise(col("props")))
-      nodes.commitPhysical(rewritten, updateTag, touched)
-    }
-    affected.unpersist()
-    n
+    try {
+      val n = affected.count()
+      if (n > 0) {
+        val dropKeys = array(props.map(lit): _*)
+        nodes.rewrite(affected, updateTag) { existing =>
+          bucketsOf(existing, "affected").withColumn("props",
+            when(predicate && holdsAny,
+              map_filter(col("props"), (k, _) => !array_contains(dropKeys, k)))
+              .otherwise(col("props")))
+        }: Unit
+      }
+      n
+    } finally affected.unpersist(): Unit
   }
+
+  /** The touched buckets' current rows: a delete's rows came from those
+    * buckets, so their absence means the table changed under the write.
+    */
+  private def bucketsOf(existing: Option[DataFrame], what: String): DataFrame =
+    existing.getOrElse(sys.error(s"$what buckets vanished mid-cleanup"))
 
   /** With `edgeIndex` (an [[EdgeEndpointIndex]] maintained on every edge
     * commit of this graph) the DETACH sweep reads ONLY the edge
@@ -89,9 +94,11 @@ object Cleanup {
       sys.error(s"cleanup requires kwarg '${sr.ref.name}' — " +
         "sub-resource scoping is mandatory (cleanupbuilder.py:191-206)")))
 
-    // The label-scoped read prunes to the label's buckets only.
+    // The label-scoped read prunes to the label's buckets only. A label
+    // with no partition (never loaded, or its last node deleted by an
+    // earlier cleanup) has nothing stale and no tenant scope to sweep.
     val part = nodes.readPartition(schema.label)
-      .getOrElse(sys.error(s"no partition for label ${schema.label}"))
+      .getOrElse(return CleanupStats(0L, 0L))
     val scope = subId match {
       case Some(id) => col("sub_resource_id") === lit(id)
       case None => lit(true)
@@ -102,95 +109,91 @@ object Cleanup {
     val tenantIds = part.filter(scope).select(col("id")).cache()
     val staleRows = part.filter(scope && stale(updateTag)).cache()
     val staleNodes = staleRows.select(col("id")).cache()
-    val nDeleted = staleNodes.count()
-
-    if (nDeleted > 0) {
-      // bucket-precise: rewrite only the buckets that contain stale rows;
-      // the label's other buckets carry forward by file reference
-      val touched = nodes.physicalValuesOf(staleRows)
-      val kept = nodes.readPhysical(touched)
-        .getOrElse(sys.error("stale buckets vanished mid-cleanup"))
-        .join(staleNodes.withColumnRenamed("id", "_sid"),
-          col("id") === col("_sid"), "left_anti")
-      nodes.commitPhysical(kept, updateTag, touched)
+    try {
+      val nDeleted = staleNodes.count()
+      if (nDeleted > 0) {
+        // bucket-precise: rewrite only the buckets that contain stale
+        // rows; the label's other buckets carry forward by file reference
+        nodes.rewrite(staleRows, updateTag) { existing =>
+          bucketsOf(existing, "stale").join(staleNodes.withColumnRenamed("id", "_sid"),
+            col("id") === col("_sid"), "left_anti")
+        }: Unit
+      }
+      val eDeleted = if (!edges.exists) 0L else {
+        val relSet = schema.relLabels.toSet
+        // Every membership test below is TWO equi-semi-joins (src side,
+        // dst side) unioned — an OR-of-equalities join condition cannot be
+        // planned as a hash join and degrades to a nested loop over
+        // |edges| × |ids|. No explicit broadcast: staleNodes is usually
+        // small (AQE broadcasts it), but with no sub-resource scope
+        // tenantIds is the WHOLE label — forcing it into a broadcast would
+        // OOM at corpus scale, while a shuffled semi-join just works.
+        def touching(base: DataFrame, ids: DataFrame, renamed: String): DataFrame = {
+          val r = ids.withColumnRenamed("id", renamed)
+          base.filter(col("src_label") === schema.label)
+            .join(r, col("src_id") === col(renamed), "left_semi")
+            .unionByName(
+              base.filter(col("dst_label") === schema.label)
+                .join(r, col("dst_id") === col(renamed), "left_semi"))
+        }
+        // detach: any edge touching a deleted node of this label. A
+        // deleted node's edges can carry ANY rel_label and edge buckets
+        // hash (src_id, dst_id) jointly, so without help neither side
+        // prunes — the endpoint index names the exact partition subset.
+        // The index path is gated on its coverage marker: if ANY edge
+        // commit bypassed the index, soundForDetach is false and the sweep
+        // falls back to the full scan (correct, just table-proportional)
+        // instead of silently leaving dangling edges.
+        val soundIndex = edgeIndex.filter(_.soundForDetach)
+        if (edgeIndex.isDefined && soundIndex.isEmpty)
+          System.err.println(s"[cleanup] endpoint index at " +
+            s"${edgeIndex.get.table.root} does not cover every edge commit " +
+            "(a commit ran without it, or it was attached mid-life without " +
+            "rebuild) — falling back to the full-scan DETACH sweep")
+        val detachState = soundIndex match {
+          case Some(ix) if nDeleted > 0 =>
+            edges.readPhysical(ix.edgePartitionsFor(schema.label, staleNodes))
+              .getOrElse(GraphTables.emptyEdges(spark))
+          case None if nDeleted > 0 => edges.read()
+          case _ => GraphTables.emptyEdges(spark) // nothing deleted
+        }
+        val detached = touching(detachState, staleNodes, "_sid")
+        // stale rels of this schema's rel labels, scoped to this node label
+        // AND to the tenant being synced. The labels are the table's
+        // partition column — read ONLY those partitions (no index needed).
+        val relState = relSet.toSeq.sorted.flatMap(edges.readPartition)
+          .reduceOption(_ unionByName _)
+          .getOrElse(GraphTables.emptyEdges(spark))
+        val staleRelEdges = touching(relState.filter(stale(updateTag)),
+          tenantIds, "_tid")
+        val doomed = detached
+          .unionByName(staleRelEdges)
+          .dropDuplicates("src_label", "src_id", "rel_label", "dst_label", "dst_id")
+          .cache()
+        try {
+          val n = doomed.count()
+          if (n > 0) {
+            // bucket-precise: rewrite only the (rel_label, bucket) partitions
+            // that contain doomed edges. A delete-only rewrite cannot break
+            // the index's superset property — advance its coverage marker
+            // across this commit.
+            edges.rewrite(doomed, updateTag) { existing =>
+              bucketsOf(existing, "doomed")
+                .join(doomed.select(col("src_label").as("_dsl"), col("src_id").as("_dsi"),
+                  col("rel_label").as("_drl"), col("dst_label").as("_ddl"),
+                  col("dst_id").as("_ddi")),
+                  col("src_label") === col("_dsl") && col("src_id") === col("_dsi") &&
+                    col("rel_label") === col("_drl") && col("dst_label") === col("_ddl") &&
+                    col("dst_id") === col("_ddi"),
+                  "left_anti")
+            }.foreach(v => edgeIndex.foreach(_.coverDeleteCommit(v)))
+          }
+          n
+        } finally doomed.unpersist(): Unit
+      }
+      CleanupStats(nDeleted, eDeleted)
+    } finally {
+      staleRows.unpersist(); staleNodes.unpersist(); tenantIds.unpersist(): Unit
     }
-
-    var eDeleted = 0L
-    if (edges.exists) {
-      val relSet = schema.relLabels.toSet
-      // Every membership test below is TWO equi-semi-joins (src side,
-      // dst side) unioned — an OR-of-equalities join condition cannot be
-      // planned as a hash join and degrades to a nested loop over
-      // |edges| × |ids|. No explicit broadcast: staleNodes is usually
-      // small (AQE broadcasts it), but with no sub-resource scope
-      // tenantIds is the WHOLE label — forcing it into a broadcast would
-      // OOM at corpus scale, while a shuffled semi-join just works.
-      def touching(base: DataFrame, ids: DataFrame, renamed: String): DataFrame = {
-        val r = ids.withColumnRenamed("id", renamed)
-        base.filter(col("src_label") === schema.label)
-          .join(r, col("src_id") === col(renamed), "left_semi")
-          .unionByName(
-            base.filter(col("dst_label") === schema.label)
-              .join(r, col("dst_id") === col(renamed), "left_semi"))
-      }
-      // detach: any edge touching a deleted node of this label. A
-      // deleted node's edges can carry ANY rel_label and edge buckets
-      // hash (src_id, dst_id) jointly, so without help neither side
-      // prunes — the endpoint index names the exact partition subset.
-      // The index path is gated on its coverage marker: if ANY edge
-      // commit bypassed the index, soundForDetach is false and the sweep
-      // falls back to the full scan (correct, just table-proportional)
-      // instead of silently leaving dangling edges.
-      val soundIndex = edgeIndex.filter(_.soundForDetach)
-      if (edgeIndex.isDefined && soundIndex.isEmpty)
-        System.err.println(s"[cleanup] endpoint index at " +
-          s"${edgeIndex.get.table.root} does not cover every edge commit " +
-          "(a commit ran without it, or it was attached mid-life without " +
-          "rebuild) — falling back to the full-scan DETACH sweep")
-      val detachState = soundIndex match {
-        case Some(ix) if nDeleted > 0 =>
-          edges.readPhysical(ix.edgePartitionsFor(schema.label, staleNodes))
-            .getOrElse(GraphTables.emptyEdges(spark))
-        case Some(_) => GraphTables.emptyEdges(spark) // nothing deleted
-        case None if nDeleted > 0 => edges.read()
-        case None => GraphTables.emptyEdges(spark) // nothing deleted
-      }
-      val detached = touching(detachState, staleNodes, "_sid")
-      // stale rels of this schema's rel labels, scoped to this node label
-      // AND to the tenant being synced. The labels are the table's
-      // partition column — read ONLY those partitions (no index needed).
-      val relState = relSet.toSeq.sorted.flatMap(edges.readPartition)
-        .reduceOption(_ unionByName _)
-        .getOrElse(GraphTables.emptyEdges(spark))
-      val staleRelEdges = touching(relState.filter(stale(updateTag)),
-        tenantIds, "_tid")
-      val doomed = detached
-        .unionByName(staleRelEdges)
-        .dropDuplicates("src_label", "src_id", "rel_label", "dst_label", "dst_id")
-        .cache()
-      eDeleted = doomed.count()
-      if (eDeleted > 0) {
-        // bucket-precise: rewrite only the (rel_label, bucket) partitions
-        // that contain doomed edges
-        val touchedE = edges.physicalValuesOf(doomed)
-        val keptE = edges.readPhysical(touchedE)
-          .getOrElse(sys.error("doomed buckets vanished mid-cleanup"))
-          .join(doomed.select(col("src_label").as("_dsl"), col("src_id").as("_dsi"),
-            col("rel_label").as("_drl"), col("dst_label").as("_ddl"),
-            col("dst_id").as("_ddi")),
-            col("src_label") === col("_dsl") && col("src_id") === col("_dsi") &&
-              col("rel_label") === col("_drl") && col("dst_label") === col("_ddl") &&
-              col("dst_id") === col("_ddi"),
-            "left_anti")
-        val v = edges.commitPhysical(keptE, updateTag, touchedE)
-        // a delete-only rewrite cannot break the index's superset
-        // property — advance its coverage marker across this commit
-        edgeIndex.foreach(_.coverDeleteCommit(v))
-      }
-      doomed.unpersist()
-    }
-    staleRows.unpersist(); staleNodes.unpersist(); tenantIds.unpersist()
-    CleanupStats(nDeleted, eDeleted)
   }
 }
-

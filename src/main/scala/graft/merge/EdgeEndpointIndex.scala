@@ -28,7 +28,8 @@ import graft.snapshot.{BucketSpec, SnapshotTable}
   *    the sweep read a partition and find nothing (harmless); `rebuild`
   *    compacts. It must never UNDER-approximate, so index-backed cleanup
   *    is only sound on graphs whose every edge commit ran with the index
-  *    attached (pass it to GraphMerge.load/upsertEdgeBatch from the first
+  *    attached (pass it to GraphMerge.upsertEdgeBatch, or to
+  *    GraphMerge.load, which routes its rel rows there, from the first
   *    sync). Cleanup without the index stays the default full-scan path.
   *    GraphMerge writes the index BEFORE the edge commit for the same
   *    reason: a crash between the two non-atomic commits then leaves the
@@ -38,7 +39,7 @@ import graft.snapshot.{BucketSpec, SnapshotTable}
   *    is guaranteed to cover, advanced in TWO phases — [[update]] (before
   *    the edge commit) records the destination version as PENDING when
   *    the chain is contiguous, and [[confirmCoverage]] (after the edge
-  *    commit, from the GraphMerge commit sites) promotes it to covered
+  *    commit, from GraphMerge's edge merge) promotes it to covered
   *    iff the commit actually took that version. Pending is never
   *    trusted by [[soundForDetach]]: after a crash its version number
   *    could be taken by a later UN-indexed commit, which must read as
@@ -142,7 +143,7 @@ final class EdgeEndpointIndex private (val table: SnapshotTable,
 
   /** Promote the pending claim to covered iff the edge table's latest
     * version is exactly the one [[update]] indexed for. Called by the
-    * GraphMerge commit sites immediately after the edge commit.
+    * GraphMerge's edge merge immediately after the edge commit.
     */
   def confirmCoverage(): Unit = {
     val ev = edges.latestVersion.getOrElse(0L)
@@ -189,21 +190,8 @@ final class EdgeEndpointIndex private (val table: SnapshotTable,
     requireBucketsMatch()
     val fresh = indexRows(edgeBatch).persist()
     try {
-      if (!table.exists) {
-        if (!fresh.isEmpty) {
-          table.commit(fresh, updateTag)
-          markPending()
-        }
-        return
-      }
-      val touched = table.physicalValuesOf(fresh)
-      if (touched.isEmpty) return
-      val merged = table.readPhysical(touched) match {
-        case Some(existing) => existing.unionByName(fresh).distinct()
-        case None => fresh
-      }
-      table.commitPhysical(merged, updateTag, touched)
-      markPending()
+      table.rewrite(fresh, updateTag)(_.fold(fresh)(_.unionByName(fresh).distinct()))
+        .foreach(_ => markPending())
     } finally fresh.unpersist(): Unit
   }
 

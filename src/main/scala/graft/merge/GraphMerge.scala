@@ -51,8 +51,6 @@ object GraphTables {
     spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], edgeSchema)
 }
 
-final case class LoadStats(nodesUpserted: Long, edgesUpserted: Long)
-
 /** The upsert ("MERGE") operator — Spark-native equivalent of the
   * reference's generated ingestion query
   * (cartography/graph/querybuilder.py:361-413 compiled via
@@ -76,9 +74,11 @@ final case class LoadStats(nodesUpserted: Long, edgesUpserted: Long)
   * Scale design: the nodes table is partitioned by label and the edges
   * table by rel_label, each hash-sub-bucketed on its merge key
   * (BucketSpec) — a load reads and rewrites ONLY the buckets its batch
-  * hashes into (SnapshotTable.commitPhysical; file-level reuse of
-  * everything else), so an incremental sync into a corpus-sized label
-  * stays proportional to the batch, not the table. Target-node lookups
+  * hashes into (SnapshotTable.rewrite; file-level reuse of everything
+  * else), so an incremental sync into a corpus-sized label stays
+  * proportional to the batch, not the table. There is one node merge
+  * ([[upsertNodeBatch]]) and one edge merge ([[upsertEdgeBatch]]);
+  * [[load]] projects a schema's batch into both. Target-node lookups
   * join against only the target label's partition, broadcast when
   * small. There is no driver-side batching — the reference's 10k-dict
   * write transactions (tx.py:209) are replaced by Spark's
@@ -181,98 +181,67 @@ object GraphMerge {
     merged.select(outCols: _*)
   }
 
+  private val NodeKeys = Seq("label", "id")
+  private val EdgeKeys = Seq("src_label", "src_id", "rel_label", "dst_label", "dst_id")
+
   /** Upsert a precomputed edge batch (canonical edge schema) with the
     * same firstseen-preserving MERGE semantics as schema-driven rels —
     * the analog of the reference's 68 handwritten UNWIND+MERGE loads
     * (SURVEY.md §2.3 "handwritten loads"). Used for dynamic rel labels
     * (e.g. one per extracted predicate) where a static RelSchema can't
-    * express the label.
+    * express the label, and by [[load]] for its rel rows.
+    *
+    * Precondition: the batch is key-unique on (src_label, src_id,
+    * rel_label, dst_label, dst_id) — aggregation outputs and
+    * [[load]]'s per-rel dedup are; the merge does not re-check it.
+    *
+    * With `edgeIndex`, the index is written BEFORE the edge commit: a
+    * crash between the two commits must leave the index over-
+    * approximating (harmless extra reads), never under-approximating
+    * (missed DETACHes) — its documented contract. Coverage is only
+    * CONFIRMED after the edge commit exists.
     */
   def upsertEdgeBatch(spark: SparkSession, batch: DataFrame, updateTag: Long,
-                      edges: SnapshotTable, collectStats: Boolean = true,
-                      dedupBatch: Boolean = true,
-                      edgeIndex: Option[EdgeEndpointIndex] = None): Long = {
-    val keys = Seq("src_label", "src_id", "rel_label", "dst_label", "dst_id")
-    // dedupBatch=false skips a corpus-sized shuffle when the caller's
-    // batch is already key-unique (e.g. an aggregation output)
-    // Edge batches are typically AGGREGATION outputs (unlike node
-    // batches): even the emptiness check runs their full shuffle map
-    // side, so the cache pays for itself on every path — measured: an
-    // uncached first commit re-ran the mention/triple aggregation maps
-    // and cost more than the cache round-trip it saved.
-    val fresh = (if (dedupBatch) dedupByKeys(batch, keys) else batch).persist()
-    try {
-      // first commit: the batch IS the table — no upsert join, and no
-      // touched-partition pre-pass (commit() lays out whatever exists)
-      if (!edges.exists) {
-        if (fresh.isEmpty) return 0L
-        val n = if (collectStats) fresh.count() else -1L
-        // index FIRST: a crash between the two commits must leave the
-        // index over-approximating (harmless extra reads), never under-
-        // approximating (missed DETACHes) — its documented contract.
-        // Coverage is only CONFIRMED after the commit exists.
-        edgeIndex.foreach(_.update(fresh, updateTag))
-        edges.commit(fresh, updateTag)
-        edgeIndex.foreach(_.confirmCoverage())
-        return n
-      }
-      // bucket-precise: only the physical partitions the batch hashes
-      // into are read and rewritten; every other bucket's files are
-      // carried forward by reference in the new manifest
-      val touched = edges.physicalValuesOf(fresh)
-      if (touched.isEmpty) return 0L
-      val merged = edges.readPhysical(touched) match {
-        case Some(existing) => upsert(existing, fresh, keys, updateTag)
-        case None => fresh
-      }
-      val n = if (collectStats) fresh.count() else -1L
-      edgeIndex.foreach(_.update(fresh, updateTag)) // before the edge commit (see above)
-      edges.commitPhysical(merged, updateTag, touched)
-      edgeIndex.foreach(_.confirmCoverage())
-      n
-    } finally fresh.unpersist()
-  }
+                      edges: SnapshotTable,
+                      edgeIndex: Option[EdgeEndpointIndex] = None): Unit =
+    merge(edges, batch, EdgeKeys, updateTag, edgeIndex, cacheFirstCommit = true)
 
   /** Upsert a precomputed batch of canonical node rows spanning one or
     * more labels in a single merge + single commit — the fused fast path
     * for pipelines loading several schemas per sync (each separate
     * load() pays its own join + write round; a 100 TB sync with k node
     * types does k× the jobs for no extra information).
+    *
+    * Precondition: the batch is (label, id)-unique — [[toNodeRows]]
+    * dedups each label's rows by id; the merge does not re-check it.
     */
   def upsertNodeBatch(spark: SparkSession, batch: DataFrame, updateTag: Long,
-                      nodes: SnapshotTable, dedupBatch: Boolean = true): Long = {
-    // dedupBatch=false skips a corpus-sized shuffle when the caller's
-    // batch is already (label, id)-unique (e.g. projections of committed
-    // one-row-per-key tables) — same contract as upsertEdgeBatch
-    val fresh0 = if (dedupBatch) dedupByKeys(batch, Seq("label", "id"))
-                 else batch
-    if (!nodes.exists && !dedupBatch) {
-      // first commit of a NARROW (already key-unique) batch: isEmpty
-      // touches one input partition and the commit is the only full
-      // pass, so a cache would just add a batch-sized memory round-trip.
-      // (With dedupBatch the batch is a shuffle output and even isEmpty
-      // runs its full map side — the cached path below is cheaper, same
-      // reasoning as upsertEdgeBatch.)
-      if (fresh0.isEmpty) return 0L
-      nodes.commit(fresh0, updateTag)
-      return -1L
-    }
-    val fresh = fresh0.persist()
+                      nodes: SnapshotTable): Unit =
+    merge(nodes, batch, NodeKeys, updateTag, edgeIndex = None,
+      cacheFirstCommit = false)
+
+  /** The one MERGE commit: upsert `batch` into the buckets it hashes
+    * into (SnapshotTable.rewrite). The batch is read twice on every path
+    * (emptiness probe or touched-bucket collect, then the write), so it
+    * is cached — except on a node table's first commit: the sync's node
+    * batch is a narrow projection, whose emptiness probe touches one
+    * input partition, so a cache would only add a batch-sized memory
+    * round-trip (a dedup'd [[load]] batch pays its shuffle twice there,
+    * once per graph). Edge batches are aggregation outputs: even the
+    * probe runs their full shuffle map side, and an uncached first
+    * commit measured slower than the cache round-trip it saved.
+    */
+  private def merge(table: SnapshotTable, batch: DataFrame, keys: Seq[String],
+                    updateTag: Long, edgeIndex: Option[EdgeEndpointIndex],
+                    cacheFirstCommit: Boolean): Unit = {
+    val cache = cacheFirstCommit || table.exists
+    if (cache) batch.persist()
     try {
-      if (!nodes.exists) { // first commit: the batch IS the table
-        if (fresh.isEmpty) return 0L
-        nodes.commit(fresh, updateTag)
-        return -1L
-      }
-      val touched = nodes.physicalValuesOf(fresh)
-      if (touched.isEmpty) return 0L
-      val merged = nodes.readPhysical(touched) match {
-        case Some(existing) => upsert(existing, fresh, Seq("label", "id"), updateTag)
-        case None => fresh
-      }
-      nodes.commitPhysical(merged, updateTag, touched)
-      -1L
-    } finally fresh.unpersist()
+      table.rewrite(batch, updateTag) { existing =>
+        edgeIndex.foreach(_.update(batch, updateTag))
+        existing.fold(batch)(upsert(_, batch, keys, updateTag))
+      }.foreach(_ => edgeIndex.foreach(_.confirmCoverage()))
+    } finally if (cache) batch.unpersist(): Unit
   }
 
   /** Restrict a schema's declared relationships to a selected subset —
@@ -299,34 +268,21 @@ object GraphMerge {
   }
 
   /** Full load: nodes + relationship attachments, committed to the
-    * snapshot tables. `selectedRels` loads only a subset of the schema's
-    * declared relationships (see [[filterSelectedRels]]). Returns stats
-    * for lineage.
+    * snapshot tables — [[toNodeRows]] into the node-batch upsert, then
+    * the rel rows into the edge-batch upsert. `selectedRels` loads only a
+    * subset of the schema's declared relationships (see
+    * [[filterSelectedRels]]).
     */
   def load(spark: SparkSession, batch: DataFrame, schema: NodeSchema,
            kwargs: Map[String, String], updateTag: Long,
            nodes: SnapshotTable, edges: SnapshotTable,
-           collectStats: Boolean = true,
            selectedRels: Option[Set[String]] = None,
-           edgeIndex: Option[EdgeEndpointIndex] = None): LoadStats = {
+           edgeIndex: Option[EdgeEndpointIndex] = None): Unit = {
     val (selSubRes, selOtherRels) = filterSelectedRels(schema, selectedRels)
-    if (batch.isEmpty) return LoadStats(0, 0) // no-op on empty input (tx.py:253)
+    if (batch.isEmpty) return // no-op on empty input (tx.py:253)
 
-    val fresh = toNodeRows(batch, schema, kwargs, updateTag).persist()
-    val nUpserted = if (collectStats) fresh.count() else -1L
-    if (!nodes.exists) {
-      nodes.commit(fresh, updateTag) // first commit: the batch IS the table
-    } else {
-      // bucket-precise merge: read + rewrite only the buckets the batch
-      // hashes into; untouched buckets carry forward by file reference
-      val touched = nodes.physicalValuesOf(fresh)
-      val mergedPart = nodes.readPhysical(touched) match {
-        case Some(existing) => upsert(existing, fresh, Seq("label", "id"), updateTag)
-        case None => fresh
-      }
-      nodes.commitPhysical(mergedPart, updateTag, touched)
-    }
-    fresh.unpersist()
+    upsertNodeBatch(spark, toNodeRows(batch, schema, kwargs, updateTag),
+      updateTag, nodes)
 
     // ---- relationships ----------------------------------------------------
     // Target lookups read the *post-commit* node state so self-references
@@ -398,34 +354,6 @@ object GraphMerge {
     }
     val allEdges = (subEdges ++ otherEdges).reduceOption(_ unionByName _)
 
-    val eUpserted = allEdges match {
-      case None => 0L
-      case Some(e0) =>
-        val e = e0.persist()
-        try {
-          if (e.isEmpty) 0L // every matcher missed (silent skip)
-          else if (!edges.exists) {
-            val n = if (collectStats) e.count() else -1L
-            // index first — crash safety must err toward over-approximation
-            edgeIndex.foreach(_.update(e, updateTag))
-            edges.commit(e, updateTag) // first commit: the batch IS the table
-            edgeIndex.foreach(_.confirmCoverage())
-            n
-          } else {
-            val touchedE = edges.physicalValuesOf(e)
-            val mergedE = edges.readPhysical(touchedE) match {
-              case Some(existing) => upsert(existing, e,
-                Seq("src_label", "src_id", "rel_label", "dst_label", "dst_id"), updateTag)
-              case None => e
-            }
-            val n = if (collectStats) e.count() else -1L
-            edgeIndex.foreach(_.update(e, updateTag)) // before the edge commit
-            edges.commitPhysical(mergedE, updateTag, touchedE)
-            edgeIndex.foreach(_.confirmCoverage())
-            n
-          }
-        } finally e.unpersist()
-    }
-    LoadStats(nUpserted, eUpserted)
+    allEdges.foreach(upsertEdgeBatch(spark, _, updateTag, edges, edgeIndex))
   }
 }

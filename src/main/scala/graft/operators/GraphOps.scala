@@ -114,9 +114,9 @@ object GraphOps {
     val schema = NodeSchema("Page", RowRef("pid"))
     // warc_ts range predicates prune at the scan (PushedFilters)
     GraphMerge.load(spark, pages.filter(col("warc_ts") < lit(aEnd)),
-      schema, Map.empty, 100L, nodes, edges, collectStats = false)
+      schema, Map.empty, 100L, nodes, edges)
     GraphMerge.load(spark, pages.filter(col("warc_ts") >= lit(bStart)),
-      schema, Map.empty, 200L, nodes, edges, collectStats = false)
+      schema, Map.empty, 200L, nodes, edges)
     nodes.read().filter(col("label") === "Page")
       .select(col("id"), col("firstseen"), col("lastupdated"))
       .orderBy(col("id"))
@@ -148,9 +148,9 @@ object GraphOps {
       (lit(Corpus.tsOf(0).getTime / 1000).cast("long") + col("i") * 60).cast("timestamp").as("warc_ts"))
     val schema = NodeSchema("Page", RowRef("pid"))
     GraphMerge.load(spark, pages.filter(col("warc_ts") < lit(aEnd)),
-      schema, Map.empty, 100L, nodes, edges, collectStats = false)
+      schema, Map.empty, 100L, nodes, edges)
     GraphMerge.load(spark, pages.filter(col("warc_ts") >= lit(bStart)),
-      schema, Map.empty, 200L, nodes, edges, collectStats = false)
+      schema, Map.empty, 200L, nodes, edges)
     val vs = nodes.versions
     val v1 = nodes.readVersion(vs.head).filter(col("label") === "Page")
       .select(col("id"), col("firstseen").as("fs_v1"),
@@ -403,7 +403,7 @@ object GraphOps {
         Map.empty, 100L, nodes, edges)
       GraphMerge.load(spark, ordersBatch, orderSchema,
         Map("nation_id" -> "1"), 100L, nodes, edges,
-        collectStats = false, selectedRels = selected)
+        selectedRels = selected)
       edges.read().filter(col("src_label") === "Order" || col("dst_label") === "Order")
         .groupBy(col("rel_label")).agg(count(lit(1)).as("n_edges"))
         .select(lit(tag).as("run"), col("rel_label"), col("n_edges"))
@@ -439,16 +439,14 @@ object GraphOps {
       .select(col("n_nationkey").cast("string").as("nid"), col("n_name"))
     def markPost(tag: Long): Unit = tenants.foreach { t =>
       GraphMerge.load(spark, nationRows(t), postSchema,
-        Map("post_tag" -> tag.toString), tag, nodes, edges,
-        collectStats = false)
+        Map("post_tag" -> tag.toString), tag, nodes, edges)
     }
 
     // round 1: both tenants succeed -> post marker runs at tag 100
     MultiTenant.syncAndThen(tenants, bestEffort = true) { t =>
       loadNation(spark, sfDir, t.toInt, nodes, edges)
       GraphMerge.load(spark, customersOf(spark, sfDir, t.toInt),
-        customerSchema, Map("nation_id" -> t), 100L, nodes, edges,
-        collectStats = false)
+        customerSchema, Map("nation_id" -> t), 100L, nodes, edges)
     } { markPost(100L) }
 
     // round 2: tenant 2 fails mid-fetch; tenant 1 completes + cleans up
@@ -457,8 +455,7 @@ object GraphOps {
         if (t == "2") sys.error("simulated upstream fetch failure")
         val all = customersOf(spark, sfDir, 1)
         GraphMerge.load(spark, all.filter(col("cid").cast("long") % 2 === 0),
-          customerSchema, Map("nation_id" -> t), 200L, nodes, edges,
-          collectStats = false)
+          customerSchema, Map("nation_id" -> t), 200L, nodes, edges)
         Cleanup.run(spark, customerSchema, Map("nation_id" -> t), 200L,
           nodes, edges): Unit
       } { markPost(200L) }

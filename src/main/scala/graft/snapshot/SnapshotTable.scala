@@ -372,6 +372,35 @@ final class SnapshotTable(val spark: SparkSession, val root: String,
     v
   }
 
+  /** The one bucket-precise read-modify-write: every merge, cleanup and
+    * index update commits through here. `delta` names the rows a write
+    * touches; `f` gets the current state of exactly the physical
+    * partitions `delta` hashes into (None when there are none) and
+    * returns their new contents, which replace those partitions while
+    * every other partition is carried forward by reference.
+    *
+    * On a table with no version yet, `f(None)` IS the table: one full
+    * [[commit]] with no touched-partition pre-pass, made only when
+    * `delta` is non-empty.
+    *
+    * `f` runs after the touched partitions are read and immediately
+    * before the commit, so state that must precede the commit (the edge
+    * endpoint index) is written inside it.
+    *
+    * Returns the committed version, or None when nothing was committed.
+    */
+  def rewrite(delta: DataFrame, updateTag: Long)
+             (f: Option[DataFrame] => DataFrame): Option[Long] = {
+    require(partitionCol.isDefined, "rewrite requires a partition column")
+    if (!exists) {
+      if (delta.isEmpty) None else Some(commit(f(None), updateTag))
+    } else {
+      val touched = physicalValuesOf(delta)
+      if (touched.isEmpty) None
+      else Some(commitPhysical(f(readPhysical(touched)), updateTag, touched))
+    }
+  }
+
   /** Per-file committed row counts of a version, straight from the
     * parquet footers — NO Spark job. Powers lineage rows and benchmark
     * page counts; a count() job on tiny committed tables costs more in

@@ -59,13 +59,12 @@ object StreamingSync {
             .select(col("canonical_id").as("id")).distinct(),
           NodeSchema("Entity", RowRef("id")), Map.empty, updateTag)
         GraphMerge.upsertNodeBatch(spark, pageRows.unionByName(entityRows),
-          updateTag, GraphTables.nodes(spark, graphRoot)): Unit
+          updateTag, GraphTables.nodes(spark, graphRoot))
 
         GraphMerge.upsertEdgeBatch(spark,
           KgPipeline.mentionEdges(links, canonical, updateTag).unionByName(
             KgPipeline.tripleEdges(KgPipeline.canonicalTriples(facts, canonical), updateTag)),
-          updateTag, GraphTables.edges(spark, graphRoot),
-          collectStats = false, dedupBatch = false): Unit
+          updateTag, GraphTables.edges(spark, graphRoot))
       } finally facts.unpersist()
     } finally texts.unpersist()
   }

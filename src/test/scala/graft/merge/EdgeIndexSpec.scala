@@ -27,20 +27,20 @@ class EdgeIndexSpec extends SparkSpecBase {
     val ix = if (withIndex) Some(EdgeEndpointIndex(spark, root, buckets)) else None
     val nation = Seq(("1", "ALGERIA")).toDF("nid", "n_name")
     GraphMerge.load(spark, nation, NodeSchema("Nation", RowRef("nid")),
-      Map.empty, 100L, nodes, edges, collectStats = false, edgeIndex = ix)
+      Map.empty, 100L, nodes, edges, edgeIndex = ix)
     // 40 customers under nation 1 (RESOURCE edges), each with one order
     // edge (PLACED_BY, dynamic via upsertEdgeBatch) — two rel labels so
     // DETACH must cross rel partitions
     val cust = (1 to 40).map(i => (s"c$i", s"name$i")).toDF("cid", "c_name")
     GraphMerge.load(spark, cust, custSchema, Map("nation_id" -> "1"), 100L,
-      nodes, edges, collectStats = false, edgeIndex = ix)
+      nodes, edges, edgeIndex = ix)
     val placed = (1 to 40).map(i =>
       ("Order", s"o$i", "PLACED_BY", "Customer", s"c$i"))
       .toDF("src_label", "src_id", "rel_label", "dst_label", "dst_id")
       .withColumn("props", map().cast("map<string,string>"))
       .withColumn("firstseen", lit(100L)).withColumn("lastupdated", lit(100L))
     GraphMerge.upsertEdgeBatch(spark, placed, 100L, edges,
-      collectStats = false, edgeIndex = ix)
+      edgeIndex = ix)
     (nodes, edges, ix)
   }
 
@@ -50,7 +50,7 @@ class EdgeIndexSpec extends SparkSpecBase {
                              ix: Option[EdgeEndpointIndex]): CleanupStats = {
     val kept = (3 to 40).map(i => (s"c$i", s"name$i")).toDF("cid", "c_name")
     GraphMerge.load(spark, kept, custSchema, Map("nation_id" -> "1"), 200L,
-      nodes, edges, collectStats = false, edgeIndex = ix)
+      nodes, edges, edgeIndex = ix)
     Cleanup.run(spark, custSchema, Map("nation_id" -> "1"), 200L,
       nodes, edges, edgeIndex = ix)
   }
@@ -112,7 +112,7 @@ class EdgeIndexSpec extends SparkSpecBase {
       .withColumn("props", map().cast("map<string,string>"))
       .withColumn("firstseen", lit(150L)).withColumn("lastupdated", lit(150L))
     GraphMerge.upsertEdgeBatch(spark, rogue, 150L, edges,
-      collectStats = false, edgeIndex = None)
+      edgeIndex = None)
     assert(!ix.soundForDetach, "bypassed commit must break the coverage chain")
 
     // cleanup with the (now unsound) index attached: the gate must route
@@ -222,13 +222,13 @@ class EdgeIndexSpec extends SparkSpecBase {
       .withColumn("props", map().cast("map<string,string>"))
       .withColumn("firstseen", lit(160L)).withColumn("lastupdated", lit(160L))
     GraphMerge.upsertEdgeBatch(spark, rogue, 160L, edges,
-      collectStats = false, edgeIndex = None)
+      edgeIndex = None)
     assert(!ix.soundForDetach,
       "the un-indexed commit took the pre-claimed version — coverage must NOT count it")
     // an indexed commit after the crash re-establishes nothing (the gap
     // stands); only rebuild heals
     GraphMerge.upsertEdgeBatch(spark, rogue, 170L, edges,
-      collectStats = false, edgeIndex = Some(ix))
+      edgeIndex = Some(ix))
     assert(!ix.soundForDetach)
     ix.rebuild(300L)
     assert(ix.soundForDetach)
@@ -246,7 +246,7 @@ class EdgeIndexSpec extends SparkSpecBase {
       .withColumn("props", map().cast("map<string,string>"))
       .withColumn("firstseen", lit(150L)).withColumn("lastupdated", lit(150L))
     GraphMerge.upsertEdgeBatch(spark, more, 150L, edges,
-      collectStats = false, edgeIndex = Some(late))
+      edgeIndex = Some(late))
     assert(!late.soundForDetach,
       "mid-life attach without rebuild must stay unsound")
     late.rebuild(200L)

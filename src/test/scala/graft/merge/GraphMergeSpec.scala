@@ -88,11 +88,74 @@ class GraphMergeSpec extends SparkSpecBase {
     val nodes = SnapshotTable(spark, s"$root/nodes", Some("label"))
     val edges = SnapshotTable(spark, s"$root/edges", Some("rel_label"))
     val b = Seq(("a1", "alpha", null.asInstanceOf[String])).toDF("id", "name", "uses_id")
-    val stats = GraphMerge.load(spark, b, assetSchema,
+    GraphMerge.load(spark, b, assetSchema,
       Map("account_id" -> "ghost", "region" -> "r"), 100L, nodes, edges)
-    assert(stats.nodesUpserted === 1L)
-    assert(stats.edgesUpserted === 0L)
     assert(nodesOf(nodes).map(_._2) === Set("a1"))
+    assert(!edges.exists, "no edge may be committed when every matcher misses")
+  }
+
+  private def assets(ids: String*): DataFrame =
+    ids.map(i => (i, s"n-$i", null.asInstanceOf[String])).toDF("id", "name", "uses_id")
+
+  test("cleanup of a label whose last node an earlier cleanup deleted is a no-op") {
+    val root = tmp()
+    val nodes = GraphTables.nodes(spark, root)
+    val edges = GraphTables.edges(spark, root)
+    val kw = Map("account_id" -> "acct1", "region" -> "r")
+    GraphMerge.load(spark, Seq(("acct1", "p")).toDF("aid", "name"),
+      accountSchema, Map.empty, 100L, nodes, edges)
+    def syncAssets(tag: Long, ids: String*): CleanupStats = {
+      GraphMerge.load(spark, assets(ids: _*), assetSchema, kw, tag, nodes, edges)
+      Cleanup.run(spark, assetSchema, kw, tag, nodes, edges)
+    }
+    assert(syncAssets(100L, "a1") === CleanupStats(0L, 0L))
+    // the tenant's last asset goes: node + its RESOURCE edge
+    assert(syncAssets(200L) === CleanupStats(1L, 1L))
+    assert(nodes.readPartition("Asset").isEmpty, "the label left the manifest")
+    // a later sync of the still-empty tenant must not throw
+    assert(syncAssets(300L) === CleanupStats(0L, 0L))
+    assert(nodesOf(nodes).map(_._2) === Set("acct1"))
+  }
+
+  test("a cleanup that throws releases every frame it cached") {
+    val root = tmp()
+    val nodes = GraphTables.nodes(spark, root)
+    val edges = GraphTables.edges(spark, root)
+    val kw = Map("account_id" -> "acct1", "region" -> "r")
+    GraphMerge.load(spark, Seq(("acct1", "p")).toDF("aid", "name"),
+      accountSchema, Map.empty, 100L, nodes, edges)
+    GraphMerge.load(spark, assets("a1", "a2"), assetSchema, kw, 100L, nodes, edges)
+    // opened with the wrong bucket count: the bucket-scoped commit of the
+    // stale rows fails after the frames are cached
+    val misBucketed = GraphTables.nodes(spark, root, buckets = 4)
+    spark.catalog.clearCache()
+    intercept[IllegalArgumentException] {
+      Cleanup.run(spark, assetSchema, kw, 200L, misBucketed, edges)
+    }
+    assert(spark.sharedState.cacheManager.isEmpty, "Cleanup.run leaked a cached frame")
+    intercept[IllegalArgumentException] {
+      Cleanup.clearProperties(spark, misBucketed, "Asset", Seq("name"), 200L)
+    }
+    assert(spark.sharedState.cacheManager.isEmpty,
+      "Cleanup.clearProperties leaked a cached frame")
+  }
+
+  test("a 2-row load into an existing graph runs at most 21 Spark jobs") {
+    val root = tmp()
+    val nodes = GraphTables.nodes(spark, root)
+    val edges = GraphTables.edges(spark, root)
+    val kw = Map("account_id" -> "acct1", "region" -> "r")
+    GraphMerge.load(spark, Seq(("acct1", "p")).toDF("aid", "name"),
+      accountSchema, Map.empty, 100L, nodes, edges)
+    GraphMerge.load(spark, assets("a1", "a2"), assetSchema, kw, 100L, nodes, edges)
+    val sc = spark.sparkContext
+    val group = s"merge-budget-${System.nanoTime()}"
+    sc.setJobGroup(group, "2-row load")
+    try GraphMerge.load(spark, assets("a2", "a3"), assetSchema, kw, 200L, nodes, edges)
+    finally sc.clearJobGroup()
+    val jobs = sc.statusTracker.getJobIdsForGroup(group).length
+    assert(jobs <= 21, s"the load ran $jobs Spark jobs")
+    assert(relsOf(edges).count(_._3 == "RESOURCE") === 3)
   }
 
   test("cleanup deletes stale tenant-scoped facts, spares other tenants (scenario 2)") {

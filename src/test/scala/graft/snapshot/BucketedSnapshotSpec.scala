@@ -32,7 +32,7 @@ class BucketedSnapshotSpec extends SparkSpecBase {
     // v1: 400 ids spread over all 8 buckets
     val b1 = (0 until 400).map(i => s"page-$i").toDF("id")
     GraphMerge.load(spark, b1, schema, Map.empty, 100L, nodes,
-      GraphTables.edges(spark, root), collectStats = false)
+      GraphTables.edges(spark, root))
     val v1 = nodes.latestVersion.get
     val parts1 = nodes.partitionsOf(v1)
     assert(parts1.keySet.forall(_.startsWith("Page~b")), parts1.keySet.toString)
@@ -42,7 +42,7 @@ class BucketedSnapshotSpec extends SparkSpecBase {
     // v2: a single-id batch — exactly one bucket may be rewritten
     val one = Seq("page-7").toDF("id")
     GraphMerge.load(spark, one, schema, Map.empty, 200L, nodes,
-      GraphTables.edges(spark, root), collectStats = false)
+      GraphTables.edges(spark, root))
     val v2 = nodes.latestVersion.get
     assert(v2 === v1 + 1)
     val parts2 = nodes.partitionsOf(v2)

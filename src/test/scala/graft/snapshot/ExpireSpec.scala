@@ -25,7 +25,7 @@ class ExpireSpec extends SparkSpecBase {
 
     def merge(tag: Long, ids: Seq[String]): Unit =
       GraphMerge.load(spark, ids.toDF("id"), schema, Map.empty, tag, nodes,
-        edges, collectStats = false)
+        edges)
 
     merge(100L, (0 until 400).map(i => s"page-$i")) // v1: all 8 buckets
     merge(200L, Seq("page-7"))                      // v2: one bucket

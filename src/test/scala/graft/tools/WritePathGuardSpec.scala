@@ -1,0 +1,27 @@
+package graft.tools
+
+import java.nio.file.{Files, Path, Paths}
+import scala.jdk.CollectionConverters._
+import org.scalatest.funsuite.AnyFunSuite
+
+/** Write-path guard: bucket-scoped commits happen only inside
+  * `SnapshotTable`. Merges, cleanups and index updates go through its
+  * one read-modify-write (`SnapshotTable.rewrite`), so the touched-bucket
+  * collect, the scoped read and the commit stay in one place.
+  */
+class WritePathGuardSpec extends AnyFunSuite {
+
+  private def scalaFiles(root: Path): Seq[Path] = {
+    assert(Files.isDirectory(root), s"run from the repo root: $root missing")
+    val stream = Files.walk(root)
+    try stream.iterator().asScala.filter(_.toString.endsWith(".scala")).toSeq
+    finally stream.close()
+  }
+
+  test("only graft/snapshot/SnapshotTable.scala calls commitPhysical in src/main") {
+    val callers = scalaFiles(Paths.get("src/main/scala"))
+      .filter(f => Files.readString(f).contains("commitPhysical("))
+      .map(_.toString).toSet
+    assert(callers === Set("src/main/scala/graft/snapshot/SnapshotTable.scala"))
+  }
+}
