@@ -121,7 +121,7 @@ object Knn {
     * one IEEE division, one multiply, one subtract) is expressible in
     * ANSI SQL with bit-identical results, so the ENTIRE LSH structure —
     * planes, sign sketches, buckets, candidates — is recomputable by the
-    * DuckDB oracle (see SparkEntry.oracleSql "qann3_lsh_topk") and the
+    * DuckDB oracle (see the qann3_lsh_topk oracle in DataOps.queries) and the
     * bucketed-ANN path gets a full value check instead of rows-only.
     */
   private[ann] def planeComp(table: Int, plane: Int, dim: Int): Double = {

@@ -3,6 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
+import graft.Query
 import graft.core.Graft.table
 
 /** Analysis-job operator pack — the remaining query shapes of the
@@ -207,7 +208,7 @@ object Analysis {
   }
 
   /** DuckDB oracle fragment: the same policy patterns as a VALUES CTE. */
-  val policyCte: String = {
+  private val policyCte: String = {
     val rows = policyGlobs
       .map { case (p, k, g) => s"('$p', '$k', '${globToLike(g)}')" }
       .mkString(", ")
@@ -350,4 +351,99 @@ object Analysis {
     val zones = root.unionByName(hosts).unionByName(subs)
     subzoneCounts(zones, zones)
   }
+
+  /** The analysis-job queries, each with its DuckDB oracle. */
+  def queries: Seq[Query] = Seq(
+    Query("q16_khop", q16KHop,
+      """SELECT 1 AS hop, COUNT(DISTINCT c_custkey) AS n_nodes
+        |FROM customer WHERE c_nationkey = 1
+        |UNION ALL
+        |SELECT 2, COUNT(DISTINCT o_orderkey)
+        |FROM orders JOIN customer ON o_custkey = c_custkey
+        |WHERE c_nationkey = 1
+        |ORDER BY hop""".stripMargin),
+    Query("q17_wildcard_policy", q17Wildcard,
+      s"""$policyCte
+         |SELECT policy_id, COUNT(*) AS n_allowed FROM (
+         | SELECT policy_id, p_partkey,
+         |  MAX(CASE WHEN kind = 'allow' THEN 1 ELSE 0 END) AS a,
+         |  MAX(CASE WHEN kind = 'deny' THEN 1 ELSE 0 END) AS d
+         | FROM part JOIN pats ON p_name LIKE pattern
+         | GROUP BY policy_id, p_partkey) t
+         |WHERE a = 1 AND d = 0
+         |GROUP BY policy_id ORDER BY policy_id""".stripMargin),
+    // q33 loads the SAME policy set through the mapping-file round-trip
+    // (serialize → loadPolicyMapping → evaluate), so its expected answer
+    // is exactly q17's.
+    Query("q33_policy_file", q33PolicyFile,
+      s"""$policyCte
+         |SELECT policy_id, COUNT(*) AS n_allowed FROM (
+         | SELECT policy_id, p_partkey,
+         |  MAX(CASE WHEN kind = 'allow' THEN 1 ELSE 0 END) AS a,
+         |  MAX(CASE WHEN kind = 'deny' THEN 1 ELSE 0 END) AS d
+         | FROM part JOIN pats ON p_name LIKE pattern
+         | GROUP BY policy_id, p_partkey) t
+         |WHERE a = 1 AND d = 0
+         |GROUP BY policy_id ORDER BY policy_id""".stripMargin),
+    Query("q18_collect_agg", q18Collect,
+      """SELECT o_custkey,
+        | string_agg(DISTINCT o_orderpriority, ',' ORDER BY o_orderpriority) AS priorities,
+        | COUNT(*) AS n_orders
+        |FROM orders GROUP BY o_custkey ORDER BY o_custkey LIMIT 100""".stripMargin),
+    Query("q19_json_props", q19Json,
+      """SELECT k % 10 AS k_mod, COUNT(*) AS n_events, CAST(SUM(k) AS BIGINT) AS sum_k
+        |FROM (SELECT CAST(regexp_extract(props, '[0-9]+') AS BIGINT) AS k
+        |      FROM events) t
+        |WHERE k IS NOT NULL GROUP BY 1 ORDER BY 1""".stripMargin),
+    Query("q20_exposure_propagation", q20Exposure,
+      """WITH tagged AS (
+        | SELECT s_suppkey, tag FROM supplier
+        | JOIN nation ON s_nationkey = n_nationkey
+        | JOIN region ON n_regionkey = r_regionkey
+        | CROSS JOIN (VALUES ('europe'), ('lowbal')) v(tag)
+        | WHERE (tag = 'europe' AND r_name = 'EUROPE')
+        |    OR (tag = 'lowbal' AND s_acctbal < 3000.0)),
+        |pt AS (
+        | SELECT DISTINCT l_partkey, tag
+        | FROM (SELECT DISTINCT l_partkey, l_suppkey FROM lineitem) l
+        | JOIN tagged ON l_suppkey = s_suppkey),
+        |pe AS (
+        | SELECT l_partkey, string_agg(DISTINCT tag, ',' ORDER BY tag) AS exposure
+        | FROM pt GROUP BY l_partkey)
+        |SELECT exposure, COUNT(*) AS n_parts FROM pe
+        |GROUP BY exposure ORDER BY exposure""".stripMargin),
+    Query("q21_lineage", q21Lineage,
+      """WITH en AS (SELECT doc_id AS i FROM documents WHERE lang = 'en'),
+        |tot AS (SELECT COUNT(*) AS n FROM documents)
+        |SELECT stage, total_rows FROM (
+        | SELECT 'canonical' AS stage, CAST(1000 AS BIGINT) AS total_rows
+        | UNION ALL SELECT 'extract', n FROM tot
+        | UNION ALL SELECT 'links', (SELECT CAST(COALESCE(SUM(
+        |    2 + CASE WHEN i % 100 < 30 THEN 1 ELSE 0 END
+        |      + CASE WHEN i % 10 = 7 THEN 2 ELSE 0 END
+        |      + CASE WHEN i % 10 = 3 THEN 1 ELSE 0 END
+        |      + CASE WHEN i % 10 = 9 THEN 1 ELSE 0 END), 0) AS BIGINT) FROM en)
+        | UNION ALL SELECT 'pages', n FROM tot
+        | UNION ALL SELECT 'triples', (SELECT COUNT(*) FROM en)) t
+        |ORDER BY stage""".stripMargin),
+    Query("q22_suffix_subzones", q22Subzones,
+      """WITH d AS (SELECT DISTINCT doc_id % 50 AS m, doc_id % 3 AS j
+        |           FROM documents),
+        |zones AS (
+        | SELECT 'example' AS zone
+        | UNION SELECT 'host' || CAST(m AS VARCHAR) || '.example' FROM d
+        | UNION SELECT 'd' || CAST(j AS VARCHAR) || '.host' || CAST(m AS VARCHAR) || '.example' FROM d)
+        |SELECT p.zone AS zone, COUNT(*) AS n_subzones
+        |FROM zones c JOIN zones p ON c.zone LIKE '%.' || p.zone
+        |GROUP BY p.zone ORDER BY zone""".stripMargin),
+    Query("q23_array_any", q23ArrayAny,
+      """SELECT c_mktsegment, COUNT(*) AS n_customers FROM (
+        | SELECT o_custkey,
+        |  MAX(CASE WHEN o_orderpriority = '1-URGENT' THEN 1 ELSE 0 END) AS has_u,
+        |  MAX(CASE WHEN o_orderpriority = '5-LOW' THEN 1 ELSE 0 END) AS has_l
+        | FROM orders GROUP BY o_custkey) t
+        |JOIN customer ON o_custkey = c_custkey
+        |WHERE has_u = 1 AND has_l = 0
+        |GROUP BY c_mktsegment ORDER BY c_mktsegment""".stripMargin),
+  )
 }

@@ -3,6 +3,7 @@ package graft.operators
 import java.nio.file.Files
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import graft.Query
 import graft.core.Graft
 import graft.merge.{Cleanup, GraphMerge, GraphTables}
 import graft.model._
@@ -512,4 +513,179 @@ object GraphOps {
   private def intercept2(body: => Any): graft.jobs.MultiTenant.MultiTenantSyncException =
     try { body; sys.error("expected the aggregated multi-tenant failure") }
     catch { case e: graft.jobs.MultiTenant.MultiTenantSyncException => e }
+
+  /** The graph-engine queries, each with its DuckDB oracle. */
+  def queries: Seq[Query] = Seq(
+    // Oracles below recompute the EXPECTED graph state after the
+    // upsert/cleanup/drift scenario that the Spark side actually executes
+    // through GraphMerge/Cleanup/SnapshotTable.
+    Query("q13_graph_upsert", q13GraphUpsert,
+      """SELECT CAST(c_custkey AS VARCHAR) AS id,
+        | CAST(CASE WHEN c_custkey % 2 = 0 THEN 100 ELSE 200 END AS BIGINT) AS firstseen,
+        | CAST(200 AS BIGINT) AS lastupdated,
+        | c_mktsegment AS segment
+        |FROM customer WHERE c_nationkey = 1 ORDER BY id""".stripMargin),
+    Query("q14_graph_cleanup", q14GraphCleanup,
+      """SELECT CAST(c_custkey AS VARCHAR) AS id,
+        | CAST(100 AS BIGINT) AS firstseen, CAST(200 AS BIGINT) AS lastupdated,
+        | CAST(1 AS BIGINT) AS n_res_edges
+        |FROM customer WHERE c_nationkey = 1 AND c_custkey % 2 = 0
+        |ORDER BY id""".stripMargin),
+    Query("q15_drift", q15Drift,
+      """WITH c AS (SELECT c_custkey AS k, CAST(c_custkey AS VARCHAR) AS id
+        |           FROM customer WHERE c_nationkey = 1)
+        |SELECT id, 'added' AS direction FROM c WHERE k % 3 = 0 AND k % 2 <> 0
+        |UNION ALL
+        |SELECT id, 'removed' AS direction FROM c WHERE k % 2 = 0 AND k % 3 <> 0
+        |ORDER BY direction, id""".stripMargin),
+    Query("q25_clear_props", q25ClearProps,
+      """SELECT CAST(c_custkey AS VARCHAR) AS id, c_mktsegment AS segment,
+        |  CASE WHEN c_mktsegment = 'BUILDING' THEN NULL ELSE 'true' END AS exposed
+        |FROM customer WHERE c_nationkey = 1 ORDER BY id""".stripMargin),
+    Query("q26_analysis_job", q26AnalysisJob,
+      """SELECT c_mktsegment AS segment, COUNT(*) AS n_flagged,
+        |  CAST(0 AS BIGINT) AS exposed_left
+        |FROM customer WHERE c_nationkey = 1 AND c_acctbal > 5000.0
+        |GROUP BY 1 ORDER BY 1""".stripMargin),
+    // q42: three SHIPPED analysis jobs (data/jobs/analysis) over a
+    // deterministic TPC-H graph slice — every report row recomputed
+    // arithmetically; absent groups (e.g. zero dangling dsts) must be
+    // absent on both sides (HAVING mirrors Spark's empty GROUP BY)
+    Query("q42_shipped_jobs", q42ShippedJobs,
+      """WITH cust AS (SELECT * FROM customer WHERE c_nationkey = 1),
+        |nodes AS (
+        |  SELECT 'Customer' AS label, CAST(c_custkey AS VARCHAR) AS id,
+        |         c_acctbal > 7000 AS exposed,
+        |         CASE WHEN c_custkey % 2 = 0 THEN 200 ELSE 100 END AS lu
+        |  FROM cust
+        |  UNION ALL
+        |  SELECT 'Supplier', CAST(s_suppkey AS VARCHAR), s_acctbal > 5000,
+        |         200
+        |  FROM supplier WHERE s_nationkey IN (1, 2)),
+        |edges AS (
+        |  SELECT DISTINCT CAST(l_suppkey AS VARCHAR) AS src_id,
+        |                  CAST(o_custkey AS VARCHAR) AS dst_id
+        |  FROM lineitem JOIN orders ON l_orderkey = o_orderkey
+        |  JOIN cust ON o_custkey = c_custkey),
+        |rpt AS (
+        |  SELECT 'exposure_propagation' AS job, 'exposed_reachable' AS metric,
+        |         'Customer' AS k, COUNT(*) AS n
+        |  FROM (SELECT e.dst_id FROM edges e
+        |        JOIN nodes x ON x.label = 'Supplier' AND x.exposed
+        |                    AND e.src_id = x.id
+        |        GROUP BY e.dst_id) r
+        |  HAVING COUNT(*) > 0
+        |  UNION ALL
+        |  SELECT 'exposure_propagation', 'exposed_sources', label, COUNT(*)
+        |  FROM nodes WHERE exposed GROUP BY label
+        |  UNION ALL
+        |  SELECT 'stale_asset_report', 'stale_nodes', label,
+        |         COUNT(CASE WHEN lu < 200 THEN 1 END)
+        |  FROM nodes GROUP BY label
+        |  UNION ALL
+        |  SELECT 'stale_asset_report', 'total_nodes', label, COUNT(*)
+        |  FROM nodes GROUP BY label
+        |  UNION ALL
+        |  SELECT 'dangling_edge_audit', 'dangling_src', 'SUPPLIES', COUNT(*)
+        |  FROM edges e WHERE NOT EXISTS (SELECT 1 FROM nodes n
+        |    WHERE n.label = 'Supplier' AND n.id = e.src_id)
+        |  HAVING COUNT(*) > 0
+        |  UNION ALL
+        |  SELECT 'dangling_edge_audit', 'dangling_dst', 'SUPPLIES', COUNT(*)
+        |  FROM edges e WHERE NOT EXISTS (SELECT 1 FROM nodes n
+        |    WHERE n.label = 'Customer' AND n.id = e.dst_id)
+        |  HAVING COUNT(*) > 0)
+        |SELECT job, metric, k, CAST(n AS BIGINT) AS n FROM rpt
+        |ORDER BY job, metric, k""".stripMargin),
+    Query("q27_drift_states", q27DriftStates,
+      """WITH cp AS (
+        |  SELECT CAST(c_custkey AS VARCHAR) AS id,
+        |         string_agg(DISTINCT o_orderpriority, '|' ORDER BY o_orderpriority) AS prios
+        |  FROM customer JOIN orders ON o_custkey = c_custkey
+        |  WHERE c_nationkey = 1 GROUP BY 1),
+        |a AS (SELECT id, prios FROM cp WHERE CAST(id AS BIGINT) % 2 = 0),
+        |b AS (SELECT id, prios FROM cp WHERE CAST(id AS BIGINT) % 3 = 0)
+        |SELECT direction, id, prios FROM (
+        |  SELECT 'added' AS direction, id, prios FROM b WHERE id NOT IN (SELECT id FROM a)
+        |  UNION ALL
+        |  SELECT 'removed', id, prios FROM a WHERE id NOT IN (SELECT id FROM b)) t
+        |ORDER BY direction, id""".stripMargin),
+    Query("q28_selected_rels", q28SelectedRels,
+      """WITH o AS (SELECT o_orderkey FROM orders
+        |  JOIN customer ON o_custkey = c_custkey WHERE c_nationkey = 1)
+        |SELECT run, rel_label, n_edges FROM (
+        |  SELECT 'all' AS run, 'PLACED_BY' AS rel_label, (SELECT COUNT(*) FROM o) AS n_edges
+        |  UNION ALL SELECT 'all', 'RESOURCE', (SELECT COUNT(*) FROM o)
+        |  UNION ALL SELECT 'subset', 'PLACED_BY', (SELECT COUNT(*) FROM o)) t
+        |ORDER BY run, rel_label""".stripMargin),
+    // q31 runs the q14 scenario through the endpoint-index DETACH path;
+    // the expected state is identical by contract.
+    Query("q31_indexed_cleanup", q31IndexedCleanup,
+      """SELECT CAST(c_custkey AS VARCHAR) AS id,
+        | CAST(100 AS BIGINT) AS firstseen, CAST(200 AS BIGINT) AS lastupdated,
+        | CAST(1 AS BIGINT) AS n_res_edges
+        |FROM customer WHERE c_nationkey = 1 AND c_custkey % 2 = 0
+        |ORDER BY id""".stripMargin),
+    // q30 expected state: round 1 synced both tenants at tag 100 and ran
+    // the gated post job (post_run_tag=100 on both Nation containers);
+    // round 2 refreshed tenant 1's even customers at tag 200 and cleaned
+    // its stale odds, while tenant 2's simulated fetch failure left its
+    // customers untouched and SKIPPED the post job (marker stays 100).
+    Query("q30_multi_tenant", q30MultiTenant,
+      """SELECT * FROM (
+        | SELECT 'Nation' AS label, CAST(n_nationkey AS VARCHAR) AS id,
+        |  '-' AS tenant, CAST(100 AS BIGINT) AS firstseen,
+        |  CAST(100 AS BIGINT) AS lastupdated, '100' AS post_tag
+        | FROM nation WHERE n_nationkey IN (1, 2)
+        | UNION ALL
+        | SELECT 'Customer', CAST(c_custkey AS VARCHAR),
+        |  CAST(c_nationkey AS VARCHAR), CAST(100 AS BIGINT),
+        |  CAST(CASE WHEN c_nationkey = 1 THEN 200 ELSE 100 END AS BIGINT),
+        |  '-'
+        | FROM customer
+        | WHERE c_nationkey = 2 OR (c_nationkey = 1 AND c_custkey % 2 = 0)) t
+        |ORDER BY label, id""".stripMargin),
+    Query("q24_incremental_sync", q24IncrementalSync,
+      """WITH c AS (SELECT COUNT(*) AS n FROM documents),
+        |ids AS (SELECT doc_id AS i FROM documents)
+        |SELECT 'https://host' || CAST(i % 50 AS VARCHAR) || '.example/p/' || CAST(i AS VARCHAR) AS id,
+        | CAST(CASE WHEN i < (SELECT n*6//10 FROM c) THEN 100 ELSE 200 END AS BIGINT) AS firstseen,
+        | CAST(CASE WHEN i >= (SELECT n*4//10 FROM c) THEN 200 ELSE 100 END AS BIGINT) AS lastupdated
+        |FROM ids
+        |WHERE i < (SELECT n*6//10 FROM c) OR i >= (SELECT n*4//10 FROM c)
+        |ORDER BY id""".stripMargin),
+    // q34: time travel — v1 = window A's state (fs=lu=100, B-only rows
+    // NULL), v2 = the post-B state with firstseen preserved across the
+    // upsert; both recomputed from doc_id arithmetic
+    Query("q34_time_travel", q34TimeTravel,
+      """WITH c AS (SELECT COUNT(*) AS n FROM documents),
+        |ids AS (SELECT doc_id AS i FROM documents),
+        |w AS (SELECT i,
+        |        i < (SELECT n*6//10 FROM c) AS in_a,
+        |        i >= (SELECT n*4//10 FROM c) AS in_b FROM ids)
+        |SELECT 'https://host' || CAST(i % 50 AS VARCHAR) || '.example/p/' || CAST(i AS VARCHAR) AS id,
+        | CAST(CASE WHEN in_a THEN 100 END AS BIGINT) AS fs_v1,
+        | CAST(CASE WHEN in_a THEN 100 END AS BIGINT) AS lu_v1,
+        | CAST(CASE WHEN in_a THEN 100 ELSE 200 END AS BIGINT) AS fs_v2,
+        | CAST(CASE WHEN in_b THEN 200 ELSE 100 END AS BIGINT) AS lu_v2
+        |FROM w WHERE in_a OR in_b ORDER BY id""".stripMargin),
+    // q39: snapshot changelog — both version states recomputed closed-
+    // form; unchanged rows (k ≡ 6 mod 12) must be ABSENT
+    Query("q39_changelog", q39Changelog,
+      """WITH c AS (SELECT CAST(c_custkey AS VARCHAR) AS id, c_custkey AS k,
+        |             c_mktsegment AS seg
+        |           FROM customer WHERE c_nationkey = 1),
+        |v1 AS (SELECT id, seg FROM c WHERE k % 2 = 0),
+        |v2 AS (SELECT id, CASE WHEN k % 12 = 0 THEN 'CHANGED-' || seg
+        |              ELSE seg END AS seg
+        |       FROM c WHERE k % 3 = 0),
+        |j AS (SELECT COALESCE(v1.id, v2.id) AS id,
+        |        v1.seg AS seg_before, v2.seg AS seg_after,
+        |        CASE WHEN v1.id IS NULL THEN 'insert'
+        |             WHEN v2.id IS NULL THEN 'delete'
+        |             WHEN v1.seg <> v2.seg THEN 'update' END AS op
+        |      FROM v1 FULL OUTER JOIN v2 ON v1.id = v2.id)
+        |SELECT id, op, seg_before, seg_after FROM j
+        |WHERE op IS NOT NULL ORDER BY id""".stripMargin),
+  )
 }

@@ -5,6 +5,7 @@ import scala.jdk.CollectionConverters._
 import scala.collection.concurrent.TrieMap
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import graft.Query
 import graft.kg.{Corpus, KgPipeline}
 
 /** Driver-checkable KG-pipeline queries. The pipeline runs once per
@@ -280,76 +281,6 @@ object KgOps {
       .orderBy("entity_id")
   }
 
-  /** DuckDB oracle for qkg13: the qkg10 unrolled shape with rank_0 and
-    * the per-iteration base restricted to the 16 seeds; fold tree
-    * identical, so all 800 doubles are bit-identical (zero-rank
-    * contributors add exact 0.0 on both sides).
-    */
-  def pprOracle: String = {
-    val base = "CASE WHEN sd.id IS NOT NULL THEN " +
-      "(CAST(1 AS DOUBLE) - CAST(0.85 AS DOUBLE))/16 ELSE CAST(0 AS DOUBLE) END"
-    val iters = (1 to 3).map { k =>
-      s"""s$k AS (SELECT e.dst AS id,
-         |    list_reduce(list_transform(list_sort(
-         |      list({'u': e.src, 'c': r.rank/od.outdeg})), x -> x.c),
-         |      (a, b) -> a + b) AS s
-         |  FROM e JOIN r${k - 1} r ON r.id = e.src JOIN od ON od.src = e.src
-         |  GROUP BY 1),
-         |r$k AS (SELECT n.id, $base
-         |    + CAST(0.85 AS DOUBLE) * COALESCE(s$k.s, CAST(0 AS DOUBLE)) AS rank
-         |  FROM nodes n LEFT JOIN seeds sd ON sd.id = n.id
-         |  LEFT JOIN s$k ON s$k.id = n.id)""".stripMargin
-    }.mkString(",\n")
-    s"""$tripleCte,
-       |e AS (SELECT DISTINCT 'e' || lpad(CAST(cs AS VARCHAR), 4, '0') AS src,
-       |        'e' || lpad(CAST(co AS VARCHAR), 4, '0') AS dst FROM cz),
-       |nodes AS (SELECT 'e' || lpad(CAST(k AS VARCHAR), 4, '0') AS id
-       |          FROM range(800) t(k)),
-       |seeds AS (SELECT id FROM nodes WHERE CAST(substr(id, 2) AS INT) % 50 = 0),
-       |od AS (SELECT src, COUNT(*) AS outdeg FROM e GROUP BY 1),
-       |r0 AS (SELECT n.id,
-       |    CASE WHEN sd.id IS NOT NULL THEN CAST(1 AS DOUBLE)/16
-       |         ELSE CAST(0 AS DOUBLE) END AS rank
-       |  FROM nodes n LEFT JOIN seeds sd ON sd.id = n.id),
-       |$iters
-       |SELECT id AS entity_id, rank FROM r3 ORDER BY entity_id""".stripMargin
-  }
-
-  /** DuckDB oracle for qkg11: the qkg10 unrolled 3-iteration PageRank
-    * with each iteration's summation replaced by the same two-level
-    * salted fold the Spark operator uses (salt = numeric id suffix % 8;
-    * level 1 folds {'u','c'} structs sorted by contributor inside each
-    * (dst, salt) group, level 2 folds {'b','p'} partials sorted by salt).
-    * list_reduce's first-element init equals the operator's 0.0 init
-    * because 0.0 + x == x for every finite positive x.
-    */
-  def saltedPageRankOracle: String = {
-    val iters = (1 to 3).map { k =>
-      s"""s${k}a AS (SELECT e.dst AS id, CAST(substr(e.src, 2) AS INT) % 8 AS b,
-         |    list_reduce(list_transform(list_sort(
-         |      list({'u': e.src, 'c': r.rank/od.outdeg})), x -> x.c),
-         |      (a, c2) -> a + c2) AS p
-         |  FROM e JOIN r${k - 1} r ON r.id = e.src JOIN od ON od.src = e.src
-         |  GROUP BY 1, 2),
-         |s$k AS (SELECT id, list_reduce(list_transform(list_sort(
-         |      list({'b': b, 'p': p})), x -> x.p), (a, c2) -> a + c2) AS s
-         |  FROM s${k}a GROUP BY 1),
-         |r$k AS (SELECT n.id,
-         |    (CAST(1 AS DOUBLE) - CAST(0.85 AS DOUBLE))/800
-         |      + CAST(0.85 AS DOUBLE) * COALESCE(s$k.s, CAST(0 AS DOUBLE)) AS rank
-         |  FROM nodes n LEFT JOIN s$k ON s$k.id = n.id)""".stripMargin
-    }.mkString(",\n")
-    s"""$tripleCte,
-       |e AS (SELECT DISTINCT 'e' || lpad(CAST(cs AS VARCHAR), 4, '0') AS src,
-       |        'e' || lpad(CAST(co AS VARCHAR), 4, '0') AS dst FROM cz),
-       |nodes AS (SELECT 'e' || lpad(CAST(k AS VARCHAR), 4, '0') AS id
-       |          FROM range(800) t(k)),
-       |od AS (SELECT src, COUNT(*) AS outdeg FROM e GROUP BY 1),
-       |r0 AS (SELECT id, CAST(1 AS DOUBLE)/800 AS rank FROM nodes),
-       |$iters
-       |SELECT id AS entity_id, rank FROM r3 ORDER BY entity_id""".stripMargin
-  }
-
   /** HITS hubs-and-authorities over the canonical triple graph — the
     * web-graph quality-signal pair (see [[graft.graph.Analytics.hits]]):
     * subjects that point at well-cited objects score as hubs, entities
@@ -365,42 +296,6 @@ object KgOps {
     graft.graph.Analytics.hits(edges, nodes, iterations = 2)
       .select(col("id").as("entity_id"), col("hub"), col("auth"))
       .orderBy("entity_id")
-  }
-
-  /** DuckDB oracle for qkg14: 2 unrolled HITS iterations — each
-    * half-step is the qkg10 fold (contributor-sorted list_reduce, same
-    * 0.0-init equivalence) followed by a division by the half-step's
-    * MAX (order-free in both engines), so hub AND auth are bit-identical
-    * for all 800 entities.
-    */
-  def hitsOracle: String = {
-    val iters = (1 to 2).map { k =>
-      s"""a${k}s AS (SELECT e.dst AS id,
-         |    list_reduce(list_transform(list_sort(
-         |      list({'u': e.src, 'c': h.hub})), x -> x.c),
-         |      (a, c2) -> a + c2) AS s
-         |  FROM e JOIN h${k - 1} h ON h.id = e.src GROUP BY 1),
-         |a${k}r AS (SELECT n.id, COALESCE(a${k}s.s, CAST(0 AS DOUBLE)) AS s
-         |  FROM nodes n LEFT JOIN a${k}s ON a${k}s.id = n.id),
-         |a$k AS (SELECT id, s / (SELECT MAX(s) FROM a${k}r) AS auth FROM a${k}r),
-         |h${k}s AS (SELECT e.src AS id,
-         |    list_reduce(list_transform(list_sort(
-         |      list({'u': e.dst, 'c': t.auth})), x -> x.c),
-         |      (a, c2) -> a + c2) AS s
-         |  FROM e JOIN a$k t ON t.id = e.dst GROUP BY 1),
-         |h${k}r AS (SELECT n.id, COALESCE(h${k}s.s, CAST(0 AS DOUBLE)) AS s
-         |  FROM nodes n LEFT JOIN h${k}s ON h${k}s.id = n.id),
-         |h$k AS (SELECT id, s / (SELECT MAX(s) FROM h${k}r) AS hub FROM h${k}r)""".stripMargin
-    }.mkString(",\n")
-    s"""$tripleCte,
-       |e AS (SELECT DISTINCT 'e' || lpad(CAST(cs AS VARCHAR), 4, '0') AS src,
-       |        'e' || lpad(CAST(co AS VARCHAR), 4, '0') AS dst FROM cz),
-       |nodes AS (SELECT 'e' || lpad(CAST(k AS VARCHAR), 4, '0') AS id
-       |          FROM range(800) t(k)),
-       |h0 AS (SELECT id, CAST(1 AS DOUBLE) AS hub FROM nodes),
-       |$iters
-       |SELECT h2.id AS entity_id, h2.hub, a2.auth
-       |FROM h2 JOIN a2 ON a2.id = h2.id ORDER BY entity_id""".stripMargin
   }
 
   /** Minimum-hop BFS distances from the qkg13 seed set (every 50th
@@ -421,24 +316,6 @@ object KgOps {
       .orderBy("entity_id")
   }
 
-  /** DuckDB oracle for qkg15: recursive CTE from the same seeds, hop
-    * bound in the recursion guard, BFS distance = MIN over discovered
-    * (id, dist) pairs — integer-exact on both engines.
-    */
-  def bfsOracle: String =
-    s"""${tripleCte.replaceFirst("WITH ", "WITH RECURSIVE ")},
-       |e AS (SELECT DISTINCT 'e' || lpad(CAST(cs AS VARCHAR), 4, '0') AS src,
-       |        'e' || lpad(CAST(co AS VARCHAR), 4, '0') AS dst FROM cz),
-       |seeds AS (SELECT 'e' || lpad(CAST(k AS VARCHAR), 4, '0') AS id
-       |          FROM range(800) t(k) WHERE k % 50 = 0),
-       |d(id, dist) AS (
-       |  SELECT id, 0 FROM seeds
-       |  UNION
-       |  SELECT e.dst, d.dist + 1 FROM d JOIN e ON e.src = d.id
-       |  WHERE d.dist < 4)
-       |SELECT id AS entity_id, MIN(dist) AS dist FROM d
-       |GROUP BY id ORDER BY entity_id""".stripMargin
-
   /** Entity relatedness by shared neighbors over the triple graph
     * ([[graft.graph.Analytics.neighborJaccard]], hub cap 8): unordered
     * entity pairs scored by integer-scaled Jaccard of their undirected
@@ -451,31 +328,6 @@ object KgOps {
     graft.graph.Analytics.neighborJaccard(edges, maxHubDegree = 8)
       .orderBy("entity_a", "entity_b")
   }
-
-  /** DuckDB oracle for qkg16: the same adjacency/degree/wedge algebra
-    * in SQL — counts are integers and the score uses integer div, so
-    * every row value-hashes.
-    */
-  def relatedOracle: String =
-    s"""$tripleCte,
-       |eg AS (SELECT DISTINCT 'e' || lpad(CAST(cs AS VARCHAR), 4, '0') AS u,
-       |        'e' || lpad(CAST(co AS VARCHAR), 4, '0') AS v FROM cz),
-       |und AS (SELECT DISTINCT LEAST(u, v) AS a, GREATEST(u, v) AS b
-       |        FROM eg WHERE u <> v),
-       |adj AS (SELECT a AS x, b AS nbr FROM und
-       |        UNION ALL SELECT b AS x, a AS nbr FROM und),
-       |deg AS (SELECT x, COUNT(*) AS d FROM adj GROUP BY 1),
-       |cnt AS (SELECT x AS nbr FROM deg WHERE d <= 8),
-       |w AS (SELECT l.x AS a, r.x AS b, COUNT(*) AS common_cnt
-       |      FROM adj l JOIN adj r ON l.nbr = r.nbr AND l.x < r.x
-       |      JOIN cnt c ON c.nbr = l.nbr
-       |      GROUP BY 1, 2)
-       |SELECT w.a AS entity_a, w.b AS entity_b, w.common_cnt,
-       |  da.d + db.d - w.common_cnt AS union_cnt,
-       |  w.common_cnt * CAST(1000000 AS BIGINT)
-       |    // (da.d + db.d - w.common_cnt) AS score
-       |FROM w JOIN deg da ON da.x = w.a JOIN deg db ON db.x = w.b
-       |ORDER BY entity_a, entity_b""".stripMargin
 
   /** Adamic–Adar link prediction over the canonical triple graph
     * ([[graft.graph.Analytics.adamicAdar]], same edge set and hub cap
@@ -517,88 +369,6 @@ object KgOps {
       .orderBy("entity_id")
   }
 
-  /** DuckDB oracle for qkg27: two unrolled path-count join-aggregates
-    * + the same dyadic three-term sum.
-    */
-  def katzOracle: String =
-    s"""$tripleCte,
-       |eg AS (SELECT DISTINCT 'e' || lpad(CAST(cs AS VARCHAR), 4, '0') AS src,
-       |        'e' || lpad(CAST(co AS VARCHAR), 4, '0') AS dst FROM cz),
-       |nodes AS (SELECT 'e' || lpad(CAST(k AS VARCHAR), 4, '0') AS id
-       |          FROM range(800) t(k)),
-       |c1 AS (SELECT src, COUNT(*) AS c1 FROM eg GROUP BY 1),
-       |c2 AS (SELECT e.src, CAST(SUM(c1.c1) AS BIGINT) AS c2
-       |       FROM eg e JOIN c1 ON c1.src = e.dst GROUP BY 1),
-       |c3 AS (SELECT e.src, CAST(SUM(c2.c2) AS BIGINT) AS c3
-       |       FROM eg e JOIN c2 ON c2.src = e.dst GROUP BY 1)
-       |SELECT n.id AS entity_id,
-       |  COALESCE(c1.c1, CAST(0 AS BIGINT)) AS c1,
-       |  COALESCE(c2.c2, CAST(0 AS BIGINT)) AS c2,
-       |  COALESCE(c3.c3, CAST(0 AS BIGINT)) AS c3,
-       |  CAST(0.5 AS DOUBLE) * COALESCE(c1.c1, CAST(0 AS BIGINT))
-       |   + CAST(0.25 AS DOUBLE) * COALESCE(c2.c2, CAST(0 AS BIGINT))
-       |   + CAST(0.125 AS DOUBLE) * COALESCE(c3.c3, CAST(0 AS BIGINT))
-       |   AS katz
-       |FROM nodes n
-       |LEFT JOIN c1 ON c1.src = n.id
-       |LEFT JOIN c2 ON c2.src = n.id
-       |LEFT JOIN c3 ON c3.src = n.id
-       |ORDER BY entity_id""".stripMargin
-
-  /** DuckDB oracle for qkg26: the qkg16 wedge algebra, filtered to
-    * pairs with ≥ 2 capped common neighbors, C(c, 2) via integer div.
-    */
-  def squaresOracle: String =
-    s"""$tripleCte,
-       |eg AS (SELECT DISTINCT 'e' || lpad(CAST(cs AS VARCHAR), 4, '0') AS u,
-       |        'e' || lpad(CAST(co AS VARCHAR), 4, '0') AS v FROM cz),
-       |und AS (SELECT DISTINCT LEAST(u, v) AS a, GREATEST(u, v) AS b
-       |        FROM eg WHERE u <> v),
-       |adj AS (SELECT a AS x, b AS nbr FROM und
-       |        UNION ALL SELECT b AS x, a AS nbr FROM und),
-       |deg AS (SELECT x, COUNT(*) AS d FROM adj GROUP BY 1),
-       |cnt AS (SELECT x AS nbr FROM deg WHERE d <= 8),
-       |w AS (SELECT l.x AS a, r.x AS b, COUNT(*) AS common_cnt
-       |      FROM adj l JOIN adj r ON l.nbr = r.nbr AND l.x < r.x
-       |      JOIN cnt c ON c.nbr = l.nbr
-       |      GROUP BY 1, 2)
-       |SELECT a AS entity_a, b AS entity_b, common_cnt,
-       |  common_cnt * (common_cnt - 1) // 2 AS n_squares
-       |FROM w WHERE common_cnt >= 2
-       |ORDER BY entity_a, entity_b""".stripMargin
-
-  /** DuckDB oracle for qkg23: the qkg16 adjacency/degree/wedge algebra
-    * plus the staged ExactMath ln over each capped neighbor's degree and
-    * the sorted per-pair fold — every double bit-matches.
-    */
-  def adamicAdarOracle: String = {
-    import graft.functions.ExactMath
-    s"""$tripleCte,
-       |eg AS (SELECT DISTINCT 'e' || lpad(CAST(cs AS VARCHAR), 4, '0') AS u,
-       |        'e' || lpad(CAST(co AS VARCHAR), 4, '0') AS v FROM cz),
-       |und AS (SELECT DISTINCT LEAST(u, v) AS a, GREATEST(u, v) AS b
-       |        FROM eg WHERE u <> v),
-       |adj AS (SELECT a AS x, b AS nbr FROM und
-       |        UNION ALL SELECT b AS x, a AS nbr FROM und),
-       |deg AS (SELECT x, COUNT(*) AS d FROM adj GROUP BY 1),
-       |cp AS (SELECT x, d FROM deg WHERE d BETWEEN 2 AND 8),
-       |ca AS (SELECT *, ${ExactMath.blSql("d")} AS bl FROM cp),
-       |cb AS (SELECT *, ${ExactMath.mSql("d", "bl")} AS mm FROM ca),
-       |cc2 AS (SELECT *, ${ExactMath.zSql("mm")} AS z FROM cb),
-       |cd AS (SELECT *, z * z AS z2 FROM cc2),
-       |ce AS (SELECT x AS nbr,
-       |        CAST(1.0 AS DOUBLE) / ${ExactMath.lnFromPartsSql()} AS invln
-       |       FROM cd),
-       |w AS (SELECT l.x AS ea, r.x AS eb, l.nbr, ce.invln
-       |      FROM adj l JOIN adj r ON l.nbr = r.nbr AND l.x < r.x
-       |      JOIN ce ON ce.nbr = l.nbr)
-       |SELECT ea AS entity_a, eb AS entity_b, COUNT(*) AS common_cnt,
-       |  list_reduce(list_transform(list_sort(
-       |    list({'n': nbr, 'v': invln})), x -> x.v),
-       |    (a, b) -> a + b) AS aa_score
-       |FROM w GROUP BY 1, 2 ORDER BY entity_a, entity_b""".stripMargin
-  }
-
   /** Deterministic synchronous label propagation over the co-mention
     * graph ([[graft.graph.Analytics.labelPropagation]], 3 iterations):
     * community labels from majority neighbor votes with the smallest
@@ -632,15 +402,6 @@ object KgOps {
        |       FROM pe a JOIN pe b ON a.i = b.i AND a.ck < b.ck),
        |nodes AS (SELECT 'e' || lpad(CAST(k AS VARCHAR), 4, '0') AS id
        |          FROM range(800) t(k))""".stripMargin
-
-  /** DuckDB oracle for qkg17: 3 unrolled synchronous LPA rounds — votes
-    * are integer counts, the winner is ROW_NUMBER over (cnt DESC, label
-    * ASC) (the operator's exact tie order), voteless nodes keep their
-    * label via COALESCE.
-    */
-  def labelPropOracle: String =
-    s"""$lpaCte
-       |SELECT id AS entity_id, label FROM l3 ORDER BY entity_id""".stripMargin
 
   /** The qkg17 LPA replay as a reusable CTE chain (through `l3`, with
     * `eg`/`nodes` in scope) — shared with the qkg25 contraction.
@@ -687,16 +448,6 @@ object KgOps {
       .orderBy("comm_a", "comm_b")
   }
 
-  /** DuckDB oracle for qkg25: the qkg17 LPA chain + the same two label
-    * joins and least/greatest pair contraction.
-    */
-  def communityGraphOracle: String =
-    s"""$lpaCte
-       |SELECT LEAST(la.label, lb.label) AS comm_a,
-       |  GREATEST(la.label, lb.label) AS comm_b, COUNT(*) AS n_edges
-       |FROM eg JOIN l3 la ON la.id = eg.u JOIN l3 lb ON lb.id = eg.v
-       |GROUP BY 1, 2 ORDER BY comm_a, comm_b""".stripMargin
-
   /** 3-core of the co-mention graph
     * ([[graft.graph.Analytics.kCore]], k = 3): the dense backbone of
     * the entity graph — iterative peeling to the unique fixpoint,
@@ -710,30 +461,6 @@ object KgOps {
     graft.graph.Analytics.kCore(comentionPairs(res), k = 3)
       .select(col("id").as("entity_id"), col("core_deg"))
       .orderBy("entity_id")
-  }
-
-  /** DuckDB oracle for qkg18: 12 unrolled peel rounds (degree filter ≥ 3
-    * + edge restriction), then final in-core degrees. Every round's edge
-    * set is MATERIALIZED: each e_j is referenced twice by round j+1
-    * (degrees + filter), so DuckDB's default CTE inlining would expand
-    * the chain into 2¹² copies of the whole mention pipeline (measured:
-    * fd exhaustion at sf0.01); materialization keeps it linear.
-    */
-  def kCoreOracle: String = {
-    val rounds = (1 to 12).map { j =>
-      s"""d$j AS (SELECT id, COUNT(*) AS deg FROM (
-         |    SELECT u AS id FROM e${j - 1} UNION ALL SELECT v FROM e${j - 1}) t
-         |  GROUP BY 1),
-         |k$j AS (SELECT id FROM d$j WHERE deg >= 3),
-         |e$j AS MATERIALIZED (SELECT e.u, e.v FROM e${j - 1} e
-         |  JOIN k$j ka ON ka.id = e.u JOIN k$j kb ON kb.id = e.v)""".stripMargin
-    }.mkString(",\n")
-    s"""$comentionGraphCte,
-       |e0 AS MATERIALIZED (SELECT u, v FROM eg),
-       |$rounds
-       |SELECT id AS entity_id, COUNT(*) AS core_deg FROM (
-       |  SELECT u AS id FROM e12 UNION ALL SELECT v FROM e12) t
-       |GROUP BY 1 ORDER BY entity_id""".stripMargin
   }
 
   /** Cheapest-within-4-hops weighted distances from the qkg15 seed set
@@ -758,25 +485,6 @@ object KgOps {
       .orderBy("entity_id")
   }
 
-  /** DuckDB oracle for qkg19: enumerate every ≤ 4-edge path from the
-    * seeds with the same arithmetic weights, MIN(dist) per node —
-    * bounded-hop Bellman–Ford's defining identity, integer-exact.
-    */
-  def ssspOracle: String =
-    s"""${tripleCte.replaceFirst("WITH ", "WITH RECURSIVE ")},
-       |e AS (SELECT DISTINCT 'e' || lpad(CAST(cs AS VARCHAR), 4, '0') AS src,
-       |        'e' || lpad(CAST(co AS VARCHAR), 4, '0') AS dst,
-       |        CAST((cs + co) % 7 + 1 AS BIGINT) AS w FROM cz),
-       |seeds AS (SELECT 'e' || lpad(CAST(k AS VARCHAR), 4, '0') AS id
-       |          FROM range(800) t(k) WHERE k % 50 = 0),
-       |d(id, dist, hops) AS (
-       |  SELECT id, CAST(0 AS BIGINT), 0 FROM seeds
-       |  UNION
-       |  SELECT e.dst, d.dist + e.w, d.hops + 1 FROM d JOIN e ON e.src = d.id
-       |  WHERE d.hops < 4)
-       |SELECT id AS entity_id, MIN(dist) AS dist FROM d
-       |GROUP BY id ORDER BY entity_id""".stripMargin
-
   /** Deterministic DeepWalk corpus over the undirected triple graph
     * ([[graft.graph.Analytics.randomWalks]]): 4-step walks from every
     * 25th canonical entity, neighbor choice by the integer LCG over
@@ -796,37 +504,6 @@ object KgOps {
       .orderBy("walk_id", "step")
   }
 
-  /** DuckDB oracle for qkg20: ranked sorted adjacency + the same LCG
-    * pick per unrolled step.
-    */
-  def walksOracle: String = {
-    val steps = (1 to 4).map { t =>
-      s"""s$t AS (SELECT s.walk_id, CAST($t AS BIGINT) AS step, rk.nbr AS id
-         |  FROM s${t - 1} s JOIN rk ON rk.x = s.id
-         |   AND rk.r = ((CAST(substr(s.id, 2) AS BIGINT) * 1103515245
-         |                + $t * 12345) % 2147483648) % rk.deg)""".stripMargin
-    }.mkString(",\n")
-    s"""$tripleCte,
-       |eg AS (SELECT DISTINCT 'e' || lpad(CAST(cs AS VARCHAR), 4, '0') AS u,
-       |        'e' || lpad(CAST(co AS VARCHAR), 4, '0') AS v FROM cz),
-       |und AS (SELECT DISTINCT LEAST(u, v) AS a, GREATEST(u, v) AS b
-       |        FROM eg WHERE u <> v),
-       |adj AS (SELECT a AS x, b AS nbr FROM und
-       |        UNION ALL SELECT b AS x, a AS nbr FROM und),
-       |rk AS (SELECT x, nbr,
-       |        ROW_NUMBER() OVER (PARTITION BY x ORDER BY nbr) - 1 AS r,
-       |        COUNT(*) OVER (PARTITION BY x) AS deg FROM adj),
-       |seeds AS (SELECT 'e' || lpad(CAST(k AS VARCHAR), 4, '0') AS id
-       |          FROM range(800) t(k) WHERE k % 25 = 0),
-       |s0 AS (SELECT id AS walk_id, CAST(0 AS BIGINT) AS step, id FROM seeds),
-       |$steps
-       |SELECT walk_id, step, id AS entity_id FROM (
-       |  SELECT * FROM s0 UNION ALL SELECT * FROM s1 UNION ALL
-       |  SELECT * FROM s2 UNION ALL SELECT * FROM s3 UNION ALL
-       |  SELECT * FROM s4)
-       |ORDER BY walk_id, step""".stripMargin
-  }
-
   /** Per-predicate power-of-two out-degree histogram over the canonical
     * triple graph ([[graft.graph.Analytics.degreeHistogram]]) — the
     * profiling row a planner reads before choosing broadcast vs salt.
@@ -840,18 +517,6 @@ object KgOps {
         col("n_nodes"), col("n_edges"))
       .orderBy("pred", "bucket")
   }
-
-  /** DuckDB oracle for qkg21: same distinct-triple degrees, log-bucket
-    * via binary-digit count.
-    */
-  def degreeHistOracle: String =
-    s"""$tripleCte,
-       |e AS (SELECT DISTINCT p, cs, co FROM cz),
-       |d AS (SELECT p, cs, COUNT(*) AS deg FROM e GROUP BY 1, 2)
-       |SELECT $predCase AS pred,
-       |  CAST(length(printf('%b', deg)) - 1 AS BIGINT) AS bucket,
-       |  COUNT(*) AS n_nodes, CAST(SUM(deg) AS BIGINT) AS n_edges
-       |FROM d GROUP BY 1, 2 ORDER BY pred, bucket""".stripMargin
 
   /** HyperBall neighborhood function over the triple graph
     * ([[graft.graph.Analytics.hyperBall]], 4 hops): every entity's
@@ -870,39 +535,6 @@ object KgOps {
       .orderBy("entity_id")
   }
 
-  /** DuckDB oracle for qkg22: exact ≤4-hop reach sets by recursive CTE,
-    * then the qsk1 register arithmetic per (source, reached) pair,
-    * per-bucket MAX, and the same order-free fingerprint.
-    */
-  def hyperBallOracle: String =
-    s"""${tripleCte.replaceFirst("WITH ", "WITH RECURSIVE ")},
-       |e AS (SELECT DISTINCT 'e' || lpad(CAST(cs AS VARCHAR), 4, '0') AS src,
-       |        'e' || lpad(CAST(co AS VARCHAR), 4, '0') AS dst FROM cz),
-       |nodes AS (SELECT 'e' || lpad(CAST(k AS VARCHAR), 4, '0') AS id
-       |          FROM range(800) t(k)),
-       |reach(s, id, hops) AS (
-       |  SELECT id, id, 0 FROM nodes
-       |  UNION
-       |  SELECT r.s, e.dst, r.hops + 1 FROM reach r JOIN e ON e.src = r.id
-       |  WHERE r.hops < 4),
-       |ball AS (SELECT DISTINCT s, id FROM reach),
-       |h AS (SELECT s, md5(id) AS h FROM ball),
-       |br AS (SELECT s,
-       |        CAST(concat('0x', substring(h, 1, 2)) AS BIGINT) AS bucket,
-       |        ltrim(substring(h, 3, 15), '0') AS tl FROM h),
-       |rk AS (SELECT s, bucket,
-       |        60 - length(tl) * 4 +
-       |        (CASE substring(tl, 1, 1)
-       |          WHEN '1' THEN 3 WHEN '2' THEN 2 WHEN '3' THEN 2
-       |          WHEN '4' THEN 1 WHEN '5' THEN 1 WHEN '6' THEN 1
-       |          WHEN '7' THEN 1 ELSE 0 END) + 1 AS rank FROM br),
-       |reg AS (SELECT s, bucket, MAX(rank) AS r FROM rk GROUP BY 1, 2)
-       |SELECT s AS entity_id, COUNT(*) AS n_regs,
-       |  CAST(SUM(CAST(1::BIGINT << CAST(61 - r AS INT) AS HUGEINT)
-       |        * (bucket * 2654435761 % 1048576 + 1))
-       |    % 4611686018427387904 AS BIGINT) AS reg_fp
-       |FROM reg GROUP BY s ORDER BY entity_id""".stripMargin
-
   /** Approximate harmonic centrality over the triple graph via
     * HyperBall ([[graft.graph.Analytics.harmonicCentrality]], 4 hops) —
     * the paper's headline application: hop-delta ball sizes from the
@@ -917,61 +549,6 @@ object KgOps {
       .select(col("id").as("entity_id"), col("harmonic"), col("ball_est"))
       .orderBy("entity_id")
   }
-
-  /** DuckDB oracle for qkg24: exact per-hop balls (min-hop recursive
-    * CTE), qsk1 register arithmetic per hop, the raw estimator with the
-    * identical literal association, LAG hop deltas, and both folds
-    * (register sum in bucket order, harmonic sum in hop order) replayed
-    * with the same 0.0-seeded association.
-    */
-  def harmonicOracle: String =
-    s"""${tripleCte.replaceFirst("WITH ", "WITH RECURSIVE ")},
-       |e AS (SELECT DISTINCT 'e' || lpad(CAST(cs AS VARCHAR), 4, '0') AS src,
-       |        'e' || lpad(CAST(co AS VARCHAR), 4, '0') AS dst FROM cz),
-       |nodes AS (SELECT 'e' || lpad(CAST(k AS VARCHAR), 4, '0') AS id
-       |          FROM range(800) t(k)),
-       |reach(s, id, hops) AS (
-       |  SELECT id, id, 0 FROM nodes
-       |  UNION
-       |  SELECT r.s, e.dst, r.hops + 1 FROM reach r JOIN e ON e.src = r.id
-       |  WHERE r.hops < 4),
-       |bd AS (SELECT s, id, MIN(hops) AS d FROM reach GROUP BY 1, 2),
-       |hp AS (SELECT unnest(generate_series(0, 4)) AS t),
-       |pr AS (SELECT hp.t, bd.s, md5(bd.id) AS h
-       |       FROM bd CROSS JOIN hp WHERE bd.d <= hp.t),
-       |br AS (SELECT t, s,
-       |        CAST(concat('0x', substring(h, 1, 2)) AS BIGINT) AS bucket,
-       |        ltrim(substring(h, 3, 15), '0') AS tl FROM pr),
-       |rk AS (SELECT t, s, bucket,
-       |        60 - length(tl) * 4 +
-       |        (CASE substring(tl, 1, 1)
-       |          WHEN '1' THEN 3 WHEN '2' THEN 2 WHEN '3' THEN 2
-       |          WHEN '4' THEN 1 WHEN '5' THEN 1 WHEN '6' THEN 1
-       |          WHEN '7' THEN 1 ELSE 0 END) + 1 AS rank FROM br),
-       |reg AS (SELECT t, s, bucket, MAX(rank) AS r FROM rk GROUP BY 1, 2, 3),
-       |est AS (SELECT t, s,
-       |        (CAST(0.7213 AS DOUBLE) / (CAST(1.0 AS DOUBLE)
-       |           + CAST(1.079 AS DOUBLE) / CAST(256.0 AS DOUBLE)))
-       |         * CAST(65536.0 AS DOUBLE)
-       |         / ((CAST(256.0 AS DOUBLE) - CAST(COUNT(*) AS DOUBLE))
-       |            + list_reduce(list_prepend(CAST(0.0 AS DOUBLE),
-       |                list_transform(list_sort(list({'b': bucket, 'r': r})),
-       |                  x -> power(CAST(2.0 AS DOUBLE),
-       |                    -CAST(x.r AS DOUBLE)))),
-       |                (a, b) -> a + b)) AS est
-       |        FROM reg GROUP BY t, s),
-       |ct AS (SELECT s, t, est,
-       |        CASE WHEN t = 0 THEN CAST(0.0 AS DOUBLE)
-       |             ELSE (est - LAG(est) OVER (PARTITION BY s ORDER BY t))
-       |                  / CAST(t AS DOUBLE) END AS contrib
-       |       FROM est)
-       |SELECT s AS entity_id,
-       |  list_reduce(list_prepend(CAST(0.0 AS DOUBLE),
-       |    list_transform(list_sort(list({'t': t, 'c': contrib})),
-       |      x -> x.c)),
-       |    (a, b) -> a + b) AS harmonic,
-       |  MAX(CASE WHEN t = 4 THEN est END) AS ball_est
-       |FROM ct GROUP BY s ORDER BY entity_id""".stripMargin
 
   /** Streaming incremental sync, end-to-end: the corpus is written out
     * as several parquet files, streamed back with AvailableNow +
@@ -1326,10 +903,10 @@ object KgOps {
   }
 
   /** Oracle SQL fragments shared by the KG queries. */
-  val predCase: String =
+  private val predCase: String =
     "CASE p WHEN 0 THEN 'works_for' WHEN 1 THEN 'located_in' WHEN 2 THEN 'part_of' WHEN 3 THEN 'founded' ELSE 'acquired' END"
 
-  val mentionCte: String =
+  private val mentionCte: String =
     """WITH en AS (SELECT doc_id AS i FROM documents WHERE lang = 'en'),
       |m AS (
       |  SELECT i, i % 1000 AS k FROM en
@@ -1340,10 +917,607 @@ object KgOps {
       |  UNION ALL SELECT i, 100 + (i % 100) FROM en WHERE i % 10 = 9),
       |c AS (SELECT i, CASE WHEN k >= 800 THEN k - 800 ELSE k END AS ck FROM m)""".stripMargin
 
-  val tripleCte: String =
+  private val tripleCte: String =
     """WITH en AS (SELECT doc_id AS i FROM documents WHERE lang = 'en'),
       |t AS (SELECT i, i % 1000 AS s, (7*i+3) % 1000 AS o, i % 5 AS p FROM en),
       |cz AS (SELECT i, p,
       |  CASE WHEN s >= 800 THEN s - 800 ELSE s END AS cs,
       |  CASE WHEN o >= 800 THEN o - 800 ELSE o END AS co FROM t)""".stripMargin
+
+  /** The KG-pipeline and streaming queries, each with its DuckDB oracle. */
+  def queries: Seq[Query] = Seq(
+    // KG-pipeline oracles: recompute planted facts arithmetically from
+    // documents.parquet; the Spark side must reproduce them through real
+    // HTML extraction, Aho-Corasick mention detection, LSH blocking, CC
+    // canonicalization and graph merge.
+    Query("qkg1_extract_invariant", qkg1Invariant,
+      "SELECT COUNT(*) AS n_pages, COUNT(*) AS n_exact FROM documents"),
+    Query("qkg2_mentions", qkg2Mentions,
+      s"""$mentionCte
+         |SELECT 'https://host' || CAST(i % 50 AS VARCHAR) || '.example/p/' || CAST(i AS VARCHAR) AS url,
+         | 'e' || lpad(CAST(ck AS VARCHAR), 4, '0') AS entity_id,
+         | COUNT(*) AS n_mentions
+         |FROM c GROUP BY 1, 2 ORDER BY url, entity_id""".stripMargin),
+    Query("qkg3_triples", qkg3Triples,
+      s"""$tripleCte
+         |SELECT 'https://host' || CAST(i % 50 AS VARCHAR) || '.example/p/' || CAST(i AS VARCHAR) AS url,
+         | 'e' || lpad(CAST(cs AS VARCHAR), 4, '0') AS subj,
+         | $predCase AS pred,
+         | 'e' || lpad(CAST(co AS VARCHAR), 4, '0') AS obj
+         |FROM cz ORDER BY url, subj, pred, obj""".stripMargin),
+    Query("qkg4_canonical", qkg4Canonical,
+      """SELECT 'e' || lpad(CAST(k AS VARCHAR), 4, '0') AS entity_id,
+        | 'e' || lpad(CAST(CASE WHEN k >= 800 THEN k - 800 ELSE k END AS VARCHAR), 4, '0') AS canonical_id
+        |FROM range(0, 1000) t(k) ORDER BY entity_id""".stripMargin),
+    Query("qkg5_mention_degree", qkg5Degree,
+      s"""$mentionCte
+         |SELECT 'e' || lpad(CAST(ck AS VARCHAR), 4, '0') AS entity_id,
+         | COUNT(*) AS n_mentions
+         |FROM c GROUP BY 1 ORDER BY n_mentions DESC, entity_id LIMIT 30""".stripMargin),
+    Query("qkg6_graph_edges", qkg6GraphEdges,
+      s"""$tripleCte
+         |SELECT 'e' || lpad(CAST(cs AS VARCHAR), 4, '0') AS src_id,
+         | $predCase AS rel_label,
+         | 'e' || lpad(CAST(co AS VARCHAR), 4, '0') AS dst_id,
+         | COUNT(DISTINCT i) AS n_sources,
+         | CAST(100 AS BIGINT) AS firstseen, CAST(100 AS BIGINT) AS lastupdated
+         |FROM cz GROUP BY 1, 2, 3 ORDER BY src_id, rel_label, dst_id""".stripMargin),
+    Query("q29_streaming_sync", q29StreamingSync,
+      s"""$tripleCte
+         |SELECT DISTINCT 'e' || lpad(CAST(cs AS VARCHAR), 4, '0') AS src_id,
+         | $predCase AS rel_label,
+         | 'e' || lpad(CAST(co AS VARCHAR), 4, '0') AS dst_id
+         |FROM cz ORDER BY src_id, rel_label, dst_id""".stripMargin),
+    // q32 oracle: the rows the streaming query must have KEPT (late row
+    // i=45 dropped; windows past the final watermark never emitted) with
+    // counts recomputed relationally.
+    Query("q32_stream_windows", q32StreamWindows,
+      """WITH rows_ AS (
+        | SELECT i, CASE WHEN i % 2 = 0 THEN 'en' ELSE 'de' END AS lang
+        | FROM range(0, 300) t(i)
+        | UNION ALL SELECT 900, 'en' UNION ALL SELECT 1000, 'en'
+        | UNION ALL SELECT 1100, 'en')
+        |SELECT CAST((i // 60) * 60 AS BIGINT) AS window_min, lang,
+        | COUNT(*) AS n_pages
+        |FROM rows_ GROUP BY 1, 2 ORDER BY window_min, lang""".stripMargin),
+    // q35 oracle: one session per (user, burst) recomputed closed-form —
+    // start = first event offset, end = last event offset + the 30 min gap
+    Query("q35_stream_sessions", q35StreamSessions,
+      """WITH e AS (
+        | SELECT doc_id % 5 AS u, doc_id // 100 AS b,
+        |        doc_id * 30 + (doc_id // 100) * 3600 AS off
+        | FROM documents)
+        |SELECT CAST(u AS BIGINT) AS user_id,
+        | CAST(MIN(off) AS BIGINT) AS start_off,
+        | CAST(MAX(off) + 1800 AS BIGINT) AS end_off,
+        | COUNT(*) AS n_events
+        |FROM e GROUP BY u, b ORDER BY user_id, start_off""".stripMargin),
+    // q37 oracle: the planted survivor set — first occurrences, the
+    // in-window dup dropped, the post-eviction dup re-emitted
+    Query("q37_stream_dedup_ttl", q37StreamDedupTtl,
+      """SELECT CAST(k AS BIGINT) AS k, CAST(off AS BIGINT) AS off
+        |FROM (VALUES (0, 0), (1, 60), (2, 120), (999, 1800), (0, 1500))
+        |  v(k, off)
+        |ORDER BY off, k""".stripMargin),
+    // q38 oracle: the stream-stream interval join's complete result IS
+    // the batch join (inner joins emit every pair once both sides
+    // arrive; the 45-day watermark out-spans the table so nothing drops)
+    Query("q38_stream_join", q38StreamJoin,
+      """SELECT v.event_id AS view_id, p.event_id AS purchase_id,
+        | v.user_id,
+        | epoch_us(p.ts) - epoch_us(v.ts) AS gap_us
+        |FROM events v JOIN events p
+        |  ON v.user_id = p.user_id
+        | AND v.event_type = 'view' AND p.event_type = 'purchase'
+        | AND p.ts >= v.ts AND p.ts <= v.ts + INTERVAL 1 DAY
+        |ORDER BY view_id, purchase_id""".stripMargin),
+    // q41: the left-outer variant — unmatched views flush once the
+    // sentinel-advanced global watermark closes their windows, so the
+    // complete output is the batch LEFT join
+    Query("q41_stream_left_join", q41StreamLeftJoin,
+      """SELECT v.event_id AS view_id, v.user_id,
+        | p.event_id AS purchase_id,
+        | epoch_us(p.ts) - epoch_us(v.ts) AS gap_us
+        |FROM events v LEFT JOIN events p
+        |  ON v.user_id = p.user_id
+        | AND p.event_type = 'purchase'
+        | AND p.ts >= v.ts AND p.ts <= v.ts + INTERVAL 1 DAY
+        |WHERE v.event_type = 'view'
+        |ORDER BY view_id, purchase_id""".stripMargin),
+    // q36 oracle: inner enrichment join + daily counts — every window is
+    // emitted (the sentinel pushed the final watermark past them all)
+    Query("q36_stream_enrich", q36StreamEnrich,
+      """SELECT CAST(epoch(date_trunc('day', ts)) // 86400 AS BIGINT) AS day,
+        | c_mktsegment AS segment, COUNT(*) AS n_events
+        |FROM events JOIN customer ON user_id = c_custkey
+        |GROUP BY 1, 2 ORDER BY day, segment""".stripMargin),
+    // Pages over the co-mention cap (MaxComentionEntitiesPerPage = 256
+    // distinct entities) are excluded — a no-op at every test scale
+    // (≤ 6 entities/page) but part of the operator's contract, so the
+    // oracle states it too.
+    Query("qkg7_comention", qkg7Comention,
+      s"""$mentionCte,
+         |pe0 AS (SELECT DISTINCT i, ck FROM c),
+         |ok AS (SELECT i FROM pe0 GROUP BY i
+         |       HAVING COUNT(*) <= $MaxComentionEntitiesPerPage),
+         |pe AS (SELECT pe0.i, pe0.ck FROM pe0 JOIN ok USING (i))
+         |SELECT 'e' || lpad(CAST(a.ck AS VARCHAR), 4, '0') AS entity_a,
+         | 'e' || lpad(CAST(b.ck AS VARCHAR), 4, '0') AS entity_b,
+         | COUNT(*) AS n_pages
+         |FROM pe a JOIN pe b ON a.i = b.i AND a.ck < b.ck
+         |GROUP BY 1, 2 ORDER BY n_pages DESC, entity_a, entity_b LIMIT 30""".stripMargin),
+    Query("qkg8_salted_degree", qkg8SaltedDegree,
+      s"""$mentionCte
+         |SELECT 'e' || lpad(CAST(ck AS VARCHAR), 4, '0') AS entity_id,
+         | COUNT(*) AS n_mentions
+         |FROM c GROUP BY 1 ORDER BY n_mentions DESC, entity_id LIMIT 30""".stripMargin),
+    // qkg9: triangles of the co-mention graph. The oracle enumerates
+    // each triangle once as x < y < z over the canonical (a < b) edge
+    // set — pure integer counting, exact.
+    Query("qkg9_triangles", qkg9Triangles,
+      s"""$mentionCte,
+         |pe0 AS (SELECT DISTINCT i, ck FROM c),
+         |ok AS (SELECT i FROM pe0 GROUP BY i
+         |       HAVING COUNT(*) <= $MaxComentionEntitiesPerPage),
+         |pe AS (SELECT pe0.i, pe0.ck FROM pe0 JOIN ok USING (i)),
+         |e AS (SELECT DISTINCT a.ck AS a, b.ck AS b
+         |      FROM pe a JOIN pe b ON a.i = b.i AND a.ck < b.ck),
+         |t AS (SELECT e1.a AS x, e1.b AS y, e2.b AS z
+         |      FROM e e1 JOIN e e2 ON e2.a = e1.a AND e2.b > e1.b
+         |      JOIN e e3 ON e3.a = e1.b AND e3.b = e2.b),
+         |pn AS (SELECT x AS k FROM t
+         |       UNION ALL SELECT y FROM t UNION ALL SELECT z FROM t)
+         |SELECT 'e' || lpad(CAST(k AS VARCHAR), 4, '0') AS entity_id,
+         | COUNT(*) AS n_triangles
+         |FROM pn GROUP BY 1 ORDER BY n_triangles DESC, entity_id LIMIT 30""".stripMargin),
+    // qkg10: 3-iteration PageRank (d = 0.85) over the distinct canonical
+    // (subj, obj) triple edges, unrolled in SQL. The per-node incoming
+    // contributions are folded left-to-right in contributor order
+    // (list_reduce over a list_sort'ed list) — the same deterministic
+    // summation the Spark operator uses, so all 800 double ranks are
+    // BIT-identical, not approximately equal. Entity ids are
+    // fixed-width ('e' || lpad(..)), so string order == numeric order
+    // and both engines fold in the same sequence.
+    Query("qkg10_pagerank", qkg10PageRank,
+      s"""$tripleCte,
+         |e AS (SELECT DISTINCT 'e' || lpad(CAST(cs AS VARCHAR), 4, '0') AS src,
+         |        'e' || lpad(CAST(co AS VARCHAR), 4, '0') AS dst FROM cz),
+         |nodes AS (SELECT 'e' || lpad(CAST(k AS VARCHAR), 4, '0') AS id
+         |          FROM range(800) t(k)),
+         |od AS (SELECT src, COUNT(*) AS outdeg FROM e GROUP BY 1),
+         |r0 AS (SELECT id, CAST(1 AS DOUBLE)/800 AS rank FROM nodes),
+         |s1 AS (SELECT e.dst AS id,
+         |         list_reduce(list_transform(list_sort(
+         |           list({'u': e.src, 'c': r.rank/od.outdeg})), x -> x.c),
+         |           (a, b) -> a + b) AS s
+         |       FROM e JOIN r0 r ON r.id = e.src JOIN od ON od.src = e.src
+         |       GROUP BY 1),
+         |r1 AS (SELECT n.id,
+         |         (CAST(1 AS DOUBLE) - CAST(0.85 AS DOUBLE))/800
+         |           + CAST(0.85 AS DOUBLE) * COALESCE(s1.s, CAST(0 AS DOUBLE)) AS rank
+         |       FROM nodes n LEFT JOIN s1 ON s1.id = n.id),
+         |s2 AS (SELECT e.dst AS id,
+         |         list_reduce(list_transform(list_sort(
+         |           list({'u': e.src, 'c': r.rank/od.outdeg})), x -> x.c),
+         |           (a, b) -> a + b) AS s
+         |       FROM e JOIN r1 r ON r.id = e.src JOIN od ON od.src = e.src
+         |       GROUP BY 1),
+         |r2 AS (SELECT n.id,
+         |         (CAST(1 AS DOUBLE) - CAST(0.85 AS DOUBLE))/800
+         |           + CAST(0.85 AS DOUBLE) * COALESCE(s2.s, CAST(0 AS DOUBLE)) AS rank
+         |       FROM nodes n LEFT JOIN s2 ON s2.id = n.id),
+         |s3 AS (SELECT e.dst AS id,
+         |         list_reduce(list_transform(list_sort(
+         |           list({'u': e.src, 'c': r.rank/od.outdeg})), x -> x.c),
+         |           (a, b) -> a + b) AS s
+         |       FROM e JOIN r2 r ON r.id = e.src JOIN od ON od.src = e.src
+         |       GROUP BY 1),
+         |r3 AS (SELECT n.id,
+         |         (CAST(1 AS DOUBLE) - CAST(0.85 AS DOUBLE))/800
+         |           + CAST(0.85 AS DOUBLE) * COALESCE(s3.s, CAST(0 AS DOUBLE)) AS rank
+         |       FROM nodes n LEFT JOIN s3 ON s3.id = n.id)
+         |SELECT id AS entity_id, rank FROM r3 ORDER BY entity_id""".stripMargin),
+    // qkg11: the qkg10 unrolled 3-iteration PageRank with each iteration's
+    // summation replaced by the same two-level salted fold the Spark operator
+    // uses (salt = numeric id suffix % 8; level 1 folds {'u','c'} structs
+    // sorted by contributor inside each (dst, salt) group, level 2 folds
+    // {'b','p'} partials sorted by salt). list_reduce's first-element init
+    // equals the operator's 0.0 init because 0.0 + x == x for every finite
+    // positive x.
+    Query("qkg11_pagerank_salted", qkg11PageRankSalted, {
+      val iters = (1 to 3).map { k =>
+        s"""s${k}a AS (SELECT e.dst AS id, CAST(substr(e.src, 2) AS INT) % 8 AS b,
+           |    list_reduce(list_transform(list_sort(
+           |      list({'u': e.src, 'c': r.rank/od.outdeg})), x -> x.c),
+           |      (a, c2) -> a + c2) AS p
+           |  FROM e JOIN r${k - 1} r ON r.id = e.src JOIN od ON od.src = e.src
+           |  GROUP BY 1, 2),
+           |s$k AS (SELECT id, list_reduce(list_transform(list_sort(
+           |      list({'b': b, 'p': p})), x -> x.p), (a, c2) -> a + c2) AS s
+           |  FROM s${k}a GROUP BY 1),
+           |r$k AS (SELECT n.id,
+           |    (CAST(1 AS DOUBLE) - CAST(0.85 AS DOUBLE))/800
+           |      + CAST(0.85 AS DOUBLE) * COALESCE(s$k.s, CAST(0 AS DOUBLE)) AS rank
+           |  FROM nodes n LEFT JOIN s$k ON s$k.id = n.id)""".stripMargin
+      }.mkString(",\n")
+      s"""$tripleCte,
+         |e AS (SELECT DISTINCT 'e' || lpad(CAST(cs AS VARCHAR), 4, '0') AS src,
+         |        'e' || lpad(CAST(co AS VARCHAR), 4, '0') AS dst FROM cz),
+         |nodes AS (SELECT 'e' || lpad(CAST(k AS VARCHAR), 4, '0') AS id
+         |          FROM range(800) t(k)),
+         |od AS (SELECT src, COUNT(*) AS outdeg FROM e GROUP BY 1),
+         |r0 AS (SELECT id, CAST(1 AS DOUBLE)/800 AS rank FROM nodes),
+         |$iters
+         |SELECT id AS entity_id, rank FROM r3 ORDER BY entity_id""".stripMargin
+    }),
+    // qkg13: the qkg10 unrolled shape with rank_0 and the per-iteration base
+    // restricted to the 16 seeds; fold tree identical, so all 800 doubles are
+    // bit-identical (zero-rank contributors add exact 0.0 on both sides).
+    Query("qkg13_ppr", qkg13Ppr, {
+      val base = "CASE WHEN sd.id IS NOT NULL THEN " +
+        "(CAST(1 AS DOUBLE) - CAST(0.85 AS DOUBLE))/16 ELSE CAST(0 AS DOUBLE) END"
+      val iters = (1 to 3).map { k =>
+        s"""s$k AS (SELECT e.dst AS id,
+           |    list_reduce(list_transform(list_sort(
+           |      list({'u': e.src, 'c': r.rank/od.outdeg})), x -> x.c),
+           |      (a, b) -> a + b) AS s
+           |  FROM e JOIN r${k - 1} r ON r.id = e.src JOIN od ON od.src = e.src
+           |  GROUP BY 1),
+           |r$k AS (SELECT n.id, $base
+           |    + CAST(0.85 AS DOUBLE) * COALESCE(s$k.s, CAST(0 AS DOUBLE)) AS rank
+           |  FROM nodes n LEFT JOIN seeds sd ON sd.id = n.id
+           |  LEFT JOIN s$k ON s$k.id = n.id)""".stripMargin
+      }.mkString(",\n")
+      s"""$tripleCte,
+         |e AS (SELECT DISTINCT 'e' || lpad(CAST(cs AS VARCHAR), 4, '0') AS src,
+         |        'e' || lpad(CAST(co AS VARCHAR), 4, '0') AS dst FROM cz),
+         |nodes AS (SELECT 'e' || lpad(CAST(k AS VARCHAR), 4, '0') AS id
+         |          FROM range(800) t(k)),
+         |seeds AS (SELECT id FROM nodes WHERE CAST(substr(id, 2) AS INT) % 50 = 0),
+         |od AS (SELECT src, COUNT(*) AS outdeg FROM e GROUP BY 1),
+         |r0 AS (SELECT n.id,
+         |    CASE WHEN sd.id IS NOT NULL THEN CAST(1 AS DOUBLE)/16
+         |         ELSE CAST(0 AS DOUBLE) END AS rank
+         |  FROM nodes n LEFT JOIN seeds sd ON sd.id = n.id),
+         |$iters
+         |SELECT id AS entity_id, rank FROM r3 ORDER BY entity_id""".stripMargin
+    }),
+    // qkg14: 2 unrolled HITS iterations — each half-step is the qkg10 fold
+    // (contributor-sorted list_reduce, same 0.0-init equivalence) followed by
+    // a division by the half-step's MAX (order-free in both engines), so hub
+    // AND auth are bit-identical for all 800 entities.
+    Query("qkg14_hits", qkg14Hits, {
+      val iters = (1 to 2).map { k =>
+        s"""a${k}s AS (SELECT e.dst AS id,
+           |    list_reduce(list_transform(list_sort(
+           |      list({'u': e.src, 'c': h.hub})), x -> x.c),
+           |      (a, c2) -> a + c2) AS s
+           |  FROM e JOIN h${k - 1} h ON h.id = e.src GROUP BY 1),
+           |a${k}r AS (SELECT n.id, COALESCE(a${k}s.s, CAST(0 AS DOUBLE)) AS s
+           |  FROM nodes n LEFT JOIN a${k}s ON a${k}s.id = n.id),
+           |a$k AS (SELECT id, s / (SELECT MAX(s) FROM a${k}r) AS auth FROM a${k}r),
+           |h${k}s AS (SELECT e.src AS id,
+           |    list_reduce(list_transform(list_sort(
+           |      list({'u': e.dst, 'c': t.auth})), x -> x.c),
+           |      (a, c2) -> a + c2) AS s
+           |  FROM e JOIN a$k t ON t.id = e.dst GROUP BY 1),
+           |h${k}r AS (SELECT n.id, COALESCE(h${k}s.s, CAST(0 AS DOUBLE)) AS s
+           |  FROM nodes n LEFT JOIN h${k}s ON h${k}s.id = n.id),
+           |h$k AS (SELECT id, s / (SELECT MAX(s) FROM h${k}r) AS hub FROM h${k}r)""".stripMargin
+      }.mkString(",\n")
+      s"""$tripleCte,
+         |e AS (SELECT DISTINCT 'e' || lpad(CAST(cs AS VARCHAR), 4, '0') AS src,
+         |        'e' || lpad(CAST(co AS VARCHAR), 4, '0') AS dst FROM cz),
+         |nodes AS (SELECT 'e' || lpad(CAST(k AS VARCHAR), 4, '0') AS id
+         |          FROM range(800) t(k)),
+         |h0 AS (SELECT id, CAST(1 AS DOUBLE) AS hub FROM nodes),
+         |$iters
+         |SELECT h2.id AS entity_id, h2.hub, a2.auth
+         |FROM h2 JOIN a2 ON a2.id = h2.id ORDER BY entity_id""".stripMargin
+    }),
+    // qkg15: recursive CTE from the same seeds, hop bound in the recursion
+    // guard, BFS distance = MIN over discovered (id, dist) pairs —
+    // integer-exact on both engines.
+    Query("qkg15_bfs", qkg15Bfs,
+      s"""${tripleCte.replaceFirst("WITH ", "WITH RECURSIVE ")},
+         |e AS (SELECT DISTINCT 'e' || lpad(CAST(cs AS VARCHAR), 4, '0') AS src,
+         |        'e' || lpad(CAST(co AS VARCHAR), 4, '0') AS dst FROM cz),
+         |seeds AS (SELECT 'e' || lpad(CAST(k AS VARCHAR), 4, '0') AS id
+         |          FROM range(800) t(k) WHERE k % 50 = 0),
+         |d(id, dist) AS (
+         |  SELECT id, 0 FROM seeds
+         |  UNION
+         |  SELECT e.dst, d.dist + 1 FROM d JOIN e ON e.src = d.id
+         |  WHERE d.dist < 4)
+         |SELECT id AS entity_id, MIN(dist) AS dist FROM d
+         |GROUP BY id ORDER BY entity_id""".stripMargin),
+    // qkg19: enumerate every ≤ 4-edge path from the seeds with the same
+    // arithmetic weights, MIN(dist) per node — bounded-hop Bellman–Ford's
+    // defining identity, integer-exact.
+    Query("qkg19_sssp", qkg19Sssp,
+      s"""${tripleCte.replaceFirst("WITH ", "WITH RECURSIVE ")},
+         |e AS (SELECT DISTINCT 'e' || lpad(CAST(cs AS VARCHAR), 4, '0') AS src,
+         |        'e' || lpad(CAST(co AS VARCHAR), 4, '0') AS dst,
+         |        CAST((cs + co) % 7 + 1 AS BIGINT) AS w FROM cz),
+         |seeds AS (SELECT 'e' || lpad(CAST(k AS VARCHAR), 4, '0') AS id
+         |          FROM range(800) t(k) WHERE k % 50 = 0),
+         |d(id, dist, hops) AS (
+         |  SELECT id, CAST(0 AS BIGINT), 0 FROM seeds
+         |  UNION
+         |  SELECT e.dst, d.dist + e.w, d.hops + 1 FROM d JOIN e ON e.src = d.id
+         |  WHERE d.hops < 4)
+         |SELECT id AS entity_id, MIN(dist) AS dist FROM d
+         |GROUP BY id ORDER BY entity_id""".stripMargin),
+    // qkg20: ranked sorted adjacency + the same LCG pick per unrolled step.
+    Query("qkg20_walks", qkg20Walks, {
+      val steps = (1 to 4).map { t =>
+        s"""s$t AS (SELECT s.walk_id, CAST($t AS BIGINT) AS step, rk.nbr AS id
+           |  FROM s${t - 1} s JOIN rk ON rk.x = s.id
+           |   AND rk.r = ((CAST(substr(s.id, 2) AS BIGINT) * 1103515245
+           |                + $t * 12345) % 2147483648) % rk.deg)""".stripMargin
+      }.mkString(",\n")
+      s"""$tripleCte,
+         |eg AS (SELECT DISTINCT 'e' || lpad(CAST(cs AS VARCHAR), 4, '0') AS u,
+         |        'e' || lpad(CAST(co AS VARCHAR), 4, '0') AS v FROM cz),
+         |und AS (SELECT DISTINCT LEAST(u, v) AS a, GREATEST(u, v) AS b
+         |        FROM eg WHERE u <> v),
+         |adj AS (SELECT a AS x, b AS nbr FROM und
+         |        UNION ALL SELECT b AS x, a AS nbr FROM und),
+         |rk AS (SELECT x, nbr,
+         |        ROW_NUMBER() OVER (PARTITION BY x ORDER BY nbr) - 1 AS r,
+         |        COUNT(*) OVER (PARTITION BY x) AS deg FROM adj),
+         |seeds AS (SELECT 'e' || lpad(CAST(k AS VARCHAR), 4, '0') AS id
+         |          FROM range(800) t(k) WHERE k % 25 = 0),
+         |s0 AS (SELECT id AS walk_id, CAST(0 AS BIGINT) AS step, id FROM seeds),
+         |$steps
+         |SELECT walk_id, step, id AS entity_id FROM (
+         |  SELECT * FROM s0 UNION ALL SELECT * FROM s1 UNION ALL
+         |  SELECT * FROM s2 UNION ALL SELECT * FROM s3 UNION ALL
+         |  SELECT * FROM s4)
+         |ORDER BY walk_id, step""".stripMargin
+    }),
+    // qkg21: same distinct-triple degrees, log-bucket via binary-digit count.
+    Query("qkg21_degree_hist", qkg21DegreeHist,
+      s"""$tripleCte,
+         |e AS (SELECT DISTINCT p, cs, co FROM cz),
+         |d AS (SELECT p, cs, COUNT(*) AS deg FROM e GROUP BY 1, 2)
+         |SELECT $predCase AS pred,
+         |  CAST(length(printf('%b', deg)) - 1 AS BIGINT) AS bucket,
+         |  COUNT(*) AS n_nodes, CAST(SUM(deg) AS BIGINT) AS n_edges
+         |FROM d GROUP BY 1, 2 ORDER BY pred, bucket""".stripMargin),
+    // qkg22: exact ≤4-hop reach sets by recursive CTE, then the qsk1 register
+    // arithmetic per (source, reached) pair, per-bucket MAX, and the same
+    // order-free fingerprint.
+    Query("qkg22_hyperball", qkg22HyperBall,
+      s"""${tripleCte.replaceFirst("WITH ", "WITH RECURSIVE ")},
+         |e AS (SELECT DISTINCT 'e' || lpad(CAST(cs AS VARCHAR), 4, '0') AS src,
+         |        'e' || lpad(CAST(co AS VARCHAR), 4, '0') AS dst FROM cz),
+         |nodes AS (SELECT 'e' || lpad(CAST(k AS VARCHAR), 4, '0') AS id
+         |          FROM range(800) t(k)),
+         |reach(s, id, hops) AS (
+         |  SELECT id, id, 0 FROM nodes
+         |  UNION
+         |  SELECT r.s, e.dst, r.hops + 1 FROM reach r JOIN e ON e.src = r.id
+         |  WHERE r.hops < 4),
+         |ball AS (SELECT DISTINCT s, id FROM reach),
+         |h AS (SELECT s, md5(id) AS h FROM ball),
+         |br AS (SELECT s,
+         |        CAST(concat('0x', substring(h, 1, 2)) AS BIGINT) AS bucket,
+         |        ltrim(substring(h, 3, 15), '0') AS tl FROM h),
+         |rk AS (SELECT s, bucket,
+         |        60 - length(tl) * 4 +
+         |        (CASE substring(tl, 1, 1)
+         |          WHEN '1' THEN 3 WHEN '2' THEN 2 WHEN '3' THEN 2
+         |          WHEN '4' THEN 1 WHEN '5' THEN 1 WHEN '6' THEN 1
+         |          WHEN '7' THEN 1 ELSE 0 END) + 1 AS rank FROM br),
+         |reg AS (SELECT s, bucket, MAX(rank) AS r FROM rk GROUP BY 1, 2)
+         |SELECT s AS entity_id, COUNT(*) AS n_regs,
+         |  CAST(SUM(CAST(1::BIGINT << CAST(61 - r AS INT) AS HUGEINT)
+         |        * (bucket * 2654435761 % 1048576 + 1))
+         |    % 4611686018427387904 AS BIGINT) AS reg_fp
+         |FROM reg GROUP BY s ORDER BY entity_id""".stripMargin),
+    // qkg24: exact per-hop balls (min-hop recursive CTE), qsk1 register
+    // arithmetic per hop, the raw estimator with the identical literal
+    // association, LAG hop deltas, and both folds (register sum in bucket
+    // order, harmonic sum in hop order) replayed with the same 0.0-seeded
+    // association.
+    Query("qkg24_harmonic", qkg24Harmonic,
+      s"""${tripleCte.replaceFirst("WITH ", "WITH RECURSIVE ")},
+         |e AS (SELECT DISTINCT 'e' || lpad(CAST(cs AS VARCHAR), 4, '0') AS src,
+         |        'e' || lpad(CAST(co AS VARCHAR), 4, '0') AS dst FROM cz),
+         |nodes AS (SELECT 'e' || lpad(CAST(k AS VARCHAR), 4, '0') AS id
+         |          FROM range(800) t(k)),
+         |reach(s, id, hops) AS (
+         |  SELECT id, id, 0 FROM nodes
+         |  UNION
+         |  SELECT r.s, e.dst, r.hops + 1 FROM reach r JOIN e ON e.src = r.id
+         |  WHERE r.hops < 4),
+         |bd AS (SELECT s, id, MIN(hops) AS d FROM reach GROUP BY 1, 2),
+         |hp AS (SELECT unnest(generate_series(0, 4)) AS t),
+         |pr AS (SELECT hp.t, bd.s, md5(bd.id) AS h
+         |       FROM bd CROSS JOIN hp WHERE bd.d <= hp.t),
+         |br AS (SELECT t, s,
+         |        CAST(concat('0x', substring(h, 1, 2)) AS BIGINT) AS bucket,
+         |        ltrim(substring(h, 3, 15), '0') AS tl FROM pr),
+         |rk AS (SELECT t, s, bucket,
+         |        60 - length(tl) * 4 +
+         |        (CASE substring(tl, 1, 1)
+         |          WHEN '1' THEN 3 WHEN '2' THEN 2 WHEN '3' THEN 2
+         |          WHEN '4' THEN 1 WHEN '5' THEN 1 WHEN '6' THEN 1
+         |          WHEN '7' THEN 1 ELSE 0 END) + 1 AS rank FROM br),
+         |reg AS (SELECT t, s, bucket, MAX(rank) AS r FROM rk GROUP BY 1, 2, 3),
+         |est AS (SELECT t, s,
+         |        (CAST(0.7213 AS DOUBLE) / (CAST(1.0 AS DOUBLE)
+         |           + CAST(1.079 AS DOUBLE) / CAST(256.0 AS DOUBLE)))
+         |         * CAST(65536.0 AS DOUBLE)
+         |         / ((CAST(256.0 AS DOUBLE) - CAST(COUNT(*) AS DOUBLE))
+         |            + list_reduce(list_prepend(CAST(0.0 AS DOUBLE),
+         |                list_transform(list_sort(list({'b': bucket, 'r': r})),
+         |                  x -> power(CAST(2.0 AS DOUBLE),
+         |                    -CAST(x.r AS DOUBLE)))),
+         |                (a, b) -> a + b)) AS est
+         |        FROM reg GROUP BY t, s),
+         |ct AS (SELECT s, t, est,
+         |        CASE WHEN t = 0 THEN CAST(0.0 AS DOUBLE)
+         |             ELSE (est - LAG(est) OVER (PARTITION BY s ORDER BY t))
+         |                  / CAST(t AS DOUBLE) END AS contrib
+         |       FROM est)
+         |SELECT s AS entity_id,
+         |  list_reduce(list_prepend(CAST(0.0 AS DOUBLE),
+         |    list_transform(list_sort(list({'t': t, 'c': contrib})),
+         |      x -> x.c)),
+         |    (a, b) -> a + b) AS harmonic,
+         |  MAX(CASE WHEN t = 4 THEN est END) AS ball_est
+         |FROM ct GROUP BY s ORDER BY entity_id""".stripMargin),
+    // qkg16: the same adjacency/degree/wedge algebra in SQL — counts are
+    // integers and the score uses integer div, so every row value-hashes.
+    Query("qkg16_related", qkg16Related,
+      s"""$tripleCte,
+         |eg AS (SELECT DISTINCT 'e' || lpad(CAST(cs AS VARCHAR), 4, '0') AS u,
+         |        'e' || lpad(CAST(co AS VARCHAR), 4, '0') AS v FROM cz),
+         |und AS (SELECT DISTINCT LEAST(u, v) AS a, GREATEST(u, v) AS b
+         |        FROM eg WHERE u <> v),
+         |adj AS (SELECT a AS x, b AS nbr FROM und
+         |        UNION ALL SELECT b AS x, a AS nbr FROM und),
+         |deg AS (SELECT x, COUNT(*) AS d FROM adj GROUP BY 1),
+         |cnt AS (SELECT x AS nbr FROM deg WHERE d <= 8),
+         |w AS (SELECT l.x AS a, r.x AS b, COUNT(*) AS common_cnt
+         |      FROM adj l JOIN adj r ON l.nbr = r.nbr AND l.x < r.x
+         |      JOIN cnt c ON c.nbr = l.nbr
+         |      GROUP BY 1, 2)
+         |SELECT w.a AS entity_a, w.b AS entity_b, w.common_cnt,
+         |  da.d + db.d - w.common_cnt AS union_cnt,
+         |  w.common_cnt * CAST(1000000 AS BIGINT)
+         |    // (da.d + db.d - w.common_cnt) AS score
+         |FROM w JOIN deg da ON da.x = w.a JOIN deg db ON db.x = w.b
+         |ORDER BY entity_a, entity_b""".stripMargin),
+    // qkg23: the qkg16 adjacency/degree/wedge algebra plus the staged
+    // ExactMath ln over each capped neighbor's degree and the sorted per-pair
+    // fold — every double bit-matches.
+    Query("qkg23_adamic_adar", qkg23AdamicAdar, {
+      import graft.functions.ExactMath
+      s"""$tripleCte,
+         |eg AS (SELECT DISTINCT 'e' || lpad(CAST(cs AS VARCHAR), 4, '0') AS u,
+         |        'e' || lpad(CAST(co AS VARCHAR), 4, '0') AS v FROM cz),
+         |und AS (SELECT DISTINCT LEAST(u, v) AS a, GREATEST(u, v) AS b
+         |        FROM eg WHERE u <> v),
+         |adj AS (SELECT a AS x, b AS nbr FROM und
+         |        UNION ALL SELECT b AS x, a AS nbr FROM und),
+         |deg AS (SELECT x, COUNT(*) AS d FROM adj GROUP BY 1),
+         |cp AS (SELECT x, d FROM deg WHERE d BETWEEN 2 AND 8),
+         |ca AS (SELECT *, ${ExactMath.blSql("d")} AS bl FROM cp),
+         |cb AS (SELECT *, ${ExactMath.mSql("d", "bl")} AS mm FROM ca),
+         |cc2 AS (SELECT *, ${ExactMath.zSql("mm")} AS z FROM cb),
+         |cd AS (SELECT *, z * z AS z2 FROM cc2),
+         |ce AS (SELECT x AS nbr,
+         |        CAST(1.0 AS DOUBLE) / ${ExactMath.lnFromPartsSql()} AS invln
+         |       FROM cd),
+         |w AS (SELECT l.x AS ea, r.x AS eb, l.nbr, ce.invln
+         |      FROM adj l JOIN adj r ON l.nbr = r.nbr AND l.x < r.x
+         |      JOIN ce ON ce.nbr = l.nbr)
+         |SELECT ea AS entity_a, eb AS entity_b, COUNT(*) AS common_cnt,
+         |  list_reduce(list_transform(list_sort(
+         |    list({'n': nbr, 'v': invln})), x -> x.v),
+         |    (a, b) -> a + b) AS aa_score
+         |FROM w GROUP BY 1, 2 ORDER BY entity_a, entity_b""".stripMargin
+    }),
+    // qkg17: 3 unrolled synchronous LPA rounds — votes are integer counts,
+    // the winner is ROW_NUMBER over (cnt DESC, label ASC) (the operator's
+    // exact tie order), voteless nodes keep their label via COALESCE.
+    Query("qkg17_labelprop", qkg17LabelProp,
+      s"""$lpaCte
+         |SELECT id AS entity_id, label FROM l3 ORDER BY entity_id""".stripMargin),
+    // qkg25: the qkg17 LPA chain + the same two label joins and
+    // least/greatest pair contraction.
+    Query("qkg25_community_graph", qkg25CommunityGraph,
+      s"""$lpaCte
+         |SELECT LEAST(la.label, lb.label) AS comm_a,
+         |  GREATEST(la.label, lb.label) AS comm_b, COUNT(*) AS n_edges
+         |FROM eg JOIN l3 la ON la.id = eg.u JOIN l3 lb ON lb.id = eg.v
+         |GROUP BY 1, 2 ORDER BY comm_a, comm_b""".stripMargin),
+    // qkg18: 12 unrolled peel rounds (degree filter ≥ 3 + edge restriction),
+    // then final in-core degrees. Every round's edge set is MATERIALIZED:
+    // each e_j is referenced twice by round j+1 (degrees + filter), so
+    // DuckDB's default CTE inlining would expand the chain into 2¹² copies of
+    // the whole mention pipeline (measured: fd exhaustion at sf0.01);
+    // materialization keeps it linear.
+    Query("qkg18_kcore", qkg18KCore, {
+      val rounds = (1 to 12).map { j =>
+        s"""d$j AS (SELECT id, COUNT(*) AS deg FROM (
+           |    SELECT u AS id FROM e${j - 1} UNION ALL SELECT v FROM e${j - 1}) t
+           |  GROUP BY 1),
+           |k$j AS (SELECT id FROM d$j WHERE deg >= 3),
+           |e$j AS MATERIALIZED (SELECT e.u, e.v FROM e${j - 1} e
+           |  JOIN k$j ka ON ka.id = e.u JOIN k$j kb ON kb.id = e.v)""".stripMargin
+      }.mkString(",\n")
+      s"""$comentionGraphCte,
+         |e0 AS MATERIALIZED (SELECT u, v FROM eg),
+         |$rounds
+         |SELECT id AS entity_id, COUNT(*) AS core_deg FROM (
+         |  SELECT u AS id FROM e12 UNION ALL SELECT v FROM e12) t
+         |GROUP BY 1 ORDER BY entity_id""".stripMargin
+    }),
+    // qkg12: weakly-connected components of the canonical triple graph,
+    // oracle = recursive-CTE label propagation to the min entity id
+    // (the qdd3/qann5 pattern over the qkg10 edge set)
+    Query("qkg12_components", qkg12Components,
+      s"""${tripleCte.replaceFirst("WITH ", "WITH RECURSIVE ")},
+         |e AS (SELECT DISTINCT 'e' || lpad(CAST(cs AS VARCHAR), 4, '0') AS u,
+         |        'e' || lpad(CAST(co AS VARCHAR), 4, '0') AS v FROM cz),
+         |edges AS (SELECT u, v FROM e UNION SELECT v, u FROM e),
+         |nodes AS (SELECT 'e' || lpad(CAST(k AS VARCHAR), 4, '0') AS id
+         |          FROM range(800) t(k)),
+         |lbl(n, l) AS (
+         |  SELECT id, id FROM nodes
+         |  UNION
+         |  SELECT eg.v, lbl.l FROM lbl JOIN edges eg ON eg.u = lbl.n)
+         |SELECT n AS entity_id, MIN(l) AS component FROM lbl
+         |GROUP BY n ORDER BY entity_id""".stripMargin),
+    // qkg26: the qkg16 wedge algebra, filtered to pairs with ≥ 2 capped
+    // common neighbors, C(c, 2) via integer div.
+    Query("qkg26_squares", qkg26Squares,
+      s"""$tripleCte,
+         |eg AS (SELECT DISTINCT 'e' || lpad(CAST(cs AS VARCHAR), 4, '0') AS u,
+         |        'e' || lpad(CAST(co AS VARCHAR), 4, '0') AS v FROM cz),
+         |und AS (SELECT DISTINCT LEAST(u, v) AS a, GREATEST(u, v) AS b
+         |        FROM eg WHERE u <> v),
+         |adj AS (SELECT a AS x, b AS nbr FROM und
+         |        UNION ALL SELECT b AS x, a AS nbr FROM und),
+         |deg AS (SELECT x, COUNT(*) AS d FROM adj GROUP BY 1),
+         |cnt AS (SELECT x AS nbr FROM deg WHERE d <= 8),
+         |w AS (SELECT l.x AS a, r.x AS b, COUNT(*) AS common_cnt
+         |      FROM adj l JOIN adj r ON l.nbr = r.nbr AND l.x < r.x
+         |      JOIN cnt c ON c.nbr = l.nbr
+         |      GROUP BY 1, 2)
+         |SELECT a AS entity_a, b AS entity_b, common_cnt,
+         |  common_cnt * (common_cnt - 1) // 2 AS n_squares
+         |FROM w WHERE common_cnt >= 2
+         |ORDER BY entity_a, entity_b""".stripMargin),
+    // qkg27: two unrolled path-count join-aggregates + the same dyadic
+    // three-term sum.
+    Query("qkg27_katz", qkg27Katz,
+      s"""$tripleCte,
+         |eg AS (SELECT DISTINCT 'e' || lpad(CAST(cs AS VARCHAR), 4, '0') AS src,
+         |        'e' || lpad(CAST(co AS VARCHAR), 4, '0') AS dst FROM cz),
+         |nodes AS (SELECT 'e' || lpad(CAST(k AS VARCHAR), 4, '0') AS id
+         |          FROM range(800) t(k)),
+         |c1 AS (SELECT src, COUNT(*) AS c1 FROM eg GROUP BY 1),
+         |c2 AS (SELECT e.src, CAST(SUM(c1.c1) AS BIGINT) AS c2
+         |       FROM eg e JOIN c1 ON c1.src = e.dst GROUP BY 1),
+         |c3 AS (SELECT e.src, CAST(SUM(c2.c2) AS BIGINT) AS c3
+         |       FROM eg e JOIN c2 ON c2.src = e.dst GROUP BY 1)
+         |SELECT n.id AS entity_id,
+         |  COALESCE(c1.c1, CAST(0 AS BIGINT)) AS c1,
+         |  COALESCE(c2.c2, CAST(0 AS BIGINT)) AS c2,
+         |  COALESCE(c3.c3, CAST(0 AS BIGINT)) AS c3,
+         |  CAST(0.5 AS DOUBLE) * COALESCE(c1.c1, CAST(0 AS BIGINT))
+         |   + CAST(0.25 AS DOUBLE) * COALESCE(c2.c2, CAST(0 AS BIGINT))
+         |   + CAST(0.125 AS DOUBLE) * COALESCE(c3.c3, CAST(0 AS BIGINT))
+         |   AS katz
+         |FROM nodes n
+         |LEFT JOIN c1 ON c1.src = n.id
+         |LEFT JOIN c2 ON c2.src = n.id
+         |LEFT JOIN c3 ON c3.src = n.id
+         |ORDER BY entity_id""".stripMargin),
+  )
 }

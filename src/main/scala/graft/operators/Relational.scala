@@ -3,6 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
+import graft.Query
 import graft.core.Graft
 
 /** Relational operator surface of the engine — the Spark-native
@@ -250,4 +251,88 @@ object Relational {
       .orderBy(col("n_parts").desc, col("o_custkey"))
       .limit(30)
   }
+
+  /** The relational queries, each with its DuckDB oracle. */
+  def queries: Seq[Query] = Seq(
+    Query("q1_agg", q1PricingSummary,
+      """SELECT l_returnflag, l_linestatus,
+        | CAST(SUM(CAST(l_quantity AS DECIMAL(18,2))) AS DOUBLE) AS sum_qty,
+        | CAST(SUM(CAST(l_extendedprice AS DECIMAL(18,2))) AS DOUBLE) AS sum_base_price,
+        | CAST(SUM(CAST(CAST(l_extendedprice AS DECIMAL(18,2)) * (CAST(1 AS DECIMAL(18,2)) - CAST(l_discount AS DECIMAL(18,2))) AS DECIMAL(18,4))) AS DOUBLE) AS sum_disc_price,
+        | COUNT(*) AS count_order
+        |FROM lineitem WHERE l_shipdate <= TIMESTAMP '1998-09-01'
+        |GROUP BY l_returnflag, l_linestatus ORDER BY l_returnflag, l_linestatus""".stripMargin),
+    Query("q2_join_agg", q2RevenueByNation,
+      """SELECT n_name,
+        | CAST(SUM(CAST(CAST(l_extendedprice AS DECIMAL(18,2)) * (CAST(1 AS DECIMAL(18,2)) - CAST(l_discount AS DECIMAL(18,2))) AS DECIMAL(18,4))) AS DOUBLE) AS revenue,
+        | COUNT(*) AS n_lines
+        |FROM lineitem
+        |JOIN orders ON l_orderkey = o_orderkey
+        |JOIN customer ON o_custkey = c_custkey
+        |JOIN nation ON c_nationkey = n_nationkey
+        |GROUP BY n_name ORDER BY n_name""".stripMargin),
+    Query("q3_filter_topk", q3TopOrders,
+      """SELECT o_orderkey, o_custkey,
+        | CAST(CAST(o_totalprice AS DECIMAL(18,2)) AS DOUBLE) AS total_price
+        |FROM orders WHERE o_orderdate >= TIMESTAMP '1997-01-01'
+        |ORDER BY total_price DESC, o_orderkey LIMIT 30""".stripMargin),
+    Query("q4_semijoin", q4SemiJoin,
+      """SELECT c_mktsegment, COUNT(*) AS n_customers
+        |FROM customer WHERE EXISTS (SELECT 1 FROM orders WHERE o_custkey = c_custkey)
+        |GROUP BY c_mktsegment ORDER BY c_mktsegment""".stripMargin),
+    Query("q5_antijoin", q5AntiJoin,
+      """SELECT n_name, COUNT(*) AS n_orphans
+        |FROM customer JOIN nation ON c_nationkey = n_nationkey
+        |WHERE NOT EXISTS (SELECT 1 FROM orders WHERE o_custkey = c_custkey
+        |                  AND o_orderdate >= TIMESTAMP '1998-01-01')
+        |GROUP BY n_name ORDER BY n_name""".stripMargin),
+    Query("q6_window_top1", q6WindowTopOrder,
+      """SELECT o_custkey, top_orderkey, top_price FROM (
+        | SELECT o_custkey, o_orderkey AS top_orderkey,
+        |  CAST(CAST(o_totalprice AS DECIMAL(18,2)) AS DOUBLE) AS top_price,
+        |  ROW_NUMBER() OVER (PARTITION BY o_custkey ORDER BY o_totalprice DESC, o_orderkey) AS rn
+        | FROM orders) t WHERE rn = 1 ORDER BY o_custkey""".stripMargin),
+    Query("q7_explode_onetomany", q7ExplodeTokens,
+      """SELECT type_token, COUNT(*) AS n_parts FROM (
+        | SELECT unnest(string_split(p_type, ' ')) AS type_token FROM part) t
+        |GROUP BY type_token ORDER BY type_token""".stripMargin),
+    Query("q8_distinct", q8Distinct,
+      """SELECT DISTINCT o_orderstatus, o_orderpriority FROM orders
+        |ORDER BY o_orderstatus, o_orderpriority""".stripMargin),
+    Query("q9_range_join", q9RangeJoin,
+      """WITH bands(band, lo, hi) AS (
+        | VALUES ('b0_low', 0.0, 15.0), ('b1_mid', 15.0, 35.0),
+        |        ('b2_high', 35.0, 70.0), ('b3_tail', 70.0, 150.0),
+        |        ('b4_extreme', 150.0, 1e18))
+        |SELECT band, COUNT(*) AS n_events
+        |FROM events JOIN bands ON value >= lo AND value < hi
+        |GROUP BY band ORDER BY band""".stripMargin),
+    // q40: bucketed interval join — the oracle is the PLAIN range join
+    // (bucketing + replication + exact re-check is transparent)
+    Query("q40_interval_buckets", q40IntervalBuckets,
+      """WITH b AS (SELECT n_name AS band,
+        |        n_nationkey * CAST(0.75 AS DOUBLE) AS lo,
+        |        n_nationkey * CAST(0.75 AS DOUBLE) + CAST(1.5 AS DOUBLE) AS hi
+        |       FROM nation)
+        |SELECT band, lo, hi, COUNT(*) AS n_events
+        |FROM events JOIN b ON value >= lo AND value < hi
+        |GROUP BY 1, 2, 3 ORDER BY band""".stripMargin),
+    Query("q10_string_preds", q10StringPredicates,
+      """SELECT
+        | COUNT(CASE WHEN p_name LIKE 'a%' THEN 1 END) AS n_starts_a,
+        | COUNT(CASE WHEN p_name LIKE '%e' THEN 1 END) AS n_ends_e,
+        | COUNT(CASE WHEN p_name LIKE '%red%' THEN 1 END) AS n_contains_red,
+        | COUNT(CASE WHEN LENGTH(p_name) > 20 THEN 1 END) AS n_long
+        |FROM part""".stripMargin),
+    Query("q11_ignorecase_join", q11IgnoreCaseJoin,
+      """SELECT n.n_name AS n_name, d.dim_key AS dim_key
+        |FROM nation n
+        |JOIN (SELECT UPPER(n_name) AS dim_name, n_nationkey AS dim_key FROM nation) d
+        | ON LOWER(n.n_name) = LOWER(d.dim_name)
+        |ORDER BY n_name""".stripMargin),
+    Query("q12_twohop_closure", q12TwoHop,
+      """SELECT o_custkey, COUNT(DISTINCT l_partkey) AS n_parts
+        |FROM orders JOIN lineitem ON o_orderkey = l_orderkey
+        |GROUP BY o_custkey ORDER BY n_parts DESC, o_custkey LIMIT 30""".stripMargin),
+  )
 }

@@ -4,58 +4,30 @@ import java.nio.file.{Files, Paths}
 import graft.SparkEntry
 import graft.core.Graft
 
-/** Dumps `explain("formatted")` output for the headline queries into
-  * PLANS.md — the evidence trail that filters/projections reach the
-  * parquet scans (PushedFilters / ReadSchema), small dims broadcast, and
-  * the hot paths stay inside WholeStageCodegen.
-  * args: [sfDir] [outFile]
+/** Dumps `explain("formatted")` output for every registered query
+  * ([[SparkEntry.all]]) into PLANS.md — the evidence trail that
+  * filters/projections reach the parquet scans (PushedFilters /
+  * ReadSchema), small dims broadcast, and the hot paths stay inside
+  * WholeStageCodegen.
+  * args: [sfDir] [outFile]; outFile defaults to PLANS.md in the working
+  * directory.
   */
 object Plans {
   def main(args: Array[String]): Unit = {
     val sfDir = if (args.length > 0) args(0) else "/root/testdata/sf0.01"
-    val out = if (args.length > 1) args(1) else "/root/repo/PLANS.md"
-    val spark = Graft.session("local[8]", 8, "graft-plans")
-    val picks = Seq(
-      "q1_agg", "q2_join_agg", "q3_filter_topk", "q5_antijoin",
-      "q9_range_join", "q12_twohop_closure", "q16_khop",
-      "q17_wildcard_policy", "q20_exposure_propagation", "q13_graph_upsert",
-      "qdd2_neardup_allpairs", "qdd4_minhash_lsh", "qann1_topk",
-      "qann4_ivf_topk", "qann5_embed_clusters", "qmm1_media_meta",
-      "qmm2_image_dims", "q25_clear_props", "qtx1_tokens",
-      "qtx6_chunks", "qtx8_bigram_support", "qsp2_stratified",
-      "qkg9_triangles", "qkg10_pagerank", "qkg11_pagerank_salted",
-      "qkg12_components", "qkg13_ppr", "qtx9_distinctive_terms",
-      "qdd5_simhash", "q33_policy_file", "qtx10_url_canon", "qkg14_hits",
-      "qkg15_bfs", "qkg16_related", "qev1_sessionize", "qtx11_repetition",
-      "qdd6_cdc_pairs", "qkg17_labelprop", "qkg18_kcore", "qev2_retention",
-      "qev3_funnel", "qev4_quantiles", "qsp3_mix_rates", "qev5_asof",
-      "qev6_rolling_active", "qev7_locf", "qtx12_postings",
-      "qsk1_hll_registers", "qev8_transitions", "qsp4_splits",
-      "qsk2_cms_counters", "qkg19_sssp", "qkg20_walks", "qkg21_degree_hist",
-      "qkg22_hyperball", "qtx13_df_prune", "qann6_pq_codes",
-      "qann7_adc_topk", "qann8_ivfpq", "qsk3_cms_estimates",
-      "qsk4_bloom_bits", "qsk5_bloom_semijoin", "qsk6_hll_merge",
-      "qdd7_keep_best", "qsp5_negatives", "qsp6_weighted_sample",
-      "qtx14_bm25", "q34_time_travel", "qtx15_lm_score",
-      "qtx16_skipgram_ppmi", "qtx17_segment_dedup", "qkg23_adamic_adar",
-      "q39_changelog", "q40_interval_buckets", "qev9_scd2", "qmm3_wav_meta",
-      "qkg24_harmonic", "qdc2_decontaminate", "qev10_rfm",
-      "qsk8_hll_by_type", "qtx19_vocab_growth", "qmm4_media_dispatch",
-      "qkg25_community_graph", "qsp7_epoch_order", "qev11_time_to_convert",
-      "qsk9_hll_overlap", "qsp8_token_budget", "qkg26_squares",
-      "qtx20_source_profile", "qann9_filtered_topk", "qkg27_katz",
-      "qtx21_novelty", "q42_shipped_jobs", "qmm5_image_neardup",
-      "qmm6_image_clusters")
+    val out = if (args.length > 1) args(1) else "PLANS.md"
+    val cpus = Runtime.getRuntime.availableProcessors
+    val spark = Graft.session(s"local[$cpus]", cpus, "graft-plans")
     val sb = new StringBuilder
-    sb.append("# PLANS — physical plans of the headline queries\n\n")
+    sb.append("# PLANS — physical plans of every registered query\n\n")
     sb.append("Generated by `graft.tools.Plans` (re-run after plan-affecting " +
       "changes).\nWhat to check per plan: `PushedFilters`/`ReadSchema` on " +
       "parquet scans\n(pushdown + pruning), `BroadcastHashJoin`/`BroadcastNestedLoopJoin` " +
       "for small\ndims, `WholeStageCodegen` spans covering the hot " +
       "expressions, and no\nshuffle (`Exchange`) that the query shape doesn't " +
       "require.\n")
-    picks.foreach { name =>
-      val df = SparkEntry.queries(name)(spark, sfDir)
+    SparkEntry.all.foreach { q =>
+      val df = q.build(spark, sfDir)
       // public spelling of formatted-explain: capture df.explain's
       // stdout (the ExplainMode classes are private API)
       val bos = new java.io.ByteArrayOutputStream()
@@ -63,10 +35,10 @@ object Plans {
         df.explain("formatted")
       }
       val plan = bos.toString("UTF-8")
-      sb.append(s"\n## $name\n\n```\n$plan```\n")
+      sb.append(s"\n## ${q.name}\n\n```\n$plan```\n")
     }
     Files.writeString(Paths.get(out), sb.toString)
-    println(s"[plans] wrote ${picks.size} plans to $out")
+    println(s"[plans] wrote ${SparkEntry.all.size} plans to $out")
     spark.stop()
   }
 }

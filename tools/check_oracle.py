@@ -2,7 +2,8 @@
 """Builder-local oracle check: compare Verify.scala's parquet dumps
 against SparkEntry.oracleSql run in DuckDB over the same sf tables.
 Approximates the driver's compare (sort columns by name, compare the
-full sorted value matrix with float tolerance-free equality).
+full sorted value matrix with float tolerance-free equality). A dump
+directory with no oracle entry fails too. The last line is `OK n/m`.
 
 Usage: check_oracle.py OUTDIR SFDIR [name_regex]
 """
@@ -30,6 +31,13 @@ def canon(rows, cols):
     return sorted(tuple(cell(r[i]) for i in order) for r in rows)
 
 
+def orphans(outdir, oracle, pat=None):
+    """Dump directories that have no oracle_sql.json entry."""
+    return sorted(d.name for d in outdir.iterdir()
+                  if d.is_dir() and d.name not in oracle
+                  and (pat is None or pat.search(d.name)))
+
+
 def main(argv):
     outdir, sfdir = Path(argv[0]), Path(argv[1])
     pat = re.compile(argv[2]) if len(argv) > 2 else None
@@ -42,10 +50,13 @@ def main(argv):
         if p.exists():
             con.execute(f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{p}')")
 
+    names = [n for n in sorted(oracle) if pat is None or pat.search(n)]
+    extra = orphans(outdir, oracle, pat)
     fail = 0
-    for name in sorted(oracle):
-        if pat and not pat.search(name):
-            continue
+    for name in extra:
+        print(f"{name}: NO ORACLE for this spark dump")
+        fail += 1
+    for name in names:
         qdir = outdir / name
         if not qdir.exists():
             print(f"{name}: MISSING spark dump")
@@ -77,6 +88,8 @@ def main(argv):
             fail += 1
         else:
             print(f"{name}: OK ({len(sc)} rows)")
+    total = len(names) + len(extra)
+    print(f"OK {total - fail}/{total}")
     return 1 if fail else 0
 
 
