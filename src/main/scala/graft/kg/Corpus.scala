@@ -84,20 +84,6 @@ object Corpus {
   /** warc_ts derived from i — epoch 2024-01-01 UTC plus i minutes. */
   def tsOf(i: Long): Timestamp = new Timestamp(1704067200000L + i * 60000L)
 
-  /** Deterministic boilerplate filler: `words` pseudo-random hex words
-    * derived from the page id (xorshift chain — no RNG object). Used to
-    * give bench pages Common-Crawl-like weight; lives inside an <aside>
-    * block the extractor drops, so the ground-truth text is untouched.
-    */
-  def noiseWords(i: Long, words: Int): String = {
-    // reuse the byte renderer's noise generator via a minimal page, then
-    // cut the aside body back out — single implementation, no twins
-    val html = renderHtml(i, "", words)
-    val a = html.indexOf("<li>", html.indexOf("<aside")) + 4
-    val b = html.indexOf("</li></ul></aside>")
-    if (words <= 0) "" else html.substring(a, b)
-  }
-
   /** Wrap ground-truth text into the noisy HTML page. `noise` > 0 adds
     * that many boilerplate filler words (bench corpora only — the real
     * Common-Crawl regime where markup/boilerplate dwarfs content and

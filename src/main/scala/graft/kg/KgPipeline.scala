@@ -50,8 +50,10 @@ import graft.snapshot.SnapshotTable
   *   ([[graft.merge.EdgeEndpointIndex]]) to every edge commit this
   *   pipeline makes, which is what keeps index-backed DETACH sound — the
   *   index must see every commit from the graph's FIRST edge write (or a
-  *   `rebuild` must run). Built on the same graph dir + bucket count as
-  *   the edge table so bucket arithmetic can never drift.
+  *   `rebuild` must run). Built over this pipeline's edge table so
+  *   bucket arithmetic can never drift.
+  * @param graphBuckets lays out a NEW graph only; an existing graph keeps
+  *   the bucket count its manifests record.
   */
 final class KgPipeline(spark: SparkSession, workRoot: String,
                        graphBuckets: Int = GraphTables.DefaultBuckets,
@@ -78,7 +80,7 @@ final class KgPipeline(spark: SparkSession, workRoot: String,
     */
   val edgeIndex: Option[graft.merge.EdgeEndpointIndex] =
     if (maintainEdgeIndex)
-      Some(graft.merge.EdgeEndpointIndex(spark, graphDir, graphBuckets))
+      Some(graft.merge.EdgeEndpointIndex(edges))
     else None
 
   /** True if `name` already committed for this updateTag (resume). */

@@ -1,7 +1,7 @@
 package graft.merge
 
 import java.nio.file.{Files, Paths, StandardCopyOption}
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import graft.snapshot.{BucketSpec, SnapshotTable}
 
@@ -52,6 +52,10 @@ import graft.snapshot.{BucketSpec, SnapshotTable}
   *    superset.
   *  - index rows are a pure set — no freshness tags; update is
   *    union+distinct over only the touched index buckets.
+  *  - `edge_pv` is computed by the edge table itself, under its latest
+  *    manifest's bucket count. A re-bucket is a full edge commit that
+  *    bypasses the index, so it freezes coverage like any other
+  *    bypassing commit, and `rebuild` re-derives every `edge_pv`.
   */
 final class EdgeEndpointIndex private (val table: SnapshotTable,
                                        edges: SnapshotTable) {
@@ -70,39 +74,21 @@ final class EdgeEndpointIndex private (val table: SnapshotTable,
   /** One parse of coverage.json: `covered` / `pending` edge versions
     * (pending is the version the NEXT indexed edge commit will take,
     * recorded by [[update]] before that commit and promoted to covered
-    * by [[confirmCoverage]] after it) plus the recorded bucket count —
-    * BucketSpec is caller-supplied and never persisted by SnapshotTable,
-    * so the index records the count its pv arithmetic used; a later open
-    * with a different count (a mistyped `index-rebuild --graph-buckets`)
-    * would compute partition names that don't match the files on disk,
-    * and an index-backed DETACH would silently read nothing.
+    * by [[confirmCoverage]] after it).
     */
   private def readCoverage: EdgeEndpointIndex.Coverage = {
     if (!Files.isRegularFile(coveragePath))
-      return EdgeEndpointIndex.Coverage(None, None, None)
+      return EdgeEndpointIndex.Coverage(None, None)
     val root = EdgeEndpointIndex.mapper.readTree(Files.readString(coveragePath))
     EdgeEndpointIndex.Coverage(
       Option(root.get("covered_edge_version")).map(_.asLong()),
-      Option(root.get("pending_edge_version")).map(_.asLong()),
-      Option(root.get("graph_buckets")).map(_.asInt()))
+      Option(root.get("pending_edge_version")).map(_.asLong()))
   }
-
-  private def myBuckets: Int = edges.bucket.map(_.n).getOrElse(0)
-
-  private def requireBucketsMatch(): Unit =
-    readCoverage.buckets.foreach { r =>
-      require(r == myBuckets,
-        s"edge index at ${table.root} was built with $r graph buckets " +
-          s"but this instance uses $myBuckets — pass the graph's true " +
-          "--graph-buckets (a mis-bucketed index computes partition " +
-          "names that do not exist and DETACH would silently miss edges)")
-    }
 
   private def writeCoverage(covered: Option[Long], pending: Option[Long]): Unit = {
     val root = EdgeEndpointIndex.mapper.createObjectNode()
     covered.foreach(v => root.put("covered_edge_version", v): Unit)
     pending.foreach(v => root.put("pending_edge_version", v): Unit)
-    root.put("graph_buckets", myBuckets): Unit
     Files.createDirectories(coveragePath.getParent)
     val tmp = Files.createTempFile(coveragePath.getParent, ".coverage.", ".tmp")
     Files.writeString(tmp, EdgeEndpointIndex.mapper.writeValueAsString(root))
@@ -120,11 +106,8 @@ final class EdgeEndpointIndex private (val table: SnapshotTable,
     * [[confirmCoverage]] reads as unsound until `rebuild`), never a
     * missed DETACH.
     */
-  def soundForDetach: Boolean = {
-    val c = readCoverage
-    c.buckets.forall(_ == myBuckets) &&
-      c.covered.exists(_ >= edges.latestVersion.getOrElse(0L))
-  }
+  def soundForDetach: Boolean =
+    readCoverage.covered.exists(_ >= edges.latestVersion.getOrElse(0L))
 
   /** Record that the batch just folded into the index is destined for
     * edge version latest+1 — sound to note only when the chain is
@@ -155,14 +138,9 @@ final class EdgeEndpointIndex private (val table: SnapshotTable,
   /** Record a delete-only edge commit (version `v`): removing edges
     * preserves the superset property, so coverage advances across it
     * when the chain was contiguous up to the commit's predecessor.
-    * A bucket-count-mismatched instance (Cleanup's full-scan fallback
-    * still calls this) must not touch the marker — rewriting
-    * graph_buckets with the wrong count would corrupt the record the
-    * correctly-bucketed owner relies on.
     */
   def coverDeleteCommit(v: Long): Unit = {
     val c = readCoverage
-    if (c.buckets.exists(_ != myBuckets)) return
     c.covered match {
       case Some(cv) if cv >= v - 1 => writeCoverage(Some(math.max(cv, v)), c.pending)
       case _ => ()
@@ -171,7 +149,9 @@ final class EdgeEndpointIndex private (val table: SnapshotTable,
 
   /** Distinct (endpoint_label, endpoint_id, edge_pv) rows for a batch of
     * canonical edge rows — both endpoints, pv computed with the edge
-    * table's own physicalValue so bucket arithmetic can never drift.
+    * table's own physicalValue (its latest committed layout, or the
+    * layout its first commit will take) so bucket arithmetic can never
+    * drift.
     */
   private def indexRows(edgeBatch: DataFrame): DataFrame = {
     val pv = edges.physicalValue.as("edge_pv")
@@ -187,7 +167,6 @@ final class EdgeEndpointIndex private (val table: SnapshotTable,
     * hash into are read and rewritten).
     */
   def update(edgeBatch: DataFrame, updateTag: Long): Unit = {
-    requireBucketsMatch()
     val fresh = indexRows(edgeBatch).persist()
     try {
       table.rewrite(fresh, updateTag)(_.fold(fresh)(_.unionByName(fresh).distinct()))
@@ -215,53 +194,16 @@ final class EdgeEndpointIndex private (val table: SnapshotTable,
   }
 
   /** Recompute the index from the current edge state — compaction for
-    * superset drift after many cleanups, or adoption on a graph that
-    * predates the index. One full edge scan, by design.
-    *
-    * A rebuild is where a WRONG bucket count would first take hold
-    * (adoption has no recorded count yet), so the claimed count is
-    * validated against the EDGE table's own manifest record — not the
-    * index's coverage record, which is legitimately stale after the
-    * graph was re-bucketed via full commits (rebuild is exactly how the
-    * index adopts the new count; checking coverage here would wedge it
-    * permanently). On LEGACY edge manifests (no record) the coverage
-    * record IS still authoritative — any re-bucket would have written a
-    * manifest record, so a legacy table cannot have been re-bucketed —
-    * and is checked as before; both cases are backstopped by the on-disk
-    * two-way validation below: every on-disk bucket index must be < n
-    * (catches claiming fewer buckets than the graph has, which a small
-    * graph's sparse buckets could otherwise slip past), and every
-    * RECOMPUTED edge_pv must name an on-disk partition (catches claiming
-    * more — rows would hash to partition names that don't exist).
+    * superset drift after many cleanups, adoption on a graph that
+    * predates the index, or re-derivation after a re-bucket. One full
+    * edge scan, by design; the full commit re-lays the index out at the
+    * edge table's recorded bucket count.
     */
   def rebuild(updateTag: Long): Unit =
     if (edges.exists) {
-      edges.latestVersion.flatMap(edges.recordedBuckets) match {
-        case Some(r) =>
-          require(r == myBuckets,
-            s"edge table is laid out with $r buckets but this index " +
-              s"claims $myBuckets — pass the graph's true --graph-buckets")
-        case None => requireBucketsMatch()
-      }
       val rows = indexRows(edges.read()).persist()
       try {
-        val onDisk = edges.partitionsOf(edges.latestVersion.get).keySet
-        def idxOf(pv: String): Option[Int] = {
-          val i = pv.lastIndexOf("~b")
-          if (i < 0) None else pv.substring(i + 2).toIntOption
-        }
-        val overIndex = onDisk.flatMap(idxOf).filter(_ >= myBuckets)
-        require(overIndex.isEmpty,
-          s"edge layout has bucket indices ${overIndex.toSeq.sorted.take(3).mkString(",")}… " +
-            s"but this index claims only $myBuckets buckets — pass the " +
-            "graph's true --graph-buckets")
-        val ghosts = rows.select(col("edge_pv")).distinct()
-          .collect().map(_.getString(0)).filterNot(onDisk)
-        require(ghosts.isEmpty,
-          s"recomputed edge partitions ${ghosts.sorted.take(3).mkString(",")}… " +
-            s"do not exist on disk — the claimed $myBuckets graph buckets " +
-            "disagree with the edge layout; pass the true --graph-buckets")
-        table.commit(rows, updateTag)
+        EdgeEndpointIndex.tableOf(edges, edges.layoutBuckets).commit(rows, updateTag)
         // a full rescan covers every committed version by construction
         writeCoverage(Some(edges.latestVersion.getOrElse(0L)), None)
       } finally rows.unpersist(): Unit
@@ -272,18 +214,22 @@ object EdgeEndpointIndex {
   private val mapper = new com.fasterxml.jackson.databind.ObjectMapper()
 
   /** One parsed coverage.json — see [[EdgeEndpointIndex.readCoverage]]. */
-  private final case class Coverage(covered: Option[Long],
-                                    pending: Option[Long],
-                                    buckets: Option[Int])
+  private final case class Coverage(covered: Option[Long], pending: Option[Long])
 
-  /** Standard location: alongside the graph's nodes/edges tables. */
-  def apply(spark: SparkSession, graphRoot: String,
-            buckets: Int = GraphTables.DefaultBuckets): EdgeEndpointIndex = {
-    val edges = GraphTables.edges(spark, graphRoot, buckets)
-    new EdgeEndpointIndex(
-      SnapshotTable(spark, s"$graphRoot/edge_index", Some("endpoint_label"),
-        Some(BucketSpec(Seq("endpoint_id"), buckets))),
-      edges)
-  }
+  /** The index table of `edges` under `n` buckets, stored alongside it
+    * (`<graph>/edge_index`).
+    */
+  private def tableOf(edges: SnapshotTable, n: Int): SnapshotTable =
+    SnapshotTable(edges.spark,
+      Paths.get(edges.root).resolveSibling("edge_index").toString,
+      Some("endpoint_label"), Some(BucketSpec(Seq("endpoint_id"), n)))
+
+  /** The index of `edges`. Pass the instance the graph's merges commit
+    * through: before the first edge commit, its declared [[BucketSpec]]
+    * is the layout that commit takes, and the index's own first commit
+    * uses the same count.
+    */
+  def apply(edges: SnapshotTable): EdgeEndpointIndex =
+    new EdgeEndpointIndex(tableOf(edges, edges.bucket.get.n), edges)
 }
 

@@ -485,7 +485,7 @@ object GraphOps {
     val root = tempRoot()
     val nodes = GraphTables.nodes(spark, root)
     val edges = GraphTables.edges(spark, root)
-    val ix = Some(EdgeEndpointIndex(spark, root))
+    val ix = Some(EdgeEndpointIndex(edges))
     val nat = Graft.table(spark, sfDir, "nation")
       .filter(col("n_nationkey") === 1)
       .select(col("n_nationkey").cast("string").as("nid"), col("n_name"))

@@ -13,6 +13,12 @@ import org.apache.spark.sql.functions._
   * (Iceberg MERGE file-pruning semantics). `n` is sized per deployment —
   * 8 here (test scale); thousands on a real corpus so a bucket stays
   * executor-memory-sized.
+  *
+  * `n` only lays out a FULL commit (a table's first, or a re-bucket);
+  * the manifest records it, and every later scoped read or write takes
+  * the count from the latest manifest, like an Iceberg partition spec
+  * kept in table metadata. An open with a different `n` therefore still
+  * addresses the committed buckets.
   */
 final case class BucketSpec(hashCols: Seq[String], n: Int)
 
@@ -44,16 +50,16 @@ final case class BucketSpec(hashCols: Seq[String], n: Int)
   *   root/_manifest/v{N}.json   // commit record + physical value -> data dir
   * }}}
   *
-  * Bucketed tables keep the logical partition column in the data files
-  * (readers get it for free in one multi-path scan); non-bucketed tables
-  * keep the original layout (column re-added from the manifest value).
+  * A partitioned table is always bucketed, and keeps the logical
+  * partition column in the data files (readers get it for free in one
+  * multi-path scan); an unpartitioned table is one `all` directory.
   */
 final class SnapshotTable(val spark: SparkSession, val root: String,
                           val partitionCol: Option[String] = None,
                           val bucket: Option[BucketSpec] = None) {
 
-  require(bucket.isEmpty || partitionCol.isDefined,
-    "bucketing requires a partition column")
+  require(bucket.isDefined == partitionCol.isDefined,
+    "a partitioned table must be bucketed, and bucketing requires a partition column")
 
   private val pvCol = "_pv" // physical partition value column (write-side only)
 
@@ -84,57 +90,57 @@ final class SnapshotTable(val spark: SparkSession, val root: String,
 
   // ---- physical partition values ------------------------------------------
 
-  /** The physical partition value of each row: the logical value itself,
-    * or `<logical>~b<bucket>` when bucketed.
-    */
-  def physicalValue: Column = {
-    val c = partitionCol.getOrElse(sys.error("table has no partition column"))
-    bucket match {
-      case None => col(c).cast("string")
-      case Some(BucketSpec(hashCols, n)) =>
-        concat(col(c).cast("string"), lit("~b"),
-          pmod(xxhash64(hashCols.map(col): _*), lit(n.toLong)).cast("string"))
-    }
-  }
+  private def spec: BucketSpec =
+    bucket.getOrElse(sys.error(s"snapshot table $root has no partition column"))
 
-  /** Distinct physical partition values present in `df` (an action).
-    * Validates the instance's bucket count against the committed layout
-    * first — every scoped read/commit funnels through here or
-    * [[commitPhysical]].
+  /** `<logical>~b<bucket>` of each row under `n` buckets. */
+  private def bucketedValue(n: Int): Column =
+    concat(col(partitionCol.get).cast("string"), lit("~b"),
+      pmod(xxhash64(spec.hashCols.map(col): _*), lit(n.toLong)).cast("string"))
+
+  /** The bucket count scoped reads and writes use after version `prev`:
+    * its manifest's record, or the declared count when there is no
+    * version yet (the first commit lays the table out with it).
     */
-  def physicalValuesOf(df: DataFrame): Seq[String] = {
-    requireBucketsMatch()
-    df.select(physicalValue.as(pvCol)).distinct()
+  private def bucketsAfter(prev: Option[Long]): Int =
+    prev.fold(spec.n) { v =>
+      recordedBuckets(v).filter(_ > 0).getOrElse(throw new IllegalStateException(
+        s"snapshot table $root version $v records no bucket count (its " +
+          "manifest predates the record), so bucket-scoped reads and writes " +
+          "cannot name its partitions; re-lay the graph out once with " +
+          "`GraftCli rebucket --new-buckets N`"))
+    }
+
+  /** Bucket count of the latest committed layout (the declared count
+    * while the table has no version).
+    */
+  def layoutBuckets: Int = bucketsAfter(latestVersion)
+
+  /** The physical partition value `<logical>~b<bucket>` of each row,
+    * under the latest committed layout.
+    */
+  def physicalValue: Column = bucketedValue(layoutBuckets)
+
+  /** Distinct physical partition values present in `df` (an action). */
+  def physicalValuesOf(df: DataFrame): Seq[String] = valuesOf(df, physicalValue)
+
+  private def valuesOf(df: DataFrame, pv: Column): Seq[String] =
+    df.select(pv.as(pvCol)).distinct()
       .collect().map(_.getString(0)).toSeq.sorted
-  }
-
-  /** Physical values of logical partition `value` in version `v`. */
-  private def physicalKeysOf(v: Long, logical: String): Seq[String] = {
-    val keys = partitionsOf(v).keys
-    bucket match {
-      case None => keys.filter(_ == logical).toSeq
-      case Some(_) => keys.filter(_.startsWith(logical + "~b")).toSeq
-    }
-  }
 
   // ---- manifest (de)serialization: Jackson, not hand-rolled strings —
   // partition values are data-derived (dynamic rel labels), and an
   // unescaped quote/backslash in one would silently corrupt the manifest
   // and lose partitions on the next read.
-  private def writeManifest(v: Long, updateTag: Long,
+  private def writeManifest(v: Long, updateTag: Long, buckets: Int,
                             parts: Map[String, String]): Unit = {
     Files.createDirectories(manifestDir)
     val root = SnapshotTable.mapper.createObjectNode()
     root.put("version", v)
     root.put("updateTag", updateTag)
-    // record the bucket arithmetic this version was laid out with —
-    // BucketSpec is caller-supplied per open, so without the record a
-    // mistyped count on a later open computes bucket names that don't
-    // match the files and scoped reads/commits silently miss data.
-    // Unbucketed layouts record 0 (not nothing): an absent field must
-    // mean ONLY "legacy manifest", or a bucketed open over an unbucketed
-    // layout would pass the guard and silently miss every partition
-    root.put("buckets", bucket.map(_.n).getOrElse(0)): Unit
+    // the bucket count this version was laid out with (0: unpartitioned)
+    // — the only source scoped reads and writes take it from
+    root.put("buckets", buckets): Unit
     val p = root.putObject("partitions")
     parts.toSeq.sortBy(_._1).foreach { case (k, d) => p.put(k, d): Unit }
     val tmp = manifestDir.resolve(s".v$v.json.tmp")
@@ -158,57 +164,26 @@ final class SnapshotTable(val spark: SparkSession, val root: String,
     SnapshotTable.mapper.readTree(Files.readString(manifestPath(v)))
       .get("updateTag").asLong()
 
-  /** Bucket count version `v` was committed with (0: unbucketed; None:
-    * a legacy manifest that predates the record).
+  /** Bucket count version `v` was committed with (0: unpartitioned;
+    * None: a legacy manifest that predates the record).
     */
   def recordedBuckets(v: Long): Option[Int] =
     Option(SnapshotTable.mapper.readTree(Files.readString(manifestPath(v)))
       .get("buckets")).map(_.asInt())
 
-  /** Fail fast when this instance's bucket arithmetic disagrees with the
-    * latest committed layout — guards every SCOPED path (pruned reads,
-    * bucket-scoped commits), where a wrong count computes partition
-    * names that don't exist and silently misses data. Full commits are
-    * exempt: they rewrite every partition under the instance's own
-    * arithmetic and re-record it, which is exactly how a table is
-    * re-bucketed (see GraftCli `rebucket`). Full reads are layout-blind
-    * (they follow manifest dirs, no arithmetic) and stay valid across a
-    * re-bucket for time travel.
-    */
-  private def requireBucketsMatch(): Unit =
-    latestVersion.flatMap(recordedBuckets).foreach { r =>
-      val mine = bucket.map(_.n).getOrElse(0)
-      require(mine == r,
-        s"snapshot table $root was laid out with $r buckets but this " +
-          s"instance uses $mine — scoped reads/commits would compute " +
-          "partition names that do not exist and silently miss data; " +
-          "pass the table's true bucket count (or re-bucket via a full " +
-          "commit / GraftCli rebucket)")
-    }
-
   // ---- reads -------------------------------------------------------------
 
-  private def readDirs(parts: Seq[(String, String)]): Option[DataFrame] = {
-    if (parts.isEmpty) return None
-    bucket match {
-      case Some(_) =>
-        // logical column lives in the data: one multi-path relation
-        Some(spark.read.parquet(parts.map { case (_, rel) => s"$root/$rel" }: _*))
-      case None =>
-        val dfs = parts.sortBy(_._1).map { case (value, rel) =>
-          val df = spark.read.parquet(s"$root/$rel")
-          partitionCol match {
-            case Some(c) => df.withColumn(c, lit(value))
-            case None => df
-          }
-        }
-        Some(dfs.reduce(_ unionByName _))
-    }
-  }
+  /** One multi-path relation over data dirs (relative to root). Reads
+    * follow manifest dirs, no bucket arithmetic, so they stay valid
+    * across a re-bucket for time travel.
+    */
+  private def readDirs(rels: Iterable[String]): Option[DataFrame] =
+    if (rels.isEmpty) None
+    else Some(spark.read.parquet(rels.map(rel => s"$root/$rel").toSeq: _*))
 
   /** Read one version (time travel). */
   def readVersion(v: Long): DataFrame =
-    readDirs(partitionsOf(v).toSeq)
+    readDirs(partitionsOf(v).values)
       .getOrElse(sys.error(s"snapshot table $root version $v is empty"))
 
   /** Latest committed state. */
@@ -219,20 +194,20 @@ final class SnapshotTable(val spark: SparkSession, val root: String,
     * version — a pruned scan that never touches other partitions' files.
     */
   def readPartition(value: String): Option[DataFrame] =
-    latestVersion.flatMap { v =>
-      val parts = partitionsOf(v)
-      readDirs(physicalKeysOf(v, value).map(k => k -> parts(k)))
-    }
+    latestVersion.flatMap(v => readDirs(partitionsOf(v)
+      .collect { case (k, rel) if k.startsWith(value + "~b") => rel }))
 
   /** Read only the given PHYSICAL partitions of the latest version;
     * values absent from the manifest are skipped. None when nothing
     * matches (caller supplies the empty frame).
     */
   def readPhysical(values: Seq[String]): Option[DataFrame] =
-    latestVersion.flatMap { v =>
-      val parts = partitionsOf(v)
-      readDirs(values.flatMap(k => parts.get(k).map(k -> _)))
-    }
+    latestVersion.flatMap(readPhysicalOf(_, values))
+
+  private def readPhysicalOf(v: Long, values: Seq[String]): Option[DataFrame] = {
+    val parts = partitionsOf(v)
+    readDirs(values.flatMap(parts.get))
+  }
 
   /** Row-level changelog between two committed versions — the Iceberg
     * `create_changelog_view` / CDC-read analog: one row per key whose
@@ -256,8 +231,7 @@ final class SnapshotTable(val spark: SparkSession, val root: String,
     val pb = partitionsOf(toV)
     val changed = (pa.keySet ++ pb.keySet)
       .filter(k => pa.get(k) != pb.get(k)).toSeq.sorted
-    def side(parts: Map[String, String]) =
-      readDirs(changed.flatMap(k => parts.get(k).map(k -> _)))
+    def side(parts: Map[String, String]) = readDirs(changed.flatMap(parts.get))
     (side(pa), side(pb)) match {
       case (Some(b), Some(a)) => SnapshotTable.diff(b, a, keyCols)
       case (Some(b), None) => SnapshotTable.diff(b, b.limit(0), keyCols)
@@ -272,16 +246,6 @@ final class SnapshotTable(val spark: SparkSession, val root: String,
   }
 
   // ---- commits -----------------------------------------------------------
-
-  private def writeData(df: DataFrame, v: Long, value: String): String = {
-    val rel = s"data/v$v/$value"
-    val out = partitionCol match {
-      case Some(c) => df.drop(c)
-      case None => df
-    }
-    out.write.mode("overwrite").parquet(s"$root/$rel")
-    rel
-  }
 
   /** Decode Spark/Hive percent-escaped partition directory names. */
   private def unescapePart(s: String): String = {
@@ -298,77 +262,74 @@ final class SnapshotTable(val spark: SparkSession, val root: String,
     sb.toString
   }
 
-  /** Write physical partitions of `df` in ONE Spark job via partitionBy
-    * — a commit touching k partitions would otherwise run k write jobs,
-    * each recomputing or rescanning the plan. `values = Some(touched)`
-    * restricts the write to those physical partitions (scoped commits);
-    * None writes everything present (full commits — no distinct-values
-    * pre-pass job). Returns physical value → data dir for the manifest;
-    * values that produced no rows are absent (an empty partition and a
-    * missing one read the same).
+  /** Write physical partitions of `df` under `n` buckets in ONE Spark
+    * job via partitionBy — a commit touching k partitions would otherwise
+    * run k write jobs, each recomputing or rescanning the plan.
+    * `values = Some(touched)` restricts the write to those physical
+    * partitions (scoped commits); None writes everything present (full
+    * commits — no distinct-values pre-pass job). Returns physical value →
+    * data dir for the manifest; values that produced no rows are absent
+    * (an empty partition and a missing one read the same).
     */
-  private def writeDataPartitioned(df: DataFrame, v: Long,
+  private def writeDataPartitioned(df: DataFrame, v: Long, n: Int,
                                    values: Option[Seq[String]]): Map[String, String] = {
     val base = s"data/v$v"
-    val (out, byCol) = bucket match {
-      case Some(_) =>
-        // keep the logical column in the data; partition dirs carry _pv
-        (df.withColumn(pvCol, physicalValue), pvCol)
-      case None =>
-        val c = partitionCol.get
-        (df.withColumn(c, col(c).cast("string")), c)
-    }
-    // Bucketed tables cluster by physical value before the write:
-    // without it every task holds rows of every bucket and partitionBy
-    // opens tasks×buckets writers (thousands of tiny files per commit);
-    // with it each bucket's rows land in one task → ~one file per bucket.
-    val clustered = bucket match {
-      case Some(_) => out.repartition(col(byCol))
-      case None => out
-    }
+    // keep the logical column in the data; partition dirs carry _pv.
+    // Cluster by physical value before the write: without it every task
+    // holds rows of every bucket and partitionBy opens tasks×buckets
+    // writers (thousands of tiny files per commit); with it each
+    // bucket's rows land in one task → ~one file per bucket.
+    val clustered = df.withColumn(pvCol, bucketedValue(n)).repartition(col(pvCol))
     val scoped = values match {
-      case Some(vs) => clustered.filter(col(byCol).isin(vs: _*))
+      case Some(vs) => clustered.filter(col(pvCol).isin(vs: _*))
       case None => clustered
     }
-    scoped.write.mode("overwrite").partitionBy(byCol).parquet(s"$root/$base")
+    scoped.write.mode("overwrite").partitionBy(pvCol).parquet(s"$root/$base")
     val dir = Paths.get(root, "data", s"v$v")
     if (!Files.isDirectory(dir)) return Map.empty
     listDir(dir)
       .map(_.getFileName.toString)
-      .filter(_.startsWith(s"$byCol="))
-      .map(d => unescapePart(d.stripPrefix(s"$byCol=")) -> s"$base/$d")
+      .filter(_.startsWith(s"$pvCol="))
+      .map(d => unescapePart(d.stripPrefix(s"$pvCol=")) -> s"$base/$d")
       .toMap
   }
 
   /** Full-table commit: every physical partition present in `df` is
-    * written; partitions absent from `df` are dropped. ONE write job, no
-    * pre-pass: partitionBy lays out whatever values exist and the
+    * written under the declared [[BucketSpec]] count, which the manifest
+    * records; partitions absent from `df` are dropped. This is how a
+    * table gets its first layout, and how it is re-bucketed. ONE write
+    * job, no pre-pass: partitionBy lays out whatever values exist and the
     * manifest is built from the directories actually written.
     */
   def commit(df: DataFrame, updateTag: Long): Long = {
     val v = latestVersion.getOrElse(0L) + 1
-    val parts: Map[String, String] = partitionCol match {
-      case Some(_) => writeDataPartitioned(df, v, values = None)
-      case None => Map("all" -> writeData(df, v, "all"))
+    bucket match {
+      case Some(BucketSpec(_, n)) =>
+        writeManifest(v, updateTag, n, writeDataPartitioned(df, v, n, values = None))
+      case None =>
+        val rel = s"data/v$v/all"
+        df.write.mode("overwrite").parquet(s"$root/$rel")
+        writeManifest(v, updateTag, 0, Map("all" -> rel))
     }
-    writeManifest(v, updateTag, parts)
     v
   }
 
   /** Commit scoped to PHYSICAL partitions: rewrite only `touched` from
     * `df`; every other physical partition of the previous version is
     * carried forward by reference (no data movement). This is the scale
-    * path — for a bucketed table, `touched` is the bucket set a merge
-    * batch actually hashes into.
+    * path — `touched` is the bucket set a merge batch actually hashes
+    * into. The layout is the latest manifest's.
     */
   def commitPhysical(df: DataFrame, updateTag: Long,
-                     touched: Seq[String]): Long = {
-    require(partitionCol.isDefined, "commitPhysical requires a partition column")
-    requireBucketsMatch()
-    val v = latestVersion.getOrElse(0L) + 1
-    val carried = latestVersion.map(partitionsOf).getOrElse(Map.empty) -- touched
-    val fresh = writeDataPartitioned(df, v, Some(touched))
-    writeManifest(v, updateTag, carried ++ fresh)
+                     touched: Seq[String]): Long =
+    commitScoped(df, updateTag, touched, layoutBuckets)
+
+  private def commitScoped(df: DataFrame, updateTag: Long, touched: Seq[String],
+                           n: Int): Long = {
+    val prev = latestVersion
+    val v = prev.getOrElse(0L) + 1
+    val carried = prev.map(partitionsOf).getOrElse(Map.empty) -- touched
+    writeManifest(v, updateTag, n, carried ++ writeDataPartitioned(df, v, n, Some(touched)))
     v
   }
 
@@ -378,6 +339,9 @@ final class SnapshotTable(val spark: SparkSession, val root: String,
     * partitions `delta` hashes into (None when there are none) and
     * returns their new contents, which replace those partitions while
     * every other partition is carried forward by reference.
+    *
+    * The latest manifest is read once: its bucket count computes the
+    * touched partitions and lays out the commit.
     *
     * On a table with no version yet, `f(None)` IS the table: one full
     * [[commit]] with no touched-partition pre-pass, made only when
@@ -392,12 +356,13 @@ final class SnapshotTable(val spark: SparkSession, val root: String,
   def rewrite(delta: DataFrame, updateTag: Long)
              (f: Option[DataFrame] => DataFrame): Option[Long] = {
     require(partitionCol.isDefined, "rewrite requires a partition column")
-    if (!exists) {
-      if (delta.isEmpty) None else Some(commit(f(None), updateTag))
-    } else {
-      val touched = physicalValuesOf(delta)
-      if (touched.isEmpty) None
-      else Some(commitPhysical(f(readPhysical(touched)), updateTag, touched))
+    latestVersion match {
+      case None => if (delta.isEmpty) None else Some(commit(f(None), updateTag))
+      case prev @ Some(v) =>
+        val n = bucketsAfter(prev)
+        val touched = valuesOf(delta, bucketedValue(n))
+        if (touched.isEmpty) None
+        else Some(commitScoped(f(readPhysicalOf(v, touched)), updateTag, touched, n))
     }
   }
 
@@ -428,7 +393,6 @@ final class SnapshotTable(val spark: SparkSession, val root: String,
     sys.error(s"snapshot table $root has no committed version"))).sum
 
   // ---- maintenance --------------------------------------------------------
-
 
   /** Iceberg `expire_snapshots` analog: retain the newest `keepLast`
     * versions, delete older manifests, then delete every data directory
@@ -545,29 +509,6 @@ final class SnapshotTable(val spark: SparkSession, val root: String,
       }
     }
     deleted.toSeq.sorted
-  }
-
-  /** Commit scoped to LOGICAL partitions: every bucket of a touched
-    * logical value is rewritten from `df` (or dropped if `df` has no rows
-    * for it); other logical values are carried forward by reference.
-    */
-  def commitPartitions(df: DataFrame, updateTag: Long,
-                       touched: Seq[String]): Long = {
-    bucket match {
-      case None => commitPhysical(df, updateTag, touched)
-      case Some(_) =>
-        df.persist()
-        try {
-          // only rows of touched logical values participate (matching the
-          // non-bucketed contract, where the isin filter did this)
-          val fresh = physicalValuesOf(df)
-            .filter(pv => touched.exists(t => pv.startsWith(t + "~b")))
-          val prev = latestVersion
-            .map(v => touched.flatMap(t => physicalKeysOf(v, t)))
-            .getOrElse(Seq.empty)
-          commitPhysical(df, updateTag, (fresh ++ prev).distinct.sorted)
-        } finally df.unpersist()
-    }
   }
 }
 

@@ -41,9 +41,10 @@ object GraftCli {
       |            (analysis runs LAST, like the reference: default is the
       |             shipped corpus under data/jobs/analysis -> WORKDIR/analysis;
       |             --analysis-job-dir none disables)
-      |  index-rebuild --work-dir DIR --update-tag N [--graph-buckets N]
-      |  rebucket  --work-dir DIR --new-buckets N --update-tag T
-      |            [--graph-buckets OLD] [--cores N]
+      |            (--graph-buckets sizes a new graph; an existing graph keeps
+      |             its recorded layout)
+      |  index-rebuild --work-dir DIR --update-tag N
+      |  rebucket  --work-dir DIR --new-buckets N --update-tag T [--cores N]
       |  expire    --work-dir DIR --keep N
       |  remove-orphans --work-dir DIR --older-than-hours H
       |  permissions --input RES.parquet --id-col COL --name-col COL
@@ -134,10 +135,8 @@ object GraftCli {
       "sync" -> (global ++ Set("input", "dict", "work-dir", "update-tag",
         "selected-modules", "tenants", "best-effort", "analysis-job-dir",
         "out", "params", "graph-buckets", "edge-index")),
-      "index-rebuild" -> (global ++ Set("work-dir", "update-tag",
-        "graph-buckets")),
-      "rebucket" -> (global ++ Set("work-dir", "new-buckets", "update-tag",
-        "graph-buckets")),
+      "index-rebuild" -> (global ++ Set("work-dir", "update-tag")),
+      "rebucket" -> (global ++ Set("work-dir", "new-buckets", "update-tag")),
       "expire" -> (global ++ Set("work-dir", "keep")),
       "remove-orphans" -> (global ++ Set("work-dir", "older-than-hours")),
       "permissions" -> (global ++ Set("input", "id-col", "name-col",
@@ -280,13 +279,12 @@ object GraftCli {
   private def indexRebuild(flags: Map[String, String]): Unit = {
     val spark = session(flags, "graft-cli-index-rebuild")
     val workDir = req(flags, "work-dir")
-    val buckets = flags.getOrElse("graph-buckets",
-      GraphTables.DefaultBuckets.toString).toInt
     val tag = req(flags, "update-tag").toLong
+    val edges = GraphTables.edges(spark, s"$workDir/graph")
     // a typo'd --work-dir must fail, not read as a successful repair
-    require(GraphTables.edges(spark, s"$workDir/graph", buckets).exists,
+    require(edges.exists,
       s"no edge table under $workDir/graph — check --work-dir\n$usage")
-    val idx = graft.merge.EdgeEndpointIndex(spark, s"$workDir/graph", buckets)
+    val idx = graft.merge.EdgeEndpointIndex(edges)
     idx.rebuild(tag)
     System.err.println(s"[index-rebuild] covered edge version: " +
       idx.coveredEdgeVersion.getOrElse(-1L))
@@ -297,13 +295,13 @@ object GraftCli {
     * executor-memory-sized, so 100x data wants more buckets. A full
     * commit under a new [[graft.snapshot.BucketSpec]] IS the re-bucket
     * (it rewrites every partition under the new arithmetic and records
-    * the new count in the manifest); old versions stay readable for time
-    * travel (full reads are layout-blind). The edge endpoint index is
+    * the new count in the manifest, which every later open follows); old
+    * versions stay readable for time travel (full reads are
+    * layout-blind), so a legacy table without the manifest record is
+    * re-bucketed the same way. The edge endpoint index is
     * bucket-arithmetic-coupled, so it is dropped and rebuilt fresh under
     * the new count — coverage re-establishes at the current edge version
-    * and index-backed DETACH stays sound. The OLD count is read from the
-    * committed manifest; only a legacy table (predating the bucket
-    * record) needs `--graph-buckets`.
+    * and index-backed DETACH stays sound.
     */
   private def rebucket(flags: Map[String, String]): Unit = {
     val spark = session(flags, "graft-cli-rebucket")
@@ -312,30 +310,22 @@ object GraftCli {
     require(newN > 0, s"--new-buckets must be positive\n$usage")
     val tag = req(flags, "update-tag").toLong
     val graphRoot = s"$workDir/graph"
-    val probe = GraphTables.edges(spark, graphRoot)
-    require(probe.exists,
+    val edges = GraphTables.edges(spark, graphRoot, newN)
+    require(edges.exists,
       s"no edge table under $graphRoot — check --work-dir\n$usage")
-    val oldN = probe.latestVersion.flatMap(probe.recordedBuckets)
-      .orElse(flags.get("graph-buckets").map(_.toInt))
-      .getOrElse(sys.error("this table predates the manifest bucket " +
-        s"record — pass its true count via --graph-buckets\n$usage"))
-    def one(open: (SparkSession, String, Int) => graft.snapshot.SnapshotTable,
-            name: String): Unit = {
-      val src = open(spark, graphRoot, oldN)
-      if (src.exists) {
-        val rows = src.read()
-        open(spark, graphRoot, newN).commit(rows, tag)
-        System.err.println(s"[rebucket] $name: $oldN -> $newN buckets")
+    Seq("nodes" -> GraphTables.nodes(spark, graphRoot, newN), "edges" -> edges)
+      .foreach { case (name, t) =>
+        if (t.exists) {
+          t.commit(t.read(), tag)
+          System.err.println(s"[rebucket] $name: re-laid out at $newN buckets")
+        }
       }
-    }
-    one(GraphTables.nodes(_, _, _), "nodes")
-    one(GraphTables.edges(_, _, _), "edges")
-    val idxDir = java.nio.file.Paths.get(graphRoot, "edge_index")
+    val idx = graft.merge.EdgeEndpointIndex(edges)
+    val idxDir = java.nio.file.Paths.get(idx.table.root)
     if (java.nio.file.Files.isDirectory(idxDir)) {
-      // the index's bucket arithmetic AND its coverage record are tied
-      // to the old count — rebuild from scratch, never patch in place
+      // every edge_pv names an old-layout partition — rebuild from
+      // scratch, never patch in place
       graft.snapshot.SnapshotTable.deleteTree(idxDir)
-      val idx = graft.merge.EdgeEndpointIndex(spark, graphRoot, newN)
       idx.rebuild(tag)
       System.err.println(s"[rebucket] edge_index rebuilt at $newN buckets, " +
         s"covered edge version ${idx.coveredEdgeVersion.getOrElse(-1L)}")
@@ -354,22 +344,23 @@ object GraftCli {
         }
       }.toMap
 
-  /** Expire graph + stage snapshot versions under a work dir. Stage
-    * tables only ever need their latest version (resume reads the last
-    * commit per tag), so they expire to `keep` as well.
-    */
   /** Every snapshot table living under a work dir — the shared target
     * list of the two maintenance subcommands.
     */
   private def workDirTables(spark: SparkSession, workDir: String)
-      : Seq[(String, graft.snapshot.SnapshotTable)] =
+      : Seq[(String, graft.snapshot.SnapshotTable)] = {
+    val edges = GraphTables.edges(spark, s"$workDir/graph")
     Seq("graph/nodes" -> GraphTables.nodes(spark, s"$workDir/graph"),
-      "graph/edges" -> GraphTables.edges(spark, s"$workDir/graph"),
-      "graph/edge_index" -> graft.snapshot.SnapshotTable(spark,
-        s"$workDir/graph/edge_index", Some("endpoint_label"))) ++
+      "graph/edges" -> edges,
+      "graph/edge_index" -> graft.merge.EdgeEndpointIndex(edges).table) ++
       KgPipeline.StageNames.map(s =>
         s"stage_$s" -> graft.snapshot.SnapshotTable(spark, s"$workDir/stage_$s", None))
+  }
 
+  /** Expire graph + stage snapshot versions under a work dir. Stage
+    * tables only ever need their latest version (resume reads the last
+    * commit per tag), so they expire to `keep` as well.
+    */
   private def expire(flags: Map[String, String]): Unit = {
     val spark = session(flags, "graft-cli-expire")
     val workDir = req(flags, "work-dir")

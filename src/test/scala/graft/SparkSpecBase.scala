@@ -14,4 +14,5 @@ object SharedSpark {
 abstract class SparkSpecBase extends AnyFunSuite {
   lazy val spark: SparkSession = SharedSpark.spark
   val sf1: String = "/root/testdata/sf0.001"
+  val sf10: String = java.nio.file.Paths.get(sf1).resolveSibling("sf0.01").toString
 }

@@ -24,7 +24,7 @@ class EdgeIndexSpec extends SparkSpecBase {
          Option[EdgeEndpointIndex]) = {
     val nodes = GraphTables.nodes(spark, root, buckets)
     val edges = GraphTables.edges(spark, root, buckets)
-    val ix = if (withIndex) Some(EdgeEndpointIndex(spark, root, buckets)) else None
+    val ix = if (withIndex) Some(EdgeEndpointIndex(edges)) else None
     val nation = Seq(("1", "ALGERIA")).toDF("nid", "n_name")
     GraphMerge.load(spark, nation, NodeSchema("Nation", RowRef("nid")),
       Map.empty, 100L, nodes, edges, edgeIndex = ix)
@@ -131,55 +131,23 @@ class EdgeIndexSpec extends SparkSpecBase {
     assert(ix.soundForDetach)
   }
 
-  test("a mis-bucketed index is rejected: rebuild fails fast both directions, recorded count gates soundness") {
+  test("an index opened from any instance rebuilds sound under the edge table's layout") {
     val root = Files.createTempDirectory("ixg").toString
-    val (_, _, _) = buildGraph(root, withIndex = false) // layout: 64 buckets
-    // claiming FEWER buckets than the layout: on-disk indices >= 8 exist
-    val tooFew = EdgeEndpointIndex(spark, root, 8)
-    val e1 = intercept[IllegalArgumentException](tooFew.rebuild(200L))
-    assert(e1.getMessage.contains("graph-buckets"), e1.getMessage)
-    // claiming MORE: recomputed pvs name partitions that don't exist
-    val tooMany = EdgeEndpointIndex(spark, root, 256)
-    val e2 = intercept[IllegalArgumentException](tooMany.rebuild(200L))
-    assert(e2.getMessage.contains("graph-buckets"), e2.getMessage)
-    // the true count rebuilds, records itself, and a later open with a
-    // different count reads unsound and cannot mutate
-    val right = EdgeEndpointIndex(spark, root, buckets)
-    right.rebuild(200L)
-    assert(right.soundForDetach)
-    val wrong = EdgeEndpointIndex(spark, root, 8)
-    assert(!wrong.soundForDetach,
-      "a bucket-count mismatch must read as unsound, never silently miss")
-    intercept[IllegalArgumentException](wrong.rebuild(300L))
-    assert(right.soundForDetach, "the correctly-bucketed index is untouched")
-  }
-
-  test("legacy edge manifests (no bucket record) keep the coverage-record guard: a wrong count still cannot rebuild") {
-    val root = Files.createTempDirectory("ixl").toString
-    val (_, _, Some(ix)) = buildGraph(root, withIndex = true): @unchecked
-    assert(ix.soundForDetach)
-    // simulate a pre-record table: strip "buckets" from every edge
-    // manifest (a legacy table cannot have been re-bucketed — rebucket
-    // always writes the record — so the coverage count stays trustworthy)
-    val mdir = java.nio.file.Paths.get(root, "edges", "_manifest")
-    val ms = Files.list(mdir)
-    val manifests = try {
-      import scala.jdk.CollectionConverters._
-      ms.iterator().asScala.toList
-    } finally ms.close()
-    manifests.filter(_.getFileName.toString.endsWith(".json")).foreach { p =>
-      Files.writeString(p, Files.readString(p)
-        .replaceAll(""","buckets":\d+""", ""))
+    val (_, edges, _) = buildGraph(root, withIndex = false) // layout: 64 buckets
+    val stale = Seq("c1", "c2").toDF("id")
+    val onDisk = edges.partitionsOf(edges.latestVersion.get).keySet
+    val scans = Seq(8, 256, buckets).map { n =>
+      val ix = EdgeEndpointIndex(GraphTables.edges(spark, root, n))
+      ix.rebuild(200L + n)
+      assert(ix.soundForDetach, s"index opened at $n buckets")
+      val scan = ix.edgePartitionsFor("Customer", stale)
+      assert(scan.nonEmpty && scan.toSet.subsetOf(onDisk), s"$n: $scan")
+      assert(edges.readPhysical(scan).get
+        .filter(col("src_id").isin("c1", "c2") || col("dst_id").isin("c1", "c2"))
+        .count() === 4L, s"index opened at $n buckets misses edges")
+      scan
     }
-    // deliberately small-count claim that could slip past the on-disk
-    // overIndex check on a sparse graph — coverage must still reject it
-    val wrong = EdgeEndpointIndex(spark, root, 8)
-    val e = intercept[IllegalArgumentException](wrong.rebuild(300L))
-    assert(e.getMessage.contains("graph buckets"), e.getMessage)
-    // the true count still rebuilds and stays sound
-    val right = EdgeEndpointIndex(spark, root, buckets)
-    right.rebuild(300L)
-    assert(right.soundForDetach)
+    assert(scans.distinct.size === 1, scans.toString)
   }
 
   test("rebuild adopts a NEW bucket count after the graph was re-bucketed via full commits") {
@@ -191,16 +159,19 @@ class EdgeIndexSpec extends SparkSpecBase {
     val newN = 16
     GraphTables.nodes(spark, root, newN).commit(nodes.read(), 300L)
     GraphTables.edges(spark, root, newN).commit(edges.read(), 300L)
-    // the old-count index reads unsound (recorded count gate)…
+    // the re-bucket bypassed the index: coverage is frozen…
     assert(!ix.soundForDetach)
-    // …and index-rebuild at the graph's TRUE new count must heal it —
-    // the index's stale coverage record must not wedge adoption
-    val adopted = EdgeEndpointIndex(spark, root, newN)
-    adopted.rebuild(300L)
-    assert(adopted.soundForDetach, "rebuild at the true new count must re-cover")
-    // a rebuild claiming the OLD count now fails against the edge manifest
-    val e = intercept[IllegalArgumentException](ix.rebuild(400L))
-    assert(e.getMessage.contains("graph-buckets"), e.getMessage)
+    // …and a rebuild heals it, from an index opened at either count: the
+    // edge_pvs follow the edge table's recorded layout
+    ix.rebuild(300L)
+    assert(ix.soundForDetach, "rebuild must re-cover after a re-bucket")
+    val scan = ix.edgePartitionsFor("Customer", Seq("c1").toDF("id"))
+    assert(scan.nonEmpty && scan.forall(pv => pv.substring(pv.lastIndexOf("~b") + 2).toInt < newN),
+      scan.toString)
+    val adopted = EdgeEndpointIndex(GraphTables.edges(spark, root, newN))
+    adopted.rebuild(400L)
+    assert(adopted.soundForDetach, "rebuild at the new count must re-cover")
+    assert(adopted.edgePartitionsFor("Customer", Seq("c1").toDF("id")) === scan)
   }
 
   test("a crashed indexed write cannot pre-claim a version a later un-indexed commit takes") {
@@ -238,7 +209,7 @@ class EdgeIndexSpec extends SparkSpecBase {
     val root = Files.createTempDirectory("ixe").toString
     // graph built WITHOUT the index
     val (_, edges, _) = buildGraph(root, withIndex = false)
-    val late = EdgeEndpointIndex(spark, root, buckets)
+    val late = EdgeEndpointIndex(edges)
     assert(!late.soundForDetach)
     // feeding it a new batch does not make history covered
     val more = Seq(("Order", "o99", "PLACED_BY", "Customer", "c9"))

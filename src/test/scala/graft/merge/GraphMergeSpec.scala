@@ -42,8 +42,8 @@ class GraphMergeSpec extends SparkSpecBase {
 
   test("upsert preserves firstseen and advances lastupdated (scenario 1)") {
     val root = tmp()
-    val nodes = SnapshotTable(spark, s"$root/nodes", Some("label"))
-    val edges = SnapshotTable(spark, s"$root/edges", Some("rel_label"))
+    val nodes = GraphTables.nodes(spark, root)
+    val edges = GraphTables.edges(spark, root)
     val accounts = Seq(("acct1", "prod")).toDF("aid", "name")
     GraphMerge.load(spark, accounts, accountSchema, Map.empty, 100L, nodes, edges)
 
@@ -85,8 +85,8 @@ class GraphMergeSpec extends SparkSpecBase {
 
   test("sub-resource attach skips silently when container absent") {
     val root = tmp()
-    val nodes = SnapshotTable(spark, s"$root/nodes", Some("label"))
-    val edges = SnapshotTable(spark, s"$root/edges", Some("rel_label"))
+    val nodes = GraphTables.nodes(spark, root)
+    val edges = GraphTables.edges(spark, root)
     val b = Seq(("a1", "alpha", null.asInstanceOf[String])).toDF("id", "name", "uses_id")
     GraphMerge.load(spark, b, assetSchema,
       Map("account_id" -> "ghost", "region" -> "r"), 100L, nodes, edges)
@@ -125,16 +125,19 @@ class GraphMergeSpec extends SparkSpecBase {
     GraphMerge.load(spark, Seq(("acct1", "p")).toDF("aid", "name"),
       accountSchema, Map.empty, 100L, nodes, edges)
     GraphMerge.load(spark, assets("a1", "a2"), assetSchema, kw, 100L, nodes, edges)
-    // opened with the wrong bucket count: the bucket-scoped commit of the
-    // stale rows fails after the frames are cached
-    val misBucketed = GraphTables.nodes(spark, root, buckets = 4)
+    // a legacy manifest (no bucket count): the label read works, and the
+    // bucket-scoped commit of the stale rows fails after the frames are
+    // cached
+    val mf = java.nio.file.Paths.get(root, "nodes", "_manifest",
+      s"v${nodes.latestVersion.get}.json")
+    Files.writeString(mf, Files.readString(mf).replaceAll(""","buckets":\d+""", ""))
     spark.catalog.clearCache()
-    intercept[IllegalArgumentException] {
-      Cleanup.run(spark, assetSchema, kw, 200L, misBucketed, edges)
+    intercept[IllegalStateException] {
+      Cleanup.run(spark, assetSchema, kw, 200L, nodes, edges)
     }
     assert(spark.sharedState.cacheManager.isEmpty, "Cleanup.run leaked a cached frame")
-    intercept[IllegalArgumentException] {
-      Cleanup.clearProperties(spark, misBucketed, "Asset", Seq("name"), 200L)
+    intercept[IllegalStateException] {
+      Cleanup.clearProperties(spark, nodes, "Asset", Seq("name"), 200L)
     }
     assert(spark.sharedState.cacheManager.isEmpty,
       "Cleanup.clearProperties leaked a cached frame")
@@ -160,8 +163,8 @@ class GraphMergeSpec extends SparkSpecBase {
 
   test("cleanup deletes stale tenant-scoped facts, spares other tenants (scenario 2)") {
     val root = tmp()
-    val nodes = SnapshotTable(spark, s"$root/nodes", Some("label"))
-    val edges = SnapshotTable(spark, s"$root/edges", Some("rel_label"))
+    val nodes = GraphTables.nodes(spark, root)
+    val edges = GraphTables.edges(spark, root)
     GraphMerge.load(spark, Seq(("acct1", "p"), ("acct2", "q")).toDF("aid", "name"),
       accountSchema, Map.empty, 100L, nodes, edges)
     def loadAssets(ids: Seq[String], acct: String, tag: Long): Unit =
@@ -186,8 +189,8 @@ class GraphMergeSpec extends SparkSpecBase {
 
   test("one-to-many matcher attaches a row to every listed target (scenario 3)") {
     val root = tmp()
-    val nodes = SnapshotTable(spark, s"$root/nodes", Some("label"))
-    val edges = SnapshotTable(spark, s"$root/edges", Some("rel_label"))
+    val nodes = GraphTables.nodes(spark, root)
+    val edges = GraphTables.edges(spark, root)
     val groupSchema = NodeSchema("Group", RowRef("gid"),
       properties = Map("name" -> RowRef("name")))
     GraphMerge.load(spark, Seq(("g1", "g"), ("g2", "h"), ("g3", "i")).toDF("gid", "name"),
@@ -204,8 +207,8 @@ class GraphMergeSpec extends SparkSpecBase {
 
   test("ignore_case and fuzzy contains matchers") {
     val root = tmp()
-    val nodes = SnapshotTable(spark, s"$root/nodes", Some("label"))
-    val edges = SnapshotTable(spark, s"$root/edges", Some("rel_label"))
+    val nodes = GraphTables.nodes(spark, root)
+    val edges = GraphTables.edges(spark, root)
     val empSchema = NodeSchema("Employee", RowRef("eid"),
       properties = Map("email" -> RowRef("email")))
     GraphMerge.load(spark,
@@ -228,7 +231,7 @@ class GraphMergeSpec extends SparkSpecBase {
 
   test("snapshot time travel reads historical versions") {
     val root = tmp()
-    val t = SnapshotTable(spark, s"$root/t", Some("label"))
+    val t = GraphTables.nodes(spark, root)
     t.commit(Seq(("A", "1")).toDF("label", "id"), 10L)
     t.commit(Seq(("A", "1"), ("A", "2")).toDF("label", "id"), 20L)
     assert(t.versions === Seq(1L, 2L))

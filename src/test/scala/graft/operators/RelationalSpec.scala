@@ -21,6 +21,14 @@ class RelationalSpec extends SparkSpecBase {
     assert(bad.isEmpty, s"unexpected row counts:\n${bad.mkString("\n")}")
   }
 
+  test("the two queries empty at sf0.001 yield their rows at sf0.01") {
+    val orphans = SparkEntry.queries("q5_antijoin")(spark, sf10)
+      .collect().map(_.getAs[Long]("n_orphans"))
+    assert(orphans.length === 7, orphans.toSeq)
+    assert(orphans.sum === 8L)
+    assert(SparkEntry.queries("qkg26_squares")(spark, sf10).count() === 2L)
+  }
+
   test("q1 pricing summary has the 4-way group structure and positive sums") {
     val rows = Relational.q1PricingSummary(spark, sf1).collect()
     assert(rows.nonEmpty)

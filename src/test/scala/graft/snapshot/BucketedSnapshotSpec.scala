@@ -99,68 +99,82 @@ class BucketedSnapshotSpec extends SparkSpecBase {
     assert(v1p3 === 100L)
   }
 
-  test("a bucketed open over an UNBUCKETED layout fails fast — unbucketed commits record 0, not nothing") {
-    val root = tmp()
-    val flat = SnapshotTable(spark, s"$root/t", Some("label"))
-    val rows = (0 until 10).map(i => ("L", s"id$i", i.toLong))
-      .toDF("label", "id", "v")
-    flat.commit(rows, 1L)
-    assert(flat.recordedBuckets(1L) === Some(0))
-    // without the 0 record this open would compute 'L~b3'-style names,
-    // read nothing, and carry every real partition forward — the silent
-    // miss the manifest record exists to prevent
-    val b8 = SnapshotTable(spark, s"$root/t", Some("label"),
-      Some(BucketSpec(Seq("id"), 8)))
-    val e = intercept[IllegalArgumentException] {
-      b8.physicalValuesOf(rows.limit(1))
+  private val rows40 = (0 until 40).map(i => ("L", s"id$i", i.toLong))
+    .toDF("label", "id", "v")
+
+  private def table(root: String, n: Int): SnapshotTable =
+    SnapshotTable(spark, s"$root/t", Some("label"), Some(BucketSpec(Seq("id"), n)))
+
+  private def rowsOf(t: SnapshotTable): Seq[String] =
+    t.read().select("label", "id", "v").collect().map(_.toString).sorted.toSeq
+
+  test("an open with the wrong bucket count follows the committed layout: its rewrite touches the committed buckets and leaves the same rows") {
+    val (rootA, rootB) = (tmp(), tmp())
+    Seq(rootA, rootB).foreach(r => table(r, 8).commit(rows40, 1L))
+    val right = table(rootA, 8)
+    val wrong = table(rootB, 4)
+    val delta = rows40.filter(col("v") < 3).withColumn("v", col("v") + 100)
+    assert(wrong.physicalValuesOf(delta) === right.physicalValuesOf(delta))
+    Seq(right, wrong).foreach { t =>
+      assert(t.rewrite(delta, 2L) { existing =>
+        existing.get.join(delta.select("id"), Seq("id"), "left_anti").unionByName(delta)
+      } === Some(2L))
     }
-    assert(e.getMessage.contains("0 buckets"), e.getMessage)
-    intercept[IllegalArgumentException] {
-      b8.commitPhysical(rows.limit(1), 2L, Seq("L"))
+    def touched(t: SnapshotTable): Set[String] = {
+      val (p1, p2) = (t.partitionsOf(1L), t.partitionsOf(2L))
+      p2.collect { case (k, rel) if !p1.get(k).contains(rel) => k }.toSet
     }
-    // the matching unbucketed instance keeps working
-    assert(flat.physicalValuesOf(rows).nonEmpty)
+    assert(touched(right).nonEmpty && touched(right).size < 8, touched(right).toString)
+    assert(touched(wrong) === touched(right))
+    assert(wrong.partitionsOf(2L).keySet === right.partitionsOf(2L).keySet)
+    assert(wrong.recordedBuckets(2L) === Some(8), "a scoped commit keeps the recorded layout")
+    assert(rowsOf(wrong) === rowsOf(right))
+    assert(rowsOf(wrong).size === 40)
+    assert(wrong.read().filter(col("v") >= 100).count() === 3L)
+    // a FULL commit is what lays out the declared count (a re-bucket)
+    val v3 = wrong.commit(wrong.read(), 3L)
+    assert(wrong.recordedBuckets(v3) === Some(4))
+    assert(wrong.partitionsOf(v3).keySet.forall(k => (0 until 4).exists(b => k == s"L~b$b")))
+    assert(rowsOf(wrong) === rowsOf(right))
+    // time travel to the 8-bucket layout still reads fine
+    assert(wrong.readVersion(2L).count() === 40L)
   }
 
-  test("manifest records the bucket count; a mismatched open fails fast on every SCOPED path, full reads and full commits stay layout-blind") {
+  test("a legacy manifest without a bucket count: scoped paths fail naming rebucket, full reads work, a full commit heals the table") {
     val root = tmp()
-    val t8 = SnapshotTable(spark, s"$root/t", Some("label"),
-      Some(BucketSpec(Seq("id"), 8)))
-    val rows = (0 until 40).map(i => ("L", s"id$i", i.toLong))
-      .toDF("label", "id", "v")
-    t8.commit(rows, 1L)
-    assert(t8.recordedBuckets(1L) === Some(8))
+    val t = table(root, 8)
+    t.commit(rows40, 1L)
+    val mf = Paths.get(s"$root/t", "_manifest", "v1.json")
+    Files.writeString(mf, Files.readString(mf).replaceAll(""","buckets":\d+""", ""))
+    assert(t.recordedBuckets(1L) === None)
 
-    val t4 = SnapshotTable(spark, s"$root/t", Some("label"),
-      Some(BucketSpec(Seq("id"), 4)))
-    // scoped read path (physicalValuesOf feeds readPhysical) fails fast
-    val e1 = intercept[IllegalArgumentException] {
-      t4.physicalValuesOf(rows.limit(1))
+    val one = rows40.limit(1)
+    val failures = Seq[() => Any](
+      () => t.physicalValue,
+      () => t.physicalValuesOf(one),
+      () => t.commitPhysical(one, 2L, Seq("L~b0")),
+      () => t.rewrite(one, 2L)(_.get))
+    failures.foreach { f =>
+      val e = intercept[IllegalStateException](f())
+      assert(e.getMessage.contains("rebucket --new-buckets"), e.getMessage)
     }
-    assert(e1.getMessage.contains("8 buckets"))
-    // scoped commit path fails fast
-    val e2 = intercept[IllegalArgumentException] {
-      t4.commitPhysical(rows.limit(1), 2L, Seq("L~b0"))
+    assert(t.versions === Seq(1L), "a failed scoped path must commit nothing")
+    assert(t.read().count() === 40L)
+    assert(t.readPartition("L").get.count() === 40L)
+
+    // re-bucketing is one full commit; it records the count again
+    val v2 = t.commit(t.read(), 2L)
+    assert(t.recordedBuckets(v2) === Some(8))
+    assert(t.rewrite(one.withColumn("v", lit(-1L)), 3L) { existing =>
+      existing.get.filter(col("id") =!= "id0").unionByName(one.withColumn("v", lit(-1L)))
+    } === Some(3L))
+    assert(t.read().filter(col("v") === -1L).count() === 1L)
+    assert(t.read().count() === 40L)
+  }
+
+  test("a partitioned table must be bucketed") {
+    intercept[IllegalArgumentException] {
+      SnapshotTable(spark, s"${tmp()}/t", Some("label"))
     }
-    assert(e2.getMessage.contains("8 buckets"))
-    // full read is layout-blind (manifest dirs, no arithmetic)
-    assert(t4.read().count() === 40)
-
-    // a FULL commit under the new count IS the re-bucket: it rewrites
-    // every partition and re-records the layout…
-    val v2 = t4.commit(t4.read(), 3L)
-    assert(t4.recordedBuckets(v2) === Some(4))
-    assert(t4.read().count() === 40)
-    // …after which the OLD instance is the mismatched one
-    intercept[IllegalArgumentException] { t8.physicalValuesOf(rows.limit(1)) }
-    // and time travel to the pre-rebucket layout still reads fine
-    assert(t4.readVersion(1L).count() === 40)
-
-    // legacy manifests (no bucket record) pass — the check is advisory
-    // until the first recorded commit
-    val mf = Paths.get(s"$root/t", "_manifest", s"v$v2.json")
-    Files.writeString(mf,
-      Files.readString(mf).replaceAll(""","buckets":4""", ""))
-    assert(t8.physicalValuesOf(rows.limit(1)).nonEmpty)
   }
 }

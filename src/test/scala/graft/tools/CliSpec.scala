@@ -470,7 +470,7 @@ class CliSpec extends SparkSpecBase {
     // indexed from the FIRST edge commit -> sound for DETACH
     GraftCli.main(Array("sync", "--input", s"$in/pages", "--dict", s"$in/dict",
       "--work-dir", work, "--update-tag", "100", "--edge-index", "true"))
-    val idx = graft.merge.EdgeEndpointIndex(spark, s"$work/graph")
+    val idx = graft.merge.EdgeEndpointIndex(GraphTables.edges(spark, s"$work/graph"))
     assert(idx.table.exists, "sync --edge-index must materialize the index")
     assert(idx.soundForDetach, "index attached from first commit must cover")
 
@@ -496,7 +496,10 @@ class CliSpec extends SparkSpecBase {
     def keyed(df: org.apache.spark.sql.DataFrame) = df
       .selectExpr("label", "id", "firstseen", "lastupdated")
       .collect().map(_.toString).sorted.toSeq
+    def created(df: org.apache.spark.sql.DataFrame) =
+      df.selectExpr("label", "id", "firstseen").collect().map(_.toString).sorted.toSeq
     val nodesBefore = keyed(GraphTables.nodes(spark, s"$work/graph").read())
+    val createdBefore = created(GraphTables.nodes(spark, s"$work/graph").read())
     val edgesBefore = GraphTables.edges(spark, s"$work/graph").read()
       .selectExpr("src_id", "rel_label", "dst_id")
       .collect().map(_.toString).sorted.toSeq
@@ -513,21 +516,69 @@ class CliSpec extends SparkSpecBase {
     // new layout recorded in the manifests
     assert(nodes3.latestVersion.flatMap(nodes3.recordedBuckets) === Some(3))
     assert(edges3.latestVersion.flatMap(edges3.recordedBuckets) === Some(3))
-    // the OLD default-count instance now fails fast on scoped paths
-    val stale = GraphTables.nodes(spark, s"$work/graph")
-    val err = intercept[IllegalArgumentException] {
-      stale.physicalValuesOf(nodes3.read().limit(1))
-    }
-    assert(err.getMessage.contains("3 buckets"))
+    // an open with the default count follows the recorded layout
+    val default = GraphTables.nodes(spark, s"$work/graph")
+    val pvs = default.physicalValuesOf(nodes3.read())
+    assert(pvs === nodes3.physicalValuesOf(nodes3.read()))
+    assert(pvs.forall(pv => Set("0", "1", "2")(pv.substring(pv.lastIndexOf("~b") + 2))), pvs.toString)
     // index rebuilt under the new count and sound for DETACH
-    val idx3 = graft.merge.EdgeEndpointIndex(spark, s"$work/graph", buckets = 3)
+    val idx3 = graft.merge.EdgeEndpointIndex(edges3)
     assert(idx3.soundForDetach, "rebucket must leave the index covering")
-    // an incremental sync at the new count keeps working end-to-end
+    assert(idx3.table.latestVersion.flatMap(idx3.table.recordedBuckets) === Some(3))
+    // the count is the manifest's alone: only sync (sizing a new graph)
+    // takes --graph-buckets
+    Seq(Seq("index-rebuild"), Seq("rebucket", "--new-buckets", "3")).foreach { cmd =>
+      val e = intercept[IllegalArgumentException] {
+        GraftCli.main((cmd ++ Seq("--work-dir", work, "--update-tag", "250",
+          "--graph-buckets", "3")).toArray)
+      }
+      assert(e.getMessage.contains(s"unknown flag(s) for ${cmd.head}: --graph-buckets"),
+        e.getMessage)
+    }
+    // an incremental sync and an index rebuild keep working end-to-end
+    // with no bucket flag
     GraftCli.main(Array("sync", "--input", s"$in/pages", "--dict", s"$in/dict",
-      "--work-dir", work, "--update-tag", "300", "--graph-buckets", "3",
-      "--edge-index", "true"))
-    assert(keyed(nodes3.read()).size === nodesBefore.size)
+      "--work-dir", work, "--update-tag", "300", "--edge-index", "true"))
+    assert(created(nodes3.read()) === createdBefore)
+    assert(nodes3.latestVersion.flatMap(nodes3.recordedBuckets) === Some(3))
+    assert(edges3.latestVersion.flatMap(edges3.recordedBuckets) === Some(3))
     assert(idx3.soundForDetach, "indexed sync at the new count stays covered")
+    GraftCli.main(Array("index-rebuild", "--work-dir", work, "--update-tag", "400"))
+    assert(idx3.soundForDetach, "index-rebuild with no bucket flag stays covered")
+    assert(idx3.table.latestVersion.flatMap(idx3.table.recordedBuckets) === Some(3),
+      "index-rebuild lays the index out at the graph's recorded count")
+    assert(idx3.edgePartitionsFor("Page", nodes3.read()
+      .filter(col("label") === "Page").select("id").limit(5)).nonEmpty)
+  }
+
+  test("cli: a legacy graph (manifests without a bucket count) fails sync naming rebucket; rebucket heals it") {
+    val in = tmp("cliin13")
+    val work = tmp("cliwork13")
+    Corpus.pages(spark, sf, 1, 0).write.parquet(s"$in/pages")
+    Corpus.aliasRows.toDS().write.parquet(s"$in/dict")
+    def sync(tag: Int): Unit =
+      GraftCli.main(Array("sync", "--input", s"$in/pages", "--dict", s"$in/dict",
+        "--work-dir", work, "--update-tag", tag.toString,
+        "--analysis-job-dir", "none"))
+    sync(100)
+    val nodes = GraphTables.nodes(spark, s"$work/graph")
+    val edges = GraphTables.edges(spark, s"$work/graph")
+    val before = nodes.read().count()
+    Seq(nodes, edges).foreach { t =>
+      val mf = java.nio.file.Paths.get(t.root, "_manifest", s"v${t.latestVersion.get}.json")
+      Files.writeString(mf, Files.readString(mf).replaceAll(""","buckets":\d+""", ""))
+    }
+    val e = intercept[IllegalStateException](sync(200))
+    assert(e.getMessage.contains("rebucket --new-buckets"), e.getMessage)
+    assert(nodes.read().count() === before, "full reads keep working")
+    GraftCli.main(Array("rebucket", "--work-dir", work, "--new-buckets", "4",
+      "--update-tag", "300"))
+    Seq(nodes, edges).foreach(t =>
+      assert(t.latestVersion.flatMap(t.recordedBuckets) === Some(4)))
+    sync(400)
+    assert(nodes.read().count() === before)
+    assert(nodes.read().filter(col("label") === "Page" &&
+      col("lastupdated") === 400L).count() === 500L)
   }
 
   test("cli: remove-orphans collects an aged abandoned version dir, spares committed state") {

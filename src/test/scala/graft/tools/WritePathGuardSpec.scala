@@ -7,7 +7,9 @@ import org.scalatest.funsuite.AnyFunSuite
 /** Write-path guard: bucket-scoped commits happen only inside
   * `SnapshotTable`. Merges, cleanups and index updates go through its
   * one read-modify-write (`SnapshotTable.rewrite`), so the touched-bucket
-  * collect, the scoped read and the commit stay in one place.
+  * collect, the scoped read and the commit stay in one place. The
+  * bucket count those scoped paths use is read from the latest manifest
+  * inside `SnapshotTable` too; no caller restates or re-checks it.
   */
 class WritePathGuardSpec extends AnyFunSuite {
 
@@ -23,5 +25,19 @@ class WritePathGuardSpec extends AnyFunSuite {
       .filter(f => Files.readString(f).contains("commitPhysical("))
       .map(_.toString).toSet
     assert(callers === Set("src/main/scala/graft/snapshot/SnapshotTable.scala"))
+  }
+
+  test("only graft/snapshot/SnapshotTable.scala reads a recorded bucket count in src/main") {
+    val files = scalaFiles(Paths.get("src/main/scala"))
+    val readers = files.filter(f => Files.readString(f).contains("recordedBuckets("))
+      .map(_.toString).toSet
+    assert(readers === Set("src/main/scala/graft/snapshot/SnapshotTable.scala"))
+    val gone = Seq("graph_buckets", "requireBucketsMatch", "commitPartitions")
+    val hits = for {
+      f <- files
+      word <- gone
+      if Files.readString(f).contains(word)
+    } yield s"$f: $word"
+    assert(hits.isEmpty, hits.mkString("\n"))
   }
 }
