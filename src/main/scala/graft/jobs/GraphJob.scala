@@ -60,13 +60,16 @@ final case class GraphJob(name: String, statements: Seq[JobStatement]) {
       val out = spark.sql(sql)
       st.updates match {
         case Some(view) =>
-          // materialize before replacing the view: the plan references the
-          // view it is about to redefine. Reliable checkpoint when a dir
-          // is configured (localCheckpoint blocks die with a lost
-          // executor and their lineage is already cut).
+          // cut the plan from its lineage before replacing the view: the
+          // plan references the view it is about to redefine. The
+          // checkpoint is lazy: AQE's shuffle stages run here, but the
+          // final stage runs inside the job of the first statement that
+          // reads the view, instead of as a job of its own. Reliable
+          // checkpoint when a dir is configured (localCheckpoint blocks
+          // die with a lost executor and their lineage is already cut).
           val frozen =
-            if (spark.sparkContext.getCheckpointDir.isDefined) out.checkpoint()
-            else out.localCheckpoint()
+            if (spark.sparkContext.getCheckpointDir.isDefined) out.checkpoint(eager = false)
+            else out.localCheckpoint(eager = false)
           frozen.createOrReplaceTempView(view)
           state += view -> frozen
         case None => lastRead = Some(out)

@@ -189,9 +189,9 @@ final class KgPipeline(spark: SparkSession, workRoot: String,
   private def runSelected(pagesIn: Dataset[Page], dict: KgPipeline.Dictionary,
                           updateTag: Long, selected: Seq[String]): String => DataFrame = {
     val byName = stages(pagesIn, dict, updateTag).map(s => s.name -> s).toMap
-    // committed outputs are read on first use: each read costs a Spark
-    // job (parquet schema inference) and most outputs only feed a later
-    // stage, or nothing in a partial sync
+    // committed outputs are opened on first use, and once: opening one
+    // runs no Spark job (the manifest records its files and schema), but
+    // most outputs only feed a later stage, or nothing in a partial sync
     val read = mutable.Map.empty[String, DataFrame]
     val output: String => DataFrame =
       name => read.getOrElseUpdate(name, stageTable(name).read())

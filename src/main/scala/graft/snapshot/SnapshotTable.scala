@@ -2,8 +2,15 @@ package graft.snapshot
 
 import java.nio.file.{Files, Path, Paths, StandardCopyOption}
 import scala.jdk.CollectionConverters._
+import com.fasterxml.jackson.databind.JsonNode
+import org.apache.hadoop.fs.{FileStatus, Path => HPath}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.expressions.Expression
+import org.apache.spark.sql.execution.datasources.{FileIndex, HadoopFsRelation, PartitionDirectory}
+import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{ArrayType, DataType, MapType, StructType}
 
 /** Hash-bucket sub-partitioning inside each logical partition:
   * physical partition value = `<logicalValue>~b<pmod(xxhash64(hashCols), n)>`.
@@ -21,6 +28,41 @@ import org.apache.spark.sql.functions._
   * addresses the committed buckets.
   */
 final case class BucketSpec(hashCols: Seq[String], n: Int)
+
+/** One committed physical partition: its data dir (relative to the
+  * table root) and its data files as (name, bytes), sorted by name.
+  */
+private[snapshot] final case class Part(dir: String, files: Seq[(String, Long)])
+
+/** What a read of one version needs: its data schema and its partitions. */
+private[snapshot] final case class Contents(schema: StructType, parts: Map[String, Part])
+
+/** The file index of a snapshot read: exactly the data files a manifest
+  * records, with their recorded sizes, so building a relation lists no
+  * directory. `files` are (absolute file URI, bytes). Two indexes over
+  * the same files are equal, as cache lookups and exchange reuse compare
+  * relations by their index.
+  */
+private[snapshot] final class ManifestFileIndex(val files: Seq[(String, Long)])
+    extends FileIndex {
+  // the partition dirs: only what a plan prints as the scan's location
+  override def rootPaths: Seq[HPath] =
+    files.map(f => new HPath(new java.net.URI(f._1)).getParent).distinct
+  override def listFiles(partitionFilters: Seq[Expression],
+                         dataFilters: Seq[Expression]): Seq[PartitionDirectory] =
+    Seq(PartitionDirectory(InternalRow.empty, files.map { case (f, bytes) =>
+      new FileStatus(bytes, false, 0, 0, 0, new HPath(new java.net.URI(f)))
+    }.toArray))
+  override def inputFiles: Array[String] = files.map(_._1).toArray
+  override def refresh(): Unit = ()
+  override def sizeInBytes: Long = files.map(_._2).sum
+  override def partitionSchema: StructType = new StructType()
+  override def equals(other: Any): Boolean = other match {
+    case o: ManifestFileIndex => files.toSet == o.files.toSet
+    case _ => false
+  }
+  override def hashCode: Int = files.toSet.hashCode
+}
 
 /** Iceberg-style snapshot table over partitioned Parquet.
   *
@@ -47,8 +89,16 @@ final case class BucketSpec(hashCols: Seq[String], n: Int)
   * Layout:
   * {{{
   *   root/data/v{N}/{physicalValue}/part-*.parquet
-  *   root/_manifest/v{N}.json   // commit record + physical value -> data dir
+  *   root/_manifest/v{N}.json   // commit record:
+  *     // partitions: physical value -> data dir
+  *     // files:      physical value -> {data file name -> bytes}
+  *     // schema:     the version's data schema, as Parquet reads it back
   * }}}
+  *
+  * Like an Iceberg scan planned from its manifests, opening a version
+  * lists no directory and reads no footer: the relation is built over
+  * exactly the recorded files with the recorded schema, so it costs no
+  * Spark job.
   *
   * A partitioned table is always bucketed, and keeps the logical
   * partition column in the data files (readers get it for free in one
@@ -133,7 +183,7 @@ final class SnapshotTable(val spark: SparkSession, val root: String,
   // unescaped quote/backslash in one would silently corrupt the manifest
   // and lose partitions on the next read.
   private def writeManifest(v: Long, updateTag: Long, buckets: Int,
-                            parts: Map[String, String]): Unit = {
+                            schema: StructType, parts: Map[String, Part]): Unit = {
     Files.createDirectories(manifestDir)
     val root = SnapshotTable.mapper.createObjectNode()
     root.put("version", v)
@@ -141,49 +191,120 @@ final class SnapshotTable(val spark: SparkSession, val root: String,
     // the bucket count this version was laid out with (0: unpartitioned)
     // — the only source scoped reads and writes take it from
     root.put("buckets", buckets): Unit
+    root.set[JsonNode]("schema", SnapshotTable.mapper.readTree(schema.json)): Unit
+    val sorted = parts.toSeq.sortBy(_._1)
     val p = root.putObject("partitions")
-    parts.toSeq.sortBy(_._1).foreach { case (k, d) => p.put(k, d): Unit }
+    sorted.foreach { case (k, part) => p.put(k, part.dir): Unit }
+    val f = root.putObject("files")
+    sorted.foreach { case (k, part) =>
+      val names = f.putObject(k)
+      part.files.foreach { case (name, bytes) => names.put(name, bytes): Unit }
+    }
     val tmp = manifestDir.resolve(s".v$v.json.tmp")
     Files.writeString(tmp, SnapshotTable.mapper.writeValueAsString(root))
     Files.move(tmp, manifestPath(v), StandardCopyOption.ATOMIC_MOVE)
   }
 
+  private def manifest(v: Long): JsonNode =
+    SnapshotTable.mapper.readTree(Files.readString(manifestPath(v)))
+
+  private def partitionsIn(m: JsonNode): Map[String, String] =
+    m.get("partitions").properties().asScala
+      .map(e => e.getKey -> e.getValue.asText()).toMap
+
   /** physical partition value -> data dir (relative to root) for a version. */
-  def partitionsOf(v: Long): Map[String, String] = {
-    val root = SnapshotTable.mapper.readTree(Files.readString(manifestPath(v)))
-    val it = root.get("partitions").fields()
-    val b = Map.newBuilder[String, String]
-    while (it.hasNext) {
-      val e = it.next()
-      b += e.getKey -> e.getValue.asText()
+  def partitionsOf(v: Long): Map[String, String] = partitionsIn(manifest(v))
+
+  /** Version `v` as a read needs it: its data schema and each physical
+    * partition's data files. A manifest written before the `schema` and
+    * `files` records derives them on the driver: it lists the partition
+    * directories and takes the schema from the first file's footer, as
+    * a Spark multi-path read would (still no Spark job).
+    */
+  private def contentsOf(v: Long): Contents = {
+    val m = manifest(v)
+    val dirs = partitionsIn(m)
+    (Option(m.get("schema")), Option(m.get("files"))) match {
+      case (Some(schema), Some(files)) =>
+        Contents(DataType.fromJson(schema.toString).asInstanceOf[StructType],
+          dirs.map { case (k, dir) =>
+            k -> Part(dir, files.get(k).properties().asScala
+              .map(e => e.getKey -> e.getValue.asLong()).toSeq)
+          })
+      case _ =>
+        val parts = dirs.map { case (k, dir) => k -> listPart(dir) }
+        val first = parts.toSeq.sortBy(_._1)
+          .collectFirst { case (_, Part(dir, (name, _) +: _)) => s"$dir/$name" }
+        Contents(first.fold(new StructType())(footerSchema), parts)
     }
-    b.result()
   }
 
-  def updateTagOf(v: Long): Long =
-    SnapshotTable.mapper.readTree(Files.readString(manifestPath(v)))
-      .get("updateTag").asLong()
+  /** A data dir's data files with their sizes, sorted by name. Hidden
+    * files (`.crc` checksums, `_SUCCESS`) are not data, as for Spark's
+    * own file listing.
+    */
+  private def listPart(dir: String): Part = {
+    val d = Paths.get(root, dir)
+    val files =
+      if (!Files.isDirectory(d)) Seq.empty
+      else listDir(d).map(_.getFileName.toString)
+        .filterNot(n => n.startsWith(".") || n.startsWith("_"))
+        .sorted.map(n => n -> Files.size(d.resolve(n)))
+    Part(dir, files)
+  }
+
+  private def openFooter(rel: String) = {
+    val in = org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(
+      new HPath(Paths.get(root, rel).toUri), spark.sessionState.newHadoopConf())
+    org.apache.parquet.hadoop.ParquetFileReader.open(in)
+  }
+
+  /** The data schema Spark reads back from one data file: the Spark
+    * schema its writer stored in the footer, every field nullable.
+    */
+  private def footerSchema(rel: String): StructType = {
+    val r = openFooter(rel)
+    try SnapshotTable.nullable(DataType.fromJson(r.getFileMetaData.getKeyValueMetaData
+      .get("org.apache.spark.sql.parquet.row.metadata")).asInstanceOf[StructType])
+    finally r.close()
+  }
+
+  def updateTagOf(v: Long): Long = manifest(v).get("updateTag").asLong()
 
   /** Bucket count version `v` was committed with (0: unpartitioned;
     * None: a legacy manifest that predates the record).
     */
   def recordedBuckets(v: Long): Option[Int] =
-    Option(SnapshotTable.mapper.readTree(Files.readString(manifestPath(v)))
-      .get("buckets")).map(_.asInt())
+    Option(manifest(v).get("buckets")).map(_.asInt())
 
   // ---- reads -------------------------------------------------------------
 
-  /** One multi-path relation over data dirs (relative to root). Reads
-    * follow manifest dirs, no bucket arithmetic, so they stay valid
-    * across a re-bucket for time travel.
+  /** One relation over the recorded files of version `v`'s partitions
+    * `keys` (those absent from its manifest are skipped), with `v`'s
+    * schema: no directory listing, no footer, no Spark job. Reads follow
+    * manifest entries, no bucket arithmetic, so they stay valid across a
+    * re-bucket for time travel. None when no key is in the manifest.
     */
-  private def readDirs(rels: Iterable[String]): Option[DataFrame] =
-    if (rels.isEmpty) None
-    else Some(spark.read.parquet(rels.map(rel => s"$root/$rel").toSeq: _*))
+  private def readOf(v: Long, keys: Iterable[String]): Option[DataFrame] = {
+    val c = contentsOf(v)
+    val parts = keys.toSeq.distinct.sorted.flatMap(c.parts.get)
+    if (parts.isEmpty) None
+    else {
+      // each path qualified as Spark's local file listing qualifies the
+      // files it returns, so `inputFiles` equal a Spark read's
+      val fs = new HPath(root).getFileSystem(spark.sparkContext.hadoopConfiguration)
+      def uri(rel: String) = new HPath(Paths.get(root, rel).toAbsolutePath.toString)
+        .makeQualified(fs.getUri, fs.getWorkingDirectory).toUri.toString
+      val index = new ManifestFileIndex(
+        parts.flatMap(p => p.files.map { case (n, bytes) => uri(s"${p.dir}/$n") -> bytes }))
+      Some(spark.baseRelationToDataFrame(HadoopFsRelation(index, new StructType(),
+        c.schema, None, new ParquetFileFormat, Map.empty)(spark)))
+    }
+  }
 
-  /** Read one version (time travel). */
+  /** Read one version (time travel), with that version's schema. */
   def readVersion(v: Long): DataFrame =
-    readDirs(partitionsOf(v).values)
+    readOf(v, partitionsOf(v).keys)
       .getOrElse(sys.error(s"snapshot table $root version $v is empty"))
 
   /** Latest committed state. */
@@ -194,20 +315,15 @@ final class SnapshotTable(val spark: SparkSession, val root: String,
     * version — a pruned scan that never touches other partitions' files.
     */
   def readPartition(value: String): Option[DataFrame] =
-    latestVersion.flatMap(v => readDirs(partitionsOf(v)
-      .collect { case (k, rel) if k.startsWith(value + "~b") => rel }))
+    latestVersion.flatMap(v => readOf(v, partitionsOf(v).keys
+      .filter(_.startsWith(value + "~b"))))
 
   /** Read only the given PHYSICAL partitions of the latest version;
     * values absent from the manifest are skipped. None when nothing
     * matches (caller supplies the empty frame).
     */
   def readPhysical(values: Seq[String]): Option[DataFrame] =
-    latestVersion.flatMap(readPhysicalOf(_, values))
-
-  private def readPhysicalOf(v: Long, values: Seq[String]): Option[DataFrame] = {
-    val parts = partitionsOf(v)
-    readDirs(values.flatMap(parts.get))
-  }
+    latestVersion.flatMap(readOf(_, values))
 
   /** Row-level changelog between two committed versions — the Iceberg
     * `create_changelog_view` / CDC-read analog: one row per key whose
@@ -231,8 +347,7 @@ final class SnapshotTable(val spark: SparkSession, val root: String,
     val pb = partitionsOf(toV)
     val changed = (pa.keySet ++ pb.keySet)
       .filter(k => pa.get(k) != pb.get(k)).toSeq.sorted
-    def side(parts: Map[String, String]) = readDirs(changed.flatMap(parts.get))
-    (side(pa), side(pb)) match {
+    (readOf(fromV, changed), readOf(toV, changed)) match {
       case (Some(b), Some(a)) => SnapshotTable.diff(b, a, keyCols)
       case (Some(b), None) => SnapshotTable.diff(b, b.limit(0), keyCols)
       case (None, Some(a)) => SnapshotTable.diff(a.limit(0), a, keyCols)
@@ -268,11 +383,11 @@ final class SnapshotTable(val spark: SparkSession, val root: String,
     * `values = Some(touched)` restricts the write to those physical
     * partitions (scoped commits); None writes everything present (full
     * commits — no distinct-values pre-pass job). Returns physical value →
-    * data dir for the manifest; values that produced no rows are absent
-    * (an empty partition and a missing one read the same).
+    * its data dir and files for the manifest; values that produced no
+    * rows are absent (an empty partition and a missing one read the same).
     */
   private def writeDataPartitioned(df: DataFrame, v: Long, n: Int,
-                                   values: Option[Seq[String]]): Map[String, String] = {
+                                   values: Option[Seq[String]]): Map[String, Part] = {
     val base = s"data/v$v"
     // keep the logical column in the data; partition dirs carry _pv.
     // Cluster by physical value before the write: without it every task
@@ -290,7 +405,7 @@ final class SnapshotTable(val spark: SparkSession, val root: String,
     listDir(dir)
       .map(_.getFileName.toString)
       .filter(_.startsWith(s"$pvCol="))
-      .map(d => unescapePart(d.stripPrefix(s"$pvCol=")) -> s"$base/$d")
+      .map(d => unescapePart(d.stripPrefix(s"$pvCol=")) -> listPart(s"$base/$d"))
       .toMap
   }
 
@@ -305,11 +420,13 @@ final class SnapshotTable(val spark: SparkSession, val root: String,
     val v = latestVersion.getOrElse(0L) + 1
     bucket match {
       case Some(BucketSpec(_, n)) =>
-        writeManifest(v, updateTag, n, writeDataPartitioned(df, v, n, values = None))
+        writeManifest(v, updateTag, n, SnapshotTable.nullable(df.schema),
+          writeDataPartitioned(df, v, n, values = None))
       case None =>
         val rel = s"data/v$v/all"
         df.write.mode("overwrite").parquet(s"$root/$rel")
-        writeManifest(v, updateTag, 0, Map("all" -> rel))
+        writeManifest(v, updateTag, 0, SnapshotTable.nullable(df.schema),
+          Map("all" -> listPart(rel)))
     }
     v
   }
@@ -328,8 +445,9 @@ final class SnapshotTable(val spark: SparkSession, val root: String,
                            n: Int): Long = {
     val prev = latestVersion
     val v = prev.getOrElse(0L) + 1
-    val carried = prev.map(partitionsOf).getOrElse(Map.empty) -- touched
-    writeManifest(v, updateTag, n, carried ++ writeDataPartitioned(df, v, n, Some(touched)))
+    val carried = prev.fold(Map.empty[String, Part])(contentsOf(_).parts) -- touched
+    writeManifest(v, updateTag, n, SnapshotTable.nullable(df.schema),
+      carried ++ writeDataPartitioned(df, v, n, Some(touched)))
     v
   }
 
@@ -362,31 +480,22 @@ final class SnapshotTable(val spark: SparkSession, val root: String,
         val n = bucketsAfter(prev)
         val touched = valuesOf(delta, bucketedValue(n))
         if (touched.isEmpty) None
-        else Some(commitScoped(f(readPhysicalOf(v, touched)), updateTag, touched, n))
+        else Some(commitScoped(f(readOf(v, touched)), updateTag, touched, n))
     }
   }
 
   /** Per-file committed row counts of a version, straight from the
-    * parquet footers — NO Spark job. Powers lineage rows and benchmark
-    * page counts; a count() job on tiny committed tables costs more in
-    * scheduling than the data.
+    * parquet footers of its recorded files — NO Spark job. Powers
+    * lineage rows and benchmark page counts; a count() job on tiny
+    * committed tables costs more in scheduling than the data.
     */
-  def fileRowCounts(v: Long): Seq[Long] = {
-    val conf = spark.sessionState.newHadoopConf()
-    partitionsOf(v).toSeq.sortBy(_._1).flatMap { case (_, rel) =>
-      val dir = Paths.get(root, rel)
-      if (!Files.isDirectory(dir)) Seq.empty
-      else listDir(dir)
-        .filter(p => p.getFileName.toString.endsWith(".parquet"))
-        .sortBy(_.getFileName.toString)
-        .map { p =>
-          val in = org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(
-            new org.apache.hadoop.fs.Path(p.toUri), conf)
-          val r = org.apache.parquet.hadoop.ParquetFileReader.open(in)
-          try r.getRecordCount finally r.close()
-        }
+  def fileRowCounts(v: Long): Seq[Long] =
+    contentsOf(v).parts.toSeq.sortBy(_._1).flatMap { case (_, Part(dir, files)) =>
+      files.map { case (name, _) =>
+        val r = openFooter(s"$dir/$name")
+        try r.getRecordCount finally r.close()
+      }
     }
-  }
 
   /** Total committed rows of the latest version (footer-based, no job). */
   def rowCount(): Long = fileRowCounts(latestVersion.getOrElse(
@@ -514,6 +623,20 @@ final class SnapshotTable(val spark: SparkSession, val root: String,
 
 object SnapshotTable {
   private val mapper = new com.fasterxml.jackson.databind.ObjectMapper()
+
+  /** `t` with every field, element and value nullable — the schema a
+    * Parquet read hands back, whatever the writer's nullability.
+    */
+  private[snapshot] def nullable(t: StructType): StructType =
+    StructType(t.fields.map(f => f.copy(dataType = nullableType(f.dataType), nullable = true)))
+
+  private def nullableType(t: DataType): DataType = t match {
+    case s: StructType => nullable(s)
+    case a: ArrayType => ArrayType(nullableType(a.elementType), containsNull = true)
+    case m: MapType => MapType(nullableType(m.keyType), nullableType(m.valueType),
+      valueContainsNull = true)
+    case other => other
+  }
 
   /** Key-wise row diff of two same-schema frames: op ∈ insert (key only
     * in `after`) / delete (only in `before`) / update (present in both

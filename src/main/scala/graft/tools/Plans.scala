@@ -34,11 +34,24 @@ object Plans {
       Console.withOut(new java.io.PrintStream(bos, true, "UTF-8")) {
         df.explain("formatted")
       }
-      val plan = bos.toString("UTF-8")
+      val plan = stableScratchDirs(bos.toString("UTF-8"))
       sb.append(s"\n## ${q.name}\n\n```\n$plan```\n")
     }
     Files.writeString(Paths.get(out), sb.toString)
     println(s"[plans] wrote ${SparkEntry.all.size} plans to $out")
     spark.stop()
   }
+
+  /** `plan` with each per-run scratch dir (`<tmpDir>/<prefix><random
+    * digits>`, made by [[Graft.scratchDir]]) written as the stable
+    * `<scratch>/<prefix>`, so regenerating PLANS.md rewrites only the
+    * plans that changed.
+    */
+  def stableScratchDirs(plan: String,
+                        tmpDir: String = System.getProperty("java.io.tmpdir")): String =
+    // the dir must start a path: after `file:`, `file://`, a line start,
+    // a space, `[`, `(` or `,` — not inside one such as /var/tmp
+    plan.replaceAll("(?m)(?<=^|[\\s\\[(,:]|://)" +
+      java.util.regex.Pattern.quote(tmpDir.stripSuffix("/")) + "/([A-Za-z]+)\\d+",
+      "<scratch>/$1")
 }

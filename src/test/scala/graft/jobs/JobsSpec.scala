@@ -172,6 +172,43 @@ class JobsSpec extends SparkSpecBase {
     assert(cleared.isEmpty)
   }
 
+  test("GraphJob: an updates view is checkpointed lazily — a filter runs no Spark job in run, and the output equals an eager run") {
+    val t = graft.snapshot.SnapshotTable(spark, s"${tmp()}/nodes")
+    t.commit(spark.range(200).select(col("id").cast("string").as("id"),
+      (col("id") % 3).as("g"), (col("id") * 2).as("w")), 1L)
+    val job = GraphJob.fromJson(
+      """{ "name": "lazy",
+        |  "statements": [
+        |    {"query": "SELECT id, g, w FROM nodes WHERE g = 1", "updates": "nodes"},
+        |    {"query": "SELECT id, g + 1 AS g, w * 10 AS w FROM nodes", "updates": "nodes"},
+        |    {"query": "SELECT g, count(*) AS n, sum(w) AS s FROM nodes GROUP BY g"}
+        |  ]}""".stripMargin)
+    val filterOnly = job.copy(statements = job.statements.take(1) :+ job.statements.last)
+    val ((_, lazyOut), jobs) = sparkJobs(filterOnly.run(spark, Map("nodes" -> t.read()), Map.empty))
+    assert(jobs === 0, s"GraphJob.run ran $jobs Spark jobs")
+
+    // the same statements, each updates view checkpointed eagerly
+    def eager(j: GraphJob): Seq[String] = {
+      t.read().createOrReplaceTempView("nodes")
+      var last: Option[org.apache.spark.sql.DataFrame] = None
+      j.statements.foreach { st =>
+        val out = spark.sql(st.query)
+        st.updates match {
+          case Some(v) => out.localCheckpoint().createOrReplaceTempView(v)
+          case None => last = Some(out)
+        }
+      }
+      last.get.collect().map(_.toString).sorted.toSeq
+    }
+    assert(lazyOut.get.collect().map(_.toString).sorted.toSeq === eager(filterOnly))
+    // a view that redefines itself reads its previous state, not itself
+    val (state, out) = job.run(spark, Map("nodes" -> t.read()), Map.empty)
+    val got = out.get.collect().map(_.toString).sorted.toSeq
+    assert(got === eager(job))
+    assert(got === Seq("[2,67,134000]"))
+    assert(state("nodes").count() === 67L)
+  }
+
   test("GraphJob.fromDirectory loads the job corpus sorted") {
     val dir = tmp()
     Files.writeString(java.nio.file.Paths.get(dir, "b.json"),

@@ -143,7 +143,7 @@ class GraphMergeSpec extends SparkSpecBase {
       "Cleanup.clearProperties leaked a cached frame")
   }
 
-  test("a 2-row load into an existing graph runs at most 21 Spark jobs") {
+  test("a 2-row load into an existing graph runs at most 17 Spark jobs") {
     val root = tmp()
     val nodes = GraphTables.nodes(spark, root)
     val edges = GraphTables.edges(spark, root)
@@ -151,13 +151,9 @@ class GraphMergeSpec extends SparkSpecBase {
     GraphMerge.load(spark, Seq(("acct1", "p")).toDF("aid", "name"),
       accountSchema, Map.empty, 100L, nodes, edges)
     GraphMerge.load(spark, assets("a1", "a2"), assetSchema, kw, 100L, nodes, edges)
-    val sc = spark.sparkContext
-    val group = s"merge-budget-${System.nanoTime()}"
-    sc.setJobGroup(group, "2-row load")
-    try GraphMerge.load(spark, assets("a2", "a3"), assetSchema, kw, 200L, nodes, edges)
-    finally sc.clearJobGroup()
-    val jobs = sc.statusTracker.getJobIdsForGroup(group).length
-    assert(jobs <= 21, s"the load ran $jobs Spark jobs")
+    val (_, jobs) = sparkJobs(
+      GraphMerge.load(spark, assets("a2", "a3"), assetSchema, kw, 200L, nodes, edges))
+    assert(jobs <= 17, s"the load ran $jobs Spark jobs")
     assert(relsOf(edges).count(_._3 == "RESOURCE") === 3)
   }
 

@@ -105,6 +105,8 @@ class BucketedSnapshotSpec extends SparkSpecBase {
   private def table(root: String, n: Int): SnapshotTable =
     SnapshotTable(spark, s"$root/t", Some("label"), Some(BucketSpec(Seq("id"), n)))
 
+  private val mapper = new com.fasterxml.jackson.databind.ObjectMapper()
+
   private def rowsOf(t: SnapshotTable): Seq[String] =
     t.read().select("label", "id", "v").collect().map(_.toString).sorted.toSeq
 
@@ -170,6 +172,49 @@ class BucketedSnapshotSpec extends SparkSpecBase {
     } === Some(3L))
     assert(t.read().filter(col("v") === -1L).count() === 1L)
     assert(t.read().count() === 40L)
+  }
+
+  test("a manifest without schema and files records reads the same rows and schema with no Spark job; the next commit records both") {
+    val root = tmp()
+    val t = table(root, 8)
+    t.commit(rows40, 1L)
+    val (schema, rows) = (t.read().schema, rowsOf(t))
+    val mf = Paths.get(s"$root/t", "_manifest", "v1.json")
+    val full = mapper.readTree(Files.readString(mf))
+    val legacy = full.deepCopy[com.fasterxml.jackson.databind.node.ObjectNode]()
+    legacy.remove(java.util.List.of("schema", "files")): Unit
+    Files.writeString(mf, mapper.writeValueAsString(legacy))
+
+    val (df, jobs) = sparkJobs(t.read())
+    assert(jobs === 0, s"a legacy open ran $jobs Spark jobs")
+    assert(df.schema === schema)
+    assert(rowsOf(t) === rows)
+    assert(sparkJobs(t.readPartition("L").get)._2 === 0)
+
+    val one = rows40.filter(col("id") === "id0").withColumn("v", lit(-1L))
+    assert(t.rewrite(one, 2L)(_.get.filter(col("id") =!= "id0").unionByName(one)) === Some(2L))
+    val v2 = mapper.readTree(Files.readString(Paths.get(s"$root/t", "_manifest", "v2.json")))
+    assert(v2.get("schema") === full.get("schema"))
+    val carried = t.partitionsOf(1L).filter { case (k, dir) => t.partitionsOf(2L)(k) == dir }
+    assert(carried.nonEmpty)
+    carried.keys.foreach(k => assert(v2.get("files").get(k) === full.get("files").get(k), k))
+    assert(v2.get("files").size() === t.partitionsOf(2L).size)
+    assert(t.read().filter(col("v") === -1L).count() === 1L)
+  }
+
+  test("time travel reads each version with its own schema: v2 adds a column, readVersion(1) does not have it") {
+    val t = table(tmp(), 8)
+    t.commit(rows40, 1L)
+    val one = rows40.filter(col("id") === "id5").withColumn("note", lit("new"))
+    t.rewrite(one, 2L)(_.get.filter(col("id") =!= "id5").withColumn("note", lit(null).cast("string"))
+      .unionByName(one))
+    assert(t.readVersion(1L).columns.toSeq === Seq("label", "id", "v"))
+    assert(t.read().columns.toSeq === Seq("label", "id", "v", "note"))
+    assert(t.read().count() === 40L)
+    // partitions carried from v1 have no `note` column in their files
+    assert(t.read().filter(col("note") === "new").select("id").collect().map(_.getString(0))
+      .toSeq === Seq("id5"))
+    assert(t.readVersion(1L).count() === 40L)
   }
 
   test("a partitioned table must be bucketed") {

@@ -10,6 +10,8 @@ import org.scalatest.funsuite.AnyFunSuite
   * collect, the scoped read and the commit stay in one place. The
   * bucket count those scoped paths use is read from the latest manifest
   * inside `SnapshotTable` too; no caller restates or re-checks it.
+  * Reads are opened from the manifest's schema and file records, never
+  * by a Spark Parquet read that infers a schema and lists directories.
   */
 class WritePathGuardSpec extends AnyFunSuite {
 
@@ -39,5 +41,11 @@ class WritePathGuardSpec extends AnyFunSuite {
       if Files.readString(f).contains(word)
     } yield s"$f: $word"
     assert(hits.isEmpty, hits.mkString("\n"))
+  }
+
+  test("SnapshotTable opens no read through spark.read.parquet") {
+    val src = Files.readString(Paths.get("src/main/scala/graft/snapshot/SnapshotTable.scala"))
+    assert(!src.contains("read.parquet"))
+    assert(src.contains("ManifestFileIndex"))
   }
 }
