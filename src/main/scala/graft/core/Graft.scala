@@ -23,7 +23,12 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * 287-288, and `graft.Verify` at sf0.01 compiles 4,966 sources, 2,598 of
   * them distinct. At [[CodegenCacheEntries]] a repeated `query_mix` pass
   * compiles none (`CodegenCacheSpec`) and Verify compiles each source
-  * once.
+  * once. The cache is keyed by the generated source, and by default a
+  * whole-stage class is named after its codegen stage id, which AQE
+  * assigns in the order it plans query stages; a re-run whose stages
+  * complete in another order renamed, and so recompiled, the same
+  * pipeline (a repeated `qdd4_minhash_lsh` compiled 4 classes in about
+  * one pass of ten). So generated class names carry no stage id.
   */
 object Graft {
 
@@ -37,6 +42,7 @@ object Graft {
     */
   private val defaults = Seq(
     "spark.sql.codegen.cache.maxEntries" -> CodegenCacheEntries.toString,
+    "spark.sql.codegen.useIdInClassName" -> "false",
     "spark.hadoop.fs.file.impl" -> classOf[PosixLocalFileSystem].getName)
 
   private def configured(b: org.apache.spark.sql.SparkSession.Builder,

@@ -46,20 +46,13 @@ import graft.snapshot.SnapshotTable
   *   stage dir (independent checkpoint/resume per tenant) while every
   *   tenant merges into ONE shared graph — the reference's per-account
   *   sync loop over a single Neo4j instance (`_sync_multiple_accounts`).
-  * @param maintainEdgeIndex attaches the reverse endpoint index
-  *   ([[graft.merge.EdgeEndpointIndex]]) to every edge commit this
-  *   pipeline makes, which is what keeps index-backed DETACH sound — the
-  *   index must see every commit from the graph's FIRST edge write (or a
-  *   `rebuild` must run). Built over this pipeline's edge table so
-  *   bucket arithmetic can never drift.
   * @param graphBuckets lays out a NEW graph only; an existing graph keeps
   *   the bucket count its manifests record.
   */
 final class KgPipeline(spark: SparkSession, workRoot: String,
                        graphBuckets: Int = GraphTables.DefaultBuckets,
                        graphRoot: Option[String] = None,
-                       maxBroadcastAliases: Long = KgPipeline.MaxBroadcastAliases,
-                       maintainEdgeIndex: Boolean = false) {
+                       maxBroadcastAliases: Long = KgPipeline.MaxBroadcastAliases) {
   import spark.implicits._
   import KgPipeline.{DriverDictionary, TableDictionary}
 
@@ -73,15 +66,6 @@ final class KgPipeline(spark: SparkSession, workRoot: String,
   // fraction stays proportional to the batch
   val nodes: SnapshotTable = GraphTables.nodes(spark, graphDir, graphBuckets)
   val edges: SnapshotTable = GraphTables.edges(spark, graphDir, graphBuckets)
-
-  /** The endpoint index this pipeline maintains (None unless
-    * `maintainEdgeIndex`); hand it to [[graft.merge.Cleanup.run]] for
-    * the batch-proportional DETACH sweep.
-    */
-  val edgeIndex: Option[graft.merge.EdgeEndpointIndex] =
-    if (maintainEdgeIndex)
-      Some(graft.merge.EdgeEndpointIndex(edges))
-    else None
 
   /** True if `name` already committed for this updateTag (resume). */
   def stageDone(name: String, updateTag: Long): Boolean = {
@@ -216,6 +200,8 @@ final class KgPipeline(spark: SparkSession, workRoot: String,
 
   /** Run (or resume) every stage — all but `merge` (the graph upsert)
     * when `mergeGraph` is false — and return the committed outputs.
+    * Pass driver rows as `DriverDictionary(rows)`; resolve a table-backed
+    * dictionary with [[KgPipeline.dictionary]].
     */
   def run(pagesIn: Dataset[Page], dict: KgPipeline.Dictionary, updateTag: Long,
           mergeGraph: Boolean): Result = {
@@ -224,18 +210,6 @@ final class KgPipeline(spark: SparkSession, workRoot: String,
     Result(pagesIn.toDF(), out("extract"), KgPipeline.linksView(out("facts")),
       out("canonical"), out("triples"))
   }
-
-  /** Driver-resident dictionary entrypoint (tests, small syncs). */
-  def run(pagesIn: Dataset[Page], dict: Seq[AliasRow], updateTag: Long,
-          mergeGraph: Boolean = true): Result =
-    run(pagesIn, DriverDictionary(dict), updateTag, mergeGraph)
-
-  /** Table-native dictionary entrypoint — the 100 TB shape; see
-    * [[KgPipeline.dictionary]] for the broadcast-vs-sharded choice.
-    */
-  def run(pagesIn: Dataset[Page], dict: Dataset[AliasRow], updateTag: Long,
-          mergeGraph: Boolean): Result =
-    run(pagesIn, KgPipeline.dictionary(dict, maxBroadcastAliases), updateTag, mergeGraph)
 
   /** Config-selected partial sync: run ONLY the named stages, in the
     * given order, against this work dir. A later stage reads its inputs
@@ -291,7 +265,7 @@ final class KgPipeline(spark: SparkSession, workRoot: String,
     GraphMerge.upsertEdgeBatch(spark,
       KgPipeline.mentionEdges(linksDf, canonicalDf, updateTag)
         .unionByName(KgPipeline.tripleEdges(triplesDf, updateTag)),
-      updateTag, edges, edgeIndex = edgeIndex)
+      updateTag, edges)
   }
 }
 

@@ -77,19 +77,16 @@ object Cleanup {
   private def bucketsOf(existing: Option[DataFrame], what: String): DataFrame =
     existing.getOrElse(sys.error(s"$what buckets vanished mid-cleanup"))
 
-  /** With `edgeIndex` (an [[EdgeEndpointIndex]] maintained on every edge
-    * commit of this graph) the DETACH sweep reads ONLY the edge
-    * partitions the index names for the deleted nodes — batch-
-    * proportional instead of table-proportional. Without it, the sweep
-    * falls back to the full-scan semi-join (correct at any scale, reads
-    * everything once). Soundness is checked, not assumed: the index's
-    * coverage marker must prove every edge commit was indexed, otherwise
-    * this method warns and uses the full scan.
+  /** One cleanup pass for `schema` at `updateTag` (steps 1-3 above).
+    * The DETACH sweep is one full-scan semi-join of the edge table
+    * against the deleted ids: a deleted node's edges can carry any
+    * rel label, and edge buckets hash (src_id, dst_id) jointly, so no
+    * partition of the table can be skipped. It runs only when a node
+    * was deleted.
     */
   def run(spark: SparkSession, schema: NodeSchema,
           kwargs: Map[String, String], updateTag: Long,
-          nodes: SnapshotTable, edges: SnapshotTable,
-          edgeIndex: Option[EdgeEndpointIndex] = None): CleanupStats = {
+          nodes: SnapshotTable, edges: SnapshotTable): CleanupStats = {
     val subId = schema.subResource.map(sr => kwargs.getOrElse(sr.ref.name,
       sys.error(s"cleanup requires kwarg '${sr.ref.name}' — " +
         "sub-resource scoping is mandatory (cleanupbuilder.py:191-206)")))
@@ -136,31 +133,13 @@ object Cleanup {
               base.filter(col("dst_label") === schema.label)
                 .join(r, col("dst_id") === col(renamed), "left_semi"))
         }
-        // detach: any edge touching a deleted node of this label. A
-        // deleted node's edges can carry ANY rel_label and edge buckets
-        // hash (src_id, dst_id) jointly, so without help neither side
-        // prunes — the endpoint index names the exact partition subset.
-        // The index path is gated on its coverage marker: if ANY edge
-        // commit bypassed the index, soundForDetach is false and the sweep
-        // falls back to the full scan (correct, just table-proportional)
-        // instead of silently leaving dangling edges.
-        val soundIndex = edgeIndex.filter(_.soundForDetach)
-        if (edgeIndex.isDefined && soundIndex.isEmpty)
-          System.err.println(s"[cleanup] endpoint index at " +
-            s"${edgeIndex.get.table.root} does not cover every edge commit " +
-            "(a commit ran without it, or it was attached mid-life without " +
-            "rebuild) — falling back to the full-scan DETACH sweep")
-        val detachState = soundIndex match {
-          case Some(ix) if nDeleted > 0 =>
-            edges.readPhysical(ix.edgePartitionsFor(schema.label, staleNodes))
-              .getOrElse(GraphTables.emptyEdges(spark))
-          case None if nDeleted > 0 => edges.read()
-          case _ => GraphTables.emptyEdges(spark) // nothing deleted
-        }
+        // detach: any edge touching a deleted node of this label
+        val detachState =
+          if (nDeleted > 0) edges.read() else GraphTables.emptyEdges(spark)
         val detached = touching(detachState, staleNodes, "_sid")
         // stale rels of this schema's rel labels, scoped to this node label
         // AND to the tenant being synced. The labels are the table's
-        // partition column — read ONLY those partitions (no index needed).
+        // partition column — read ONLY those partitions.
         val relState = relSet.toSeq.sorted.flatMap(edges.readPartition)
           .reduceOption(_ unionByName _)
           .getOrElse(GraphTables.emptyEdges(spark))
@@ -174,9 +153,7 @@ object Cleanup {
           val n = doomed.count()
           if (n > 0) {
             // bucket-precise: rewrite only the (rel_label, bucket) partitions
-            // that contain doomed edges. A delete-only rewrite cannot break
-            // the index's superset property — advance its coverage marker
-            // across this commit.
+            // that contain doomed edges
             edges.rewrite(doomed, updateTag) { existing =>
               bucketsOf(existing, "doomed")
                 .join(doomed.select(col("src_label").as("_dsl"), col("src_id").as("_dsi"),
@@ -186,7 +163,7 @@ object Cleanup {
                     col("rel_label") === col("_drl") && col("dst_label") === col("_ddl") &&
                     col("dst_id") === col("_ddi"),
                   "left_anti")
-            }.foreach(v => edgeIndex.foreach(_.coverDeleteCommit(v)))
+            }: Unit
           }
           n
         } finally doomed.unpersist(): Unit

@@ -194,17 +194,10 @@ object GraphMerge {
     * Precondition: the batch is key-unique on (src_label, src_id,
     * rel_label, dst_label, dst_id) — aggregation outputs and
     * [[load]]'s per-rel dedup are; the merge does not re-check it.
-    *
-    * With `edgeIndex`, the index is written BEFORE the edge commit: a
-    * crash between the two commits must leave the index over-
-    * approximating (harmless extra reads), never under-approximating
-    * (missed DETACHes) — its documented contract. Coverage is only
-    * CONFIRMED after the edge commit exists.
     */
   def upsertEdgeBatch(spark: SparkSession, batch: DataFrame, updateTag: Long,
-                      edges: SnapshotTable,
-                      edgeIndex: Option[EdgeEndpointIndex] = None): Unit =
-    merge(edges, batch, EdgeKeys, updateTag, edgeIndex, cacheFirstCommit = true)
+                      edges: SnapshotTable): Unit =
+    merge(edges, batch, EdgeKeys, updateTag, cacheFirstCommit = true)
 
   /** Upsert a precomputed batch of canonical node rows spanning one or
     * more labels in a single merge + single commit — the fused fast path
@@ -217,8 +210,7 @@ object GraphMerge {
     */
   def upsertNodeBatch(spark: SparkSession, batch: DataFrame, updateTag: Long,
                       nodes: SnapshotTable): Unit =
-    merge(nodes, batch, NodeKeys, updateTag, edgeIndex = None,
-      cacheFirstCommit = false)
+    merge(nodes, batch, NodeKeys, updateTag, cacheFirstCommit = false)
 
   /** The one MERGE commit: upsert `batch` into the buckets it hashes
     * into (SnapshotTable.rewrite). The batch is read twice on every path
@@ -232,15 +224,13 @@ object GraphMerge {
     * commit measured slower than the cache round-trip it saved.
     */
   private def merge(table: SnapshotTable, batch: DataFrame, keys: Seq[String],
-                    updateTag: Long, edgeIndex: Option[EdgeEndpointIndex],
-                    cacheFirstCommit: Boolean): Unit = {
+                    updateTag: Long, cacheFirstCommit: Boolean): Unit = {
     val cache = cacheFirstCommit || table.exists
     if (cache) batch.persist()
     try {
       table.rewrite(batch, updateTag) { existing =>
-        edgeIndex.foreach(_.update(batch, updateTag))
         existing.fold(batch)(upsert(_, batch, keys, updateTag))
-      }.foreach(_ => edgeIndex.foreach(_.confirmCoverage()))
+      }: Unit
     } finally if (cache) batch.unpersist(): Unit
   }
 
@@ -276,8 +266,7 @@ object GraphMerge {
   def load(spark: SparkSession, batch: DataFrame, schema: NodeSchema,
            kwargs: Map[String, String], updateTag: Long,
            nodes: SnapshotTable, edges: SnapshotTable,
-           selectedRels: Option[Set[String]] = None,
-           edgeIndex: Option[EdgeEndpointIndex] = None): Unit = {
+           selectedRels: Option[Set[String]] = None): Unit = {
     val (selSubRes, selOtherRels) = filterSelectedRels(schema, selectedRels)
     if (batch.isEmpty) return // no-op on empty input (tx.py:253)
 
@@ -354,6 +343,6 @@ object GraphMerge {
     }
     val allEdges = (subEdges ++ otherEdges).reduceOption(_ unionByName _)
 
-    allEdges.foreach(upsertEdgeBatch(spark, _, updateTag, edges, edgeIndex))
+    allEdges.foreach(upsertEdgeBatch(spark, _, updateTag, edges))
   }
 }

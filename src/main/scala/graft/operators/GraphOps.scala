@@ -473,42 +473,6 @@ object GraphOps {
       .orderBy("label", "id")
   }
 
-  /** q31: the q14 cleanup scenario driven through the [[graft.merge.EdgeEndpointIndex]]
-    * — every edge commit maintains the reverse endpoint index and the
-    * DETACH sweep reads only the partitions the index names instead of
-    * the whole edges table. The oracle is the SAME expected state as the
-    * full-scan path (q14): the index must change what cleanup READS,
-    * never what it deletes.
-    */
-  def q31IndexedCleanup(spark: SparkSession, sfDir: String): DataFrame = {
-    import graft.merge.EdgeEndpointIndex
-    val root = tempRoot()
-    val nodes = GraphTables.nodes(spark, root)
-    val edges = GraphTables.edges(spark, root)
-    val ix = Some(EdgeEndpointIndex(edges))
-    val nat = Graft.table(spark, sfDir, "nation")
-      .filter(col("n_nationkey") === 1)
-      .select(col("n_nationkey").cast("string").as("nid"), col("n_name"))
-    GraphMerge.load(spark, nat, NodeSchema("Nation", RowRef("nid"),
-      properties = Map("name" -> RowRef("n_name"))), Map.empty, 100L,
-      nodes, edges, edgeIndex = ix)
-    val all = customersOf(spark, sfDir, 1)
-    val kw = Map("nation_id" -> "1")
-    GraphMerge.load(spark, all, customerSchema, kw, 100L, nodes, edges,
-      edgeIndex = ix)
-    GraphMerge.load(spark, all.filter(col("cid").cast("long") % 2 === 0),
-      customerSchema, kw, 200L, nodes, edges, edgeIndex = ix)
-    Cleanup.run(spark, customerSchema, kw, 200L, nodes, edges, edgeIndex = ix)
-    val nodeSide = nodes.read().filter(col("label") === "Customer")
-      .select(col("id"), col("firstseen"), col("lastupdated"))
-    val edgeSide = edges.read().filter(col("rel_label") === "RESOURCE")
-      .groupBy(col("dst_id").as("id")).agg(count(lit(1)).as("n_res_edges"))
-    nodeSide.join(edgeSide, Seq("id"), "left")
-      .select(col("id"), col("firstseen"), col("lastupdated"),
-        coalesce(col("n_res_edges"), lit(0L)).as("n_res_edges"))
-      .orderBy(col("id"))
-  }
-
   /** intercept a MultiTenantSyncException (anything else propagates). */
   private def intercept2(body: => Any): graft.jobs.MultiTenant.MultiTenantSyncException =
     try { body; sys.error("expected the aggregated multi-tenant failure") }
@@ -618,14 +582,6 @@ object GraphOps {
         |  UNION ALL SELECT 'all', 'RESOURCE', (SELECT COUNT(*) FROM o)
         |  UNION ALL SELECT 'subset', 'PLACED_BY', (SELECT COUNT(*) FROM o)) t
         |ORDER BY run, rel_label""".stripMargin),
-    // q31 runs the q14 scenario through the endpoint-index DETACH path;
-    // the expected state is identical by contract.
-    Query("q31_indexed_cleanup", q31IndexedCleanup,
-      """SELECT CAST(c_custkey AS VARCHAR) AS id,
-        | CAST(100 AS BIGINT) AS firstseen, CAST(200 AS BIGINT) AS lastupdated,
-        | CAST(1 AS BIGINT) AS n_res_edges
-        |FROM customer WHERE c_nationkey = 1 AND c_custkey % 2 = 0
-        |ORDER BY id""".stripMargin),
     // q30 expected state: round 1 synced both tenants at tag 100 and ran
     // the gated post job (post_run_tag=100 on both Nation containers);
     // round 2 refreshed tenant 1's even customers at tag 200 and cleaned

@@ -27,8 +27,8 @@ object KgOps {
     cache.getOrElseUpdate(sfDir, {
       val work = graft.core.Graft.scratchDir("kgops")
       val pipe = new KgPipeline(spark, work)
-      val res = pipe.run(Corpus.pages(spark, sfDir), Corpus.aliasRows, 100L,
-        mergeGraph = true)
+      val res = pipe.run(Corpus.pages(spark, sfDir),
+        KgPipeline.DriverDictionary(Corpus.aliasRows), 100L, mergeGraph = true)
       (pipe, res)
     })
 

@@ -451,8 +451,8 @@ final class SnapshotTable(val spark: SparkSession, val root: String,
     v
   }
 
-  /** The one bucket-precise read-modify-write: every merge, cleanup and
-    * index update commits through here. `delta` names the rows a write
+  /** The one bucket-precise read-modify-write: every merge and cleanup
+    * commits through here. `delta` names the rows a write
     * touches; `f` gets the current state of exactly the physical
     * partitions `delta` hashes into (None when there are none) and
     * returns their new contents, which replace those partitions while
@@ -464,10 +464,6 @@ final class SnapshotTable(val spark: SparkSession, val root: String,
     * On a table with no version yet, `f(None)` IS the table: one full
     * [[commit]] with no touched-partition pre-pass, made only when
     * `delta` is non-empty.
-    *
-    * `f` runs after the touched partitions are read and immediately
-    * before the commit, so state that must precede the commit (the edge
-    * endpoint index) is written inside it.
     *
     * Returns the committed version, or None when nothing was committed.
     */
@@ -640,8 +636,9 @@ object SnapshotTable {
 
   /** Key-wise row diff of two same-schema frames: op ∈ insert (key only
     * in `after`) / delete (only in `before`) / update (present in both
-    * with any non-key difference, null-safely compared); unchanged keys
-    * emit nothing. Non-key columns are returned as `_before`/`_after`
+    * with any non-key difference, null-safely compared; a map column
+    * compares by its sorted entries); unchanged keys emit nothing.
+    * Non-key columns are returned, as they are, in `_before`/`_after`
     * structs so callers project what they need. The join is a single
     * full-outer co-partitioned on the keys.
     */
@@ -661,11 +658,20 @@ object SnapshotTable {
       else struct(nonKey.map(col): _*)
     val b = before.select(keyCols.map(col) :+ payload.as("_before"): _*)
     val a = after.select(keyCols.map(col) :+ payload.as("_after"): _*)
+    // a map has no ordering, so `<=>` rejects it: compare its entries
+    // sorted by key, as DriftStates canonicalizes maps
+    val maps = nonKey.filter(c => before.schema(c).dataType.isInstanceOf[MapType]).toSet
+    def comparable(side: String): Column =
+      if (maps.isEmpty) col(side)
+      else struct(nonKey.map { c =>
+        val f = col(side).getField(c)
+        (if (maps(c)) sort_array(map_entries(f)) else f).as(c)
+      }: _*)
     b.join(a, keyCols, "full_outer")
       .withColumn("op",
         when(col("_before").isNull, lit("insert"))
           .when(col("_after").isNull, lit("delete"))
-          .when(!(col("_before") <=> col("_after")), lit("update")))
+          .when(!(comparable("_before") <=> comparable("_after")), lit("update")))
       .filter(col("op").isNotNull)
       .select(keyCols.map(col) ++ Seq(col("op"), col("_before"),
         col("_after")): _*)
@@ -673,8 +679,8 @@ object SnapshotTable {
 
   /** Recursive delete with the stream CLOSED per directory (`Files.list`
     * holds a file descriptor until GC) — the one filesystem-deletion
-    * helper, shared by expire/orphan maintenance and the CLI's rebucket
-    * index drop so there is a single idiom to keep correct.
+    * helper, shared by expire/orphan maintenance and the session's
+    * scratch cleanup so there is a single idiom to keep correct.
     */
   def deleteTree(p: Path): Unit = {
     if (Files.isDirectory(p)) {

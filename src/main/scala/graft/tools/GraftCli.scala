@@ -37,13 +37,12 @@ object GraftCli {
       |            [--tenants T1,T2,.. [--best-effort true]]
       |            (with --tenants, --input is a template containing {tenant})
       |            [--analysis-job-dir JOBS|none --out DIR] [--graph-buckets N]
-      |            [--edge-index true] [--cores N]
+      |            [--cores N]
       |            (analysis runs LAST, like the reference: default is the
       |             shipped corpus under data/jobs/analysis -> WORKDIR/analysis;
       |             --analysis-job-dir none disables)
       |            (--graph-buckets sizes a new graph; an existing graph keeps
       |             its recorded layout)
-      |  index-rebuild --work-dir DIR --update-tag N
       |  rebucket  --work-dir DIR --new-buckets N --update-tag T [--cores N]
       |  expire    --work-dir DIR --keep N
       |  remove-orphans --work-dir DIR --older-than-hours H
@@ -125,7 +124,7 @@ object GraftCli {
 
   /** Accepted flags per subcommand — the argparse-style schema: a typo'd
     * flag or config key must fail fast, not silently fall back to a
-    * default (`--edgeindex true` running with the index OFF is exactly
+    * default (`--graphbuckets 64` running at the default count is exactly
     * the misconfiguration class the reference's argparse rejects).
     * `--cores` and `--config` are global.
     */
@@ -134,8 +133,7 @@ object GraftCli {
     Map(
       "sync" -> (global ++ Set("input", "dict", "work-dir", "update-tag",
         "selected-modules", "tenants", "best-effort", "analysis-job-dir",
-        "out", "params", "graph-buckets", "edge-index")),
-      "index-rebuild" -> (global ++ Set("work-dir", "update-tag")),
+        "out", "params", "graph-buckets")),
       "rebucket" -> (global ++ Set("work-dir", "new-buckets", "update-tag")),
       "expire" -> (global ++ Set("work-dir", "keep")),
       "remove-orphans" -> (global ++ Set("work-dir", "older-than-hours")),
@@ -168,7 +166,6 @@ object GraftCli {
 
   def main(args: Array[String]): Unit = args.toSeq match {
     case "sync" +: rest => sync(flagsFor("sync", rest))
-    case "index-rebuild" +: rest => indexRebuild(flagsFor("index-rebuild", rest))
     case "rebucket" +: rest => rebucket(flagsFor("rebucket", rest))
     case "expire" +: rest => expire(flagsFor("expire", rest))
     case "remove-orphans" +: rest => removeOrphans(flagsFor("remove-orphans", rest))
@@ -213,10 +210,6 @@ object GraftCli {
     postJobDir.foreach { _ => parseParams(flags): Unit }
     val buckets = flags.getOrElse("graph-buckets",
       GraphTables.DefaultBuckets.toString).toInt
-    // --edge-index true maintains the reverse endpoint index on every
-    // edge commit (index-backed DETACH needs coverage from the graph's
-    // FIRST edge write; adopt an existing graph with `index-rebuild`)
-    val edgeIndexOn = flags.get("edge-index").exists(_.toBoolean)
     val dict = spark.read.parquet(req(flags, "dict")).as[AliasRow]
     // The reference's sync runs its analysis-job corpus as the FINAL
     // stage (cartography/sync.py stage list ends with 'analysis',
@@ -247,47 +240,26 @@ object GraftCli {
           s"multi-tenant sync needs an --input template containing {tenant}\n$usage")
         require(!flags.contains("selected-modules"),
           s"--selected-modules and --tenants cannot be combined\n$usage")
-        // resolve the tenant-INVARIANT dictionary once — per-tenant
-        // pipe.run(dict: Dataset) would re-collect up to 5M rows to the
-        // driver on every loop iteration
+        // resolve the tenant-INVARIANT dictionary once — resolving it per
+        // tenant would re-collect up to 5M rows to the driver on every
+        // loop iteration
         val resolved = KgPipeline.dictionary(dict)
         graft.jobs.MultiTenant.syncAndThen(tenants, bestEffort) { t =>
           val pipe = new KgPipeline(spark, s"$workDir/tenants/$t", buckets,
-            graphRoot = Some(s"$workDir/graph"),
-            maintainEdgeIndex = edgeIndexOn)
+            graphRoot = Some(s"$workDir/graph"))
           val pages = spark.read.parquet(tpl.replace("{tenant}", t)).as[Page]
           pipe.run(pages, resolved, tag, mergeGraph = true): Unit
         } { runPost() }: Unit
       case None =>
-        val pipe = new KgPipeline(spark, workDir, buckets,
-          maintainEdgeIndex = edgeIndexOn)
+        val pipe = new KgPipeline(spark, workDir, buckets)
         val pages = spark.read.parquet(req(flags, "input")).as[Page]
         flags.get("selected-modules") match {
           case Some(sel) => pipe.runStages(pages, dict, tag, sel)
-          case None => pipe.run(pages, dict, tag, mergeGraph = true): Unit
+          case None =>
+            pipe.run(pages, KgPipeline.dictionary(dict), tag, mergeGraph = true): Unit
         }
         runPost()
     }
-  }
-
-  /** Rebuild (or adopt) the reverse endpoint index from the current edge
-    * state — one full edge scan that re-establishes DETACH coverage on a
-    * graph whose edge commits predate the index (EdgeEndpointIndex
-    * scaladoc: "attaching mid-life requires rebuild") or compacts
-    * superset drift after many cleanups.
-    */
-  private def indexRebuild(flags: Map[String, String]): Unit = {
-    val spark = session(flags, "graft-cli-index-rebuild")
-    val workDir = req(flags, "work-dir")
-    val tag = req(flags, "update-tag").toLong
-    val edges = GraphTables.edges(spark, s"$workDir/graph")
-    // a typo'd --work-dir must fail, not read as a successful repair
-    require(edges.exists,
-      s"no edge table under $workDir/graph — check --work-dir\n$usage")
-    val idx = graft.merge.EdgeEndpointIndex(edges)
-    idx.rebuild(tag)
-    System.err.println(s"[index-rebuild] covered edge version: " +
-      idx.coveredEdgeVersion.getOrElse(-1L))
   }
 
   /** Bucket evolution (Iceberg partition-spec evolution analog): a graph
@@ -298,10 +270,7 @@ object GraftCli {
     * the new count in the manifest, which every later open follows); old
     * versions stay readable for time travel (full reads are
     * layout-blind), so a legacy table without the manifest record is
-    * re-bucketed the same way. The edge endpoint index is
-    * bucket-arithmetic-coupled, so it is dropped and rebuilt fresh under
-    * the new count — coverage re-establishes at the current edge version
-    * and index-backed DETACH stays sound.
+    * re-bucketed the same way.
     */
   private def rebucket(flags: Map[String, String]): Unit = {
     val spark = session(flags, "graft-cli-rebucket")
@@ -320,16 +289,6 @@ object GraftCli {
           System.err.println(s"[rebucket] $name: re-laid out at $newN buckets")
         }
       }
-    val idx = graft.merge.EdgeEndpointIndex(edges)
-    val idxDir = java.nio.file.Paths.get(idx.table.root)
-    if (java.nio.file.Files.isDirectory(idxDir)) {
-      // every edge_pv names an old-layout partition — rebuild from
-      // scratch, never patch in place
-      graft.snapshot.SnapshotTable.deleteTree(idxDir)
-      idx.rebuild(tag)
-      System.err.println(s"[rebucket] edge_index rebuilt at $newN buckets, " +
-        s"covered edge version ${idx.coveredEdgeVersion.getOrElse(-1L)}")
-    }
   }
 
   /** Parse `--params K=V,K2=V2` — shared by sync (up-front validation)
@@ -348,14 +307,11 @@ object GraftCli {
     * list of the two maintenance subcommands.
     */
   private def workDirTables(spark: SparkSession, workDir: String)
-      : Seq[(String, graft.snapshot.SnapshotTable)] = {
-    val edges = GraphTables.edges(spark, s"$workDir/graph")
+      : Seq[(String, graft.snapshot.SnapshotTable)] =
     Seq("graph/nodes" -> GraphTables.nodes(spark, s"$workDir/graph"),
-      "graph/edges" -> edges,
-      "graph/edge_index" -> graft.merge.EdgeEndpointIndex(edges).table) ++
+      "graph/edges" -> GraphTables.edges(spark, s"$workDir/graph")) ++
       KgPipeline.StageNames.map(s =>
         s"stage_$s" -> graft.snapshot.SnapshotTable(spark, s"$workDir/stage_$s", None))
-  }
 
   /** Expire graph + stage snapshot versions under a work dir. Stage
     * tables only ever need their latest version (resume reads the last

@@ -1,6 +1,8 @@
 package graft.tools
 
 import java.nio.file.{Files, Paths}
+import scala.collection.mutable
+import scala.util.matching.Regex
 import graft.SparkEntry
 import graft.core.Graft
 
@@ -34,7 +36,7 @@ object Plans {
       Console.withOut(new java.io.PrintStream(bos, true, "UTF-8")) {
         df.explain("formatted")
       }
-      val plan = stableScratchDirs(bos.toString("UTF-8"))
+      val plan = stableIds(stableScratchDirs(bos.toString("UTF-8")))
       sb.append(s"\n## ${q.name}\n\n```\n$plan```\n")
     }
     Files.writeString(Paths.get(out), sb.toString)
@@ -54,4 +56,22 @@ object Plans {
     plan.replaceAll("(?m)(?<=^|[\\s\\[(,:]|://)" +
       java.util.regex.Pattern.quote(tmpDir.stripSuffix("/")) + "/([A-Za-z]+)\\d+",
       "<scratch>/$1")
+
+  /** JVM-wide counters number expression ids (`#12`, `#12L`), plan ids
+    * (`plan_id=12`) and RDD ids (`RDD[12]`), so each plan's numbers
+    * depend on how many plans were analysed before it. Renumber each
+    * kind from 1 in order of first appearance within `plan`, and print
+    * a lambda (`Foo$$$Lambda$812/0x…@1a2b`) without its per-JVM
+    * identity: a plan's text then changes only when the plan does.
+    */
+  def stableIds(plan: String): String = {
+    val seen = mutable.Map.empty[String, mutable.Map[String, Int]]
+    IdToken.replaceAllIn(LambdaIdentity.replaceAllIn(plan, "Lambda"), m => {
+      val ids = seen.getOrElseUpdate(m.group(1), mutable.Map.empty)
+      Regex.quoteReplacement(m.group(1) + ids.getOrElseUpdate(m.group(2), ids.size + 1))
+    })
+  }
+
+  private val IdToken = """(#|plan_id=|RDD\[)(\d+)""".r
+  private val LambdaIdentity = """Lambda\$\d+/0x[0-9a-f]+@[0-9a-f]+""".r
 }

@@ -18,9 +18,9 @@ class QueryRegistrySpec extends AnyFunSuite {
     assert(SparkEntry.all.map(_.name) === names)
   }
 
-  test("queries and oracleSql hold the same 142 names") {
+  test("queries and oracleSql hold the same 141 names") {
     assert(SparkEntry.queries.keySet === SparkEntry.oracleSql.keySet)
-    assert(SparkEntry.queries.size === 142)
+    assert(SparkEntry.queries.size === 141)
   }
 
   test("no oracle interpolates an uninitialized helper") {

@@ -124,7 +124,7 @@ class JobsSpec extends SparkSpecBase {
     assert(pipe2.stageDone("triples", 100L) && pipe2.stageDone("merge", 100L))
     // results equal the one-shot pipeline's
     val full = new KgPipeline(spark, tmp())
-      .run(pages, Corpus.aliasRows, 100L, mergeGraph = false)
+      .run(pages, KgPipeline.DriverDictionary(Corpus.aliasRows), 100L, mergeGraph = false)
     val a = graft.snapshot.SnapshotTable(spark, s"$work/stage_triples", None)
       .read().collect().map(_.toString).toSet
     val b = full.triples.collect().map(_.toString).toSet

@@ -109,13 +109,15 @@ class ExtractShardSpec extends SparkSpecBase {
     // cap 300 < 1400 dictionary rows -> run() must take the sharded path
     val pipe = new KgPipeline(spark, work, maxBroadcastAliases = 300L)
     val dictDs = Corpus.aliasRows.toDS()
-    val res = pipe.run(Corpus.pages(spark, sf1), dictDs, 100L, mergeGraph = false)
+    val res = pipe.run(Corpus.pages(spark, sf1), KgPipeline.dictionary(dictDs, 300L), 100L,
+      mergeGraph = false)
     val got = res.triples.select("url", "subj", "pred", "obj")
       .collect().map(r => (r.getString(0), r.getString(1), r.getString(2), r.getString(3))).toSet
 
     val workRef = Files.createTempDirectory("kgshardref").toString
     val ref = new KgPipeline(spark, workRef)
-      .run(Corpus.pages(spark, sf1), Corpus.aliasRows, 100L, mergeGraph = false)
+      .run(Corpus.pages(spark, sf1), KgPipeline.DriverDictionary(Corpus.aliasRows), 100L,
+        mergeGraph = false)
     val want = ref.triples.select("url", "subj", "pred", "obj")
       .collect().map(r => (r.getString(0), r.getString(1), r.getString(2), r.getString(3))).toSet
     assert(got === want)

@@ -138,7 +138,7 @@ class KgSpec extends SparkSpecBase {
   test("end-to-end pipeline emits exactly the planted canonical triples (P=R=1.0)") {
     val work = Files.createTempDirectory("kgpipe").toString
     val pipe = new KgPipeline(spark, work)
-    val res = pipe.run(Corpus.pages(spark, sf1), Corpus.aliasRows, 100L,
+    val res = pipe.run(Corpus.pages(spark, sf1), KgPipeline.DriverDictionary(Corpus.aliasRows), 100L,
       mergeGraph = false)
     val got = res.triples.select("url", "subj", "pred", "obj")
       .collect().map(r => (r.getString(0), r.getString(1), r.getString(2), r.getString(3))).toSet
@@ -157,7 +157,8 @@ class KgSpec extends SparkSpecBase {
 
     val work = Files.createTempDirectory("kgpipeds").toString
     val pipe = new KgPipeline(spark, work)
-    val res = pipe.run(Corpus.pages(spark, sf1), dictDs, 100L, mergeGraph = false)
+    val res = pipe.run(Corpus.pages(spark, sf1), KgPipeline.dictionary(dictDs), 100L,
+      mergeGraph = false)
     val got = res.triples.select("url", "subj", "pred", "obj")
       .collect().map(r => (r.getString(0), r.getString(1), r.getString(2), r.getString(3))).toSet
     assert(got === expectedTriples(), "Dataset-dict run must emit the planted triples")
@@ -172,12 +173,13 @@ class KgSpec extends SparkSpecBase {
     val work = Files.createTempDirectory("kgresume").toString
     val pipe = new KgPipeline(spark, work)
     val pages = Corpus.pages(spark, sf1)
-    pipe.run(pages, Corpus.aliasRows, 100L, mergeGraph = false)
+    pipe.run(pages, KgPipeline.DriverDictionary(Corpus.aliasRows), 100L, mergeGraph = false)
     val vBefore = graft.snapshot.SnapshotTable(spark, s"$work/stage_facts", None).latestVersion
     // simulate restart: new pipeline object, same work dir + tag
     val pipe2 = new KgPipeline(spark, work)
     assert(pipe2.stageDone("facts", 100L))
-    val res2 = pipe2.run(pages, Corpus.aliasRows, 100L, mergeGraph = false)
+    val res2 = pipe2.run(pages, KgPipeline.DriverDictionary(Corpus.aliasRows), 100L,
+      mergeGraph = false)
     val vAfter = graft.snapshot.SnapshotTable(spark, s"$work/stage_facts", None).latestVersion
     assert(vBefore === vAfter, "stage must not be recommitted on resume")
     assert(res2.triples.count() > 0)
@@ -188,7 +190,8 @@ class KgSpec extends SparkSpecBase {
   test("graph merge stage materializes Entity/Page nodes and MENTIONS/predicate edges") {
     val work = Files.createTempDirectory("kgmerge").toString
     val pipe = new KgPipeline(spark, work)
-    pipe.run(Corpus.pages(spark, sf1), Corpus.aliasRows, 100L, mergeGraph = true)
+    pipe.run(Corpus.pages(spark, sf1), KgPipeline.DriverDictionary(Corpus.aliasRows), 100L,
+      mergeGraph = true)
     val nodeCounts = pipe.nodes.read().groupBy("label").count()
       .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
     assert(nodeCounts("Page") === 500L)

@@ -183,6 +183,39 @@ class GraphMergeSpec extends SparkSpecBase {
       ("Account", "acct2", "RESOURCE", "Asset", "y1")))
   }
 
+  test("DETACH over 64 buckets drops a stale node's edges under every rel label") {
+    val root = tmp()
+    val nodes = GraphTables.nodes(spark, root, 64)
+    val edges = GraphTables.edges(spark, root, 64)
+    val custSchema = NodeSchema("Customer", RowRef("cid"),
+      subResource = Some(SubResourceRel(targetLabel = "Nation",
+        ref = KwargRef("nation_id"))))
+    val kw = Map("nation_id" -> "1")
+    def customers(range: Range): DataFrame =
+      range.map(i => (s"c$i", s"name$i")).toDF("cid", "c_name")
+    def edgeRows(rows: (String, String, String, String, String)*): DataFrame =
+      rows.toDF("src_label", "src_id", "rel_label", "dst_label", "dst_id")
+        .withColumn("props", map().cast("map<string,string>"))
+        .withColumn("firstseen", lit(100L)).withColumn("lastupdated", lit(100L))
+    GraphMerge.load(spark, Seq("1").toDF("nid"), NodeSchema("Nation", RowRef("nid")),
+      Map.empty, 100L, nodes, edges)
+    // declared RESOURCE edges from the load, an undeclared dynamic
+    // PLACED_BY label, and a LINKED edge from another node label
+    GraphMerge.load(spark, customers(1 to 40), custSchema, kw, 100L, nodes, edges)
+    GraphMerge.upsertEdgeBatch(spark, edgeRows((1 to 40).map(i =>
+      ("Order", s"o$i", "PLACED_BY", "Customer", s"c$i")): _*), 100L, edges)
+    GraphMerge.upsertEdgeBatch(spark,
+      edgeRows(("Extra", "x1", "LINKED", "Customer", "c1")), 100L, edges)
+    // re-sync c3..c40 only: c1 and c2 go stale
+    GraphMerge.load(spark, customers(3 to 40), custSchema, kw, 200L, nodes, edges)
+    assert(Cleanup.run(spark, custSchema, kw, 200L, nodes, edges) === CleanupStats(2L, 5L))
+    val gone = Set("c1", "c2")
+    assert(!nodesOf(nodes).exists(n => gone(n._2)))
+    val rels = relsOf(edges)
+    assert(!rels.exists(e => gone(e._2) || gone(e._5)), "an edge touches a deleted node")
+    assert(rels.count(_._3 == "PLACED_BY") === 38 && rels.count(_._3 == "RESOURCE") === 38)
+  }
+
   test("one-to-many matcher attaches a row to every listed target (scenario 3)") {
     val root = tmp()
     val nodes = GraphTables.nodes(spark, root)

@@ -51,6 +51,37 @@ class ChangelogSpec extends SparkSpecBase {
     }
   }
 
+  test("changelog over the graph tables: a props-only change is an update; a reordered map is not") {
+    val root = Files.createTempDirectory("chlogmap").toString
+    val nodes = graft.merge.GraphTables.nodes(spark, root)
+    val edges = graft.merge.GraphTables.edges(spark, root)
+    def nodeRows(bProps: Map[String, String], cProps: Map[String, String]) = Seq(
+      ("Customer", "b", bProps, Seq("Party"), "n1", 100L, 100L),
+      ("Customer", "c", cProps, Seq("Party"), "n1", 100L, 100L))
+      .toDF("label", "id", "props", "extra_labels", "sub_resource_id",
+        "firstseen", "lastupdated")
+    def edgeRows(bProps: Map[String, String], cProps: Map[String, String]) = Seq(
+      ("Order", "o1", "PLACED_BY", "Customer", "b", bProps, 100L, 100L),
+      ("Order", "o2", "PLACED_BY", "Customer", "c", cProps, 100L, 100L))
+      .toDF("src_label", "src_id", "rel_label", "dst_label", "dst_id", "props",
+        "firstseen", "lastupdated")
+    val xy = Map("x" -> "1", "y" -> "2")
+    val yx = Map("y" -> "2", "x" -> "1")
+    nodes.commit(nodeRows(Map("k" -> "1"), xy), 100L)
+    nodes.commit(nodeRows(Map("k" -> "2"), yx), 200L)
+    edges.commit(edgeRows(Map("k" -> "1"), xy), 100L)
+    edges.commit(edgeRows(Map("k" -> "2"), yx), 200L)
+    val nodeLog = nodes.changelog(1L, 2L, Seq("label", "id"))
+      .select(col("id"), col("op"), col("_before.props"), col("_after.props"))
+      .as[(String, String, Map[String, String], Map[String, String])].collect().toSeq
+    assert(nodeLog === Seq(("b", "update", Map("k" -> "1"), Map("k" -> "2"))))
+    val edgeLog = edges.changelog(1L, 2L,
+      Seq("src_label", "src_id", "rel_label", "dst_label", "dst_id"))
+      .select(col("src_id"), col("op"), col("_before.props"), col("_after.props"))
+      .as[(String, String, Map[String, String], Map[String, String])].collect().toSeq
+    assert(edgeLog === Seq(("o1", "update", Map("k" -> "1"), Map("k" -> "2"))))
+  }
+
   test("identical versions (all buckets carried) yield an EMPTY changelog, not an error") {
     val root = Files.createTempDirectory("chlogid").toString
     val t = SnapshotTable(spark, s"$root/t", Some("label"),

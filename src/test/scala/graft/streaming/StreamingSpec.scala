@@ -69,7 +69,8 @@ class StreamingSpec extends SparkSpecBase {
     val tmp = java.nio.file.Files.createTempDirectory("kgparity").toString
     StreamingSync.incrementalMerge(spark, pages, Corpus.aliasRows,
       KgPipeline.canonical(spark, Corpus.aliasRows, None), s"$tmp/stream", 100L)
-    new KgPipeline(spark, s"$tmp/batch").run(pages, Corpus.aliasRows, 100L): Unit
+    new KgPipeline(spark, s"$tmp/batch").run(pages,
+      KgPipeline.DriverDictionary(Corpus.aliasRows), 100L, mergeGraph = true): Unit
 
     def edgeSet(root: String) = GraphTables.edges(spark, root).read()
       .select("src_label", "src_id", "rel_label", "dst_label", "dst_id", "props")

@@ -65,6 +65,19 @@ class CliSpec extends SparkSpecBase {
     }
     assert(typoCli.getMessage.contains("unknown flag(s) for expire: --kep"),
       typoCli.getMessage)
+    // the CLI has no endpoint index: its old flag and subcommand are
+    // unknown like any typo
+    val noIndexFlag = intercept[IllegalArgumentException] {
+      GraftCli.main(Array("sync", "--input", s"$in/pages", "--dict", s"$in/dict",
+        "--work-dir", work, "--update-tag", "300", "--edge-index", "true"))
+    }
+    assert(noIndexFlag.getMessage.contains("unknown flag(s) for sync: --edge-index"),
+      noIndexFlag.getMessage)
+    val noIndexCmd = intercept[RuntimeException] {
+      GraftCli.main(Array("index-rebuild", "--work-dir", work, "--update-tag", "300"))
+    }
+    assert(noIndexCmd.getMessage.contains("unknown command: index-rebuild"),
+      noIndexCmd.getMessage)
   }
 
   test("cli: sync -> get-state -> bigger sync -> drift -> expire") {
@@ -461,37 +474,13 @@ class CliSpec extends SparkSpecBase {
     assert(bad.getMessage.contains("{tenant}"), bad.getMessage)
   }
 
-  test("cli: sync --edge-index maintains DETACH coverage; a bypassing sync breaks it; index-rebuild restores it") {
-    val in = tmp("cliin10")
-    val work = tmp("cliwork10")
-    Corpus.pages(spark, sf, 1, 0).write.parquet(s"$in/pages")
-    Corpus.aliasRows.toDS().write.parquet(s"$in/dict")
-
-    // indexed from the FIRST edge commit -> sound for DETACH
-    GraftCli.main(Array("sync", "--input", s"$in/pages", "--dict", s"$in/dict",
-      "--work-dir", work, "--update-tag", "100", "--edge-index", "true"))
-    val idx = graft.merge.EdgeEndpointIndex(GraphTables.edges(spark, s"$work/graph"))
-    assert(idx.table.exists, "sync --edge-index must materialize the index")
-    assert(idx.soundForDetach, "index attached from first commit must cover")
-
-    // a sync WITHOUT the flag commits un-indexed edges -> coverage broken
-    GraftCli.main(Array("sync", "--input", s"$in/pages", "--dict", s"$in/dict",
-      "--work-dir", work, "--update-tag", "200"))
-    assert(!idx.soundForDetach, "bypassing commit must freeze coverage")
-
-    // rebuild re-establishes coverage at the current edge state
-    GraftCli.main(Array("index-rebuild", "--work-dir", work,
-      "--update-tag", "300"))
-    assert(idx.soundForDetach, "rebuild must restore DETACH coverage")
-  }
-
-  test("cli: rebucket evolves the layout — rows preserved, new count recorded and enforced, index rebuilt sound") {
+  test("cli: rebucket evolves the layout — rows preserved, new count recorded and enforced") {
     val in = tmp("cliin11")
     val work = tmp("cliwork11")
     Corpus.pages(spark, sf, 1, 0).write.parquet(s"$in/pages")
     Corpus.aliasRows.toDS().write.parquet(s"$in/dict")
     GraftCli.main(Array("sync", "--input", s"$in/pages", "--dict", s"$in/dict",
-      "--work-dir", work, "--update-tag", "100", "--edge-index", "true"))
+      "--work-dir", work, "--update-tag", "100"))
 
     def keyed(df: org.apache.spark.sql.DataFrame) = df
       .selectExpr("label", "id", "firstseen", "lastupdated")
@@ -521,34 +510,20 @@ class CliSpec extends SparkSpecBase {
     val pvs = default.physicalValuesOf(nodes3.read())
     assert(pvs === nodes3.physicalValuesOf(nodes3.read()))
     assert(pvs.forall(pv => Set("0", "1", "2")(pv.substring(pv.lastIndexOf("~b") + 2))), pvs.toString)
-    // index rebuilt under the new count and sound for DETACH
-    val idx3 = graft.merge.EdgeEndpointIndex(edges3)
-    assert(idx3.soundForDetach, "rebucket must leave the index covering")
-    assert(idx3.table.latestVersion.flatMap(idx3.table.recordedBuckets) === Some(3))
     // the count is the manifest's alone: only sync (sizing a new graph)
     // takes --graph-buckets
-    Seq(Seq("index-rebuild"), Seq("rebucket", "--new-buckets", "3")).foreach { cmd =>
-      val e = intercept[IllegalArgumentException] {
-        GraftCli.main((cmd ++ Seq("--work-dir", work, "--update-tag", "250",
-          "--graph-buckets", "3")).toArray)
-      }
-      assert(e.getMessage.contains(s"unknown flag(s) for ${cmd.head}: --graph-buckets"),
-        e.getMessage)
+    val e = intercept[IllegalArgumentException] {
+      GraftCli.main(Array("rebucket", "--new-buckets", "3", "--work-dir", work,
+        "--update-tag", "250", "--graph-buckets", "3"))
     }
-    // an incremental sync and an index rebuild keep working end-to-end
-    // with no bucket flag
+    assert(e.getMessage.contains("unknown flag(s) for rebucket: --graph-buckets"),
+      e.getMessage)
+    // an incremental sync keeps working end-to-end with no bucket flag
     GraftCli.main(Array("sync", "--input", s"$in/pages", "--dict", s"$in/dict",
-      "--work-dir", work, "--update-tag", "300", "--edge-index", "true"))
+      "--work-dir", work, "--update-tag", "300"))
     assert(created(nodes3.read()) === createdBefore)
     assert(nodes3.latestVersion.flatMap(nodes3.recordedBuckets) === Some(3))
     assert(edges3.latestVersion.flatMap(edges3.recordedBuckets) === Some(3))
-    assert(idx3.soundForDetach, "indexed sync at the new count stays covered")
-    GraftCli.main(Array("index-rebuild", "--work-dir", work, "--update-tag", "400"))
-    assert(idx3.soundForDetach, "index-rebuild with no bucket flag stays covered")
-    assert(idx3.table.latestVersion.flatMap(idx3.table.recordedBuckets) === Some(3),
-      "index-rebuild lays the index out at the graph's recorded count")
-    assert(idx3.edgePartitionsFor("Page", nodes3.read()
-      .filter(col("label") === "Page").select("id").limit(5)).nonEmpty)
   }
 
   test("cli: a legacy graph (manifests without a bucket count) fails sync naming rebucket; rebucket heals it") {

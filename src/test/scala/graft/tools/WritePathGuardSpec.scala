@@ -5,13 +5,15 @@ import scala.jdk.CollectionConverters._
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Write-path guard: bucket-scoped commits happen only inside
-  * `SnapshotTable`. Merges, cleanups and index updates go through its
+  * `SnapshotTable`. Merges and cleanups go through its
   * one read-modify-write (`SnapshotTable.rewrite`), so the touched-bucket
   * collect, the scoped read and the commit stay in one place. The
   * bucket count those scoped paths use is read from the latest manifest
   * inside `SnapshotTable` too; no caller restates or re-checks it.
   * Reads are opened from the manifest's schema and file records, never
   * by a Spark Parquet read that infers a schema and lists directories.
+  * DETACH has one path, the full-scan semi-join: no endpoint index, and
+  * no second commit that would have to stay in step with the edges.
   */
 class WritePathGuardSpec extends AnyFunSuite {
 
@@ -37,6 +39,17 @@ class WritePathGuardSpec extends AnyFunSuite {
     val gone = Seq("graph_buckets", "requireBucketsMatch", "commitPartitions")
     val hits = for {
       f <- files
+      word <- gone
+      if Files.readString(f).contains(word)
+    } yield s"$f: $word"
+    assert(hits.isEmpty, hits.mkString("\n"))
+  }
+
+  test("no edge endpoint index, its coverage record or its knobs remain in src/main") {
+    val gone = Seq("EdgeEndpointIndex", "edge_index", "coverage.json",
+      "maintainEdgeIndex", "edgeIndex", "edge-index", "index-rebuild")
+    val hits = for {
+      f <- scalaFiles(Paths.get("src/main/scala"))
       word <- gone
       if Files.readString(f).contains(word)
     } yield s"$f: $word"
