@@ -56,6 +56,8 @@ final class KgPipeline(spark: SparkSession, workRoot: String,
   import spark.implicits._
   import KgPipeline.{DriverDictionary, TableDictionary}
 
+  KgPipeline.requireCap(maxBroadcastAliases)
+
   private def stageTable(name: String): SnapshotTable =
     SnapshotTable(spark, s"$workRoot/stage_$name", None)
 
@@ -157,9 +159,13 @@ final class KgPipeline(spark: SparkSession, workRoot: String,
     }),
     Stage("triples", Seq("facts", "canonical"),
       in => KgPipeline.canonicalTriples(in("facts"), in("canonical"))),
+    // the graph write, upserting every canonical entity. The committed
+    // extract output (url + lang) supplies the Page nodes: projecting the
+    // raw input would re-render/re-read every page's html for two columns.
     Stage("merge", Seq("extract", "facts", "canonical", "triples"), in => {
-      mergeStage(in("extract"), KgPipeline.linksView(in("facts")),
-        in("canonical"), in("triples"), updateTag)
+      KgPipeline.writeGraph(spark, in("extract"), KgPipeline.linksView(in("facts")),
+        in("canonical"), in("triples"), in("canonical").select(col("canonical_id").as("id")),
+        updateTag, nodes, edges)
       Seq((updateTag, "done")).toDF("tag", "state")
     }))
 
@@ -232,41 +238,6 @@ final class KgPipeline(spark: SparkSession, workRoot: String,
   private def selection(selectedModules: String): Seq[String] =
     graft.jobs.Sync.parseAndValidateSelectedModules(selectedModules, KgPipeline.StageNames)
 
-  /** The merge stage: Entity/Page nodes, MENTIONS edges and triple edges
-    * through the upsert engine (firstseen/lastupdated semantics).
-    * `textsDf` (the committed extract output — one row per page with
-    * url + lang) supplies the Page-node batch: projecting the raw input
-    * would re-render/re-read every page's html for two columns.
-    */
-  private def mergeStage(textsDf: DataFrame, linksDf: DataFrame,
-                         canonicalDf: DataFrame, triplesDf: DataFrame,
-                         updateTag: Long): Unit = {
-    // Page + Entity nodes in ONE fused upsert + commit (two separate
-    // load() rounds would double the join/write jobs for no reason —
-    // neither schema declares relationships; those go through the edge
-    // batch below).
-    // dedup=false: texts is one row per url and canonical ids are
-    // distinct()'d — the MERGE id-collapse shuffle would re-shuffle the
-    // corpus-sized Page side for nothing
-    val pageRows = GraphMerge.toNodeRows(
-      textsDf.select(col("url").as("id"), col("lang")),
-      NodeSchema("Page", RowRef("id"), properties = Map("lang" -> RowRef("lang"))),
-      Map.empty, updateTag, dedup = false)
-    val entityRows = GraphMerge.toNodeRows(
-      canonicalDf.select(col("canonical_id").as("id")).distinct(),
-      NodeSchema("Entity", RowRef("id")),
-      Map.empty, updateTag, dedup = false)
-    // both inputs are key-unique (texts is one row per url; canonical ids
-    // are distinct()'d) and the two labels can't collide — the batch
-    // upserts' key-unique precondition
-    GraphMerge.upsertNodeBatch(spark,
-      pageRows.unionByName(entityRows), updateTag, nodes)
-    // both edge inputs are aggregation outputs, hence already key-unique
-    GraphMerge.upsertEdgeBatch(spark,
-      KgPipeline.mentionEdges(linksDf, canonicalDf, updateTag)
-        .unionByName(KgPipeline.tripleEdges(triplesDf, updateTag)),
-      updateTag, edges)
-  }
 }
 
 object KgPipeline {
@@ -339,9 +310,17 @@ object KgPipeline {
     */
   def boundedCollectOpt(dict: Dataset[AliasRow],
                         cap: Long = MaxBroadcastAliases): Option[Seq[AliasRow]] = {
+    requireCap(cap)
     val rows = dict.limit(cap.toInt + 1).collect()
     if (rows.length <= cap) Some(rows.toSeq) else None
   }
+
+  /** A broadcast cap's `cap+1` collect limit must fit Spark's Int row
+    * limit: a larger cap is rejected, not wrapped.
+    */
+  private def requireCap(cap: Long): Unit =
+    require(cap >= 0 && cap < Int.MaxValue,
+      s"a broadcast alias cap must be in [0, ${Int.MaxValue}), got $cap")
 
   // ---- stage transforms, shared by the batch and streaming syncs --------
 
@@ -417,6 +396,35 @@ object KgPipeline {
       .select(col("url"), col("csubj").as("subj"), col("pred"),
         col("cobj").as("obj"))
       .dropDuplicates()
+  }
+
+  /** The KG graph write, shared by the batch and streaming syncs: Page
+    * nodes from `texts` and Entity nodes for `entityIds` (an `id`
+    * column: every canonical id in a batch sync, only the mentioned ones
+    * in a micro-batch) as ONE node upsert, then MENTIONS and triple edges
+    * as ONE edge upsert (firstseen/lastupdated semantics). Neither node
+    * schema declares relationships; the edges come from the extraction.
+    */
+  private[graft] def writeGraph(spark: SparkSession, texts: DataFrame, links: DataFrame,
+                                canonical: DataFrame, triples: DataFrame,
+                                entityIds: DataFrame, updateTag: Long,
+                                nodes: SnapshotTable, edges: SnapshotTable): Unit = {
+    // a re-crawl lists one url twice: MERGE collapses it to one Page node
+    // (toNodeRows' deterministic dedup)
+    val pageRows = GraphMerge.toNodeRows(
+      texts.select(col("url").as("id"), col("lang")),
+      NodeSchema("Page", RowRef("id"), properties = Map("lang" -> RowRef("lang"))),
+      Map.empty, updateTag)
+    // distinct()'d ids carry no props to choose between: no dedup shuffle
+    val entityRows = GraphMerge.toNodeRows(entityIds.distinct(),
+      NodeSchema("Entity", RowRef("id")), Map.empty, updateTag, dedup = false)
+    // both node inputs are key-unique and the two labels can't collide;
+    // both edge inputs are aggregation outputs, hence key-unique too —
+    // the batch upserts' precondition
+    GraphMerge.upsertNodeBatch(spark, pageRows.unionByName(entityRows), updateTag, nodes)
+    GraphMerge.upsertEdgeBatch(spark,
+      mentionEdges(links, canonical, updateTag).unionByName(tripleEdges(triples, updateTag)),
+      updateTag, edges)
   }
 
   /** MENTIONS edges with per-pair mention counts, aggregated BEFORE the

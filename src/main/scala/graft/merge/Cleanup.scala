@@ -28,7 +28,8 @@ final case class CleanupStats(nodesDeleted: Long, edgesDeleted: Long)
   * (SnapshotTable.rewrite) — the sub-resource scoping that keeps
   * the reference's cleanup from crossing tenants also keeps ours from
   * rewriting 100 TB. The deleted-id set used for DETACH is the stale
-  * subset of one tenant, broadcast into the edge anti-joins.
+  * subset of one tenant; AQE broadcasts it into the edge semi-joins
+  * when it is small.
   */
 object Cleanup {
 
@@ -77,12 +78,29 @@ object Cleanup {
   private def bucketsOf(existing: Option[DataFrame], what: String): DataFrame =
     existing.getOrElse(sys.error(s"$what buckets vanished mid-cleanup"))
 
+  /** Rewrite `t` through `f` and return the rows the commit removed: the
+    * committed row drop between the base version and the one `rewrite`
+    * returned, read from the changed partitions' footers (0 when nothing
+    * was committed). It is exact because a cleanup rewrite only deletes.
+    */
+  private def deleting(t: SnapshotTable, delta: DataFrame, updateTag: Long)
+                      (f: Option[DataFrame] => DataFrame): Long =
+    t.latestVersion.fold(0L) { base =>
+      t.rewrite(delta, updateTag)(f).fold(0L)(v => -t.rowDelta(base, v))
+    }
+
   /** One cleanup pass for `schema` at `updateTag` (steps 1-3 above).
     * The DETACH sweep is one full-scan semi-join of the edge table
     * against the deleted ids: a deleted node's edges can carry any
     * rel label, and edge buckets hash (src_id, dst_id) jointly, so no
     * partition of the table can be skipped. It runs only when a node
     * was deleted.
+    *
+    * The deleted counts come from the two commits themselves, the way
+    * the reference reads them off each write's summary counters
+    * (graph/statement.py:99-112): no count query runs before a rewrite,
+    * and no gate decides whether to call it — a rewrite whose rows touch
+    * no partition commits nothing and counts 0.
     */
   def run(spark: SparkSession, schema: NodeSchema,
           kwargs: Map[String, String], updateTag: Long,
@@ -105,23 +123,20 @@ object Cleanup {
     // prefix of every generated cleanup query, cleanupbuilder.py:150-169).
     val tenantIds = part.filter(scope).select(col("id")).cache()
     val staleRows = part.filter(scope && stale(updateTag)).cache()
-    val staleNodes = staleRows.select(col("id")).cache()
+    val staleIds = staleRows.select(col("id"))
     try {
-      val nDeleted = staleNodes.count()
-      if (nDeleted > 0) {
-        // bucket-precise: rewrite only the buckets that contain stale
-        // rows; the label's other buckets carry forward by file reference
-        nodes.rewrite(staleRows, updateTag) { existing =>
-          bucketsOf(existing, "stale").join(staleNodes.withColumnRenamed("id", "_sid"),
-            col("id") === col("_sid"), "left_anti")
-        }: Unit
+      // bucket-precise: rewrite only the buckets that contain stale
+      // rows; the label's other buckets carry forward by file reference
+      val nDeleted = deleting(nodes, staleRows, updateTag) { existing =>
+        bucketsOf(existing, "stale").join(staleIds.withColumnRenamed("id", "_sid"),
+          col("id") === col("_sid"), "left_anti")
       }
       val eDeleted = if (!edges.exists) 0L else {
         val relSet = schema.relLabels.toSet
         // Every membership test below is TWO equi-semi-joins (src side,
         // dst side) unioned — an OR-of-equalities join condition cannot be
         // planned as a hash join and degrades to a nested loop over
-        // |edges| × |ids|. No explicit broadcast: staleNodes is usually
+        // |edges| × |ids|. No explicit broadcast: staleIds is usually
         // small (AQE broadcasts it), but with no sub-resource scope
         // tenantIds is the WHOLE label — forcing it into a broadcast would
         // OOM at corpus scale, while a shuffled semi-join just works.
@@ -136,7 +151,7 @@ object Cleanup {
         // detach: any edge touching a deleted node of this label
         val detachState =
           if (nDeleted > 0) edges.read() else GraphTables.emptyEdges(spark)
-        val detached = touching(detachState, staleNodes, "_sid")
+        val detached = touching(detachState, staleIds, "_sid")
         // stale rels of this schema's rel labels, scoped to this node label
         // AND to the tenant being synced. The labels are the table's
         // partition column — read ONLY those partitions.
@@ -149,28 +164,22 @@ object Cleanup {
           .unionByName(staleRelEdges)
           .dropDuplicates("src_label", "src_id", "rel_label", "dst_label", "dst_id")
           .cache()
-        try {
-          val n = doomed.count()
-          if (n > 0) {
-            // bucket-precise: rewrite only the (rel_label, bucket) partitions
-            // that contain doomed edges
-            edges.rewrite(doomed, updateTag) { existing =>
-              bucketsOf(existing, "doomed")
-                .join(doomed.select(col("src_label").as("_dsl"), col("src_id").as("_dsi"),
-                  col("rel_label").as("_drl"), col("dst_label").as("_ddl"),
-                  col("dst_id").as("_ddi")),
-                  col("src_label") === col("_dsl") && col("src_id") === col("_dsi") &&
-                    col("rel_label") === col("_drl") && col("dst_label") === col("_ddl") &&
-                    col("dst_id") === col("_ddi"),
-                  "left_anti")
-            }: Unit
-          }
-          n
+        // bucket-precise: rewrite only the (rel_label, bucket) partitions
+        // that contain doomed edges
+        try deleting(edges, doomed, updateTag) { existing =>
+          bucketsOf(existing, "doomed")
+            .join(doomed.select(col("src_label").as("_dsl"), col("src_id").as("_dsi"),
+              col("rel_label").as("_drl"), col("dst_label").as("_ddl"),
+              col("dst_id").as("_ddi")),
+              col("src_label") === col("_dsl") && col("src_id") === col("_dsi") &&
+                col("rel_label") === col("_drl") && col("dst_label") === col("_ddl") &&
+                col("dst_id") === col("_ddi"),
+              "left_anti")
         } finally doomed.unpersist(): Unit
       }
       CleanupStats(nDeleted, eDeleted)
     } finally {
-      staleRows.unpersist(); staleNodes.unpersist(); tenantIds.unpersist(): Unit
+      staleRows.unpersist(); tenantIds.unpersist(): Unit
     }
   }
 }

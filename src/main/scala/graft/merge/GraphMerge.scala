@@ -197,7 +197,7 @@ object GraphMerge {
     */
   def upsertEdgeBatch(spark: SparkSession, batch: DataFrame, updateTag: Long,
                       edges: SnapshotTable): Unit =
-    merge(edges, batch, EdgeKeys, updateTag, cacheFirstCommit = true)
+    merge(edges, batch, EdgeKeys, updateTag)
 
   /** Upsert a precomputed batch of canonical node rows spanning one or
     * more labels in a single merge + single commit — the fused fast path
@@ -210,28 +210,23 @@ object GraphMerge {
     */
   def upsertNodeBatch(spark: SparkSession, batch: DataFrame, updateTag: Long,
                       nodes: SnapshotTable): Unit =
-    merge(nodes, batch, NodeKeys, updateTag, cacheFirstCommit = false)
+    merge(nodes, batch, NodeKeys, updateTag)
 
   /** The one MERGE commit: upsert `batch` into the buckets it hashes
     * into (SnapshotTable.rewrite). The batch is read twice on every path
     * (emptiness probe or touched-bucket collect, then the write), so it
-    * is cached — except on a node table's first commit: the sync's node
-    * batch is a narrow projection, whose emptiness probe touches one
-    * input partition, so a cache would only add a batch-sized memory
-    * round-trip (a dedup'd [[load]] batch pays its shuffle twice there,
-    * once per graph). Edge batches are aggregation outputs: even the
-    * probe runs their full shuffle map side, and an uncached first
-    * commit measured slower than the cache round-trip it saved.
+    * is cached: node batches are dedup'd and edge batches are aggregation
+    * outputs, so an uncached probe would run their shuffle map side and
+    * the write would run it again.
     */
   private def merge(table: SnapshotTable, batch: DataFrame, keys: Seq[String],
-                    updateTag: Long, cacheFirstCommit: Boolean): Unit = {
-    val cache = cacheFirstCommit || table.exists
-    if (cache) batch.persist()
+                    updateTag: Long): Unit = {
+    batch.persist()
     try {
       table.rewrite(batch, updateTag) { existing =>
         existing.fold(batch)(upsert(_, batch, keys, updateTag))
       }: Unit
-    } finally if (cache) batch.unpersist(): Unit
+    } finally batch.unpersist(): Unit
   }
 
   /** Restrict a schema's declared relationships to a selected subset —

@@ -1,12 +1,12 @@
 package graft.operators
 
-import java.nio.file.Files
-import scala.jdk.CollectionConverters._
+import java.nio.file.{Files, Paths}
 import scala.collection.concurrent.TrieMap
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.Query
 import graft.kg.{Corpus, KgPipeline}
+import graft.snapshot.SnapshotTable
 
 /** Driver-checkable KG-pipeline queries. The pipeline runs once per
   * scale dir (memoized) over pages synthesized deterministically from
@@ -647,7 +647,7 @@ object KgOps {
     } finally {
       q.stop()
       // checkpoint state (offsets/commits/state store) is per-run litter
-      rmTree(cp); rmTree(srcDir)
+      Seq(cp, srcDir).foreach(d => SnapshotTable.deleteTree(Paths.get(d)))
     }
     spark.table("q32win")
       .select(((unix_timestamp(col("window_start")) - baseSec) / 60L)
@@ -694,7 +694,7 @@ object KgOps {
       q.processAllAvailable()
     } finally {
       q.stop()
-      rmTree(cp); rmTree(srcDir)
+      Seq(cp, srcDir).foreach(d => SnapshotTable.deleteTree(Paths.get(d)))
     }
     spark.table("q35sess").select(col("user_id"),
       (unix_timestamp(col("session_start")) - baseSec).as("start_off"),
@@ -748,7 +748,7 @@ object KgOps {
       q.processAllAvailable()
     } finally {
       q.stop()
-      rmTree(cp); rmTree(srcDir)
+      Seq(cp, srcDir).foreach(d => SnapshotTable.deleteTree(Paths.get(d)))
     }
     spark.table("q36enrich")
       .select((unix_timestamp(col("window_start")) / 86400).cast("bigint")
@@ -790,7 +790,7 @@ object KgOps {
       q.processAllAvailable()
     } finally {
       q.stop()
-      rmTree(cp); rmTree(srcDir)
+      Seq(cp, srcDir).foreach(d => SnapshotTable.deleteTree(Paths.get(d)))
     }
     spark.table("q37dedup")
       .select(col("k"), (unix_timestamp(col("ts")) - baseSec).as("off"))
@@ -866,7 +866,7 @@ object KgOps {
       }
     } finally {
       q.stop()
-      rmTree(cp); rmTree(vDir); rmTree(pDir)
+      Seq(cp, vDir, pDir).foreach(d => SnapshotTable.deleteTree(Paths.get(d)))
     }
     spark.table(queryName)
   }
@@ -887,20 +887,6 @@ object KgOps {
       .select(col("view_id"), col("user_id"), col("purchase_id"),
         (unix_micros(col("pts")) - unix_micros(col("vts"))).as("gap_us"))
       .orderBy("view_id", "purchase_id")
-
-  /** Recursively delete a harness temp dir (checkpoint/source litter
-    * from the controlled micro-batch queries).
-    */
-  private def rmTree(dir: String): Unit = {
-    def rm(p: java.nio.file.Path): Unit = {
-      if (Files.isDirectory(p)) {
-        val s = Files.list(p)
-        try s.iterator().asScala.foreach(rm) finally s.close()
-      }
-      Files.deleteIfExists(p): Unit
-    }
-    rm(java.nio.file.Paths.get(dir))
-  }
 
   /** Oracle SQL fragments shared by the KG queries. */
   private val predCase: String =

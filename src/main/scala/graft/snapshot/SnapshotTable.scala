@@ -88,7 +88,7 @@ private[snapshot] final class ManifestFileIndex(val files: Seq[(String, Long)])
   *
   * Layout:
   * {{{
-  *   root/data/v{N}/{physicalValue}/part-*.parquet
+  *   root/data/v{N}/{physical value}/part-*.parquet
   *   root/_manifest/v{N}.json   // commit record:
   *     // partitions: physical value -> data dir
   *     // files:      physical value -> {data file name -> bytes}
@@ -148,34 +148,21 @@ final class SnapshotTable(val spark: SparkSession, val root: String,
     concat(col(partitionCol.get).cast("string"), lit("~b"),
       pmod(xxhash64(spec.hashCols.map(col): _*), lit(n.toLong)).cast("string"))
 
-  /** The bucket count scoped reads and writes use after version `prev`:
-    * its manifest's record, or the declared count when there is no
-    * version yet (the first commit lays the table out with it).
+  /** The bucket count a scoped write after version `v` uses: its
+    * manifest's record (the declared count only lays out a full commit).
     */
-  private def bucketsAfter(prev: Option[Long]): Int =
-    prev.fold(spec.n) { v =>
-      recordedBuckets(v).filter(_ > 0).getOrElse(throw new IllegalStateException(
-        s"snapshot table $root version $v records no bucket count (its " +
-          "manifest predates the record), so bucket-scoped reads and writes " +
-          "cannot name its partitions; re-lay the graph out once with " +
-          "`GraftCli rebucket --new-buckets N`"))
-    }
+  private def layoutOf(v: Long): Int =
+    recordedBuckets(v).filter(_ > 0).getOrElse(throw new IllegalStateException(
+      s"snapshot table $root version $v records no bucket count (its " +
+        "manifest predates the record), so bucket-scoped reads and writes " +
+        "cannot name its partitions; re-lay the graph out once with " +
+        "`GraftCli rebucket --new-buckets N`"))
 
-  /** Bucket count of the latest committed layout (the declared count
-    * while the table has no version).
+  /** Distinct physical partition values `df`'s rows hash into under `n`
+    * buckets (one collect job).
     */
-  def layoutBuckets: Int = bucketsAfter(latestVersion)
-
-  /** The physical partition value `<logical>~b<bucket>` of each row,
-    * under the latest committed layout.
-    */
-  def physicalValue: Column = bucketedValue(layoutBuckets)
-
-  /** Distinct physical partition values present in `df` (an action). */
-  def physicalValuesOf(df: DataFrame): Seq[String] = valuesOf(df, physicalValue)
-
-  private def valuesOf(df: DataFrame, pv: Column): Seq[String] =
-    df.select(pv.as(pvCol)).distinct()
+  private def touchedBy(df: DataFrame, n: Int): Seq[String] =
+    df.select(bucketedValue(n).as(pvCol)).distinct()
       .collect().map(_.getString(0)).toSeq.sorted
 
   // ---- manifest (de)serialization: Jackson, not hand-rolled strings —
@@ -318,43 +305,41 @@ final class SnapshotTable(val spark: SparkSession, val root: String,
     latestVersion.flatMap(v => readOf(v, partitionsOf(v).keys
       .filter(_.startsWith(value + "~b"))))
 
-  /** Read only the given PHYSICAL partitions of the latest version;
-    * values absent from the manifest are skipped. None when nothing
-    * matches (caller supplies the empty frame).
+  /** The physical partitions whose data-dir refs differ between versions
+    * `a` and `b`. Every other partition is carried by REFERENCE between
+    * the two manifests, so it is byte-identical by construction: a
+    * comparison of the versions reads only these.
     */
-  def readPhysical(values: Seq[String]): Option[DataFrame] =
-    latestVersion.flatMap(readOf(_, values))
+  private def changedPartitions(a: Long, b: Long): Seq[String] = {
+    val (pa, pb) = (partitionsOf(a), partitionsOf(b))
+    (pa.keySet ++ pb.keySet).filter(k => pa.get(k) != pb.get(k)).toSeq.sorted
+  }
 
   /** Row-level changelog between two committed versions — the Iceberg
     * `create_changelog_view` / CDC-read analog: one row per key whose
     * state changed, op ∈ insert / delete / update with the full before/
     * after column structs (unchanged rows emit nothing).
     *
-    * MANIFEST-PRUNED: a physical partition carried by file REFERENCE
-    * between the two manifests is byte-identical by construction, so
-    * only partitions whose data-dir refs differ are read AT ALL — an
-    * incremental sync that touched 3 of 4,096 buckets diffs 3 buckets,
-    * never the table (the same carry argument as commitPhysical). Rows
-    * that merely moved partitions (a re-bucket) still diff correctly:
-    * both homes are rewritten, so both are in the changed set.
+    * MANIFEST-PRUNED: only the [[changedPartitions]] are read AT ALL —
+    * an incremental sync that touched 3 of 4,096 buckets diffs 3
+    * buckets, never the table. Rows that merely moved partitions (a
+    * re-bucket) still diff correctly: both homes are rewritten, so both
+    * are in the changed set.
     *
     * The diff itself is one full-outer join co-partitioned on `keyCols`;
     * keys must be unique per version (the nodes/edges tables' MERGE
     * invariant).
     */
   def changelog(fromV: Long, toV: Long, keyCols: Seq[String]): DataFrame = {
-    val pa = partitionsOf(fromV)
-    val pb = partitionsOf(toV)
-    val changed = (pa.keySet ++ pb.keySet)
-      .filter(k => pa.get(k) != pb.get(k)).toSeq.sorted
+    val changed = changedPartitions(fromV, toV)
     (readOf(fromV, changed), readOf(toV, changed)) match {
       case (Some(b), Some(a)) => SnapshotTable.diff(b, a, keyCols)
       case (Some(b), None) => SnapshotTable.diff(b, b.limit(0), keyCols)
       case (None, Some(a)) => SnapshotTable.diff(a.limit(0), a, keyCols)
       case (None, None) =>
-        // no bucket ref differs — the versions are byte-identical (an
-        // idempotent no-change sync, or fromV == toV): a legitimate
-        // EMPTY changelog, not an error
+        // no partition ref differs, so the versions hold the same rows
+        // (as when fromV == toV): a legitimate EMPTY changelog, not an
+        // error
         val z = readVersion(toV).limit(0)
         SnapshotTable.diff(z, z, keyCols)
     }
@@ -431,26 +416,6 @@ final class SnapshotTable(val spark: SparkSession, val root: String,
     v
   }
 
-  /** Commit scoped to PHYSICAL partitions: rewrite only `touched` from
-    * `df`; every other physical partition of the previous version is
-    * carried forward by reference (no data movement). This is the scale
-    * path — `touched` is the bucket set a merge batch actually hashes
-    * into. The layout is the latest manifest's.
-    */
-  def commitPhysical(df: DataFrame, updateTag: Long,
-                     touched: Seq[String]): Long =
-    commitScoped(df, updateTag, touched, layoutBuckets)
-
-  private def commitScoped(df: DataFrame, updateTag: Long, touched: Seq[String],
-                           n: Int): Long = {
-    val prev = latestVersion
-    val v = prev.getOrElse(0L) + 1
-    val carried = prev.fold(Map.empty[String, Part])(contentsOf(_).parts) -- touched
-    writeManifest(v, updateTag, n, SnapshotTable.nullable(df.schema),
-      carried ++ writeDataPartitioned(df, v, n, Some(touched)))
-    v
-  }
-
   /** The one bucket-precise read-modify-write: every merge and cleanup
     * commits through here. `delta` names the rows a write
     * touches; `f` gets the current state of exactly the physical
@@ -472,11 +437,18 @@ final class SnapshotTable(val spark: SparkSession, val root: String,
     require(partitionCol.isDefined, "rewrite requires a partition column")
     latestVersion match {
       case None => if (delta.isEmpty) None else Some(commit(f(None), updateTag))
-      case prev @ Some(v) =>
-        val n = bucketsAfter(prev)
-        val touched = valuesOf(delta, bucketedValue(n))
+      case Some(prev) =>
+        val n = layoutOf(prev)
+        val touched = touchedBy(delta, n)
         if (touched.isEmpty) None
-        else Some(commitScoped(f(readOf(v, touched)), updateTag, touched, n))
+        else {
+          val df = f(readOf(prev, touched))
+          val v = prev + 1
+          // every partition `delta` does not touch is carried by reference
+          writeManifest(v, updateTag, n, SnapshotTable.nullable(df.schema),
+            (contentsOf(prev).parts -- touched) ++ writeDataPartitioned(df, v, n, Some(touched)))
+          Some(v)
+        }
     }
   }
 
@@ -486,16 +458,32 @@ final class SnapshotTable(val spark: SparkSession, val root: String,
     * committed tables costs more in scheduling than the data.
     */
   def fileRowCounts(v: Long): Seq[Long] =
-    contentsOf(v).parts.toSeq.sortBy(_._1).flatMap { case (_, Part(dir, files)) =>
+    footerRows(contentsOf(v).parts.toSeq.sortBy(_._1).map(_._2))
+
+  /** Total committed rows of the latest version (footer-based, no job). */
+  def rowCount(): Long = fileRowCounts(latestVersion.getOrElse(
+    sys.error(s"snapshot table $root has no committed version"))).sum
+
+  /** Committed rows of version `toV` minus those of `fromV`, summed from
+    * the footers of the [[changedPartitions]] only — NO Spark job. For a
+    * write that only deletes rows, `-rowDelta(base, committed)` is
+    * exactly the number it deleted, as a statement's summary counters
+    * report it (cartography/graph/statement.py:99-112).
+    */
+  def rowDelta(fromV: Long, toV: Long): Long = {
+    val changed = changedPartitions(fromV, toV)
+    def rows(v: Long): Long = footerRows(changed.flatMap(contentsOf(v).parts.get)).sum
+    rows(toV) - rows(fromV)
+  }
+
+  /** The footer row count of each data file of `parts`, in order. */
+  private def footerRows(parts: Seq[Part]): Seq[Long] =
+    parts.flatMap { case Part(dir, files) =>
       files.map { case (name, _) =>
         val r = openFooter(s"$dir/$name")
         try r.getRecordCount finally r.close()
       }
     }
-
-  /** Total committed rows of the latest version (footer-based, no job). */
-  def rowCount(): Long = fileRowCounts(latestVersion.getOrElse(
-    sys.error(s"snapshot table $root has no committed version"))).sum
 
   // ---- maintenance --------------------------------------------------------
 
@@ -679,8 +667,9 @@ object SnapshotTable {
 
   /** Recursive delete with the stream CLOSED per directory (`Files.list`
     * holds a file descriptor until GC) — the one filesystem-deletion
-    * helper, shared by expire/orphan maintenance and the session's
-    * scratch cleanup so there is a single idiom to keep correct.
+    * helper, shared by expire/orphan maintenance, the session's scratch
+    * cleanup and the streaming queries' checkpoint litter so there is a
+    * single idiom to keep correct.
     */
   def deleteTree(p: Path): Unit = {
     if (Files.isDirectory(p)) {

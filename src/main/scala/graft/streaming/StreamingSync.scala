@@ -4,8 +4,7 @@ import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{DataStreamWriter, GroupState, GroupStateTimeout, OutputMode}
 import graft.kg.{AliasRow, Extract, KgPipeline, Page}
-import graft.merge.{GraphMerge, GraphTables}
-import graft.model.{NodeSchema, RowRef}
+import graft.merge.GraphTables
 
 /** Structured-Streaming front end for the KG engine: the batch pipeline's
   * stages re-expressed as an incremental micro-batch sync, plus the
@@ -36,8 +35,8 @@ object StreamingSync {
   /** One micro-batch of pages → graph with `updateTag` = the micro-batch
     * id: the batch pipeline's extract, fused facts scan, links view,
     * canonicalized triples and edge builders ([[KgPipeline]]'s stage
-    * transforms) against the precomputed canonical mapping, upserted as
-    * one node and one edge batch.
+    * transforms) against the precomputed canonical mapping, written by
+    * the batch sync's graph write ([[KgPipeline.writeGraph]]).
     */
   def incrementalMerge(spark: SparkSession, batch: Dataset[Page],
                        dict: Seq[AliasRow], canonical: DataFrame,
@@ -47,24 +46,14 @@ object StreamingSync {
       val facts = KgPipeline.facts(spark, texts.toDF(), dict).cache()
       try {
         val links = KgPipeline.linksView(facts)
-        val pageRows = GraphMerge.toNodeRows(
-          texts.toDF().select(col("url").as("id"), col("lang")),
-          NodeSchema("Page", RowRef("id"), properties = Map("lang" -> RowRef("lang"))),
-          Map.empty, updateTag)
         // only entities actually mentioned in this batch — an incremental
         // batch must not rewrite the whole entity space every trigger
-        val entityRows = GraphMerge.toNodeRows(
-          links.join(broadcast(canonical
-            .select(col("id").as("entity_id"), col("canonical_id"))), Seq("entity_id"))
-            .select(col("canonical_id").as("id")).distinct(),
-          NodeSchema("Entity", RowRef("id")), Map.empty, updateTag)
-        GraphMerge.upsertNodeBatch(spark, pageRows.unionByName(entityRows),
-          updateTag, GraphTables.nodes(spark, graphRoot))
-
-        GraphMerge.upsertEdgeBatch(spark,
-          KgPipeline.mentionEdges(links, canonical, updateTag).unionByName(
-            KgPipeline.tripleEdges(KgPipeline.canonicalTriples(facts, canonical), updateTag)),
-          updateTag, GraphTables.edges(spark, graphRoot))
+        val mentioned = links.join(broadcast(canonical
+          .select(col("id").as("entity_id"), col("canonical_id"))), Seq("entity_id"))
+          .select(col("canonical_id").as("id"))
+        KgPipeline.writeGraph(spark, texts.toDF(), links, canonical,
+          KgPipeline.canonicalTriples(facts, canonical), mentioned, updateTag,
+          GraphTables.nodes(spark, graphRoot), GraphTables.edges(spark, graphRoot))
       } finally facts.unpersist()
     } finally texts.unpersist()
   }

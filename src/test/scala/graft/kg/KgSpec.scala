@@ -169,6 +169,30 @@ class KgSpec extends SparkSpecBase {
     assert(KgPipeline.boundedCollectOpt(dictDs).isDefined)
   }
 
+  test("a broadcast cap whose cap+1 row limit does not fit an Int is rejected, not wrapped") {
+    val tiny = Corpus.aliasRows.take(3).toDS()
+    Seq(Int.MaxValue.toLong, 5000000000L, -2L).foreach { cap =>
+      val e = intercept[IllegalArgumentException](KgPipeline.boundedCollectOpt(tiny, cap))
+      assert(e.getMessage.contains("broadcast alias cap"), e.getMessage)
+      intercept[IllegalArgumentException](new KgPipeline(spark,
+        Files.createTempDirectory("kgcap").toString, maxBroadcastAliases = cap))
+    }
+    assert(KgPipeline.boundedCollectOpt(tiny, 3L).map(_.toSet) === Some(Corpus.aliasRows.take(3).toSet))
+    assert(KgPipeline.boundedCollectOpt(tiny, 2L) === None)
+  }
+
+  test("a re-crawl that lists one url twice merges into one Page node") {
+    val page = Corpus.pages(spark, sf1).filter(col("lang") === "en").head()
+    val recrawl = page.copy(warc_ts = new java.sql.Timestamp(page.warc_ts.getTime + 1000L))
+    val work = Files.createTempDirectory("kgrecrawl").toString
+    val pipe = new KgPipeline(spark, work)
+    pipe.run(Seq(page, recrawl).toDS(), KgPipeline.DriverDictionary(Corpus.aliasRows), 100L,
+      mergeGraph = true)
+    val pageNodes = pipe.nodes.readPartition("Page").get.select("id")
+      .collect().map(_.getString(0)).toSeq
+    assert(pageNodes === Seq(page.url))
+  }
+
   test("pipeline resumes: committed stages are not recomputed on re-run") {
     val work = Files.createTempDirectory("kgresume").toString
     val pipe = new KgPipeline(spark, work)

@@ -157,6 +157,30 @@ class GraphMergeSpec extends SparkSpecBase {
     assert(relsOf(edges).count(_._3 == "RESOURCE") === 3)
   }
 
+  test("a cleanup that deletes stale nodes and their edges runs at most 23 Spark jobs") {
+    val root = tmp()
+    val nodes = GraphTables.nodes(spark, root)
+    val edges = GraphTables.edges(spark, root)
+    val kw = Map("account_id" -> "acct1", "region" -> "r")
+    GraphMerge.load(spark, Seq(("acct1", "p")).toDF("aid", "name"),
+      accountSchema, Map.empty, 100L, nodes, edges)
+    GraphMerge.load(spark, Seq(("a1", "n", null.asInstanceOf[String]), ("a2", "n", "a1"),
+      ("a3", "n", "a2")).toDF("id", "name", "uses_id"), assetSchema, kw, 100L, nodes, edges)
+    GraphMerge.load(spark, assets("a1"), assetSchema, kw, 200L, nodes, edges)
+    // a2 and a3 go stale: their two RESOURCE edges and both USES edges
+    val (stats, jobs) = sparkJobs(Cleanup.run(spark, assetSchema, kw, 200L, nodes, edges))
+    assert(stats === CleanupStats(2L, 4L))
+    info(s"deleting cleanup: $jobs jobs")
+    assert(jobs <= 23, s"the cleanup ran $jobs Spark jobs")
+    // nothing is stale any more: a cleanup that commits nothing
+    val (again, idle) = sparkJobs(Cleanup.run(spark, assetSchema, kw, 200L, nodes, edges))
+    assert(again === CleanupStats(0L, 0L))
+    info(s"idle cleanup: $idle jobs")
+    assert(idle <= 11, s"the idle cleanup ran $idle Spark jobs")
+    assert(nodesOf(nodes).map(_._2) === Set("acct1", "a1"))
+    assert(relsOf(edges) === Set(("Account", "acct1", "RESOURCE", "Asset", "a1")))
+  }
+
   test("cleanup deletes stale tenant-scoped facts, spares other tenants (scenario 2)") {
     val root = tmp()
     val nodes = GraphTables.nodes(spark, root)

@@ -16,7 +16,7 @@ import graft.SparkSpecBase
   *
   * GraphMergeSpec pins hand-built scenarios; this pins the algebra on
   * random ones, including the bucket-carry-forward path (small batches
-  * touch few buckets, so most commits exercise commitPhysical reuse).
+  * touch few buckets, so most rewrites carry the rest by reference).
   */
 class MergePropertySpec extends SparkSpecBase {
   import spark.implicits._

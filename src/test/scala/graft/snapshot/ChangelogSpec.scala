@@ -88,9 +88,10 @@ class ChangelogSpec extends SparkSpecBase {
       Some(BucketSpec(Seq("id"), 2)))
     val all = Seq(("X", "1", 10), ("X", "2", 20)).toDF("label", "id", "v")
     t.commit(all, 100L)
-    // idempotent re-sync: rewrite nothing, carry every bucket
-    t.commitPhysical(all, 200L, Seq.empty)
-    assert(t.changelog(1L, 2L, Seq("label", "id")).count() === 0L)
+    // idempotent re-sync: a delta that touches no bucket commits nothing
+    assert(t.rewrite(all.limit(0), 200L)(_.get) === None)
+    assert(t.versions === Seq(1L))
+    // no partition ref differs between a version and itself
     assert(t.changelog(1L, 1L, Seq("label", "id")).count() === 0L)
   }
 
@@ -105,8 +106,16 @@ class ChangelogSpec extends SparkSpecBase {
     // rewritten byte-equal, every other bucket carries by reference
     val updated = all.withColumn("v",
       when(col("id") === "5", 999).otherwise(col("v")))
-    val touched = t.physicalValuesOf(updated.filter(col("id") === "5"))
-    t.commitPhysical(updated, 200L, touched)
+    assert(t.rewrite(updated.filter(col("id") === "5"), 200L) { existing =>
+      existing.get.withColumn("v", when(col("id") === "5", 999).otherwise(col("v")))
+    } === Some(2L))
+    val touched = t.partitionsOf(2L).keys
+      .filter(k => !t.partitionsOf(1L).get(k).contains(t.partitionsOf(2L)(k))).toSeq
+    assert(touched.size === 1, touched.toString)
+    // an update changes no row count, and the footers answer without a job
+    assert(sparkJobs(t.rowDelta(1L, 2L)) === ((0L, 0)))
+    assert(t.read().collect().map(_.toString).sorted.toSeq ===
+      updated.collect().map(_.toString).sorted.toSeq)
     val log = t.changelog(1L, 2L, Seq("label", "id"))
     val rows = log.select(col("id"), col("op"), col("_after.v"))
       .as[(String, String, Int)].collect().toSeq

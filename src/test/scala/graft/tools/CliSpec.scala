@@ -6,6 +6,7 @@ import org.apache.spark.sql.functions._
 import graft.SparkSpecBase
 import graft.kg.Corpus
 import graft.merge.GraphTables
+import graft.snapshot.SnapshotTable
 
 /** End-to-end CLI lifecycle over parquet-backed inputs: sync (full and
   * stage-subset), drift get-state/detect across two syncs, and snapshot
@@ -505,11 +506,10 @@ class CliSpec extends SparkSpecBase {
     // new layout recorded in the manifests
     assert(nodes3.latestVersion.flatMap(nodes3.recordedBuckets) === Some(3))
     assert(edges3.latestVersion.flatMap(edges3.recordedBuckets) === Some(3))
-    // an open with the default count follows the recorded layout
-    val default = GraphTables.nodes(spark, s"$work/graph")
-    val pvs = default.physicalValuesOf(nodes3.read())
-    assert(pvs === nodes3.physicalValuesOf(nodes3.read()))
-    assert(pvs.forall(pv => Set("0", "1", "2")(pv.substring(pv.lastIndexOf("~b") + 2))), pvs.toString)
+    def inLayout(t: SnapshotTable): Boolean =
+      t.partitionsOf(t.latestVersion.get).keys
+        .forall(pv => Set("0", "1", "2")(pv.substring(pv.lastIndexOf("~b") + 2)))
+    assert(inLayout(nodes3) && inLayout(edges3))
     // the count is the manifest's alone: only sync (sizing a new graph)
     // takes --graph-buckets
     val e = intercept[IllegalArgumentException] {
@@ -524,6 +524,9 @@ class CliSpec extends SparkSpecBase {
     assert(created(nodes3.read()) === createdBefore)
     assert(nodes3.latestVersion.flatMap(nodes3.recordedBuckets) === Some(3))
     assert(edges3.latestVersion.flatMap(edges3.recordedBuckets) === Some(3))
+    // the sync opened the graph with the default count, and its scoped
+    // commits followed the recorded layout
+    assert(inLayout(nodes3) && inLayout(edges3))
   }
 
   test("cli: a legacy graph (manifests without a bucket count) fails sync naming rebucket; rebucket heals it") {

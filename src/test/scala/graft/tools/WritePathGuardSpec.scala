@@ -24,11 +24,15 @@ class WritePathGuardSpec extends AnyFunSuite {
     finally stream.close()
   }
 
-  test("only graft/snapshot/SnapshotTable.scala calls commitPhysical in src/main") {
-    val callers = scalaFiles(Paths.get("src/main/scala"))
-      .filter(f => Files.readString(f).contains("commitPhysical("))
-      .map(_.toString).toSet
-    assert(callers === Set("src/main/scala/graft/snapshot/SnapshotTable.scala"))
+  test("SnapshotTable's physical-partition methods are gone from src/main: rewrite is the one scoped path") {
+    val gone = Seq("commitPhysical", "readPhysical", "physicalValuesOf", "physicalValue",
+      "layoutBuckets")
+    val hits = for {
+      f <- scalaFiles(Paths.get("src/main/scala"))
+      word <- gone
+      if Files.readString(f).contains(word)
+    } yield s"$f: $word"
+    assert(hits.isEmpty, hits.mkString("\n"))
   }
 
   test("only graft/snapshot/SnapshotTable.scala reads a recorded bucket count in src/main") {
