@@ -3,6 +3,7 @@ package graft.kg
 import scala.collection.mutable
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
+import graft.core.Concurrently
 import graft.link.{Blocking, ConnectedComponents}
 import graft.merge.{GraphMerge, GraphTables}
 import graft.model.{NodeSchema, RowRef}
@@ -46,11 +47,12 @@ import graft.snapshot.SnapshotTable
   *   stage dir (independent checkpoint/resume per tenant) while every
   *   tenant merges into ONE shared graph — the reference's per-account
   *   sync loop over a single Neo4j instance (`_sync_multiple_accounts`).
-  * @param graphBuckets lays out a NEW graph only; an existing graph keeps
-  *   the bucket count its manifests record.
+  *
+  * The graph tables declare no bucket count: their first commit sizes it
+  * from the rows, and every later sync follows the count the manifest
+  * records (`BucketSpec`).
   */
 final class KgPipeline(spark: SparkSession, workRoot: String,
-                       graphBuckets: Int = GraphTables.DefaultBuckets,
                        graphRoot: Option[String] = None,
                        maxBroadcastAliases: Long = KgPipeline.MaxBroadcastAliases) {
   import spark.implicits._
@@ -63,11 +65,8 @@ final class KgPipeline(spark: SparkSession, workRoot: String,
 
   private val graphDir: String = graphRoot.getOrElse(s"$workRoot/graph")
 
-  // graphBuckets is deployment-sized (SnapshotTable scaladoc): 8 at test
-  // scale, hundreds+ at corpus scale so an incremental merge's touched
-  // fraction stays proportional to the batch
-  val nodes: SnapshotTable = GraphTables.nodes(spark, graphDir, graphBuckets)
-  val edges: SnapshotTable = GraphTables.edges(spark, graphDir, graphBuckets)
+  val nodes: SnapshotTable = GraphTables.nodes(spark, graphDir)
+  val edges: SnapshotTable = GraphTables.edges(spark, graphDir)
 
   /** True if `name` already committed for this updateTag (resume). */
   def stageDone(name: String, updateTag: Long): Boolean = {
@@ -401,9 +400,10 @@ object KgPipeline {
   /** The KG graph write, shared by the batch and streaming syncs: Page
     * nodes from `texts` and Entity nodes for `entityIds` (an `id`
     * column: every canonical id in a batch sync, only the mentioned ones
-    * in a micro-batch) as ONE node upsert, then MENTIONS and triple edges
-    * as ONE edge upsert (firstseen/lastupdated semantics). Neither node
-    * schema declares relationships; the edges come from the extraction.
+    * in a micro-batch) as ONE node upsert, and MENTIONS and triple edges
+    * as ONE edge upsert beside it (firstseen/lastupdated semantics).
+    * Neither node schema declares relationships; the edges come from the
+    * extraction.
     */
   private[graft] def writeGraph(spark: SparkSession, texts: DataFrame, links: DataFrame,
                                 canonical: DataFrame, triples: DataFrame,
@@ -420,11 +420,13 @@ object KgPipeline {
       NodeSchema("Entity", RowRef("id")), Map.empty, updateTag, dedup = false)
     // both node inputs are key-unique and the two labels can't collide;
     // both edge inputs are aggregation outputs, hence key-unique too —
-    // the batch upserts' precondition
-    GraphMerge.upsertNodeBatch(spark, pageRows.unionByName(entityRows), updateTag, nodes)
-    GraphMerge.upsertEdgeBatch(spark,
-      mentionEdges(links, canonical, updateTag).unionByName(tripleEdges(triples, updateTag)),
-      updateTag, edges)
+    // the batch upserts' precondition. Neither commit reads the other's
+    // table, so they run at once.
+    Concurrently.both(spark)(
+      GraphMerge.upsertNodeBatch(spark, pageRows.unionByName(entityRows), updateTag, nodes),
+      GraphMerge.upsertEdgeBatch(spark,
+        mentionEdges(links, canonical, updateTag).unionByName(tripleEdges(triples, updateTag)),
+        updateTag, edges)): Unit
   }
 
   /** MENTIONS edges with per-pair mention counts, aggregated BEFORE the

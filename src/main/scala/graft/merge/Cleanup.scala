@@ -2,6 +2,7 @@ package graft.merge
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import graft.core.Concurrently
 import graft.model._
 import graft.snapshot.SnapshotTable
 
@@ -93,14 +94,20 @@ object Cleanup {
     * The DETACH sweep is one full-scan semi-join of the edge table
     * against the deleted ids: a deleted node's edges can carry any
     * rel label, and edge buckets hash (src_id, dst_id) jointly, so no
-    * partition of the table can be skipped. It runs only when a node
-    * was deleted.
+    * partition of the table can be skipped.
+    *
+    * The node delete and the edge delete read the same cached stale set
+    * and neither reads the other's table, so they commit at once
+    * ([[graft.core.Concurrently]]). DETACH's delete set is that stale
+    * set, so one emptiness check of it gates DETACH, in place of the node
+    * commit's count; with nothing stale and no rel label declared,
+    * nothing can be deleted and no delete plan runs.
     *
     * The deleted counts come from the two commits themselves, the way
     * the reference reads them off each write's summary counters
     * (graph/statement.py:99-112): no count query runs before a rewrite,
-    * and no gate decides whether to call it — a rewrite whose rows touch
-    * no partition commits nothing and counts 0.
+    * and a rewrite whose rows touch no partition commits nothing and
+    * counts 0.
     */
   def run(spark: SparkSession, schema: NodeSchema,
           kwargs: Map[String, String], updateTag: Long,
@@ -118,6 +125,7 @@ object Cleanup {
       case Some(id) => col("sub_resource_id") === lit(id)
       case None => lit(true)
     }
+    val relLabels = schema.relLabels.distinct.sorted
     // Tenant scope BEFORE deletion — used to scope the edge sweep so other
     // tenants' edges survive (the MATCH ...<-[:RESOURCE]-(:SubRes{id:$kwarg})
     // prefix of every generated cleanup query, cleanupbuilder.py:150-169).
@@ -125,61 +133,74 @@ object Cleanup {
     val staleRows = part.filter(scope && stale(updateTag)).cache()
     val staleIds = staleRows.select(col("id"))
     try {
-      // bucket-precise: rewrite only the buckets that contain stale
-      // rows; the label's other buckets carry forward by file reference
-      val nDeleted = deleting(nodes, staleRows, updateTag) { existing =>
-        bucketsOf(existing, "stale").join(staleIds.withColumnRenamed("id", "_sid"),
-          col("id") === col("_sid"), "left_anti")
+      val anyStale = !staleRows.isEmpty
+      if (!anyStale && relLabels.isEmpty) CleanupStats(0L, 0L)
+      else {
+        val (nDeleted, eDeleted) = Concurrently.both(spark)(
+          // bucket-precise: rewrite only the buckets that contain stale
+          // rows; the label's other buckets carry forward by file reference
+          if (!anyStale) 0L else deleting(nodes, staleRows, updateTag) { existing =>
+            bucketsOf(existing, "stale").join(staleIds.withColumnRenamed("id", "_sid"),
+              col("id") === col("_sid"), "left_anti")
+          },
+          if (!edges.exists) 0L
+          else deleteEdges(schema.label, relLabels, anyStale, staleIds, tenantIds,
+            updateTag, edges))
+        CleanupStats(nDeleted, eDeleted)
       }
-      val eDeleted = if (!edges.exists) 0L else {
-        val relSet = schema.relLabels.toSet
-        // Every membership test below is TWO equi-semi-joins (src side,
-        // dst side) unioned — an OR-of-equalities join condition cannot be
-        // planned as a hash join and degrades to a nested loop over
-        // |edges| × |ids|. No explicit broadcast: staleIds is usually
-        // small (AQE broadcasts it), but with no sub-resource scope
-        // tenantIds is the WHOLE label — forcing it into a broadcast would
-        // OOM at corpus scale, while a shuffled semi-join just works.
-        def touching(base: DataFrame, ids: DataFrame, renamed: String): DataFrame = {
-          val r = ids.withColumnRenamed("id", renamed)
-          base.filter(col("src_label") === schema.label)
-            .join(r, col("src_id") === col(renamed), "left_semi")
-            .unionByName(
-              base.filter(col("dst_label") === schema.label)
-                .join(r, col("dst_id") === col(renamed), "left_semi"))
-        }
-        // detach: any edge touching a deleted node of this label
-        val detachState =
-          if (nDeleted > 0) edges.read() else GraphTables.emptyEdges(spark)
-        val detached = touching(detachState, staleIds, "_sid")
-        // stale rels of this schema's rel labels, scoped to this node label
-        // AND to the tenant being synced. The labels are the table's
-        // partition column — read ONLY those partitions.
-        val relState = relSet.toSeq.sorted.flatMap(edges.readPartition)
-          .reduceOption(_ unionByName _)
-          .getOrElse(GraphTables.emptyEdges(spark))
-        val staleRelEdges = touching(relState.filter(stale(updateTag)),
-          tenantIds, "_tid")
-        val doomed = detached
-          .unionByName(staleRelEdges)
-          .dropDuplicates("src_label", "src_id", "rel_label", "dst_label", "dst_id")
-          .cache()
-        // bucket-precise: rewrite only the (rel_label, bucket) partitions
-        // that contain doomed edges
-        try deleting(edges, doomed, updateTag) { existing =>
-          bucketsOf(existing, "doomed")
-            .join(doomed.select(col("src_label").as("_dsl"), col("src_id").as("_dsi"),
-              col("rel_label").as("_drl"), col("dst_label").as("_ddl"),
-              col("dst_id").as("_ddi")),
-              col("src_label") === col("_dsl") && col("src_id") === col("_dsi") &&
-                col("rel_label") === col("_drl") && col("dst_label") === col("_ddl") &&
-                col("dst_id") === col("_ddi"),
-              "left_anti")
-        } finally doomed.unpersist(): Unit
-      }
-      CleanupStats(nDeleted, eDeleted)
     } finally {
       staleRows.unpersist(); tenantIds.unpersist(): Unit
+    }
+  }
+
+  /** Steps 2 and 3: delete the edges touching a deleted node of `label`
+    * (DETACH, when `anyStale`) and the stale edges of `relLabels` scoped
+    * to the tenant, in one bucket-precise edge rewrite. Returns the edges
+    * deleted.
+    */
+  private def deleteEdges(label: String, relLabels: Seq[String], anyStale: Boolean,
+                          staleIds: DataFrame, tenantIds: DataFrame, updateTag: Long,
+                          edges: SnapshotTable): Long = {
+    // Every membership test below is TWO equi-semi-joins (src side,
+    // dst side) unioned — an OR-of-equalities join condition cannot be
+    // planned as a hash join and degrades to a nested loop over
+    // |edges| × |ids|. No explicit broadcast: staleIds is usually
+    // small (AQE broadcasts it), but with no sub-resource scope
+    // tenantIds is the WHOLE label — forcing it into a broadcast would
+    // OOM at corpus scale, while a shuffled semi-join just works.
+    def touching(base: DataFrame, ids: DataFrame, renamed: String): DataFrame = {
+      val r = ids.withColumnRenamed("id", renamed)
+      base.filter(col("src_label") === label)
+        .join(r, col("src_id") === col(renamed), "left_semi")
+        .unionByName(
+          base.filter(col("dst_label") === label)
+            .join(r, col("dst_id") === col(renamed), "left_semi"))
+    }
+    // detach: any edge touching a deleted node of this label
+    val detached =
+      if (anyStale) Seq(touching(edges.read(), staleIds, "_sid")) else Nil
+    // stale rels of this schema's rel labels, scoped to this node label
+    // AND to the tenant being synced. The labels are the table's
+    // partition column — read ONLY those partitions.
+    val staleRels = relLabels.flatMap(edges.readPartition)
+      .reduceOption(_ unionByName _)
+      .map(rels => touching(rels.filter(stale(updateTag)), tenantIds, "_tid"))
+    (detached ++ staleRels).reduceOption(_ unionByName _).fold(0L) { all =>
+      val doomed = all
+        .dropDuplicates("src_label", "src_id", "rel_label", "dst_label", "dst_id")
+        .cache()
+      // bucket-precise: rewrite only the (rel_label, bucket) partitions
+      // that contain doomed edges
+      try deleting(edges, doomed, updateTag) { existing =>
+        bucketsOf(existing, "doomed")
+          .join(doomed.select(col("src_label").as("_dsl"), col("src_id").as("_dsi"),
+            col("rel_label").as("_drl"), col("dst_label").as("_ddl"),
+            col("dst_id").as("_ddi")),
+            col("src_label") === col("_dsl") && col("src_id") === col("_dsi") &&
+              col("rel_label") === col("_drl") && col("dst_label") === col("_ddl") &&
+              col("dst_id") === col("_ddi"),
+            "left_anti")
+      } finally doomed.unpersist(): Unit
     }
   }
 }

@@ -28,20 +28,20 @@ object GraphTables {
     StructField("firstseen", LongType),
     StructField("lastupdated", LongType)))
 
-  /** Bucket counts are deployment-sized: 8 at test scale; thousands at
-    * 100 TB so one bucket stays executor-memory-sized. Node buckets hash
-    * the id; edge buckets hash (src_id, dst_id) — both are merge-key
-    * columns, so a batch row maps to a deterministic bucket and an
-    * incremental merge reads/rewrites only the buckets it hashes into.
+  /** Node buckets hash the id; edge buckets hash (src_id, dst_id) — both
+    * are merge-key columns, so a batch row maps to a deterministic bucket
+    * and an incremental merge reads/rewrites only the buckets it hashes
+    * into. The count is the manifest's: with `buckets` None (every sync)
+    * a table's first commit sizes it from its rows
+    * ([[graft.snapshot.BucketSpec.bucketsFor]]); `buckets` declares it
+    * instead, for a re-bucket or a spec that needs a fixed layout.
     */
-  val DefaultBuckets = 8
-
   def nodes(spark: SparkSession, root: String,
-            buckets: Int = DefaultBuckets): SnapshotTable =
+            buckets: Option[Int] = None): SnapshotTable =
     SnapshotTable(spark, s"$root/nodes", Some("label"),
       Some(graft.snapshot.BucketSpec(Seq("id"), buckets)))
   def edges(spark: SparkSession, root: String,
-            buckets: Int = DefaultBuckets): SnapshotTable =
+            buckets: Option[Int] = None): SnapshotTable =
     SnapshotTable(spark, s"$root/edges", Some("rel_label"),
       Some(graft.snapshot.BucketSpec(Seq("src_id", "dst_id"), buckets)))
 
@@ -214,10 +214,10 @@ object GraphMerge {
 
   /** The one MERGE commit: upsert `batch` into the buckets it hashes
     * into (SnapshotTable.rewrite). The batch is read twice on every path
-    * (emptiness probe or touched-bucket collect, then the write), so it
-    * is cached: node batches are dedup'd and edge batches are aggregation
-    * outputs, so an uncached probe would run their shuffle map side and
-    * the write would run it again.
+    * (the first commit's per-label row count, or the touched-bucket
+    * collect, then the write), so it is cached: node batches are dedup'd
+    * and edge batches are aggregation outputs, so an uncached probe would
+    * run their shuffle map side and the write would run it again.
     */
   private def merge(table: SnapshotTable, batch: DataFrame, keys: Seq[String],
                     updateTag: Long): Unit = {

@@ -178,7 +178,7 @@ object GraphOps {
   def q39Changelog(spark: SparkSession, sfDir: String): DataFrame = {
     val root = tempRoot()
     val t = SnapshotTable(spark, s"$root/snap", Some("label"),
-      Some(graft.snapshot.BucketSpec(Seq("id"), 4)))
+      Some(graft.snapshot.BucketSpec(Seq("id"), Some(4))))
     val all = customersOf(spark, sfDir, 1)
       .select(lit("Customer").as("label"), col("cid").as("id"),
         col("c_mktsegment").as("seg"), col("cid").cast("long").as("k"))
@@ -200,7 +200,7 @@ object GraphOps {
     val root = tempRoot()
     // bucketed on purpose: drift/time-travel must work on the bucketed layout
     val t = SnapshotTable(spark, s"$root/snap", Some("label"),
-      Some(graft.snapshot.BucketSpec(Seq("id"), 4)))
+      Some(graft.snapshot.BucketSpec(Seq("id"), Some(4))))
     val all = customersOf(spark, sfDir, 1)
       .select(lit("Customer").as("label"), col("cid").as("id"))
     t.commit(all.filter(col("id").cast("long") % 2 === 0), 100L)

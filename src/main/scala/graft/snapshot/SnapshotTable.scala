@@ -17,17 +17,46 @@ import org.apache.spark.sql.types.{ArrayType, DataType, MapType, StructType}
   * This is what keeps an incremental merge from rewriting a whole label
   * at 100 TB: a batch touches only the buckets its keys hash into, and
   * every untouched bucket's files are carried forward by reference
-  * (Iceberg MERGE file-pruning semantics). `n` is sized per deployment —
-  * 8 here (test scale); thousands on a real corpus so a bucket stays
-  * executor-memory-sized.
+  * (Iceberg MERGE file-pruning semantics).
   *
   * `n` only lays out a FULL commit (a table's first, or a re-bucket);
   * the manifest records it, and every later scoped read or write takes
   * the count from the latest manifest, like an Iceberg partition spec
   * kept in table metadata. An open with a different `n` therefore still
-  * addresses the committed buckets.
+  * addresses the committed buckets. With `n` None the table's first
+  * commit sizes the count from its rows ([[BucketSpec.bucketsFor]]), and
+  * a later full commit keeps the recorded count.
   */
-final case class BucketSpec(hashCols: Seq[String], n: Int)
+final case class BucketSpec(hashCols: Seq[String], n: Option[Int] = None)
+
+object BucketSpec {
+
+  /** Rows per bucket a sized layout aims at. Committed graphs measure
+    * 6–35 bytes per row (manifest bytes ÷ footer rows): 7.3 over the
+    * perfbench graph (165,710 bytes for 22,689 rows; nodes 6.1, edges
+    * 8.4) and 18 over a 1,982-row test graph, whose footers weigh more.
+    * A 2^20-row bucket is therefore a file of roughly 8–20 MB: large
+    * enough that the per-file cost of a commit and a scan (about 20 ms a
+    * file on a 4-vCPU host) is small beside its bytes, small enough that
+    * a scoped merge touching one row rewrites tens of MB, not the label.
+    * The perfbench graph's largest label (10,944 MENTIONS edges) is one
+    * bucket.
+    */
+  val TargetBucketRows: Long = 1L << 20
+
+  /** The bucket count a sized first commit lays out for a table whose
+    * largest logical partition holds `maxRows` rows: the smallest power
+    * of two ≥ ⌈maxRows ÷ [[TargetBucketRows]]⌉, and at least 1. A power
+    * of two keeps every later re-bucket by a factor of two a split of
+    * whole buckets.
+    */
+  def bucketsFor(maxRows: Long): Int = {
+    val want = (maxRows + TargetBucketRows - 1) / TargetBucketRows
+    var n = 1
+    while (n < want) n <<= 1
+    n
+  }
+}
 
 /** One committed physical partition: its data dir (relative to the
   * table root) and its data files as (name, bytes), sorted by name.
@@ -395,26 +424,42 @@ final class SnapshotTable(val spark: SparkSession, val root: String,
   }
 
   /** Full-table commit: every physical partition present in `df` is
-    * written under the declared [[BucketSpec]] count, which the manifest
-    * records; partitions absent from `df` are dropped. This is how a
+    * written, and partitions absent from `df` are dropped. The layout's
+    * bucket count is the declared [[BucketSpec]] count, else the one the
+    * latest manifest records, else (a first commit) sized from `df`'s
+    * rows per logical partition; the manifest records it. This is how a
     * table gets its first layout, and how it is re-bucketed. ONE write
-    * job, no pre-pass: partitionBy lays out whatever values exist and the
-    * manifest is built from the directories actually written.
+    * job, no pre-pass beyond a first commit's sizing count: partitionBy
+    * lays out whatever values exist and the manifest is built from the
+    * directories actually written.
     */
-  def commit(df: DataFrame, updateTag: Long): Long = {
+  def commit(df: DataFrame, updateTag: Long): Long = bucket match {
+    case Some(BucketSpec(_, declared)) =>
+      commitLaidOut(df, updateTag, declared
+        .orElse(latestVersion.flatMap(recordedBuckets).filter(_ > 0))
+        .getOrElse(BucketSpec.bucketsFor(rowsPerPartition(df).maxOption.getOrElse(0L))))
+    case None =>
+      val v = latestVersion.getOrElse(0L) + 1
+      val rel = s"data/v$v/all"
+      df.write.mode("overwrite").parquet(s"$root/$rel")
+      writeManifest(v, updateTag, 0, SnapshotTable.nullable(df.schema),
+        Map("all" -> listPart(rel)))
+      v
+  }
+
+  /** A full commit of a bucketed table laid out under `n` buckets. */
+  private def commitLaidOut(df: DataFrame, updateTag: Long, n: Int): Long = {
     val v = latestVersion.getOrElse(0L) + 1
-    bucket match {
-      case Some(BucketSpec(_, n)) =>
-        writeManifest(v, updateTag, n, SnapshotTable.nullable(df.schema),
-          writeDataPartitioned(df, v, n, values = None))
-      case None =>
-        val rel = s"data/v$v/all"
-        df.write.mode("overwrite").parquet(s"$root/$rel")
-        writeManifest(v, updateTag, 0, SnapshotTable.nullable(df.schema),
-          Map("all" -> listPart(rel)))
-    }
+    writeManifest(v, updateTag, n, SnapshotTable.nullable(df.schema),
+      writeDataPartitioned(df, v, n, values = None))
     v
   }
+
+  /** Row count of each logical partition `df` holds (one aggregate);
+    * empty when `df` is.
+    */
+  private def rowsPerPartition(df: DataFrame): Seq[Long] =
+    df.groupBy(col(partitionCol.get)).count().collect().map(_.getLong(1)).toSeq
 
   /** The one bucket-precise read-modify-write: every merge and cleanup
     * commits through here. `delta` names the rows a write
@@ -427,8 +472,10 @@ final class SnapshotTable(val spark: SparkSession, val root: String,
     * touched partitions and lays out the commit.
     *
     * On a table with no version yet, `f(None)` IS the table: one full
-    * [[commit]] with no touched-partition pre-pass, made only when
-    * `delta` is non-empty.
+    * commit with no touched-partition pre-pass, made only when `delta`
+    * has rows. One aggregate over `delta` answers both that and, unless
+    * the spec declares a count, the layout: `delta`'s rows per logical
+    * partition size it ([[BucketSpec.bucketsFor]]).
     *
     * Returns the committed version, or None when nothing was committed.
     */
@@ -436,7 +483,11 @@ final class SnapshotTable(val spark: SparkSession, val root: String,
              (f: Option[DataFrame] => DataFrame): Option[Long] = {
     require(partitionCol.isDefined, "rewrite requires a partition column")
     latestVersion match {
-      case None => if (delta.isEmpty) None else Some(commit(f(None), updateTag))
+      case None =>
+        val rows = rowsPerPartition(delta)
+        if (rows.isEmpty) None
+        else Some(commitLaidOut(f(None), updateTag,
+          spec.n.getOrElse(BucketSpec.bucketsFor(rows.max))))
       case Some(prev) =>
         val n = layoutOf(prev)
         val touched = touchedBy(delta, n)

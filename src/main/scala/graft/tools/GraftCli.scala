@@ -36,13 +36,12 @@ object GraftCli {
       |            --update-tag N [--selected-modules s1,s2,..]
       |            [--tenants T1,T2,.. [--best-effort true]]
       |            (with --tenants, --input is a template containing {tenant})
-      |            [--analysis-job-dir JOBS|none --out DIR] [--graph-buckets N]
-      |            [--cores N]
+      |            [--analysis-job-dir JOBS|none --out DIR] [--cores N]
       |            (analysis runs LAST, like the reference: default is the
       |             shipped corpus under data/jobs/analysis -> WORKDIR/analysis;
       |             --analysis-job-dir none disables)
-      |            (--graph-buckets sizes a new graph; an existing graph keeps
-      |             its recorded layout)
+      |            (a new graph's first commit sizes its buckets from its rows;
+      |             every later sync keeps the recorded layout)
       |  rebucket  --work-dir DIR --new-buckets N --update-tag T [--cores N]
       |  expire    --work-dir DIR --keep N
       |  remove-orphans --work-dir DIR --older-than-hours H
@@ -124,7 +123,7 @@ object GraftCli {
 
   /** Accepted flags per subcommand — the argparse-style schema: a typo'd
     * flag or config key must fail fast, not silently fall back to a
-    * default (`--graphbuckets 64` running at the default count is exactly
+    * default (`--selected-module merge` running every stage is exactly
     * the misconfiguration class the reference's argparse rejects).
     * `--cores` and `--config` are global.
     */
@@ -133,7 +132,7 @@ object GraftCli {
     Map(
       "sync" -> (global ++ Set("input", "dict", "work-dir", "update-tag",
         "selected-modules", "tenants", "best-effort", "analysis-job-dir",
-        "out", "params", "graph-buckets")),
+        "out", "params")),
       "rebucket" -> (global ++ Set("work-dir", "new-buckets", "update-tag")),
       "expire" -> (global ++ Set("work-dir", "keep")),
       "remove-orphans" -> (global ++ Set("work-dir", "older-than-hours")),
@@ -208,8 +207,6 @@ object GraftCli {
       else flags.getOrElse("out", s"$workDir/analysis")
     }
     postJobDir.foreach { _ => parseParams(flags): Unit }
-    val buckets = flags.getOrElse("graph-buckets",
-      GraphTables.DefaultBuckets.toString).toInt
     val dict = spark.read.parquet(req(flags, "dict")).as[AliasRow]
     // The reference's sync runs its analysis-job corpus as the FINAL
     // stage (cartography/sync.py stage list ends with 'analysis',
@@ -245,13 +242,13 @@ object GraftCli {
         // loop iteration
         val resolved = KgPipeline.dictionary(dict)
         graft.jobs.MultiTenant.syncAndThen(tenants, bestEffort) { t =>
-          val pipe = new KgPipeline(spark, s"$workDir/tenants/$t", buckets,
+          val pipe = new KgPipeline(spark, s"$workDir/tenants/$t",
             graphRoot = Some(s"$workDir/graph"))
           val pages = spark.read.parquet(tpl.replace("{tenant}", t)).as[Page]
           pipe.run(pages, resolved, tag, mergeGraph = true): Unit
         } { runPost() }: Unit
       case None =>
-        val pipe = new KgPipeline(spark, workDir, buckets)
+        val pipe = new KgPipeline(spark, workDir)
         val pages = spark.read.parquet(req(flags, "input")).as[Page]
         flags.get("selected-modules") match {
           case Some(sel) => pipe.runStages(pages, dict, tag, sel)
@@ -279,10 +276,10 @@ object GraftCli {
     require(newN > 0, s"--new-buckets must be positive\n$usage")
     val tag = req(flags, "update-tag").toLong
     val graphRoot = s"$workDir/graph"
-    val edges = GraphTables.edges(spark, graphRoot, newN)
+    val edges = GraphTables.edges(spark, graphRoot, Some(newN))
     require(edges.exists,
       s"no edge table under $graphRoot — check --work-dir\n$usage")
-    Seq("nodes" -> GraphTables.nodes(spark, graphRoot, newN), "edges" -> edges)
+    Seq("nodes" -> GraphTables.nodes(spark, graphRoot, Some(newN)), "edges" -> edges)
       .foreach { case (name, t) =>
         if (t.exists) {
           t.commit(t.read(), tag)

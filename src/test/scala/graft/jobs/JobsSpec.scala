@@ -79,7 +79,8 @@ class JobsSpec extends SparkSpecBase {
 
   test("clearProperties removes only the named keys from matching nodes, bucket-precisely") {
     val root = tmp()
-    val nodes = GraphTables.nodes(spark, root)
+    // 40 rows would size to one bucket: declare 8, so bucket precision shows
+    val nodes = GraphTables.nodes(spark, root, buckets = Some(8))
     val edges = GraphTables.edges(spark, root)
     val batch = (0 until 40).map(i => (s"a$i", s"name$i")).toDF("id", "name")
     val schema = NodeSchema("Asset", RowRef("id"),

@@ -141,6 +141,31 @@ class GraphMergeSpec extends SparkSpecBase {
     }
     assert(spark.sharedState.cacheManager.isEmpty,
       "Cleanup.clearProperties leaked a cached frame")
+
+    // the same with the failure on the concurrent edge branch: a legacy
+    // EDGE manifest fails the edge commit, while the node commit on the
+    // calling thread succeeds. The caller gets the edge branch's
+    // exception, once the node branch has committed, and nothing stays
+    // cached.
+    val root2 = tmp()
+    val nodes2 = GraphTables.nodes(spark, root2)
+    val edges2 = GraphTables.edges(spark, root2)
+    GraphMerge.load(spark, Seq(("acct1", "p")).toDF("aid", "name"),
+      accountSchema, Map.empty, 100L, nodes2, edges2)
+    GraphMerge.load(spark, assets("a1", "a2"), assetSchema, kw, 100L, nodes2, edges2)
+    val nodesBase = nodes2.latestVersion.get
+    val emf = java.nio.file.Paths.get(root2, "edges", "_manifest",
+      s"v${edges2.latestVersion.get}.json")
+    Files.writeString(emf, Files.readString(emf).replaceAll(""","buckets":\d+""", ""))
+    spark.catalog.clearCache()
+    val e = intercept[IllegalStateException] {
+      Cleanup.run(spark, assetSchema, kw, 200L, nodes2, edges2)
+    }
+    assert(e.getMessage.contains("records no bucket count"), e.getMessage)
+    assert(nodes2.latestVersion === Some(nodesBase + 1), "the node branch did not commit")
+    assert(nodesOf(nodes2).map(_._2) === Set("acct1"))
+    assert(spark.sharedState.cacheManager.isEmpty,
+      "a failed edge branch leaked a cached frame")
   }
 
   test("a 2-row load into an existing graph runs at most 17 Spark jobs") {
@@ -209,8 +234,8 @@ class GraphMergeSpec extends SparkSpecBase {
 
   test("DETACH over 64 buckets drops a stale node's edges under every rel label") {
     val root = tmp()
-    val nodes = GraphTables.nodes(spark, root, 64)
-    val edges = GraphTables.edges(spark, root, 64)
+    val nodes = GraphTables.nodes(spark, root, Some(64))
+    val edges = GraphTables.edges(spark, root, Some(64))
     val custSchema = NodeSchema("Customer", RowRef("cid"),
       subResource = Some(SubResourceRel(targetLabel = "Nation",
         ref = KwargRef("nation_id"))))

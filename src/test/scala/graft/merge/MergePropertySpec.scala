@@ -39,7 +39,7 @@ class MergePropertySpec extends SparkSpecBase {
 
     val prop = Prop.forAll(genScenario) { batches =>
       val root = Files.createTempDirectory("graftmergeprop").toString
-      val nodes = GraphTables.nodes(spark, root, buckets = 4)
+      val nodes = GraphTables.nodes(spark, root, buckets = Some(4))
       val edges = GraphTables.edges(spark, root)
 
       var model = Map.empty[Key, ModelRow]

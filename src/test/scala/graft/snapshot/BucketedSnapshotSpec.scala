@@ -26,7 +26,7 @@ class BucketedSnapshotSpec extends SparkSpecBase {
 
   test("incremental node merge rewrites only touched buckets; untouched bucket files are carried by reference, byte-identical") {
     val root = tmp()
-    val nodes = GraphTables.nodes(spark, root, buckets = 8)
+    val nodes = GraphTables.nodes(spark, root, buckets = Some(8))
     val schema = NodeSchema("Page", RowRef("id"))
 
     // v1: 400 ids spread over all 8 buckets
@@ -72,7 +72,7 @@ class BucketedSnapshotSpec extends SparkSpecBase {
 
   test("bucketed edge merge + readPartition prune + time travel") {
     val root = tmp()
-    val edges = GraphTables.edges(spark, root, buckets = 4)
+    val edges = GraphTables.edges(spark, root, buckets = Some(4))
     def batch(tag: Long, ids: Seq[Int]) = ids.toDF("i").select(
       lit("Page").as("src_label"), concat(lit("p"), col("i")).as("src_id"),
       lit("MENTIONS").as("rel_label"),
@@ -103,7 +103,7 @@ class BucketedSnapshotSpec extends SparkSpecBase {
     .toDF("label", "id", "v")
 
   private def table(root: String, n: Int): SnapshotTable =
-    SnapshotTable(spark, s"$root/t", Some("label"), Some(BucketSpec(Seq("id"), n)))
+    SnapshotTable(spark, s"$root/t", Some("label"), Some(BucketSpec(Seq("id"), Some(n))))
 
   private val mapper = new com.fasterxml.jackson.databind.ObjectMapper()
 
@@ -207,6 +207,50 @@ class BucketedSnapshotSpec extends SparkSpecBase {
     assert(t.read().filter(col("note") === "new").select("id").collect().map(_.getString(0))
       .toSeq === Seq("id5"))
     assert(t.readVersion(1L).count() === 40L)
+  }
+
+  test("bucketsFor: the smallest power of two covering the largest partition at TargetBucketRows a bucket, at least 1") {
+    val t = BucketSpec.TargetBucketRows
+    assert(Seq(0L, 1L, t, t + 1, 2 * t, 2 * t + 1, 5 * t).map(BucketSpec.bucketsFor) ===
+      Seq(1, 1, 1, 2, 2, 4, 8))
+  }
+
+  test("an undeclared count is sized by the first commit: one bucket per label for a small graph; later merges and full commits keep the manifest's count; a declared count is honoured") {
+    val root = tmp()
+    val nodes = GraphTables.nodes(spark, root)
+    val edges = GraphTables.edges(spark, root)
+    val schema = NodeSchema("Page", RowRef("id"))
+    GraphMerge.load(spark, (0 until 400).map(i => s"page-$i").toDF("id"), schema,
+      Map.empty, 100L, nodes, edges)
+    GraphMerge.load(spark, Seq("e1", "e2").toDF("id"), NodeSchema("Entity", RowRef("id")),
+      Map.empty, 100L, nodes, edges)
+    def layout(t: SnapshotTable): (Option[Int], Set[String]) = {
+      val v = t.latestVersion.get
+      (t.recordedBuckets(v), t.partitionsOf(v).keySet)
+    }
+    assert(layout(nodes) === ((Some(1), Set("Page~b0", "Entity~b0"))))
+    // a scoped merge follows the manifest, also from an open that
+    // declares another count
+    val declared8 = GraphTables.nodes(spark, root, buckets = Some(8))
+    GraphMerge.load(spark, (400 until 800).map(i => s"page-$i").toDF("id"), schema,
+      Map.empty, 200L, declared8, edges)
+    assert(layout(nodes) === ((Some(1), Set("Page~b0", "Entity~b0"))))
+    assert(nodes.readPartition("Page").get.count() === 800L)
+    // an undeclared full commit keeps the recorded count
+    nodes.commit(nodes.read(), 300L)
+    assert(layout(nodes) === ((Some(1), Set("Page~b0", "Entity~b0"))))
+
+    // a declared count lays out the first commit
+    val other = tmp()
+    val nodes4 = GraphTables.nodes(spark, other, buckets = Some(4))
+    GraphMerge.load(spark, (0 until 400).map(i => s"page-$i").toDF("id"), schema,
+      Map.empty, 100L, nodes4, GraphTables.edges(spark, other))
+    assert(layout(nodes4) === ((Some(4), (0 until 4).map(b => s"Page~b$b").toSet)))
+    // and an empty first batch commits nothing
+    val empty = GraphTables.nodes(spark, tmp())
+    assert(empty.rewrite(Seq.empty[(String, String)].toDF("label", "id"), 1L)(_ =>
+      sys.error("an empty batch must not be written")) === None)
+    assert(!empty.exists)
   }
 
   test("a partitioned table must be bucketed") {

@@ -85,7 +85,7 @@ class ChangelogSpec extends SparkSpecBase {
   test("identical versions (all buckets carried) yield an EMPTY changelog, not an error") {
     val root = Files.createTempDirectory("chlogid").toString
     val t = SnapshotTable(spark, s"$root/t", Some("label"),
-      Some(BucketSpec(Seq("id"), 2)))
+      Some(BucketSpec(Seq("id"), Some(2))))
     val all = Seq(("X", "1", 10), ("X", "2", 20)).toDF("label", "id", "v")
     t.commit(all, 100L)
     // idempotent re-sync: a delta that touches no bucket commits nothing
@@ -98,7 +98,7 @@ class ChangelogSpec extends SparkSpecBase {
   test("changelog opens only buckets whose manifest refs changed; carried buckets stay closed") {
     val root = Files.createTempDirectory("chlog").toString
     val t = SnapshotTable(spark, s"$root/t", Some("label"),
-      Some(BucketSpec(Seq("id"), 4)))
+      Some(BucketSpec(Seq("id"), Some(4))))
     val all = (0 until 40)
       .map(i => ("X", i.toString, i * 10)).toDF("label", "id", "v")
     t.commit(all, 100L)

@@ -19,7 +19,7 @@ class ExpireSpec extends SparkSpecBase {
 
   test("expire keeps carried-forward dirs referenced by retained versions and drops the rest") {
     val root = tmp()
-    val nodes = GraphTables.nodes(spark, root, buckets = 8)
+    val nodes = GraphTables.nodes(spark, root, buckets = Some(8))
     val edges = GraphTables.edges(spark, root)
     val schema = NodeSchema("Page", RowRef("id"))
 

@@ -23,7 +23,7 @@ class ManifestReadSpec extends SparkSpecBase {
     */
   private def fixture(): SnapshotTable = {
     val root = Files.createTempDirectory("graftmanifest").toString
-    val t = SnapshotTable(spark, s"$root/t", Some("label"), Some(BucketSpec(Seq("id"), 8)))
+    val t = SnapshotTable(spark, s"$root/t", Some("label"), Some(BucketSpec(Seq("id"), Some(8))))
     val rows = spark.range(400).select(
       concat(lit("L"), (col("id") % 5).cast("string")).as("label"),
       concat(lit("id"), col("id").cast("string")).as("id"),

@@ -498,8 +498,8 @@ class CliSpec extends SparkSpecBase {
       "--new-buckets", "3", "--update-tag", "200"))
 
     // rows byte-equal across the layout change
-    val nodes3 = GraphTables.nodes(spark, s"$work/graph", buckets = 3)
-    val edges3 = GraphTables.edges(spark, s"$work/graph", buckets = 3)
+    val nodes3 = GraphTables.nodes(spark, s"$work/graph", buckets = Some(3))
+    val edges3 = GraphTables.edges(spark, s"$work/graph", buckets = Some(3))
     assert(keyed(nodes3.read()) === nodesBefore)
     assert(edges3.read().selectExpr("src_id", "rel_label", "dst_id")
       .collect().map(_.toString).sorted.toSeq === edgesBefore)
@@ -510,21 +510,27 @@ class CliSpec extends SparkSpecBase {
       t.partitionsOf(t.latestVersion.get).keys
         .forall(pv => Set("0", "1", "2")(pv.substring(pv.lastIndexOf("~b") + 2)))
     assert(inLayout(nodes3) && inLayout(edges3))
-    // the count is the manifest's alone: only sync (sizing a new graph)
-    // takes --graph-buckets
+    // the count is the manifest's alone: no subcommand takes
+    // --graph-buckets (a new graph's first commit sizes its buckets)
     val e = intercept[IllegalArgumentException] {
       GraftCli.main(Array("rebucket", "--new-buckets", "3", "--work-dir", work,
         "--update-tag", "250", "--graph-buckets", "3"))
     }
     assert(e.getMessage.contains("unknown flag(s) for rebucket: --graph-buckets"),
       e.getMessage)
+    val onSync = intercept[IllegalArgumentException] {
+      GraftCli.main(Array("sync", "--input", s"$in/pages", "--dict", s"$in/dict",
+        "--work-dir", work, "--update-tag", "250", "--graph-buckets", "3"))
+    }
+    assert(onSync.getMessage.contains("unknown flag(s) for sync: --graph-buckets"),
+      onSync.getMessage)
     // an incremental sync keeps working end-to-end with no bucket flag
     GraftCli.main(Array("sync", "--input", s"$in/pages", "--dict", s"$in/dict",
       "--work-dir", work, "--update-tag", "300"))
     assert(created(nodes3.read()) === createdBefore)
     assert(nodes3.latestVersion.flatMap(nodes3.recordedBuckets) === Some(3))
     assert(edges3.latestVersion.flatMap(edges3.recordedBuckets) === Some(3))
-    // the sync opened the graph with the default count, and its scoped
+    // the sync opened the graph with no declared count, and its scoped
     // commits followed the recorded layout
     assert(inLayout(nodes3) && inLayout(edges3))
   }

@@ -14,6 +14,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * by a Spark Parquet read that infers a schema and lists directories.
   * DETACH has one path, the full-scan semi-join: no endpoint index, and
   * no second commit that would have to stay in step with the edges.
+  * No caller sizes a graph's buckets: the first commit does, from its rows.
   */
 class WritePathGuardSpec extends AnyFunSuite {
 
@@ -52,6 +53,16 @@ class WritePathGuardSpec extends AnyFunSuite {
   test("no edge endpoint index, its coverage record or its knobs remain in src/main") {
     val gone = Seq("EdgeEndpointIndex", "edge_index", "coverage.json",
       "maintainEdgeIndex", "edgeIndex", "edge-index", "index-rebuild")
+    val hits = for {
+      f <- scalaFiles(Paths.get("src/main/scala"))
+      word <- gone
+      if Files.readString(f).contains(word)
+    } yield s"$f: $word"
+    assert(hits.isEmpty, hits.mkString("\n"))
+  }
+
+  test("no fixed default bucket count or graph-bucket knob remains in src/main: a first commit sizes the layout and the manifest keeps it") {
+    val gone = Seq("DefaultBuckets", "graphBuckets", "graph-buckets")
     val hits = for {
       f <- scalaFiles(Paths.get("src/main/scala"))
       word <- gone
