@@ -3,6 +3,7 @@ package graft.ann
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
+import graft.core.Graft
 
 /** Similarity search over an embedding column (array<float>):
   * brute-force cosine top-k as the exact baseline, and random-hyperplane
@@ -16,7 +17,7 @@ import org.apache.spark.sql.expressions.Window
 object Knn {
 
   def embeddings(spark: SparkSession, sfDir: String): DataFrame =
-    spark.read.parquet(s"$sfDir/embeddings.parquet")
+    Graft.table(spark, sfDir, "embeddings")
       .select(col("vec_id").cast("long"), col("embedding"), col("label"))
 
   /** Columnar cosine similarity of two array<float> columns, computed in

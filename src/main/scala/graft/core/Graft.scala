@@ -1,10 +1,22 @@
 package graft.core
 
+import org.apache.hadoop.fs.{FileStatus, FileSystem, Path}
+import org.apache.parquet.hadoop.{Footer, ParquetFileReader, ParquetFileWriter}
+import org.apache.parquet.hadoop.util.HadoopInputFile
 import org.apache.spark.SparkConf
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.execution.datasources.parquet.{ParquetFileFormat, ParquetToSparkSchemaConverter}
+import org.apache.spark.sql.execution.streaming.sinks.FileStreamSink
+import org.apache.spark.sql.types.StructType
 
 /** Session + table helpers shared by the engine. Every session in the
-  * engine and its tests is built here (`SessionGuardSpec`).
+  * engine and its tests is built here (`SessionGuardSpec`), and every
+  * parquet input is opened here ([[parquet]], `ReadPathGuardSpec`).
+  *
+  * Design note (table open): `spark.read.parquet` infers a schema with a
+  * Spark job on every call, which was 9 of the 55 jobs of one perfbench
+  * `query_mix` pass. [[parquet]] reads the one footer that job would
+  * read, on the driver, and opens the input with that schema: no job.
   *
   * Design note (scale): every knob here is chosen for a multi-executor
   * cluster reading ~100 TB — AQE on (runtime re-plan, skew-join split,
@@ -85,7 +97,87 @@ object Graft {
 
   /** Read one of the driver-generated TPC-H-ish tables. */
   def table(spark: SparkSession, sfDir: String, name: String): DataFrame =
-    spark.read.parquet(s"$sfDir/$name.parquet")
+    parquet(spark, s"$sfDir/$name.parquet")
+
+  /** Open the parquet input at `paths` (files, directories, partitioned
+    * directories or globs) as `spark.read.parquet(paths: _*)` would, with
+    * no Spark job. Spark's read infers the data schema with one job that
+    * reads footers on the executors; without schema merging that job
+    * reads ONE footer, so the same footer is read here on the driver and
+    * handed to the read as its schema. Partition discovery still appends
+    * the `k=v` directory columns, and the relation is made nullable as
+    * an inferred one is.
+    *
+    * Which footer, by the rule of Spark's non-merging inference: a
+    * summary file (`_common_metadata`, then `_metadata`) if one is
+    * listed, else the first data file in path order. Where that rule
+    * does not apply, Spark infers: schema merging is on, the path is a
+    * streaming sink's output (read through its log), or a path lists
+    * nothing (Spark raises its own error).
+    */
+  def parquet(spark: SparkSession, paths: String*): DataFrame =
+    schemaFile(spark, paths) match {
+      case Some(f) => spark.read.schema(footerSchema(spark, f)).parquet(paths: _*)
+      case None => spark.read.parquet(paths: _*)
+    }
+
+  /** The Spark schema of one parquet file, from its footer alone: the
+    * Spark row schema its writer stored, if present, else the Parquet
+    * schema converted by Spark's own converter under the session's conf.
+    */
+  private[graft] def footerSchema(spark: SparkSession, file: Path): StructType = {
+    val hconf = spark.sessionState.newHadoopConf()
+    val r = ParquetFileReader.open(HadoopInputFile.fromPath(file, hconf))
+    try ParquetFileFormat.readSchemaFromFooter(new Footer(file, r.getFooter),
+      new ParquetToSparkSchemaConverter(spark.sessionState.conf))
+    finally r.close()
+  }
+
+  /** The file whose footer Spark's non-merging inference reads for
+    * `paths`, listed as Spark's file index lists them; None where Spark
+    * must infer itself (see [[parquet]]).
+    */
+  private def schemaFile(spark: SparkSession, paths: Seq[String]): Option[Path] = {
+    val conf = spark.sessionState.conf
+    val hconf = spark.sessionState.newHadoopConf()
+    def isGlob(path: String) = path.exists("{}[]*?\\".contains(_))
+    val roots = paths.map { path =>
+      val p = new Path(path)
+      val fs = p.getFileSystem(hconf)
+      val found =
+        if (isGlob(path)) Option(fs.globStatus(p)).toSeq.flatten.map(_.getPath)
+        else if (fs.exists(p)) Seq(fs.makeQualified(p))
+        else Nil
+      (fs, found)
+    }
+    // Spark looks for a sink's log only under one path; asked of a
+    // missing path or a glob, the lookup logs a not-found warning
+    def sinkOutput = paths match {
+      case Seq(p) if !isGlob(p) => FileStreamSink.hasMetadata(paths, hconf, conf)
+      case _ => false
+    }
+    if (conf.isParquetSchemaMergingEnabled || roots.exists(_._2.isEmpty) ||
+        sinkOutput) return None
+    val leaves = roots.flatMap { case (fs, ps) => ps.flatMap(leafFiles(fs, _)) }
+      .map(_.getPath).sortBy(_.toString)
+    val summaries = Seq(ParquetFileWriter.PARQUET_COMMON_METADATA_FILE,
+      ParquetFileWriter.PARQUET_METADATA_FILE)
+    summaries.flatMap(n => leaves.find(_.getName == n)).headOption
+      .orElse(leaves.find(f => !summaries.contains(f.getName)))
+  }
+
+  /** The leaf files under `p` (or `p` itself, a file) that Spark's file
+    * index keeps, by its name rule at every level: `_` names that are not
+    * `k=v` partitions, `.` names and `._COPYING_` files are skipped, summary
+    * files are kept.
+    */
+  private def leafFiles(fs: FileSystem, p: Path): Seq[FileStatus] =
+    fs.listStatus(p).toSeq.filterNot { s =>
+      val n = s.getPath.getName
+      ((n.startsWith("_") && !n.contains("=")) || n.startsWith(".") ||
+        n.endsWith("._COPYING_")) &&
+        !(n.startsWith("_common_metadata") || n.startsWith("_metadata"))
+    }.flatMap(s => if (s.isDirectory) leafFiles(fs, s.getPath) else Seq(s))
 
   /** Query scratch space, deleted recursively at JVM exit — the
     * graph-replay and streaming queries need throwaway table roots /

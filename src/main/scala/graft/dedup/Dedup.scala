@@ -5,6 +5,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import scala.util.hashing.MurmurHash3
 import graft.link.ConnectedComponents
+import graft.core.Graft
 
 /** Document deduplication operators for the training-data pipeline:
   * exact (hash groupBy), exact all-pairs n-gram Jaccard (inverted-index
@@ -28,7 +29,7 @@ object Dedup {
     * id+200000). All deterministic so an oracle can rebuild it in SQL.
     */
   def corpusWithCopies(spark: SparkSession, sfDir: String): DataFrame = {
-    val docs = spark.read.parquet(s"$sfDir/documents.parquet")
+    val docs = Graft.table(spark, sfDir, "documents")
       .select(col("doc_id").cast("long"), col("text"))
     // two selects, not one: in a single select the token's col("doc_id")
     // would resolve LATERALLY against the `.as("doc_id")` alias beside it
@@ -269,21 +270,27 @@ object Dedup {
     sig
   }
 
+  /** Each document's shingle set, one row (doc_id, shingles) per
+    * document: the one grouping of [[shingleRows]] that both the LSH
+    * signatures and [[verifyPairs]] read. The set feeds the signature
+    * pass and both sides of verification, so a lazy, non-pinning
+    * checkpoint evaluates it once per action (see [[cappedBucketPairs]]
+    * for why localCheckpoint and not persist).
+    */
+  private def shingleSets(corpus: DataFrame): DataFrame =
+    shingleRows(corpus).groupBy(col("doc_id"))
+      .agg(collect_list(col("shingle")).as("shingles"))
+      .localCheckpoint(eager = false)
+
   /** MinHash-LSH near-dup pairs: banded signatures -> bucket join ->
     * exact-Jaccard verification (integer arithmetic). Probabilistic
     * recall, precision 1.0 — the 100 TB candidate generator.
     */
   def minhashLshPairs(spark: SparkSession, corpus: DataFrame): DataFrame = {
     import spark.implicits._
-    // shingle rows feed the signatures AND verification's a/b/sizes —
-    // without the (lazy, non-pinning) checkpoint the distinct shuffle
-    // re-runs four times per action, which dominated the r3 qdd4 time
-    val sh = shingleRows(corpus).localCheckpoint(eager = false)
-    val grouped = sh.groupBy(col("doc_id"))
-      .agg(collect_list(col("shingle")).as("shingles"))
-      .as[(Long, Seq[String])]
+    val sets = shingleSets(corpus)
     val r = NumHashes / Bands
-    val banded = grouped.flatMap { case (id, shingles) =>
+    val banded = sets.as[(Long, Seq[String])].flatMap { case (id, shingles) =>
       val sig = minhashSig(shingles)
       (0 until Bands).map { bIdx =>
         val bandHash = MurmurHash3.arrayHash(
@@ -294,20 +301,28 @@ object Dedup {
     val cand = cappedBucketPairs(banded, Seq("band", "bh"), Seq("doc_id"))
       .select(col("doc_id_a").as("doc_a"), col("doc_id_b").as("doc_b"))
       .distinct()
-    verifyPairs(spark, cand, sh)
+    verifyPairs(cand, sets)
   }
 
-  /** Exact-Jaccard verification of candidate pairs against shingle rows. */
-  def verifyPairs(spark: SparkSession, cand: DataFrame, sh: DataFrame): DataFrame = {
-    val sizes = sh.groupBy(col("doc_id")).agg(count(lit(1)).as("sz"))
-    val a = sh.select(col("doc_id").as("doc_a"), col("shingle"))
-    val b = sh.select(col("doc_id").as("doc_b"), col("shingle"))
-    val inter = cand.join(a, "doc_a").join(b, Seq("doc_b", "shingle"))
-      .groupBy(col("doc_a"), col("doc_b")).agg(count(lit(1)).as("inter"))
-    inter
-      .join(sizes.withColumnRenamed("doc_id", "doc_a").withColumnRenamed("sz", "sz_a"), "doc_a")
-      .join(sizes.withColumnRenamed("doc_id", "doc_b").withColumnRenamed("sz", "sz_b"), "doc_b")
-      .filter(lit(3) * col("inter") >= col("sz_a") + col("sz_b"))
+  /** Exact-Jaccard verification of candidate pairs (doc_a, doc_b)
+    * against the documents' shingle sets (doc_id, shingles): each pair
+    * joins both sets and keeps 3·|A∩B| ≥ |A|+|B|, with |A∩B| =
+    * `size(array_intersect(A, B))`. That is exact because
+    * [[shingleRows]] emits distinct (doc, shingle) rows, so each set has
+    * no repeats. Output sorted by (doc_a, doc_b).
+    *
+    * Scale: each candidate pair carries both sets through the two
+    * joins, so the bytes shuffled are those of the exploded form — one
+    * (pair, shingle) row per shingle of each side — but in one row per
+    * pair, with no shingle-level self-join, no count per pair and no
+    * separate size aggregate.
+    */
+  def verifyPairs(cand: DataFrame, sets: DataFrame): DataFrame = {
+    val a = sets.select(col("doc_id").as("doc_a"), col("shingles").as("sa"))
+    val b = sets.select(col("doc_id").as("doc_b"), col("shingles").as("sb"))
+    cand.join(a, "doc_a").join(b, "doc_b")
+      .filter(lit(3) * size(array_intersect(col("sa"), col("sb"))) >=
+        size(col("sa")) + size(col("sb")))
       .select(col("doc_a"), col("doc_b"))
       .orderBy(col("doc_a"), col("doc_b"))
   }
@@ -342,7 +357,7 @@ object Dedup {
     */
   def simhashPairs(spark: SparkSession, corpus: DataFrame,
                    maxHamming: Int = 24): DataFrame =
-    simhashCandidates(spark, shingleRows(corpus), maxHamming)
+    simhashCandidates(spark, shingleSets(corpus), maxHamming)
       .orderBy("doc_a", "doc_b")
 
   /** SimHash candidates + exact-Jaccard verification: the same verified
@@ -353,17 +368,14 @@ object Dedup {
     */
   def simhashVerifiedPairs(spark: SparkSession, corpus: DataFrame,
                            maxHamming: Int = 24): DataFrame = {
-    // one evaluation for signatures + verification (see minhashLshPairs)
-    val sh = shingleRows(corpus).localCheckpoint(eager = false)
-    verifyPairs(spark, simhashCandidates(spark, sh, maxHamming), sh)
+    val sets = shingleSets(corpus)
+    verifyPairs(simhashCandidates(spark, sets, maxHamming), sets)
   }
 
-  private def simhashCandidates(spark: SparkSession, sh: DataFrame,
+  private def simhashCandidates(spark: SparkSession, sets: DataFrame,
                                 maxHamming: Int): DataFrame = {
     import spark.implicits._
-    val sigs = sh.groupBy(col("doc_id"))
-      .agg(collect_list(col("shingle")).as("shingles"))
-      .as[(Long, Seq[String])]
+    val sigs = sets.as[(Long, Seq[String])]
       .map { case (id, shingles) => (id, simhash64(shingles)) }
       .toDF("doc_id", "sim")
     val banded = sigs.select(col("doc_id"), col("sim"),

@@ -3,6 +3,7 @@ package graft.events
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import graft.core.Graft
 
 /** Event sessionization — the classic clickstream/web-analytics
   * operator the engine's event table (`events.parquet`) calls for: cut
@@ -35,7 +36,7 @@ import org.apache.spark.sql.functions._
 object Sessionize {
 
   def events(spark: SparkSession, sfDir: String): DataFrame =
-    spark.read.parquet(s"$sfDir/events.parquet")
+    Graft.table(spark, sfDir, "events")
       // the parquet ts is TIMESTAMP_NTZ; the session timezone is pinned
       // to UTC (core.Graft), so this cast reads the naive wall-clock as
       // UTC — the same interpretation an engine reading the parquet

@@ -3,6 +3,7 @@ package graft.kg
 import java.sql.Timestamp
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
+import graft.core.Graft
 
 /** One Common-Crawl-style page (BASELINE.json input_hint schema). */
 final case class Page(url: String, warc_ts: Timestamp, html: Array[Byte],
@@ -254,7 +255,7 @@ object Corpus {
     // downstream — and the committed pages stage inherits the file count,
     // so every later stage reads a well-partitioned table.
     val par = math.max(spark.sparkContext.defaultParallelism * 2, minParts)
-    val docs = spark.read.parquet(s"$sfDir/documents.parquet")
+    val docs = Graft.table(spark, sfDir, "documents")
       .select(col("doc_id").cast("long"), col("text"), col("lang"))
       .repartition(par, col("doc_id"))
       .as[(Long, String, String)]

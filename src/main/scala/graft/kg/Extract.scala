@@ -3,6 +3,7 @@ package graft.kg
 import org.apache.spark.sql.{Dataset, SparkSession}
 import org.apache.spark.sql.functions.col
 import scala.util.hashing.MurmurHash3
+import graft.core.Graft
 
 final case class PageText(url: String, text: String, lang: String)
 final case class MentionRow(url: String, start: Int, end: Int, alias: String)
@@ -262,8 +263,7 @@ object Extract {
       acB.destroy()
     }
     aliasesLc.unpersist()
-    val cands = spark.read
-      .parquet((0 until k).map(i => s"$scratchDir/shard_$i"): _*)
+    val cands = Graft.parquet(spark, (0 until k).map(i => s"$scratchDir/shard_$i"): _*)
       .as[ShardCand]
     val bPred = spark.sparkContext.broadcast(
       predicatePhrases.map { case (id, phrase) => asciiLower(phrase) -> id }.toMap)

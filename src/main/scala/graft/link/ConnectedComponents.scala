@@ -1,6 +1,6 @@
 package graft.link
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** Large-star / small-star connected components (Kiveris et al.,
@@ -31,21 +31,24 @@ object ConnectedComponents {
   /** @param edges    undirected edges, columns (u, v), string ids
     * @param allNodes every node id, column (id) — singletons map to self
     * @return mapping (id, canonical_id)
+    *
+    * The path is chosen by one bounded collect: `limit(bound + 1)` brings
+    * back at most one edge more than [[DriverEdgeBound]] (one scan,
+    * bounded driver memory), and the same rows feed the union-find when
+    * they fit. Over the bound the edges are read again by the loop.
     */
   def run(spark: SparkSession, edges: DataFrame, allNodes: DataFrame,
           maxIter: Int = 50): DataFrame = {
-    val eIn = edges.select(col("u"), col("v")).persist()
-    val nEdges = eIn.count()
-    try {
-      if (nEdges <= DriverEdgeBound) runDriver(spark, eIn, allNodes)
-      else runDistributed(spark, eIn, allNodes, maxIter)
-    } finally eIn.unpersist()
+    val uv = edges.select(col("u"), col("v"))
+    val rows = uv.limit(DriverEdgeBound.toInt + 1).collect()
+    if (rows.length <= DriverEdgeBound) runDriver(spark, rows, allNodes)
+    else runDistributed(spark, uv, allNodes, maxIter)
   }
 
   /** Union-find on the driver over the collected edge list; mapping is
     * joined back (broadcast) so allNodes never leaves the cluster.
     */
-  private def runDriver(spark: SparkSession, edges: DataFrame,
+  private def runDriver(spark: SparkSession, edges: Array[Row],
                         allNodes: DataFrame): DataFrame = {
     val parent = scala.collection.mutable.HashMap.empty[String, String]
     def find(x: String): String = {
@@ -55,7 +58,7 @@ object ConnectedComponents {
       while (parent.getOrElse(c, c) != c) { val n = parent(c); parent(c) = r; c = n }
       r
     }
-    edges.collect().foreach { row =>
+    edges.foreach { row =>
       val (a, b) = (row.getString(0), row.getString(1))
       val (ra, rb) = (find(a), find(b))
       if (ra != rb) {

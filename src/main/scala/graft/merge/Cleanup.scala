@@ -185,10 +185,12 @@ object Cleanup {
     val staleRels = relLabels.flatMap(edges.readPartition)
       .reduceOption(_ unionByName _)
       .map(rels => touching(rels.filter(stale(updateTag)), tenantIds, "_tid"))
+    // A doomed edge can appear twice (detached and a stale rel, or both
+    // endpoints of this label); no dedup: the touched-bucket collect and
+    // the anti-join below give the same result with repeats, and the
+    // deleted count comes from the commit.
     (detached ++ staleRels).reduceOption(_ unionByName _).fold(0L) { all =>
-      val doomed = all
-        .dropDuplicates("src_label", "src_id", "rel_label", "dst_label", "dst_id")
-        .cache()
+      val doomed = all.cache()
       // bucket-precise: rewrite only the (rel_label, bucket) partitions
       // that contain doomed edges
       try deleting(edges, doomed, updateTag) { existing =>

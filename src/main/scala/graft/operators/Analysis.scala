@@ -338,7 +338,7 @@ object Analysis {
     */
   def q22Subzones(spark: SparkSession, sfDir: String): DataFrame = {
     import spark.implicits._
-    val docs = spark.read.parquet(s"$sfDir/documents.parquet")
+    val docs = table(spark, sfDir, "documents")
       .select(col("doc_id").cast("long"))
     val hosts = docs.select(
       concat(lit("host"), col("doc_id") % 50, lit(".example")).as("zone"))

@@ -9,6 +9,7 @@ import graft.functions.ExactMath
 import graft.kg.Corpus
 import graft.multimodal.BinaryOps
 import graft.text.TextStats
+import graft.core.Graft
 
 /** Driver-checkable training-data-pipeline queries: dedup, text
   * analysis, similarity search, multimodal plumbing.
@@ -205,7 +206,7 @@ object DataOps {
     */
   def qsp6WeightedSample(spark: SparkSession, sfDir: String): DataFrame =
     graft.sample.Sampling.weightedSample(
-      spark.read.parquet(s"$sfDir/orders.parquet")
+      Graft.table(spark, sfDir, "orders")
         .select(col("o_orderkey"), col("o_totalprice")),
       col("o_orderkey"), col("o_totalprice"), k = 50)
       .orderBy(col("sample_priority").desc, col("o_orderkey"))
@@ -216,7 +217,7 @@ object DataOps {
     */
   def qsk8HllByType(spark: SparkSession, sfDir: String): DataFrame =
     graft.sketch.Sketches.hllRegistersBy(
-      spark.read.parquet(s"$sfDir/events.parquet")
+      Graft.table(spark, sfDir, "events")
         .select(col("event_type"), col("user_id")),
       group = "event_type", key = "user_id")
 
@@ -230,7 +231,7 @@ object DataOps {
     */
   def qsk9HllOverlap(spark: SparkSession, sfDir: String): DataFrame = {
     import graft.sketch.Sketches
-    val ev = spark.read.parquet(s"$sfDir/events.parquet")
+    val ev = Graft.table(spark, sfDir, "events")
       .select(col("event_type"), col("user_id"))
     def regs(t: String) = Sketches.hllRegisters(
       ev.filter(col("event_type") === t).select(col("user_id")), "user_id")
@@ -270,7 +271,7 @@ object DataOps {
     */
   def qsk7Histogram(spark: SparkSession, sfDir: String): DataFrame =
     graft.sketch.Sketches.histogram(
-      spark.read.parquet(s"$sfDir/events.parquet"),
+      Graft.table(spark, sfDir, "events"),
       col("value"), lo = 0.0, hi = 20.0, bins = 64)
 
   /** Bloom-filter 1-bit positions for the urgent-order key set — the
@@ -279,7 +280,7 @@ object DataOps {
     */
   def qsk4BloomBits(spark: SparkSession, sfDir: String): DataFrame =
     graft.sketch.Sketches.bloomBits(
-      spark.read.parquet(s"$sfDir/orders.parquet")
+      Graft.table(spark, sfDir, "orders")
         .filter(col("o_orderpriority") === "1-URGENT")
         .select(col("o_orderkey")),
       key = "o_orderkey", numBits = 1 << 16, numHashes = 3)
@@ -290,8 +291,8 @@ object DataOps {
     * [[graft.sketch.Sketches.bloomSemiJoin]].
     */
   def qsk5BloomSemijoin(spark: SparkSession, sfDir: String): DataFrame = {
-    val li = spark.read.parquet(s"$sfDir/lineitem.parquet")
-    val urgent = spark.read.parquet(s"$sfDir/orders.parquet")
+    val li = Graft.table(spark, sfDir, "lineitem")
+    val urgent = Graft.table(spark, sfDir, "orders")
       .filter(col("o_orderpriority") === "1-URGENT")
     graft.sketch.Sketches
       .bloomSemiJoin(li, "l_orderkey", urgent, "o_orderkey",
@@ -333,7 +334,7 @@ object DataOps {
     */
   def qsp7EpochOrder(spark: SparkSession, sfDir: String): DataFrame =
     graft.sample.Sampling.epochOrder(
-        spark.read.parquet(s"$sfDir/documents.parquet")
+        Graft.table(spark, sfDir, "documents")
           .select(col("doc_id").cast("long").as("doc_id")),
         col("doc_id"), epochs = 2)
       .select(col("epoch").cast("bigint").as("epoch"), col("shard"),
@@ -384,7 +385,7 @@ object DataOps {
     * anti-joined away; see [[graft.sample.Sampling.hashNegatives]].
     */
   def qsp5Negatives(spark: SparkSession, sfDir: String): DataFrame = {
-    val docs = spark.read.parquet(s"$sfDir/documents.parquet")
+    val docs = Graft.table(spark, sfDir, "documents")
       .select(col("doc_id").cast("long").as("doc_id"))
     val pos = docs.select(col("doc_id"), (col("doc_id") % 1000).as("entity"))
       .unionByName(docs.select(col("doc_id"),
@@ -518,7 +519,7 @@ object DataOps {
     */
   def qtx20SourceProfile(spark: SparkSession, sfDir: String): DataFrame =
     TextStats.sourceProfile(
-      spark.read.parquet(s"$sfDir/documents.parquet")
+      Graft.table(spark, sfDir, "documents")
         .select(col("doc_id"), col("source"), col("lang"), col("text")))
 
   /** Vocabulary growth curve at fixed token checkpoints under the
@@ -705,7 +706,7 @@ object DataOps {
     * DataOpsSpec's frame-sampling test.
     */
   def qmm1MediaMeta(spark: SparkSession, sfDir: String): DataFrame = {
-    val media = spark.read.parquet(s"$sfDir/documents.parquet")
+    val media = Graft.table(spark, sfDir, "documents")
       .select(concat(lit("doc://"), col("doc_id").cast("string")).as("url"),
         encode(col("text"), "UTF-8").as("payload"))
     BinaryOps.extractMeta(spark, media).toDF()
@@ -721,7 +722,7 @@ object DataOps {
     */
   def qmm2ImageDims(spark: SparkSession, sfDir: String): DataFrame = {
     import spark.implicits._
-    val ids = spark.read.parquet(s"$sfDir/documents.parquet")
+    val ids = Graft.table(spark, sfDir, "documents")
       .select(col("doc_id").cast("long")).as[Long]
     val media = ids.map(id => ("img://" + id, imageBytes(id)))
       .toDF("url", "payload")
@@ -739,7 +740,7 @@ object DataOps {
     */
   def qmm3WavMeta(spark: SparkSession, sfDir: String): DataFrame = {
     import spark.implicits._
-    val ids = spark.read.parquet(s"$sfDir/documents.parquet")
+    val ids = Graft.table(spark, sfDir, "documents")
       .select(col("doc_id").cast("long")).as[Long]
     val media = ids.map(id => ("wav://" + id, wavBytes(id)))
       .toDF("url", "payload")
@@ -753,7 +754,7 @@ object DataOps {
     */
   def qmm4MediaDispatch(spark: SparkSession, sfDir: String): DataFrame = {
     import spark.implicits._
-    val rows = spark.read.parquet(s"$sfDir/documents.parquet")
+    val rows = Graft.table(spark, sfDir, "documents")
       .select(col("doc_id").cast("long"), col("text")).as[(Long, String)]
     val media = rows.map { case (id, text) =>
       val payload = (id % 3) match {
@@ -781,7 +782,7 @@ object DataOps {
     */
   def qmm5ImageNearDup(spark: SparkSession, sfDir: String): DataFrame = {
     import spark.implicits._
-    val ids = spark.read.parquet(s"$sfDir/documents.parquet")
+    val ids = Graft.table(spark, sfDir, "documents")
       .select(col("doc_id").cast("long")).as[Long]
     val media = ids.map(id => ("png://" + id, pngBytes(id)))
       .toDF("url", "payload")
@@ -809,7 +810,7 @@ object DataOps {
     */
   def qmm6ImageClusters(spark: SparkSession, sfDir: String): DataFrame = {
     import spark.implicits._
-    val ids = spark.read.parquet(s"$sfDir/documents.parquet")
+    val ids = Graft.table(spark, sfDir, "documents")
       .select(col("doc_id").cast("long")).as[Long]
     val media = ids.map(id => ("png://" + id, pngBytes(id)))
       .toDF("url", "payload")

@@ -104,7 +104,7 @@ object GraphOps {
     val root = tempRoot()
     val nodes = GraphTables.nodes(spark, root)
     val edges = GraphTables.edges(spark, root)
-    val docs = spark.read.parquet(s"$sfDir/documents.parquet")
+    val docs = Graft.table(spark, sfDir, "documents")
       .select(col("doc_id").cast("long").as("i"))
     val n = docs.count()
     val aEnd = Corpus.tsOf(n * 6 / 10)   // exclusive upper bound of window A
@@ -139,7 +139,7 @@ object GraphOps {
     val root = tempRoot()
     val nodes = GraphTables.nodes(spark, root)
     val edges = GraphTables.edges(spark, root)
-    val docs = spark.read.parquet(s"$sfDir/documents.parquet")
+    val docs = Graft.table(spark, sfDir, "documents")
       .select(col("doc_id").cast("long").as("i"))
     val n = docs.count()
     val aEnd = Corpus.tsOf(n * 6 / 10)

@@ -7,6 +7,7 @@ import org.apache.spark.sql.functions._
 import graft.Query
 import graft.kg.{Corpus, KgPipeline}
 import graft.snapshot.SnapshotTable
+import graft.core.Graft
 
 /** Driver-checkable KG-pipeline queries. The pipeline runs once per
   * scale dir (memoized) over pages synthesized deterministically from
@@ -671,7 +672,7 @@ object KgOps {
   def q35StreamSessions(spark: SparkSession, sfDir: String): DataFrame = {
     import spark.implicits._
     val baseSec = 1600000000L
-    val ev = spark.read.parquet(s"$sfDir/documents.parquet")
+    val ev = Graft.table(spark, sfDir, "documents")
       .select((col("doc_id") % 5).cast("long").as("user_id"),
         (lit(baseSec) + col("doc_id") * 30L +
           floor(col("doc_id") / 100).cast("long") * 3600L)
@@ -714,10 +715,10 @@ object KgOps {
     * flushes every real window.
     */
   def q36StreamEnrich(spark: SparkSession, sfDir: String): DataFrame = {
-    val ev = spark.read.parquet(s"$sfDir/events.parquet")
+    val ev = Graft.table(spark, sfDir, "events")
       .select(col("event_id").cast("long").as("event_id"),
         col("user_id").cast("long").as("user_id"), col("ts"))
-    val dim = spark.read.parquet(s"$sfDir/customer.parquet")
+    val dim = Graft.table(spark, sfDir, "customer")
       .select(col("c_custkey").cast("long").as("user_id"),
         col("c_mktsegment").as("segment"))
     val mid = ev.agg(max(col("event_id"))).head().getLong(0) / 2
@@ -823,7 +824,7 @@ object KgOps {
                                 queryName: String, joinType: String,
                                 sentinels: Boolean): DataFrame = {
     import spark.implicits._
-    val ev = spark.read.parquet(s"$sfDir/events.parquet")
+    val ev = Graft.table(spark, sfDir, "events")
       .select(col("event_id").cast("long").as("event_id"),
         col("user_id").cast("long").as("user_id"), col("ts"),
         col("event_type"))

@@ -174,7 +174,15 @@ object Sketches {
     * bounded shuffle over positions, never over keys.
     */
   def bloomBits(df: DataFrame, key: String,
-                numBits: Int = 1 << 20, numHashes: Int = 3): DataFrame = {
+                numBits: Int = 1 << 20, numHashes: Int = 3): DataFrame =
+    bloomPositions(df, key, numBits, numHashes).orderBy("pos")
+
+  /** [[bloomBits]]' distinct positions in no order: what a filter build
+    * needs, since a bitset ignores order and a sort would add a
+    * range-partition sample job and a sort shuffle.
+    */
+  private def bloomPositions(df: DataFrame, key: String,
+                             numBits: Int, numHashes: Int): DataFrame = {
     require(numBits >= 1 && numHashes >= 1,
       s"bad bloom shape $numHashes x $numBits")
     // NULL keys are skipped, matching semi-join semantics (a null key
@@ -182,7 +190,7 @@ object Sketches {
     // row in the output)
     df.filter(col(key).isNotNull)
       .select(explode(bloomCells(col(key), numHashes, numBits)).as("pos"))
-      .distinct().orderBy("pos")
+      .distinct()
   }
 
   /** The `k` bit positions a key sets/probes — shared by build and probe
@@ -210,14 +218,16 @@ object Sketches {
     * can't see the opportunity, e.g. across separately-built stages.)
     * The position columns are codegen'd md5 arithmetic; only the bitset
     * membership test is a (cheap, primitive-typed) UDF — no built-in
-    * can probe a broadcast bitset.
+    * can probe a broadcast bitset. The bitset is built from one collect
+    * of the distinct positions, unsorted: one aggregate shuffle, with no
+    * sort and no range-partition sample job.
     */
   def bloomSemiJoin(big: DataFrame, bigKey: String,
                     small: DataFrame, smallKey: String,
                     numBits: Int = 1 << 20, numHashes: Int = 3): DataFrame = {
     val bs = new java.util.BitSet(numBits)
-    // bounded by construction: ≤ numBits rows ever come back
-    bloomBits(small, smallKey, numBits, numHashes)
+    // bounded by construction: ≤ numBits rows ever come back, unsorted
+    bloomPositions(small, smallKey, numBits, numHashes)
       .collect().foreach(r => bs.set(r.getLong(0).toInt))
     val bsB = big.sparkSession.sparkContext.broadcast(bs)
     val allSet = udf { (ps: Seq[Long]) =>

@@ -275,15 +275,12 @@ final class SnapshotTable(val spark: SparkSession, val root: String,
     org.apache.parquet.hadoop.ParquetFileReader.open(in)
   }
 
-  /** The data schema Spark reads back from one data file: the Spark
-    * schema its writer stored in the footer, every field nullable.
+  /** The data schema Spark reads back from one data file: its footer's
+    * schema ([[graft.core.Graft.footerSchema]]), every field nullable.
     */
-  private def footerSchema(rel: String): StructType = {
-    val r = openFooter(rel)
-    try SnapshotTable.nullable(DataType.fromJson(r.getFileMetaData.getKeyValueMetaData
-      .get("org.apache.spark.sql.parquet.row.metadata")).asInstanceOf[StructType])
-    finally r.close()
-  }
+  private def footerSchema(rel: String): StructType =
+    SnapshotTable.nullable(graft.core.Graft.footerSchema(spark,
+      new HPath(Paths.get(root, rel).toUri)))
 
   def updateTagOf(v: Long): Long = manifest(v).get("updateTag").asLong()
 

@@ -2,6 +2,7 @@ package graft.text
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import graft.core.Graft
 
 /** Text-analysis operators for the training-data pipeline: token
   * counting, quality scoring, language identification, and document
@@ -11,7 +12,7 @@ import org.apache.spark.sql.functions._
 object TextStats {
 
   def docs(spark: SparkSession, sfDir: String): DataFrame =
-    spark.read.parquet(s"$sfDir/documents.parquet")
+    Graft.table(spark, sfDir, "documents")
       .select(col("doc_id").cast("long"), col("text"), col("lang"))
 
   /** THE whitespace-token-count column — the single tokenization proxy

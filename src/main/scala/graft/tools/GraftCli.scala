@@ -207,7 +207,7 @@ object GraftCli {
       else flags.getOrElse("out", s"$workDir/analysis")
     }
     postJobDir.foreach { _ => parseParams(flags): Unit }
-    val dict = spark.read.parquet(req(flags, "dict")).as[AliasRow]
+    val dict = Graft.parquet(spark, req(flags, "dict")).as[AliasRow]
     // The reference's sync runs its analysis-job corpus as the FINAL
     // stage (cartography/sync.py stage list ends with 'analysis',
     // intel/analysis.py:12-42) — mirror that when a job dir is given.
@@ -244,12 +244,12 @@ object GraftCli {
         graft.jobs.MultiTenant.syncAndThen(tenants, bestEffort) { t =>
           val pipe = new KgPipeline(spark, s"$workDir/tenants/$t",
             graphRoot = Some(s"$workDir/graph"))
-          val pages = spark.read.parquet(tpl.replace("{tenant}", t)).as[Page]
+          val pages = Graft.parquet(spark, tpl.replace("{tenant}", t)).as[Page]
           pipe.run(pages, resolved, tag, mergeGraph = true): Unit
         } { runPost() }: Unit
       case None =>
         val pipe = new KgPipeline(spark, workDir)
-        val pages = spark.read.parquet(req(flags, "input")).as[Page]
+        val pages = Graft.parquet(spark, req(flags, "input")).as[Page]
         flags.get("selected-modules") match {
           case Some(sel) => pipe.runStages(pages, dict, tag, sel)
           case None =>
@@ -361,7 +361,7 @@ object GraftCli {
     val globs = graft.operators.Analysis.loadPolicyMapping(req(flags, "mapping"))
     val spark = session(flags, "graft-cli-permissions")
     val (idCol, nameCol) = (req(flags, "id-col"), req(flags, "name-col"))
-    val resources = spark.read.parquet(req(flags, "input"))
+    val resources = Graft.parquet(spark, req(flags, "input"))
       .select(col(idCol), col(nameCol))
     graft.operators.Analysis
       .wildcardAllowed(spark, resources, idCol, nameCol, globs)
@@ -399,7 +399,7 @@ object GraftCli {
     val rate = flags.getOrElse("sample-rate", "1.0").toDouble
     val outDir = req(flags, "out")
     val spark = session(flags, "graft-cli-corpus")
-    val raw = spark.read.parquet(req(flags, "input"))
+    val raw = Graft.parquet(spark, req(flags, "input"))
     val docs = raw
       .select(col("doc_id").cast("long").as("doc_id"), col("text"))
       .persist()
@@ -439,7 +439,7 @@ object GraftCli {
             k.write.mode("overwrite").parquet(s"$outDir/kept")
             // read the written file ONCE: downstream stages consume the
             // durable artifact, not the (recomputable) plan behind k
-            val keptDf = spark.read.parquet(s"$outDir/kept")
+            val keptDf = Graft.parquet(spark, s"$outDir/kept")
             val nKept = keptDf.count()
             System.err.println(s"[corpus] dedup: $total docs -> $nKept kept " +
               s"(${total - nKept} near/exact dups removed)")
@@ -458,11 +458,11 @@ object GraftCli {
       }
       val clean: org.apache.spark.sql.DataFrame =
         if (ops("decontam")) {
-          val ev = spark.read.parquet(evalInput.get)
+          val ev = Graft.parquet(spark, evalInput.get)
             .select(col("doc_id").cast("long").as("eval_id"), col("text"))
           val dec = graft.dedup.Dedup.decontaminate(docs, ev)
           dec.write.mode("overwrite").parquet(s"$outDir/decontam")
-          val decDf = spark.read.parquet(s"$outDir/decontam")
+          val decDf = Graft.parquet(spark, s"$outDir/decontam")
           val nBad = decDf.filter(col("contaminated")).count()
           System.err.println(s"[corpus] decontam: $nBad contaminated docs " +
             s"flagged -> $outDir/decontam")
@@ -474,7 +474,7 @@ object GraftCli {
         val s = graft.sample.Sampling.hashSample(clean, col("doc_id"), rate)
         s.write.mode("overwrite").parquet(s"$outDir/sample")
         System.err.println(s"[corpus] sample: rate $rate -> " +
-          s"${spark.read.parquet(s"$outDir/sample").count()} docs in $outDir/sample")
+          s"${Graft.parquet(spark, s"$outDir/sample").count()} docs in $outDir/sample")
       }
     } finally docs.unpersist(): Unit
   }

@@ -40,7 +40,7 @@ class PosixLocalFileSystemSpec extends SparkSpecBase {
   }
 
   test("committed parquet files, .crc files and directories get the stock modes") {
-    val tmp = Files.createTempDirectory("posixfs")
+    val tmp = tempDir("posixfs")
     try {
       val stock = Map("fs.file.impl" -> classOf[LocalFileSystem].getName,
         "fs.file.impl.disable.cache" -> "true")

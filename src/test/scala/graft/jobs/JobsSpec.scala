@@ -18,7 +18,7 @@ import graft.model._
 class JobsSpec extends SparkSpecBase {
   import spark.implicits._
 
-  private def tmp(): String = Files.createTempDirectory("graftjobs").toString
+  private def tmp(): String = tempDir("graftjobs").toString
 
   private val assetSchema = NodeSchema(
     label = "Asset", idRef = RowRef("id"),

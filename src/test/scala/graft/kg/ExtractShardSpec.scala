@@ -1,6 +1,5 @@
 package graft.kg
 
-import java.nio.file.Files
 import graft.SparkSpecBase
 
 /** Pins sharded-scan ≡ single-automaton equivalence: the automaton
@@ -33,7 +32,7 @@ class ExtractShardSpec extends SparkSpecBase {
     val texts = Extract.pageText(Corpus.pages(spark, sf1)).filter(_.lang == "en")
     val dict = Corpus.aliasRows
     val whole = Extract.facts(spark, texts, dict, Corpus.predicates).collect().toSeq
-    val scratch = Files.createTempDirectory("shardscratch").toString
+    val scratch = tempDir("shardscratch").toString
     // cap 300 over 1300 distinct aliases -> ~6 shards; the fixture's
     // "entity 1" / "entity 10" prefix aliases land in arbitrary shards,
     // exercising the cross-shard leftmost-longest resolution
@@ -64,7 +63,7 @@ class ExtractShardSpec extends SparkSpecBase {
     // triple planted across two multi-word aliases
     assert(whole.exists(f => f.kind == 1 && f.a == "e4" && f.obj == "e6"))
     (1 to 4).foreach { cap =>
-      val scratch = Files.createTempDirectory(s"shardadv$cap").toString
+      val scratch = tempDir(s"shardadv$cap").toString
       val sharded = Extract.factsSharded(spark, texts, dict.toDS(), preds,
         scratch, maxAliasesPerShard = cap.toLong).collect().toSeq
       assert(multiset(sharded) === multiset(whole), s"cap=$cap")
@@ -84,7 +83,7 @@ class ExtractShardSpec extends SparkSpecBase {
       PageText("u2", "york and york", "en")).toDS()
     val preds = Seq("rel_meets" -> "meets")
     val whole = Extract.facts(spark, texts, dict, preds).collect().toSeq
-    val scratch = Files.createTempDirectory("sharddup").toString
+    val scratch = tempDir("sharddup").toString
     val sharded = Extract.factsSharded(spark, texts, dict.toDS(), preds,
       scratch, maxAliasesPerShard = 2L).collect().toSeq
     assert(multiset(sharded) === multiset(whole))
@@ -98,14 +97,14 @@ class ExtractShardSpec extends SparkSpecBase {
 
   test("empty dictionary: sharded path returns empty like facts(), no crash") {
     val texts = Seq(PageText("u1", "anything at all", "en")).toDS()
-    val scratch = Files.createTempDirectory("shardempty").toString
+    val scratch = tempDir("shardempty").toString
     val out = Extract.factsSharded(spark, texts,
       Seq.empty[AliasRow].toDS(), Seq("r" -> "meets"), scratch, 5L)
     assert(out.isEmpty)
   }
 
   test("pipeline auto-shards an over-cap Dataset dictionary and emits identical triples") {
-    val work = Files.createTempDirectory("kgshardpipe").toString
+    val work = tempDir("kgshardpipe").toString
     // cap 300 < 1400 dictionary rows -> run() must take the sharded path
     val pipe = new KgPipeline(spark, work, maxBroadcastAliases = 300L)
     val dictDs = Corpus.aliasRows.toDS()
@@ -114,7 +113,7 @@ class ExtractShardSpec extends SparkSpecBase {
     val got = res.triples.select("url", "subj", "pred", "obj")
       .collect().map(r => (r.getString(0), r.getString(1), r.getString(2), r.getString(3))).toSet
 
-    val workRef = Files.createTempDirectory("kgshardref").toString
+    val workRef = tempDir("kgshardref").toString
     val ref = new KgPipeline(spark, workRef)
       .run(Corpus.pages(spark, sf1), KgPipeline.DriverDictionary(Corpus.aliasRows), 100L,
         mergeGraph = false)

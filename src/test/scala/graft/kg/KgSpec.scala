@@ -1,6 +1,5 @@
 package graft.kg
 
-import java.nio.file.Files
 import org.apache.spark.sql.functions._
 import graft.SparkSpecBase
 import graft.link.{Blocking, ConnectedComponents}
@@ -136,7 +135,7 @@ class KgSpec extends SparkSpecBase {
   }
 
   test("end-to-end pipeline emits exactly the planted canonical triples (P=R=1.0)") {
-    val work = Files.createTempDirectory("kgpipe").toString
+    val work = tempDir("kgpipe").toString
     val pipe = new KgPipeline(spark, work)
     val res = pipe.run(Corpus.pages(spark, sf1), KgPipeline.DriverDictionary(Corpus.aliasRows), 100L,
       mergeGraph = false)
@@ -151,11 +150,11 @@ class KgSpec extends SparkSpecBase {
   }
 
   test("table-native dictionary: parquet-backed Dataset[AliasRow] run equals the Seq run") {
-    val dictPath = Files.createTempDirectory("kgdict").toString + "/aliases.parquet"
+    val dictPath = tempDir("kgdict").toString + "/aliases.parquet"
     Corpus.aliasRows.toDF().write.parquet(dictPath)
     val dictDs = spark.read.parquet(dictPath).as[AliasRow]
 
-    val work = Files.createTempDirectory("kgpipeds").toString
+    val work = tempDir("kgpipeds").toString
     val pipe = new KgPipeline(spark, work)
     val res = pipe.run(Corpus.pages(spark, sf1), KgPipeline.dictionary(dictDs), 100L,
       mergeGraph = false)
@@ -175,7 +174,7 @@ class KgSpec extends SparkSpecBase {
       val e = intercept[IllegalArgumentException](KgPipeline.boundedCollectOpt(tiny, cap))
       assert(e.getMessage.contains("broadcast alias cap"), e.getMessage)
       intercept[IllegalArgumentException](new KgPipeline(spark,
-        Files.createTempDirectory("kgcap").toString, maxBroadcastAliases = cap))
+        tempDir("kgcap").toString, maxBroadcastAliases = cap))
     }
     assert(KgPipeline.boundedCollectOpt(tiny, 3L).map(_.toSet) === Some(Corpus.aliasRows.take(3).toSet))
     assert(KgPipeline.boundedCollectOpt(tiny, 2L) === None)
@@ -184,7 +183,7 @@ class KgSpec extends SparkSpecBase {
   test("a re-crawl that lists one url twice merges into one Page node") {
     val page = Corpus.pages(spark, sf1).filter(col("lang") === "en").head()
     val recrawl = page.copy(warc_ts = new java.sql.Timestamp(page.warc_ts.getTime + 1000L))
-    val work = Files.createTempDirectory("kgrecrawl").toString
+    val work = tempDir("kgrecrawl").toString
     val pipe = new KgPipeline(spark, work)
     pipe.run(Seq(page, recrawl).toDS(), KgPipeline.DriverDictionary(Corpus.aliasRows), 100L,
       mergeGraph = true)
@@ -193,8 +192,18 @@ class KgSpec extends SparkSpecBase {
     assert(pageNodes === Seq(page.url))
   }
 
+  test("the canonical stage runs at most 2 Spark jobs: one bounded collect picks the CC path") {
+    val work = tempDir("kgcanon").toString
+    val pipe = new KgPipeline(spark, work)
+    val pages = Corpus.pages(spark, sf1)
+    pipe.runStages(pages, Corpus.aliasRows, 100L, "extract,facts")
+    val (_, jobs) = sparkJobs(pipe.runStages(pages, Corpus.aliasRows, 100L, "canonical"))
+    // a persist + count() to choose the path, then a collect, ran 6
+    assert(jobs <= 2, s"the canonical stage ran $jobs Spark jobs")
+  }
+
   test("pipeline resumes: committed stages are not recomputed on re-run") {
-    val work = Files.createTempDirectory("kgresume").toString
+    val work = tempDir("kgresume").toString
     val pipe = new KgPipeline(spark, work)
     val pages = Corpus.pages(spark, sf1)
     pipe.run(pages, KgPipeline.DriverDictionary(Corpus.aliasRows), 100L, mergeGraph = false)
@@ -212,7 +221,7 @@ class KgSpec extends SparkSpecBase {
   }
 
   test("graph merge stage materializes Entity/Page nodes and MENTIONS/predicate edges") {
-    val work = Files.createTempDirectory("kgmerge").toString
+    val work = tempDir("kgmerge").toString
     val pipe = new KgPipeline(spark, work)
     pipe.run(Corpus.pages(spark, sf1), KgPipeline.DriverDictionary(Corpus.aliasRows), 100L,
       mergeGraph = true)

@@ -1,6 +1,5 @@
 package graft.merge
 
-import java.nio.file.Files
 import java.util.concurrent.ConcurrentLinkedQueue
 import scala.jdk.CollectionConverters._
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
@@ -17,7 +16,7 @@ import graft.model._
 class ConcurrentCommitSpec extends SparkSpecBase {
   import spark.implicits._
 
-  private def tmp(): String = Files.createTempDirectory("graftconc").toString
+  private def tmp(): String = tempDir("graftconc").toString
 
   /** The job group of every job that started during `body`, run under
     * group `group`. A marker job in its own group is awaited after

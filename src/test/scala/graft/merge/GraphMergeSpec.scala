@@ -16,7 +16,7 @@ class GraphMergeSpec extends SparkSpecBase {
   import spark.implicits._
 
   private def tmp(): String =
-    Files.createTempDirectory("graftmerge").toString
+    tempDir("graftmerge").toString
 
   private def nodesOf(t: SnapshotTable): Set[(String, String, Long, Long)] =
     t.read().select("label", "id", "firstseen", "lastupdated")
@@ -182,7 +182,7 @@ class GraphMergeSpec extends SparkSpecBase {
     assert(relsOf(edges).count(_._3 == "RESOURCE") === 3)
   }
 
-  test("a cleanup that deletes stale nodes and their edges runs at most 23 Spark jobs") {
+  test("a cleanup that deletes stale nodes and their edges runs at most 22 Spark jobs") {
     val root = tmp()
     val nodes = GraphTables.nodes(spark, root)
     val edges = GraphTables.edges(spark, root)
@@ -196,7 +196,7 @@ class GraphMergeSpec extends SparkSpecBase {
     val (stats, jobs) = sparkJobs(Cleanup.run(spark, assetSchema, kw, 200L, nodes, edges))
     assert(stats === CleanupStats(2L, 4L))
     info(s"deleting cleanup: $jobs jobs")
-    assert(jobs <= 23, s"the cleanup ran $jobs Spark jobs")
+    assert(jobs <= 22, s"the cleanup ran $jobs Spark jobs")
     // nothing is stale any more: a cleanup that commits nothing
     val (again, idle) = sparkJobs(Cleanup.run(spark, assetSchema, kw, 200L, nodes, edges))
     assert(again === CleanupStats(0L, 0L))

@@ -1,6 +1,5 @@
 package graft.merge
 
-import java.nio.file.Files
 import org.apache.spark.sql.functions._
 import org.scalacheck.{Gen, Prop, Test => SCTest}
 import org.scalacheck.rng.Seed
@@ -38,7 +37,7 @@ class MergePropertySpec extends SparkSpecBase {
       Gen.choose(1, 5).flatMap(k => Gen.listOfN(k, genBatch))
 
     val prop = Prop.forAll(genScenario) { batches =>
-      val root = Files.createTempDirectory("graftmergeprop").toString
+      val root = tempDir("graftmergeprop").toString
       val nodes = GraphTables.nodes(spark, root, buckets = Some(4))
       val edges = GraphTables.edges(spark, root)
 

@@ -1,6 +1,5 @@
 package graft.merge
 
-import java.nio.file.Files
 import org.apache.spark.sql.functions._
 import graft.SparkSpecBase
 import graft.link.Blocking
@@ -19,7 +18,7 @@ class MergeSemanticsSpec extends SparkSpecBase {
   import spark.implicits._
 
   private def tmp(): String =
-    Files.createTempDirectory("graftsem").toString
+    tempDir("graftsem").toString
 
   test("matched upsert merges props: fresh keys win, sibling-schema keys survive") {
     val root = tmp()

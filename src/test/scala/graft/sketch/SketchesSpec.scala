@@ -130,9 +130,13 @@ class SketchesSpec extends SparkSpecBase {
     // 10k fact keys, dim = the 500 multiples of 20 -> 5% true match rate
     val big = (0L until 10000L).toDF("k")
     val small = (0L until 10000L by 20L).toDF("d")
-    val got = Sketches.bloomSemiJoin(big, "k", small, "d",
-        numBits = 1 << 16, numHashes = 3)
-      .collect().map(_.getLong(0)).sorted.toSeq
+    // the filter build is one unsorted collect of the distinct positions:
+    // its aggregate shuffle and the collect, with no sort shuffle and no
+    // range-partition sample job (4 jobs with the sorted collect)
+    val (joined, buildJobs) = sparkJobs(Sketches.bloomSemiJoin(big, "k", small, "d",
+        numBits = 1 << 16, numHashes = 3))
+    assert(buildJobs <= 2, s"the bloom build ran $buildJobs Spark jobs")
+    val got = joined.collect().map(_.getLong(0)).sorted.toSeq
     // exactness: identical to the plain semi-join (no false negatives,
     // residual join removed every false positive)
     assert(got === (0L until 10000L by 20L).toSeq)

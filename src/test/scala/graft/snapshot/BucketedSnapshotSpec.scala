@@ -16,7 +16,7 @@ class BucketedSnapshotSpec extends SparkSpecBase {
   import spark.implicits._
 
   private def tmp(): String =
-    Files.createTempDirectory("graftbucket").toString
+    tempDir("graftbucket").toString
 
   private def filesUnder(dir: Path): Map[String, Array[Byte]] =
     Files.walk(dir).iterator().asScala

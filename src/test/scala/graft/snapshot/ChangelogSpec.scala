@@ -52,7 +52,7 @@ class ChangelogSpec extends SparkSpecBase {
   }
 
   test("changelog over the graph tables: a props-only change is an update; a reordered map is not") {
-    val root = Files.createTempDirectory("chlogmap").toString
+    val root = tempDir("chlogmap").toString
     val nodes = graft.merge.GraphTables.nodes(spark, root)
     val edges = graft.merge.GraphTables.edges(spark, root)
     def nodeRows(bProps: Map[String, String], cProps: Map[String, String]) = Seq(
@@ -83,7 +83,7 @@ class ChangelogSpec extends SparkSpecBase {
   }
 
   test("identical versions (all buckets carried) yield an EMPTY changelog, not an error") {
-    val root = Files.createTempDirectory("chlogid").toString
+    val root = tempDir("chlogid").toString
     val t = SnapshotTable(spark, s"$root/t", Some("label"),
       Some(BucketSpec(Seq("id"), Some(2))))
     val all = Seq(("X", "1", 10), ("X", "2", 20)).toDF("label", "id", "v")
@@ -96,7 +96,7 @@ class ChangelogSpec extends SparkSpecBase {
   }
 
   test("changelog opens only buckets whose manifest refs changed; carried buckets stay closed") {
-    val root = Files.createTempDirectory("chlog").toString
+    val root = tempDir("chlog").toString
     val t = SnapshotTable(spark, s"$root/t", Some("label"),
       Some(BucketSpec(Seq("id"), Some(4))))
     val all = (0 until 40)

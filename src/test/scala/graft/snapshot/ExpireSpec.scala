@@ -15,7 +15,7 @@ class ExpireSpec extends SparkSpecBase {
   import spark.implicits._
 
   private def tmp(): String =
-    Files.createTempDirectory("graftexpire").toString
+    tempDir("graftexpire").toString
 
   test("expire keeps carried-forward dirs referenced by retained versions and drops the rest") {
     val root = tmp()

@@ -22,7 +22,7 @@ class ManifestReadSpec extends SparkSpecBase {
     * changelog's null-safe compare cannot order maps.)
     */
   private def fixture(): SnapshotTable = {
-    val root = Files.createTempDirectory("graftmanifest").toString
+    val root = tempDir("graftmanifest").toString
     val t = SnapshotTable(spark, s"$root/t", Some("label"), Some(BucketSpec(Seq("id"), Some(8))))
     val rows = spark.range(400).select(
       concat(lit("L"), (col("id") % 5).cast("string")).as("label"),

@@ -30,7 +30,7 @@ class StreamingSpec extends SparkSpecBase {
   test("kgSink merges micro-batches incrementally, preserving firstseen") {
     import spark.implicits._
     implicit val sqlCtx = spark.sqlContext
-    val tmp = java.nio.file.Files.createTempDirectory("kgstreamspec").toString
+    val tmp = tempDir("kgstreamspec").toString
     val in = MemoryStream[Page]
     val q = StreamingSync.kgSink(in.toDS(), dict, s"$tmp/graph", s"$tmp/cp")
       .trigger(Trigger.ProcessingTime(0)).start()
@@ -66,7 +66,7 @@ class StreamingSpec extends SparkSpecBase {
 
   test("one micro-batch of the corpus builds the batch pipeline's edges and Page nodes") {
     val pages = Corpus.pages(spark, sf1)
-    val tmp = java.nio.file.Files.createTempDirectory("kgparity").toString
+    val tmp = tempDir("kgparity").toString
     StreamingSync.incrementalMerge(spark, pages, Corpus.aliasRows,
       KgPipeline.canonical(spark, Corpus.aliasRows, None), s"$tmp/stream", 100L)
     new KgPipeline(spark, s"$tmp/batch").run(pages,

@@ -18,7 +18,7 @@ class CliSpec extends SparkSpecBase {
   private val sf = "/root/testdata/sf0.001"
 
   private def tmp(prefix: String): String =
-    Files.createTempDirectory(prefix).toString
+    tempDir(prefix).toString
 
   test("cli: --config seeds flags from a JSON file; explicit flags override; malformed configs fail fast") {
     val in = tmp("cliin12")
